@@ -5,8 +5,9 @@ on local[$SPARK_GRAFT_CPUS]:
 
 - `extract_flagship`: the north-star path — render every documents row
   into a boilerplated page and run the full extraction + dedup +
-  validation + quality pipeline (count() forces the whole plan). Also
-  reported as docs/sec.
+  validation + quality pipeline, written to the `noop` sink so every
+  output column is computed (bench_probe.materialize). Also reported
+  as docs/sec.
 - `extract_corpus`: the same pipeline over the richer synthetic corpus
   (PDF branch, charset variants, skewed hosts, re-crawl dups) at
   $SPARK_GRAFT_BENCH_DOCS (default 20000) generated docs — the
@@ -142,6 +143,7 @@ def _loadavg() -> float:
 
 
 def run_once(sf_dir: str, cores: int) -> dict:
+    from ocr_service_spark.bench_probe import materialize
     from ocr_service_spark.entry_pipeline import htmlified_documents
     from ocr_service_spark.pipeline import process_documents
     from ocr_service_spark.queries import QUERIES
@@ -215,7 +217,7 @@ def run_once(sf_dir: str, cores: int) -> dict:
     # run-to-run — BENCH.md "why 8->32 cannot"); give them an extra rep.
     flagship_s, n_docs = best_of(
         "extract_flagship",
-        lambda: process_documents(htmlified_documents(spark, sf_dir)).count(),
+        lambda: materialize(process_documents(htmlified_documents(spark, sf_dir))),
         reps=3)
     timings["extract_flagship"] = round(flagship_s, 3)
 
@@ -223,7 +225,8 @@ def run_once(sf_dir: str, cores: int) -> dict:
 
     corpus_s, n_c = best_of(
         "extract_corpus",
-        lambda: process_documents(corpus_df(spark, n_corpus, partitions=cores * 4)).count(),
+        lambda: materialize(
+            process_documents(corpus_df(spark, n_corpus, partitions=cores * 4))),
         reps=3)
     timings["extract_corpus"] = round(corpus_s, 3)
 
@@ -277,6 +280,7 @@ def main() -> None:
         from ocr_service_spark.bench_probe import (
             host_cpu_seconds,
             loadavg1,
+            materialize,
             session_tree_cpu_seconds,
             stage_metrics,
             wait_for_quiet,
@@ -306,7 +310,7 @@ def main() -> None:
             load0 = loadavg1()
             cpu0, host0 = session_tree_cpu_seconds(), host_cpu_seconds()
             t0 = time.time()
-            process_documents(docs).count()
+            materialize(process_documents(docs))
             wall = time.time() - t0
             ours = round(session_tree_cpu_seconds() - cpu0, 1)
             host = round(host_cpu_seconds() - host0, 1)

@@ -21,6 +21,7 @@ import time
 import urllib.request
 
 __all__ = [
+    "materialize",
     "loadavg1",
     "wait_for_quiet",
     "host_cpu_seconds",
@@ -29,6 +30,20 @@ __all__ = [
 ]
 
 _CLK_TCK = os.sysconf("SC_CLK_TCK")
+
+
+def materialize(df) -> int:
+    """Write every column of `df` to the `noop` sink and return its row
+    count, observed in the same job. A `count()` plan is not the
+    pipeline: Catalyst prunes every column the count does not need,
+    which drops the whole validation and quality layer of
+    `process_documents`."""
+    from pyspark.sql import Observation, functions as F
+
+    obs = Observation()
+    (df.observe(obs, F.count(F.lit(1)).alias("rows"))
+     .write.format("noop").mode("overwrite").save())
+    return obs.get["rows"]
 
 
 def loadavg1() -> float:

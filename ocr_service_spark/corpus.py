@@ -5,7 +5,7 @@ Schema (authoritative input shape, BASELINE.json input_hint):
               text string, lang string)
 
 Every row is a pure function of (doc_id, seed) — generation is
-DISTRIBUTED (mapInArrow over spark.range) so the same generator scales
+DISTRIBUTED (mapInPandas over spark.range) so the same generator scales
 from 100 pytest docs to bench corpora without a driver-side loop.
 
 Engineered properties (FIXTURES.md §1):
@@ -224,13 +224,16 @@ def corpus_df(spark, n_docs: int, seed: int = 42, partitions: int | None = None)
 def ensure_bench_corpus(spark, path: str, n_docs: int,
                         partitions: int = 128) -> None:
     """Materialize the bench corpus at `path` unless a COMPLETE write
-    is already there. Completeness is `<path>/_SUCCESS`, not bare
-    existence: a bench child killed mid-write leaves the dir holding
-    only `_temporary`, and a bare exists() check would then skip
-    regeneration forever while every reader dies with
-    UNABLE_TO_INFER_SCHEMA. Overwrite mode cleans the torn dir."""
+    of `n_docs` rows is already there. Completeness is
+    `<path>/_SUCCESS`, not bare existence: a bench child killed
+    mid-write leaves the dir holding only `_temporary`, and a bare
+    exists() check would then skip regeneration forever while every
+    reader dies with UNABLE_TO_INFER_SCHEMA. A complete corpus of
+    another size is rewritten too (the row count comes from the
+    parquet footers). Overwrite mode cleans the torn dir."""
     import os
 
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not (os.path.exists(os.path.join(path, "_SUCCESS"))
+            and spark.read.parquet(path).count() == n_docs):
         corpus_df(spark, n_docs, partitions=partitions).write.mode(
             "overwrite").parquet(path)

@@ -13,9 +13,12 @@
 
    Scale note: phase 1 (url, salt) aggregation is a map-side-combinable
    hash agg that splits each hot url across `n_salts` reducers; phase 2
-   re-aggregates the tiny survivor set. At 10^12 rows this bounds any
-   single reducer to ~rows(url)/n_salts. AQE skew handling only fixes
-   joins, not aggregations — hence manual salt.
+   re-aggregates the survivor set, at most `n_salts` records per url.
+   At 10^12 rows this bounds any single reducer to ~rows(url)/n_salts.
+   AQE skew handling only fixes joins, not aggregations — hence manual
+   salt. The cost: the payload crosses the wire twice, since both
+   phases exchange the full record struct (on (url, _salt), then on
+   url).
 
 2. Exact + near-duplicate *content* dedup (training-data tier):
    `exact_text_dedup`, plus MinHash/SimHash/Jaccard live in
@@ -39,9 +42,9 @@ def dedup_latest(
     """Keep, per `key`, the row with the greatest (order_cols) tuple.
 
     Implemented as salted two-phase max-of-struct aggregation (no
-    window, no sort): payload columns ride inside the struct so the
-    shuffle carries exactly one combined record per (key, salt) out of
-    the map side.
+    window, no sort): payload columns ride inside the struct, so each
+    of the two exchanges carries at most one combined record per
+    (key, salt) out of each map-side partition — payload included.
     """
     payload = [c for c in df.columns if c != key]
     ordered = [*order_cols, *[c for c in payload if c not in order_cols]]

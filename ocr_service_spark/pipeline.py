@@ -40,7 +40,9 @@ from ocr_service_spark.operators.quality import (
 )
 from ocr_service_spark.operators.validate import (
     FIELD_EXPRS,
+    field_candidates,
     important_data,
+    valid_candidates,
     validated_fields,
 )
 
@@ -76,11 +78,12 @@ def process_documents(
     """Full result-record pipeline (P1 final projection)."""
     names = field_names or list(FIELD_EXPRS)
     # Dedup FIRST, on the raw crawl rows: the expensive extraction UDF
-    # never runs for rows that lose the keep-latest race. At 10^12 rows
-    # this also means the html payload crosses the wire exactly once
-    # (salted two-phase max-of-struct), and extraction executes
-    # pipelined in the post-shuffle stage. With an Iceberg table
-    # bucketed by url-hash the exchange disappears entirely.
+    # never runs for rows that lose the keep-latest race, and extraction
+    # executes pipelined in the post-shuffle stage. The html payload
+    # crosses the wire twice, not once: the salted two-phase
+    # max-of-struct has two full-payload exchanges, on (url, _salt) and
+    # then on url (see dedup_latest). With an Iceberg table bucketed by
+    # url-hash the exchanges disappear entirely.
     if dedup:
         docs = dedup_latest(docs, key="url", order_cols=("warc_ts", "doc_id"),
                             n_salts=n_salts)
@@ -136,8 +139,15 @@ def process_documents(
                 F.col("quality_stats.length_score"),
             ),
         )
-        .withColumn("critical_fields", validated_fields(txt, names))
-        .withColumn("important_data", important_data(txt))
+        # every field and surname pattern scans the text once, and every
+        # validity filter runs once: the structs below read these
+        # projected columns, which Catalyst keeps rather than inlines
+        .withColumn("_cands", field_candidates(txt))
+        .withColumn("_valids", valid_candidates(F.col("_cands"), names))
+        .withColumn("critical_fields",
+                    validated_fields(txt, names, cands=F.col("_cands"),
+                                     valids=F.col("_valids")))
+        .withColumn("important_data", important_data(txt, cands=F.col("_cands")))
         .withColumn(
             "needs_review",
             needs_review(

@@ -38,9 +38,11 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # HTML payloads are fat rows — keep Arrow batches ~bounded so a
-        # batch of raw pages stays well under executor memory.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        # HTML payloads are fat rows: bound Arrow batches by bytes, so a
+        # batch of raw pages stays well under executor memory, and a
+        # task streams many batches: the JVM evaluates the native
+        # projection over batch k while Python runs batch k+1.
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(512 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

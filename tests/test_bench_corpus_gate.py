@@ -51,3 +51,13 @@ def test_missing_dir_regenerates(spark, tmp_path):
     shutil.rmtree(path)
     ensure_bench_corpus(spark, path, 30, partitions=4)
     assert _read_count(spark, path) == 30
+
+
+def test_complete_dir_of_another_size_regenerates(spark, tmp_path):
+    # a complete corpus written for another SPARK_GRAFT_BENCH_DOCS must
+    # not be reused: every docs/s figure divides by n_docs
+    path = str(tmp_path / "corpus.parquet")
+    ensure_bench_corpus(spark, path, 30, partitions=4)
+    ensure_bench_corpus(spark, path, 45, partitions=4)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert _read_count(spark, path) == 45

@@ -79,7 +79,7 @@ def test_dedup_latest_wins_even_if_it_errors(spark):
     url is the keeper even when its extraction errors — the older,
     successfully-extracted crawl is gone from the output. Chosen
     deliberately (dedup runs on raw crawl rows so losers never pay the
-    extraction UDF; at 10^12 rows the payload crosses the shuffle once);
+    extraction UDF, though the payload crosses both dedup exchanges);
     a latest-crawl-failed url therefore surfaces as an error row
     upstream of process_documents' error filter, not as a silent
     fallback to stale content."""

@@ -7,6 +7,8 @@ Kept deliberately robust to AQE/stats variation: assert the invariant
 map has no exchange), not exact operator counts.
 """
 
+import re
+
 import pyspark.sql.functions as F
 
 from ocr_service_spark.queries import QUERIES
@@ -168,3 +170,24 @@ def test_incremental_pagerank_persisted_side_never_shuffle_joined(spark):
     assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
+
+
+def test_process_documents_scans_each_pattern_once(spark):
+    # critical_fields and important_data read one projected
+    # field_candidates struct: every field and surname pattern is one
+    # regexp_extract_all in the plan (7 + 3), inn/snils are not
+    # rescanned; each field's validity filter reads it once, through
+    # the projected valid_candidates struct; and the fused
+    # extract+correct UDF is still one node
+    from ocr_service_spark.corpus import corpus_df
+    from ocr_service_spark.operators.validate import FIELD_EXPRS, SCANS
+    from ocr_service_spark.pipeline import process_documents
+
+    plan = (process_documents(corpus_df(spark, 20, partitions=2))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("regexp_extract_all(") == len(SCANS) == 10, plan
+    for pattern in SCANS.values():
+        assert plan.count(f", {pattern}, 0)") == 1, pattern
+    for name in FIELD_EXPRS:
+        assert len(re.findall(rf"filter\(_cands#\d+\.{name}, ", plan)) == 1, name
+    assert plan.count("ArrowEvalPython") == 1, plan

@@ -25,6 +25,7 @@ def main() -> None:
     from ocr_service_spark.bench_probe import (
         host_cpu_seconds,
         loadavg1,
+        materialize,
         session_tree_cpu_seconds,
         stage_metrics,
         wait_for_quiet,
@@ -56,7 +57,7 @@ def main() -> None:
         load0 = loadavg1()
         cpu0, host0 = session_tree_cpu_seconds(), host_cpu_seconds()
         t0 = time.time()
-        process_documents(docs).count()
+        materialize(process_documents(docs))
         wall = time.time() - t0
         ours = round(session_tree_cpu_seconds() - cpu0, 1)
         host = round(host_cpu_seconds() - host0, 1)
