@@ -1,7 +1,7 @@
 """Pure-Python extraction kernels (no Spark, no third-party deps).
 
 Each kernel is a deterministic single-document function. The Spark
-pipeline wraps these in Arrow-batched pandas UDFs
+pipeline wraps these in one iterator Arrow UDF (pyarrow arrays)
 (ocr_service_spark.operators.extract); pytest runs the same functions
 in-process as the byte-identity oracle. This mirrors the reference's
 split between the OCR kernel (reference core/ocr_engine.py:178-293) and

@@ -1,25 +1,35 @@
 """Extraction UDF stage — the M1 centerpiece (SURVEY.md §2.9).
 
-A single iterator-style pandas UDF (Arrow-batched; plan shows
-ArrowEvalPython, never BatchEvalPython) wraps the pure kernel
-`extract_document`. Iterator form so per-batch setup (regex compile,
-imports) happens once per partition, mirroring the reference's
-compile-once validators (core/validators.py:78-83).
+A single iterator-style Arrow UDF (pyarrow arrays in and out; plan
+shows ArrowEvalPython, never BatchEvalPython) wraps the pure kernel
+`extract_document` and, given a correction map, runs `correct_document`
+on each extracted text in the same batch. Iterator form so per-batch
+setup (regex compile, imports) happens once per partition, mirroring
+the reference's compile-once validators (core/validators.py:78-83).
 
 The UDF replaces the reference's whole OCR stack: image preprocess
 (core/ocr_engine.py:51-82) → Vision OCR (178-293) → per-page loop
 (137-176) → temp-file round-trips (312-325). Bytes stay in Arrow
-buffers end-to-end; per-page results stay inside the row's array until
-the caller explodes them.
+buffers end-to-end; each batch's result is built as a pyarrow
+StructArray straight from the kernel's Python values, and per-page
+results stay inside the row's array until the caller explodes them.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from ocr_service_spark.operators.correct import (
+    CORRECT_RESULT_TYPE,
+    DEFAULT_CORRECTIONS,
+    correction_arrays,
+    struct_list_array,
+)
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -44,49 +54,61 @@ EXTRACT_RESULT_TYPE = T.StructType(
     ]
 )
 
+# result struct field → flat column name, where they differ
+_FLAT_NAMES = {"text": "extracted_text", "corrections": "corrections_applied"}
 
-def make_extract_udf(separator: str = "\n\n"):
-    """Build the extraction UDF with a fixed block separator.
+
+def make_extract_udf(separator: str = "\n\n",
+                     corrections: dict[str, str] | None = None):
+    """Build the extraction UDF.
 
     separator='\\n\\n' is the production default; the round-trip
     correctness query uses ' ' so a plain-SQL oracle can reproduce the
     expected output (see __spark_entry__.py).
-    """
 
-    @F.pandas_udf(EXTRACT_RESULT_TYPE)
-    def extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    With a `corrections` map the result also carries `corrected_text`
+    and `corrections` (CORRECT_RESULT_TYPE): the fused extraction +
+    autocorrection kernel, one Arrow round-trip for the whole Python
+    hot path. The unfused pair (extract UDF → filter → correct UDF)
+    ships the extracted text back to the JVM only to ship it straight
+    into the next Python worker; the fusion corrects each batch's texts
+    while they are still Python objects (error rows pass through with
+    corrected_text=None), so the plan carries exactly ONE
+    ArrowEvalPython node.
+    """
+    fields = EXTRACT_RESULT_TYPE.fields
+    if corrections is not None:
+        fields = fields + CORRECT_RESULT_TYPE.fields
+        corrections = dict(corrections)
+    result_type = T.StructType(fields)
+    arrow_type = to_arrow_type(result_type)
+
+    @F.arrow_udf(result_type)
+    def extract(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         # import inside the UDF: runs on executors after --py-files ship
         from ocr_service_spark.kernel.dispatch import extract_document
 
         for payloads in batches:
-            texts, spans, kinds, n_nodes, n_content, charsets, errors = (
-                [], [], [], [], [], [], [])
-            for raw in payloads:
-                r = extract_document(bytes(raw) if raw is not None else None,
-                                     separator=separator)
-                texts.append(r.text)
-                spans.append(
-                    [
-                        {"start": s, "end": e, "node_idx": ni, "confidence": c}
-                        for (s, e, ni, c) in r.spans
-                    ]
-                )
-                kinds.append(r.kind)
-                n_nodes.append(r.n_nodes)
-                n_content.append(r.n_content)
-                charsets.append(r.charset)
-                errors.append(r.error)
-            yield pd.DataFrame(
-                {
-                    "text": texts,
-                    "spans": spans,
-                    "kind": kinds,
-                    "n_nodes": pd.array(n_nodes, dtype="int32"),
-                    "n_content": pd.array(n_content, dtype="int32"),
-                    "charset": charsets,
-                    "error": errors,
-                }
-            )
+            rs = [extract_document(raw, separator=separator)
+                  for raw in payloads.to_pylist()]
+            texts = [r.text for r in rs]
+            offsets = [0]
+            spans = []
+            for r in rs:
+                spans += r.spans
+                offsets.append(len(spans))
+            columns = [
+                pa.array(texts, pa.string()),
+                struct_list_array(arrow_type.field("spans").type, offsets, spans),
+                pa.array([r.kind for r in rs], pa.string()),
+                pa.array([r.n_nodes for r in rs], pa.int32()),
+                pa.array([r.n_content for r in rs], pa.int32()),
+                pa.array([r.charset for r in rs], pa.string()),
+                pa.array([r.error for r in rs], pa.string()),
+            ]
+            if corrections is not None:
+                columns += correction_arrays(texts, corrections)
+            yield pa.StructArray.from_arrays(columns, fields=list(arrow_type))
 
     # The kernel IS deterministic, but Catalyst treats deterministic
     # UDFs as free to duplicate: a filter on a UDF-derived column (the
@@ -96,6 +118,11 @@ def make_extract_udf(separator: str = "\n\n"):
     # evaluation per row (verified by tests/test_pipeline_spark.py's
     # single-node plan assertion).
     return extract.asNondeterministic()
+
+
+def make_extract_correct_udf():
+    """The fused extraction + default-corrections UDF."""
+    return make_extract_udf(corrections=DEFAULT_CORRECTIONS)
 
 
 def with_extraction(df, html_col: str = "html", out_col: str = "extraction",
@@ -108,69 +135,12 @@ def with_extraction(df, html_col: str = "html", out_col: str = "extraction",
     return df.withColumn(out_col, udf(F.col(html_col)))
 
 
-def make_extract_correct_udf(separator: str = "\n\n",
-                             corrections: dict[str, str] | None = None):
-    """Fused extraction + autocorrection UDF: one Arrow round-trip for
-    the whole Python hot path. The unfused pair (extract UDF → filter →
-    correct UDF) ships the extracted text back to the JVM only to ship
-    it straight into the next Python worker — at 10^12 docs that second
-    round-trip is pure Arrow serialization tax. The fused kernel runs
-    correction inline on each extraction while the text is still a hot
-    Python object (error rows pass through with corrected_text=None),
-    so the plan carries exactly ONE ArrowEvalPython node.
-
-    Composability is unchanged: with_extraction / with_corrections stay
-    the standalone operators; process_documents uses this fusion.
-    """
-    from ocr_service_spark.operators.correct import (
-        CORRECTION_TYPE,
-        DEFAULT_CORRECTIONS,
+def flatten_extraction(df: DataFrame, col: str = "x") -> DataFrame:
+    """The document key columns plus every field of the extraction
+    struct `col` as its own column (text → extracted_text,
+    corrections → corrections_applied)."""
+    return df.select(
+        "doc_id", "url", "warc_ts", "lang",
+        *(F.col(f"{col}.{f}").alias(_FLAT_NAMES.get(f, f))
+          for f in df.schema[col].dataType.names),
     )
-
-    cmap = dict(DEFAULT_CORRECTIONS if corrections is None else corrections)
-    result_type = T.StructType(
-        list(EXTRACT_RESULT_TYPE.fields)
-        + [
-            T.StructField("corrected_text", T.StringType()),
-            T.StructField("corrections", T.ArrayType(CORRECTION_TYPE)),
-        ]
-    )
-
-    @F.pandas_udf(result_type)
-    def extract_correct(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from ocr_service_spark.kernel.correct import correct_document
-        from ocr_service_spark.kernel.dispatch import extract_document
-
-        for payloads in batches:
-            cols: dict[str, list] = {
-                "text": [], "spans": [], "kind": [], "n_nodes": [],
-                "n_content": [], "charset": [], "error": [],
-                "corrected_text": [], "corrections": [],
-            }
-            for raw in payloads:
-                r = extract_document(bytes(raw) if raw is not None else None,
-                                     separator=separator)
-                cols["text"].append(r.text)
-                cols["spans"].append(
-                    [{"start": s, "end": e, "node_idx": ni, "confidence": c}
-                     for (s, e, ni, c) in r.spans])
-                cols["kind"].append(r.kind)
-                cols["n_nodes"].append(r.n_nodes)
-                cols["n_content"].append(r.n_content)
-                cols["charset"].append(r.charset)
-                cols["error"].append(r.error)
-                if r.text is None:
-                    cols["corrected_text"].append(None)
-                    cols["corrections"].append([])
-                else:
-                    fixed, corrs = correct_document(r.text, cmap)
-                    cols["corrected_text"].append(fixed)
-                    cols["corrections"].append(
-                        [{"original": c["original"], "corrected": c["corrected"],
-                          "confidence": c["confidence"], "method": c["method"]}
-                         for c in corrs])
-            cols["n_nodes"] = pd.array(cols["n_nodes"], dtype="int32")
-            cols["n_content"] = pd.array(cols["n_content"], dtype="int32")
-            yield pd.DataFrame(cols)
-
-    return extract_correct.asNondeterministic()

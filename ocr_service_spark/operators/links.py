@@ -1,8 +1,9 @@
 """Link-extraction operator: one Arrow-batched pass over payload
 bytes producing an array<struct<href,text>> column (the edge-list
-feedstock for link-graph queries). Mirrors operators/extract.py's
-plumbing: iterator pandas UDF, asNondeterministic pin so Catalyst
-never duplicates the Python stage."""
+feedstock for link-graph queries). Same plumbing as
+operators/extract.py, with an iterator pandas UDF where extraction
+builds pyarrow arrays: asNondeterministic pin so Catalyst never
+duplicates the Python stage."""
 
 from __future__ import annotations
 
@@ -45,9 +46,9 @@ def make_links_udf():
                 ]
             )
 
-    # same rationale as make_extract_udf: deterministic kernels get
-    # duplicated by Catalyst when a downstream filter references the
-    # UDF column; pin exactly one evaluation per row
+    # same rationale as the pin in operators/extract.make_extract_udf:
+    # deterministic kernels get duplicated by Catalyst when a downstream
+    # filter references the UDF column; pin exactly one evaluation per row
     return links.asNondeterministic()
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ocr_service_spark.operators.dedup import dedup_latest
 from ocr_service_spark.operators.extract import (
+    flatten_extraction,
     make_extract_correct_udf,
     with_extraction,
 )
@@ -53,20 +54,7 @@ def extract_documents(docs: DataFrame, separator: str = "\n\n") -> DataFrame:
     """Scan → extraction UDF → flat result columns. Keeps error rows
     (error != null) so callers can union/report them — the analog of
     the reference's error result rows (processor.py:431-438)."""
-    out = with_extraction(docs, "html", "x", separator=separator)
-    return out.select(
-        "doc_id",
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("x.text").alias("extracted_text"),
-        F.col("x.spans").alias("spans"),
-        F.col("x.kind").alias("kind"),
-        F.col("x.n_nodes").alias("n_nodes"),
-        F.col("x.n_content").alias("n_content"),
-        F.col("x.charset").alias("charset"),
-        F.col("x.error").alias("error"),
-    )
+    return flatten_extraction(with_extraction(docs, "html", "x", separator=separator))
 
 
 def process_documents(
@@ -92,23 +80,8 @@ def process_documents(
     # extracted text JVM→Python→JVM→Python; the fusion corrects while
     # the text is still a hot Python object. Validation then runs on the
     # CORRECTED text (processor.py:279-282 validates post-correction).
-    fused = make_extract_correct_udf()
-    x = docs.withColumn("x", fused(F.col("html")))
-    ok = x.filter(F.col("x.error").isNull()).select(
-        "doc_id",
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("x.text").alias("extracted_text"),
-        F.col("x.spans").alias("spans"),
-        F.col("x.kind").alias("kind"),
-        F.col("x.n_nodes").alias("n_nodes"),
-        F.col("x.n_content").alias("n_content"),
-        F.col("x.charset").alias("charset"),
-        F.col("x.error").alias("error"),
-        F.col("x.corrected_text").alias("corrected_text"),
-        F.col("x.corrections").alias("corrections_applied"),
-    )
+    x = docs.withColumn("x", make_extract_correct_udf()(F.col("html")))
+    ok = flatten_extraction(x.filter(F.col("x.error").isNull()))
 
     txt = F.col("corrected_text")
     span_conf = F.coalesce(

@@ -1481,9 +1481,7 @@ def lineage_restart(spark, sf_dir):
     the portable md5 hash (lineage.bucket_expr) and asserts one row per
     doc with ok=true — so duplicate rows from a botched restart fail
     the count, and checksum drift fails ok."""
-    import os
     import shutil
-    import tempfile
 
     from ocr_service_spark.entry_pipeline import htmlified_documents
     from ocr_service_spark.lineage import (
@@ -1494,8 +1492,7 @@ def lineage_restart(spark, sf_dir):
     )
     from ocr_service_spark.pipeline import process_documents
 
-    os.makedirs("/root/repo/.tmp", exist_ok=True)
-    out = tempfile.mkdtemp(prefix="lineage_", dir="/root/repo/.tmp")
+    out = _mk_stream_tmp("lineage_")
     shutil.rmtree(out, ignore_errors=True)
     result = process_documents(htmlified_documents(spark, sf_dir))
     run_with_lineage(spark, result, out, n_buckets=8,
@@ -1548,9 +1545,7 @@ def lineage_timetravel(spark, sf_dir):
     portable md5 bucket hash, pinning the as-of subset (b < 4: commit
     order is the sorted-bucket prefix, run_with_lineage), the final
     counts after rollback+replay, and the invariant columns."""
-    import os
     import shutil
-    import tempfile
 
     from ocr_service_spark.entry_pipeline import htmlified_documents
     from ocr_service_spark.lineage import (
@@ -1562,8 +1557,7 @@ def lineage_timetravel(spark, sf_dir):
     )
     from ocr_service_spark.pipeline import process_documents
 
-    os.makedirs("/root/repo/.tmp", exist_ok=True)
-    out = tempfile.mkdtemp(prefix="timetravel_", dir="/root/repo/.tmp")
+    out = _mk_stream_tmp("timetravel_")
     shutil.rmtree(out, ignore_errors=True)
     result = process_documents(htmlified_documents(spark, sf_dir))
     run_with_lineage(spark, result, out, n_buckets=8,
@@ -1622,14 +1616,11 @@ def streaming_feedback(spark, sf_dir):
     applied-flag write-back), and return the learned corrections table.
     The oracle recomputes what the loop must have learned with plain
     SQL over the same events."""
-    import os
     import shutil
-    import tempfile
 
     from ocr_service_spark.streaming.feedback import run_feedback_loop
 
-    os.makedirs("/root/repo/.tmp", exist_ok=True)
-    base = tempfile.mkdtemp(prefix="stream_", dir="/root/repo/.tmp")
+    base = _mk_stream_tmp("stream_")
     shutil.rmtree(base, ignore_errors=True)
     in_dir = f"{base}/drop"
     state = f"{base}/state"
@@ -2101,15 +2092,16 @@ def pii_scrub(spark, sf_dir):
 
 
 def _mk_stream_tmp(prefix: str) -> str:
-    """Create a scratch dir for a streaming query under the repo-local
-    (gitignored) .tmp, sweeping siblings of the same prefix older than
-    2 h so repeated driver rounds can't grow the dir unboundedly."""
+    """Create a scratch dir for a query under the repo-local
+    (gitignored) .tmp next to the package, sweeping siblings of the same
+    prefix older than 2 h so repeated runs can't grow the dir
+    unboundedly."""
     import os
     import shutil
     import tempfile
     import time as _time
 
-    root = "/root/repo/.tmp"
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
     os.makedirs(root, exist_ok=True)
     cutoff = _time.time() - 7200
     for d in os.listdir(root):
@@ -2268,14 +2260,12 @@ def warc_extract(spark, sf_dir):
     standard, since gzip members aren't splittable; here the corpus is
     packed into 8 archives."""
     import os
-    import tempfile
 
     from ocr_service_spark.entry_pipeline import htmlified_documents
     from ocr_service_spark.operators.extract import with_extraction
     from ocr_service_spark.sources.warc import read_warc, write_warc_bytes
 
-    os.makedirs("/root/repo/.tmp", exist_ok=True)
-    base = tempfile.mkdtemp(prefix="warc_", dir="/root/repo/.tmp")
+    base = _mk_stream_tmp("warc_")
 
     docs = htmlified_documents(spark, sf_dir).select("doc_id", "url", "warc_ts", "html")
 

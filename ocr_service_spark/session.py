@@ -47,7 +47,9 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", os.environ.get(
-            "SPARK_GRAFT_WAREHOUSE", "/root/repo/.spark-warehouse"))
+            "SPARK_GRAFT_WAREHOUSE", os.path.join(
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                ".spark-warehouse")))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

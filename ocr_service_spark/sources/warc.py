@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import gzip
 import io
+import re
 import zlib
 from collections.abc import Iterator
 from datetime import datetime
@@ -46,6 +47,8 @@ WARC_SCHEMA = ("url string, warc_ts timestamp, html binary, "
 WARC_STATS_SCHEMA = "warc_file string, n_records long, n_skipped long"
 
 _CRLF = b"\r\n"
+# gzip member header: magic 1f8b, CM=8 (deflate), FLG reserved bits clear
+_MEMBER_HEADER = re.compile(rb"\x1f\x8b\x08[\x00-\x1f]")
 
 
 def build_record(url: str, ts: datetime, payload: bytes,
@@ -77,16 +80,22 @@ def write_warc_bytes(records: list[tuple[str, datetime, bytes]],
 def _split_members(raw: bytes, stats: dict | None = None) -> Iterator[bytes]:
     """Decompress a concatenated gzip-member stream (or pass plain
     bytes through untouched). A corrupt member never fails the file:
-    on zlib.error the scanner resyncs to the next 1f8b gzip magic and
+    on zlib.error the scanner resyncs to the next gzip member header and
     keeps going (counted in stats['n_skipped'] — at least one record
-    was lost). A member that STALLS without reaching stream end (no
-    eof flag) is dropped the same way: zlib never got to the CRC, so
-    the partial plaintext is unverifiable — a mid-stream byte flip can
-    corrupt decoded bytes without raising, and yielding them would
-    hand parse_warc a complete-looking record with a silently mangled
+    was lost). A resync candidate is the 1f8b magic followed by CM=8
+    (deflate) and a FLG byte with the reserved bits (0xE0) clear, so
+    stray 1f8b pairs inside the corrupt member's compressed bytes are
+    not counted as further losses. A member that STALLS without
+    reaching stream end (no eof flag) is dropped the same way: zlib
+    never got to the CRC, so the partial plaintext is unverifiable — a
+    mid-stream byte flip can corrupt decoded bytes without raising, and
+    yielding them would hand parse_warc a complete-looking record with a silently mangled
     payload (hypothesis-found: n=2, victim=1, off=157, xor=32). True
     truncation of the final member looks identical from here and is
-    counted under the same rule — only CRC-verified plaintext yields."""
+    counted under the same rule — only CRC-verified plaintext yields.
+    An archive compressed as ONE gzip member (whole-file gzip rather
+    than per-record members) that is truncated therefore yields zero
+    records with n_skipped == 1."""
     if raw[:2] != b"\x1f\x8b":
         yield raw
         return
@@ -102,10 +111,10 @@ def _split_members(raw: bytes, stats: dict | None = None) -> Iterator[bytes]:
             # truncation): drop the unverifiable bytes, count, resync
             if stats is not None:
                 stats["n_skipped"] = stats.get("n_skipped", 0) + 1
-            nxt = raw.find(b"\x1f\x8b", pos + 2)
-            if nxt < 0:
+            nxt = _MEMBER_HEADER.search(raw, pos + 2)
+            if nxt is None:
                 return
-            pos = nxt
+            pos = nxt.start()
             continue
         yield chunk
         consumed = len(raw) - pos - len(d.unused_data)

@@ -19,8 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_service_spark.corpus import CORPUS_SCHEMA
-from ocr_service_spark.operators.correct import with_corrections
-from ocr_service_spark.operators.extract import with_extraction
+from ocr_service_spark.operators.extract import (
+    flatten_extraction,
+    make_extract_correct_udf,
+)
 
 __all__ = ["read_document_stream", "streaming_extract", "run_to_parquet"]
 
@@ -39,22 +41,12 @@ def read_document_stream(spark: SparkSession, in_dir: str,
 
 def streaming_extract(docs: DataFrame, dedup_watermark: str = "1 hour") -> DataFrame:
     """Stream-side extraction: watermarked per-url dedup, then the same
-    Arrow extraction + correction stages as the batch pipeline."""
+    fused Arrow extraction + correction UDF as the batch pipeline."""
     deduped = docs.withWatermark("warc_ts", dedup_watermark).dropDuplicates(["url"])
-    extracted = with_extraction(deduped, "html", "x")
-    ok = extracted.select(
-        "doc_id", "url", "warc_ts", "lang",
-        F.col("x.text").alias("extracted_text"),
-        F.col("x.spans").alias("spans"),
-        F.col("x.kind").alias("kind"),
-        F.col("x.error").alias("error"),
-    ).filter(F.col("error").isNull())
-    corrected = with_corrections(ok, "extracted_text", "c")
-    return corrected.select(
+    x = deduped.withColumn("x", make_extract_correct_udf()(F.col("html")))
+    return flatten_extraction(x.filter(F.col("x.error").isNull())).select(
         "doc_id", "url", "warc_ts", "lang", "kind", "extracted_text",
-        F.col("c.corrected_text").alias("corrected_text"),
-        F.col("c.corrections").alias("corrections_applied"),
-        "spans",
+        "corrected_text", "corrections_applied", "spans",
     )
 
 

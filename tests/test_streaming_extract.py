@@ -1,11 +1,19 @@
-"""Streaming extraction: drop-dir → watermarked url dedup → Arrow
-extraction → parquet sink, incremental across drains, byte-identical
-to the batch kernel oracle."""
+"""Streaming extraction: drop-dir → watermarked url dedup → fused Arrow
+extraction + correction → parquet sink, incremental across drains,
+byte-identical to the batch kernel oracle."""
 
 import pyspark.sql.functions as F
 
 from ocr_service_spark.corpus import corpus_df, gen_docs
-from ocr_service_spark.streaming.extract_stream import run_to_parquet
+from ocr_service_spark.kernel.correct import correct_document
+from ocr_service_spark.operators.correct import DEFAULT_CORRECTIONS
+from ocr_service_spark.streaming.extract_stream import run_to_parquet, streaming_extract
+
+
+def test_streaming_extract_plans_one_fused_arrow_node(spark):
+    plan = streaming_extract(corpus_df(spark, 20, partitions=2)) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_streaming_extract_matches_kernel(spark, tmp_path):
@@ -19,16 +27,22 @@ def test_streaming_extract_matches_kernel(spark, tmp_path):
     n1 = out.count()
     assert n1 > 0
 
-    got = {r.doc_id: r.extracted_text for r in out.collect()}
+    got = {r.doc_id: r for r in out.collect()}
     expected = {d.doc_id: d.expected_text for d in gen_docs(60)
                 if d.expected_text is not None}
     # per-url dedup keeps ONE crawl per url; every surviving row with a
-    # golden expectation must be byte-identical (truncated-html docs
-    # extract best-effort and carry no golden)
+    # golden expectation must be byte-identical, and so must its
+    # correction (truncated-html docs extract best-effort and carry no
+    # golden)
     checked = 0
-    for doc_id, text in got.items():
+    for doc_id, r in got.items():
         if doc_id in expected:
-            assert text == expected[doc_id]
+            assert r.extracted_text == expected[doc_id]
+            fixed, cs = correct_document(expected[doc_id], DEFAULT_CORRECTIONS)
+            assert r.corrected_text == fixed
+            assert [c.asDict() for c in r.corrections_applied] == [
+                {k: c[k] for k in ("original", "corrected", "confidence", "method")}
+                for c in cs]
             checked += 1
     assert checked >= 40
 

@@ -35,6 +35,30 @@ def test_non_response_and_malformed_records_skipped():
     assert len(got) == 1 and got[0]["url"] == RECS[0][0]
 
 
+def test_resync_skips_false_gzip_magics():
+    """A corrupt member carrying stray 1f8b pairs (CM 0 and CM 7) costs
+    one lost record, counted once: resync only lands on a real member
+    header. A truncated whole-file-gzip archive yields nothing and
+    counts one skip."""
+    import gzip
+
+    third = ("https://a.example/3", RECS[0][1], RECS[0][2])
+    first, mid, last = (gzip.compress(build_record(*r), mtime=0)
+                        for r in (RECS[0], RECS[1], third))
+    mid = bytearray(mid)
+    mid[30:33] = b"\x1f\x8b\x00"
+    mid[50:53] = b"\x1f\x8b\x07"
+    stats = {}
+    got = list(parse_warc(first + bytes(mid) + last, stats))
+    assert [g["url"] for g in got] == [RECS[0][0], third[0]]
+    assert stats["n_skipped"] == 1
+
+    whole = gzip.compress(b"".join(build_record(*r) for r in RECS), mtime=0)
+    stats = {}
+    assert list(parse_warc(whole[:len(whole) // 2], stats)) == []
+    assert stats["n_skipped"] == 1
+
+
 def test_skip_accounting_and_file_stats(spark, tmp_path):
     """read_warc surfaces per-file n_skipped; warc_file_stats reports
     one row per archive even when every record was dropped."""

@@ -9,10 +9,12 @@ Usage: python tools/dump_plans.py [--sf DIR]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHOW = [
     "extract_roundtrip",
@@ -89,7 +91,7 @@ def main() -> None:
             out.append(f"- ReadSchema: `{s}...`")
         out.append("")
     text = "\n".join(out) + "\n"
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(text)
     print(text[:1500])
     spark.stop()
