@@ -22,6 +22,7 @@ __all__ = [
     "tokens",
     "token_hash",
     "let_col",
+    "sql_over",
     "grams",
     "gram_hashes",
     "shingles",
@@ -91,6 +92,15 @@ def let_col(val: Column, body) -> Column:
     RE-EVALUATED PER ELEMENT (measured 5x slowdown on the shingle
     tier); a lambda variable is an O(1) read."""
     return F.get(F.transform(F.array(val), body), 0)
+
+
+def sql_over(body: str, **cols: Column) -> Column:
+    """let_col for a rule written as SQL text: `body` evaluated with
+    `t.<name>` bound once per row to the Column passed as `<name>`, so
+    one SQL definition serves projected column names and arbitrary
+    Columns alike."""
+    bound = F.array(F.struct(*[c.alias(name) for name, c in cols.items()]))
+    return F.get(F.call_function("transform", bound, F.expr(f"t -> {body}")), 0)
 
 
 def grams(toks: Column, n: int = 3) -> Column:

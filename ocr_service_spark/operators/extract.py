@@ -139,8 +139,7 @@ def flatten_extraction(df: DataFrame, col: str = "x") -> DataFrame:
     """The document key columns plus every field of the extraction
     struct `col` as its own column (text → extracted_text,
     corrections → corrections_applied)."""
-    return df.select(
+    return df.selectExpr(
         "doc_id", "url", "warc_ts", "lang",
-        *(F.col(f"{col}.{f}").alias(_FLAT_NAMES.get(f, f))
-          for f in df.schema[col].dataType.names),
+        *(f"{col}.{f} AS {_FLAT_NAMES.get(f, f)}" for f in df.schema[col].dataType.names),
     )

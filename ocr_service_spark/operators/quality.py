@@ -1,5 +1,5 @@
-"""Quality scoring + review predicates as pure column arithmetic
-(F17/P2-P4 of SURVEY.md §2) — whole-stage-codegen friendly, no UDF.
+"""Quality scoring + review predicates as Spark SQL text (F17/P2-P4 of
+SURVEY.md §2) — whole-stage-codegen friendly, no UDF.
 
 Graft mapping of the reference's image-quality metrics
 (services/quality_check.py:17-91) onto text-quality statistics:
@@ -10,65 +10,93 @@ Weighted mix 0.3/0.5/0.2 with clamp to [0,1] replicates
 services/quality_check.py:193-199; the review predicate
 (overall < 0.7 OR issues present) replicates quality_check.py:222 and
 processor.py:373-374.
+
+Each score is a SQL fragment of the SQL of its inputs, so
+`process_documents` writes it over its projected column names and the
+Column API (`text_quality`, `overall_quality`, `needs_review`) binds its
+Column arguments into the same text. Doubles are written 0.0D: a bare
+0.0 is a DECIMAL literal in Spark SQL.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["text_quality", "overall_quality", "needs_review", "compression_ratio"]
+from ocr_service_spark.functions.textstats import sql_over, tokens
+
+__all__ = ["quality_stats", "overall_quality_sql", "span_confidence_sql", "needs_review_sql",
+           "text_quality", "overall_quality", "needs_review", "compression_ratio"]
 
 
-def _clamp01(c: Column) -> Column:
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), c))
+def _stats_fields(text: str) -> str:
+    """named_struct arguments: alpha_ratio, length_score and n_chars."""
+    return (f"'alpha_ratio', CASE WHEN length({text}) > 0 THEN "
+            rf"length(regexp_replace({text}, r'[^\p{{L}}]', '')) / length({text}) ELSE 0.0D END, "
+            f"'length_score', least(1.0D, length({text}) / 200.0D), 'n_chars', length({text})")
+
+
+def quality_stats(text: str) -> Column:
+    """struct(alpha_ratio, length_score, n_chars, n_tokens) of the column
+    named `text` — integer counts ratioed once, deterministic. n_tokens
+    shares the tier-wide tokenizer (textstats.tokens: F6-normalized,
+    empty -> 0), so quality stats and the dedup/filter tier can never
+    disagree on a count."""
+    return F.expr(f"named_struct({_stats_fields(text)})").withField(
+        "n_tokens", F.size(tokens(F.col(text))))
+
+
+def overall_quality_sql(alpha_ratio: str, extraction_conf: str, length_score: str) -> str:
+    """0.3*structure + 0.5*extraction + 0.2*length, clamped
+    (reference services/quality_check.py:193-199 weights)."""
+    return (f"greatest(0.0D, least(1.0D, round({alpha_ratio} * 0.3D + {extraction_conf} * 0.5D"
+            f" + {length_score} * 0.2D, 4)))")
+
+
+def span_confidence_sql(spans: str) -> str:
+    """Mean span confidence to 4 places, 0.0 without spans."""
+    return (f"coalesce(round(aggregate({spans}, 0.0D, (acc, s) -> acc + s.confidence)"
+            f" / greatest(size({spans}), 1), 4), 0.0D)")
+
+
+def needs_review_sql(quality: str, valid_flags: list[str], n_issues: str | None = None) -> str:
+    """P3 (quality_check.py:222): quality under 0.7 or issues present,
+    OR'd with P2's any-invalid-field (processor.py:373-374) over the
+    fields' validity flags."""
+    terms = [f"{quality} < 0.7D"]
+    if n_issues is not None:
+        terms.append(f"{n_issues} > 0")
+    if valid_flags:
+        terms.append(f"exists(array({', '.join(valid_flags)}), v -> NOT v)")
+    return " OR ".join(terms)
 
 
 def text_quality(text: Column) -> Column:
-    """struct(alpha_ratio, length_score, n_chars, n_tokens) — integer
-    counts ratioed once, deterministic. n_tokens shares the tier-wide
-    tokenizer (textstats.tokens: F6-normalized, empty -> 0), so quality
-    stats and the dedup/filter tier can never disagree on a count."""
-    from ocr_service_spark.functions.textstats import tokens
-
-    n_chars = F.length(text)
-    letters = F.length(F.regexp_replace(text, r"[^\p{L}]", ""))
-    alpha_ratio = F.when(n_chars > 0, letters / n_chars).otherwise(F.lit(0.0))
-    length_score = F.least(F.lit(1.0), n_chars / F.lit(200.0))
-    n_tokens = F.size(tokens(text))
-    return F.struct(
-        alpha_ratio.alias("alpha_ratio"),
-        length_score.alias("length_score"),
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-    )
+    """quality_stats of a Column."""
+    return sql_over(f"named_struct({_stats_fields('t.text')}, 'n_tokens', t.n_tokens)",
+                    text=text, n_tokens=F.size(tokens(text)))
 
 
 def overall_quality(alpha_ratio: Column, extraction_conf: Column,
                     length_score: Column) -> Column:
-    """0.3*structure + 0.5*extraction + 0.2*length, clamped
-    (reference services/quality_check.py:193-199 weights)."""
-    return _clamp01(
-        F.round(
-            0.3 * alpha_ratio + 0.5 * extraction_conf + 0.2 * length_score, 4
-        )
-    )
+    """overall_quality_sql of Columns."""
+    return sql_over(overall_quality_sql("t.a", "t.c", "t.l"),
+                    a=alpha_ratio, c=extraction_conf, l=length_score)
 
 
 def needs_review(quality: Column, n_issues: Column,
                  fields: Column | None = None,
                  field_names: list[str] | None = None) -> Column:
-    """P3 (quality_check.py:222) OR'd with P2's any-invalid-field
-    (processor.py:373-374) when a fields struct + its names are given."""
-    base = (quality < 0.7) | (n_issues > 0)
+    """needs_review_sql of Columns; the any-invalid-field term reads
+    `fields[name].valid` when a fields struct and its names are given."""
+    cols = {"q": quality, "i": n_issues}
     if fields is not None and field_names:
-        any_invalid = F.exists(
-            F.array(*[fields[n]["valid"] for n in field_names]), lambda v: ~v
-        )
-        return base | any_invalid
-    return base
+        cols["fields"] = fields
+    flags = [f"t.fields.{n}.valid" for n in field_names] if "fields" in cols else []
+    return sql_over(needs_review_sql("t.q", flags, "t.i"), **cols)
 
 
 def compression_ratio(text: Column) -> Column:
@@ -76,24 +104,19 @@ def compression_ratio(text: Column) -> Column:
     highly repetitive boilerplate compresses far below natural prose,
     so `compressed_bytes / utf8_bytes` separates template spam from
     content. zlib level 6 on UTF-8 bytes; NULL for empty/NULL text.
-    Arrow-batched pandas UDF (no SQL twin exists for deflate — the
-    driver records this query rows-only; tests pin exact values
-    against direct zlib). Scale: pure map, no state, ~100 MB/s/core —
-    at 10^12 docs it rides the same Arrow stage as extraction."""
+    Iterator Arrow UDF over pyarrow arrays (no SQL twin exists for
+    deflate — the driver records this query rows-only; tests pin exact
+    values against direct zlib). Scale: pure map, no state, ~100
+    MB/s/core — at 10^12 docs it rides the same Arrow stage as
+    extraction."""
     import zlib
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _ratio(s: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return None
-            b = t.encode("utf-8")
-            if not b:
-                return None
-            return len(zlib.compress(b, 6)) / len(b)
-        return s.map(one)
+    @F.arrow_udf("double")
+    def _ratio(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for texts in batches:
+            encoded = (t.encode("utf-8") if t else b"" for t in texts.to_pylist())
+            yield pa.array([len(zlib.compress(b, 6)) / len(b) if b else None for b in encoded],
+                           pa.float64())
 
     # nondeterministic pin: stops Catalyst from duplicating the Arrow
     # node when a filter references the derived column (see BENCH.md)

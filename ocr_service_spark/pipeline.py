@@ -10,14 +10,20 @@ DataFrame chain —
       HTML density classify / PDF block merge + contextual digit fix +
       dictionary token map — replaces stages 2-5 of the reference
       lifecycle)
-    → field validation structs (native exprs — stage 7)
-    → quality + needs_review (stages 8, P2/P3)
-    → final projection (stage 11, processor.py:346-376)
+    → error filter
+    → one projection per dependency level, each column a Spark SQL
+      rule from operators/validate.py and operators/quality.py:
+      (1) flat columns, document_id, quality stats, span confidence
+          and the raw field/surname scans `_cands`;
+      (2) the valid candidates `_valids` and overall_quality;
+      (3) the final record: critical_fields, important_data and
+          needs_review (stages 7, 8, P2/P3, 11; processor.py:346-376)
 
-Catalyst plans this as: one scan stage into the salted partial-dedup
-shuffle, one post-shuffle stage carrying the single ArrowEvalPython
-node plus every native expr — vs the reference's fully serial per-file
-loop (processor.py:415-417).
+Building the plan parses a few SQL strings rather than assembling
+Column trees node by node over py4j. Catalyst plans it as: one scan
+stage into the salted partial-dedup shuffle, one post-shuffle stage
+carrying the single ArrowEvalPython node plus every native expr — vs
+the reference's fully serial per-file loop (processor.py:415-417).
 
 Deterministic document id (F14): reference uses uuid4
 (processor.py:111) which breaks idempotent restart; we derive
@@ -35,16 +41,18 @@ from ocr_service_spark.operators.extract import (
     with_extraction,
 )
 from ocr_service_spark.operators.quality import (
-    needs_review,
-    overall_quality,
-    text_quality,
+    needs_review_sql,
+    overall_quality_sql,
+    quality_stats,
+    span_confidence_sql,
 )
 from ocr_service_spark.operators.validate import (
     FIELD_EXPRS,
-    field_candidates,
-    important_data,
-    valid_candidates,
-    validated_fields,
+    candidates_sql,
+    critical_fields_sql,
+    field_valid_sql,
+    important_data_sql,
+    valid_candidates_sql,
 )
 
 __all__ = ["extract_documents", "process_documents"]
@@ -80,59 +88,29 @@ def process_documents(
     # extracted text JVM→Python→JVM→Python; the fusion corrects while
     # the text is still a hot Python object. Validation then runs on the
     # CORRECTED text (processor.py:279-282 validates post-correction).
-    x = docs.withColumn("x", make_extract_correct_udf()(F.col("html")))
-    ok = flatten_extraction(x.filter(F.col("x.error").isNull()))
+    x = docs.select("*", make_extract_correct_udf()(F.col("html")).alias("x"))
+    ok = flatten_extraction(x.filter("x.error IS NULL"))
 
-    txt = F.col("corrected_text")
-    span_conf = F.coalesce(
-        F.round(
-            F.aggregate(
-                F.col("spans"),
-                F.lit(0.0),
-                lambda acc, s: acc + s["confidence"],
-            )
-            / F.greatest(F.size("spans"), F.lit(1)),
-            4,
-        ),
-        F.lit(0.0),
+    # One projection per dependency level. Every field and surname
+    # pattern scans the text once, and every validity filter runs once:
+    # the later levels read the projected _cands and _valids columns,
+    # which Catalyst keeps rather than inlines.
+    level1 = ok.select(
+        "*",
+        F.expr("concat_ws('_', url, substring(sha2(url, 256), 1, 8)) AS document_id"),
+        quality_stats("corrected_text").alias("quality_stats"),
+        F.expr(span_confidence_sql("spans") + " AS extraction_confidence"),
+        F.expr(candidates_sql("corrected_text") + " AS _cands"),
     )
-
-    q = text_quality(txt)
-    enriched = (
-        ok.withColumn("document_id",
-                      F.concat_ws("_", F.col("url"),
-                                  F.substring(F.sha2(F.col("url"), 256), 1, 8)))
-        .withColumn("quality_stats", q)
-        .withColumn("extraction_confidence", span_conf)
-        .withColumn(
-            "overall_quality",
-            overall_quality(
-                F.col("quality_stats.alpha_ratio"),
-                F.col("extraction_confidence"),
-                F.col("quality_stats.length_score"),
-            ),
-        )
-        # every field and surname pattern scans the text once, and every
-        # validity filter runs once: the structs below read these
-        # projected columns, which Catalyst keeps rather than inlines
-        .withColumn("_cands", field_candidates(txt))
-        .withColumn("_valids", valid_candidates(F.col("_cands"), names))
-        .withColumn("critical_fields",
-                    validated_fields(txt, names, cands=F.col("_cands"),
-                                     valids=F.col("_valids")))
-        .withColumn("important_data", important_data(txt, cands=F.col("_cands")))
-        .withColumn(
-            "needs_review",
-            needs_review(
-                F.col("overall_quality"),
-                F.when(F.col("error").isNotNull(), 1).otherwise(0),
-                F.col("critical_fields"),
-                names,
-            ),
-        )
+    level2 = level1.selectExpr(
+        "*",
+        valid_candidates_sql("_cands", names) + " AS _valids",
+        overall_quality_sql("quality_stats.alpha_ratio", "extraction_confidence",
+                            "quality_stats.length_score") + " AS overall_quality",
     )
-    # final projection — reference processor.py:346-376
-    return enriched.select(
+    # final projection — reference processor.py:346-376. Every row
+    # passed the error filter, so needs_review carries no issues term.
+    return level2.selectExpr(
         "document_id",
         "url",
         "warc_ts",
@@ -147,7 +125,8 @@ def process_documents(
         "extraction_confidence",
         "quality_stats",
         "overall_quality",
-        "critical_fields",
-        "important_data",
-        "needs_review",
+        critical_fields_sql("_cands", "_valids", names) + " AS critical_fields",
+        important_data_sql("_cands") + " AS important_data",
+        needs_review_sql("overall_quality", [field_valid_sql("_valids", n) for n in names])
+        + " AS needs_review",
     )

@@ -766,19 +766,14 @@ def field_validation(spark, sf_dir):
     directly). Phone parity is covered by the kernel pytest suite
     instead — its pattern is ambiguous over long digit runs. Reference:
     core/validators.py:25-76 patterns, 85-117 validate loop."""
-    from ocr_service_spark.operators.validate import field_struct
+    from ocr_service_spark.operators.validate import validated_fields
 
-    docs = _t(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.expr(_FIELD_TXT).alias("txt"))
-    cols = [F.col("doc_id")]
-    for name in ("ogrn", "inn", "kpp", "date", "snils", "email"):
-        s = field_struct(F.col("txt"), name)
-        cols += [
-            s["value"].alias(f"{name}_value"),
-            s["valid"].alias(f"{name}_valid"),
-            s["confidence"].alias(f"{name}_conf"),
-        ]
-    return t.select(*cols)
+    names = ["ogrn", "inn", "kpp", "date", "snils", "email"]
+    t = _t(spark, sf_dir, "documents").select(
+        "doc_id", validated_fields(F.expr(_FIELD_TXT), names).alias("f"))
+    return t.selectExpr("doc_id", *(
+        f"f.{name}.{field} AS {name}_{suffix}" for name in names
+        for field, suffix in (("value", "value"), ("valid", "valid"), ("confidence", "conf"))))
 
 
 # the synthesized doc text — valid in BOTH Spark SQL and DuckDB

@@ -1,8 +1,11 @@
 """SparkSession factory.
 
-Local-mode settings tuned for the sandbox (single JVM, up to 32 threads,
-128 GiB). On a real cluster the same builder is used minus `master`; the
-partitioning/AQE settings are the ones that matter at 100 TB:
+Local-mode settings derived from the host: one task slot per usable CPU
+less one (left for the JVM, GC and the driver) and a driver heap of 1/8
+of RAM clamped to [1, 4] GiB; `SPARK_GRAFT_CPUS` and
+`SPARK_GRAFT_DRIVER_MEM` override them. On a real cluster the same
+builder is used minus `master`; the partitioning/AQE settings are the
+ones that matter at 100 TB:
 
 - AQE on (runtime coalescing + skew-join splitting),
 - Arrow enabled (every Python touch in this engine is Arrow-batched;
@@ -19,6 +22,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """1/8 of the host's RAM, clamped to [1, 4] GiB."""
+    with open("/proc/meminfo") as f:
+        mem_kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(4096, max(1024, mem_kib // 1024 // 8))}m"
+
+
 def build_session(
     app_name: str = "ocr_service_spark",
     cores: int | None = None,
@@ -26,7 +36,8 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                    or max(1, len(os.sched_getaffinity(0)) - 1))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -43,7 +54,7 @@ def build_session(
         # task streams many batches: the JVM evaluates the native
         # projection over batch k while Python runs batch k+1.
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(512 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", os.environ.get(

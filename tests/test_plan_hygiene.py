@@ -173,11 +173,11 @@ def test_incremental_pagerank_persisted_side_never_shuffle_joined(spark):
 
 
 def test_process_documents_scans_each_pattern_once(spark):
-    # critical_fields and important_data read one projected
-    # field_candidates struct: every field and surname pattern is one
+    # critical_fields and important_data read one projected _cands
+    # struct: every field and surname pattern is one
     # regexp_extract_all in the plan (7 + 3), inn/snils are not
     # rescanned; each field's validity filter reads it once, through
-    # the projected valid_candidates struct; and the fused
+    # the projected _valids struct; and the fused
     # extract+correct UDF is still one node
     from ocr_service_spark.corpus import corpus_df
     from ocr_service_spark.operators.validate import FIELD_EXPRS, SCANS
@@ -191,3 +191,31 @@ def test_process_documents_scans_each_pattern_once(spark):
     for name in FIELD_EXPRS:
         assert len(re.findall(rf"filter\(_cands#\d+\.{name}, ", plan)) == 1, name
     assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_process_documents_builds_in_few_jvm_round_trips(spark):
+    # the validation and quality rules are SQL text, parsed in a few
+    # calls: building the plan must not send a py4j command per Column
+    # node (3,862 commands when every rule was a Column tree of HOF
+    # lambdas and a withColumn chain)
+    from ocr_service_spark.corpus import corpus_df
+    from ocr_service_spark.pipeline import process_documents
+
+    docs = corpus_df(spark, 20, partitions=2)
+    process_documents(docs)  # warm: first-call imports and class lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send, counts = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):  # py4j's garbage-collection notices
+            counts[-1] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        for _ in range(2):
+            counts.append(0)
+            process_documents(docs)
+    finally:
+        del client.send_command
+    assert counts[0] == counts[1] <= 800, counts
