@@ -33,12 +33,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Driver-facing ORDER matters: the correctness gate takes the first
-    # 50 entries (VERDICT r4), so never-driver-proven queries come
-    # first — see queries.DRIVER_PRIORITY and COVERAGE.md's rotation.
-    from ocr_service_spark.queries import ordered_queries
+    from ocr_service_spark.queries import QUERIES
 
-    return ordered_queries()
+    return QUERIES
 
 
 def oracle_sql() -> dict[str, str]:

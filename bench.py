@@ -1,7 +1,7 @@
 """Benchmark harness (driver contract: prints ONE JSON line).
 
 Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS]:
+on build_session's host-derived local[N] ($SPARK_GRAFT_CPUS overrides):
 
 - `extract_flagship`: the north-star path — render every documents row
   into a boilerplated page and run the full extraction + dedup +
@@ -12,7 +12,7 @@ on local[$SPARK_GRAFT_CPUS]:
   (PDF branch, charset variants, skewed hosts, re-crawl dups) at
   $SPARK_GRAFT_BENCH_DOCS (default 20000) generated docs — the
   throughput number the scaling check uses.
-- a relational/window/near-dup sample from the query registry.
+- a dedup/near-dup/corpus-construction sample from the query registry.
 
 Modes:
     python bench.py                 # one JSON line (driver contract)
@@ -32,10 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HEADLINE = [
-    "q1_pricing_summary",
-    "region_revenue",
-    "window_running",
-    "dedup_latest_events",
+    "recrawl_dedup",
     "minhash_signatures",
     "simhash",
     "embedding_topk",
@@ -67,12 +64,13 @@ _FLOORS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 _SEED_FLOORS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                  "bench_data", "bench_r3_final_floor.json")
 
-# The 16-query set BENCH_r03 recorded — kept as a stable
-# round-over-round comparable subtotal (VERDICT r4 item 3) no matter
-# how the headline grows.
+# The 16-query set BENCH_r03 recorded — kept as a round-over-round
+# comparable subtotal (VERDICT r4 item 3) no matter how the headline
+# grows. q1_pricing_summary, region_revenue, window_running and
+# dedup_latest_events have since left the registry, so the subtotal
+# sums the remaining 12 and is not comparable with BENCH_r03-r05.
 OVERLAP16 = [
-    "extract_flagship", "extract_corpus", "q1_pricing_summary",
-    "region_revenue", "window_running", "dedup_latest_events",
+    "extract_flagship", "extract_corpus",
     "minhash_signatures", "simhash", "embedding_topk",
     "extract_roundtrip", "jaccard_pairs", "chunk_dedup",
     "embedding_ivf_ann", "token_entropy", "ngram_repetition",
@@ -142,7 +140,7 @@ def _loadavg() -> float:
         return -1.0
 
 
-def run_once(sf_dir: str, cores: int) -> dict:
+def run_once(sf_dir: str) -> dict:
     from ocr_service_spark.bench_probe import materialize
     from ocr_service_spark.entry_pipeline import htmlified_documents
     from ocr_service_spark.pipeline import process_documents
@@ -160,9 +158,10 @@ def run_once(sf_dir: str, cores: int) -> dict:
     # DEFAULT, so wider hosts can open it up — and the effective width
     # rides the emitted JSON so results are self-describing.
     cap = int(os.environ.get("SPARK_GRAFT_SHUFFLE_CAP", "16"))
+    spark = build_session("bench")
+    cores = spark.sparkContext.defaultParallelism
     shuffle_partitions = min(max(cores, 8), cap)
-    spark = build_session("bench", cores=cores,
-                          shuffle_partitions=shuffle_partitions)
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     timings: dict[str, float] = {}
     noise: dict[str, dict] = {}
     n_corpus = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
@@ -172,7 +171,7 @@ def run_once(sf_dir: str, cores: int) -> dict:
     max_attempts = int(os.environ.get("SPARK_GRAFT_MAX_ATTEMPTS", "5"))
 
     # warm the JVM/codegen so per-query numbers measure the plan, not startup
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    spark.read.parquet(f"{sf_dir}/documents.parquet").count()
 
     def best_of(name, fn, reps: int = 2, warm: bool = False):
         # The sandbox host has periodic EXTERNAL contention bursts (load
@@ -245,6 +244,7 @@ def run_once(sf_dir: str, cores: int) -> dict:
     return {
         "timings": timings,
         "noise": noise,
+        "cores": cores,
         "shuffle_partitions": shuffle_partitions,
         "flagship_docs": n_docs,
         "flagship_docs_per_sec": round(n_docs / flagship_s, 1),
@@ -256,7 +256,6 @@ def run_once(sf_dir: str, cores: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     if "--scaling-child" in sys.argv:
@@ -297,9 +296,10 @@ def main() -> None:
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          ".bench", f"corpus_{n_corpus}.parquet"))
         spark = build_session(
-            "bench_scaling", cores=cores, shuffle_partitions=max(cores, 8),
+            "bench_scaling",
             extra_conf={"spark.ui.enabled": "true",
                         "spark.ui.port": str(ui_port)})
+        cores = spark.sparkContext.defaultParallelism
         ensure_bench_corpus(spark, corpus_path, n_corpus)
         docs = spark.read.parquet(corpus_path)
         docs.count()  # warm JVM + page cache
@@ -353,6 +353,8 @@ def main() -> None:
         # command line runs unchanged on a yarn/k8s cluster).
         submit = os.environ.get("SPARK_GRAFT_SUBMIT") == "1"
         if submit:
+            from ocr_service_spark.session import _driver_memory
+
             sys.path.insert(0, os.path.join(repo, "tools"))
             from make_pyfiles import build as build_zip
             zip_path = build_zip(os.path.join(repo, ".bench", "ocr_service_spark.zip"))
@@ -368,7 +370,7 @@ def main() -> None:
                     # silently ignored (1g default → OOM, exit 52).
                     cmd = ["spark-submit", "--master", f"local[{c}]",
                            "--driver-memory",
-                           os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+                           os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(),
                            "--py-files", zip_path,
                            os.path.join(repo, "tools", "scaling_job.py")]
                 else:
@@ -432,7 +434,7 @@ def main() -> None:
         return
 
     load_start = _loadavg()
-    r = run_once(sf_dir, cores)
+    r = run_once(sf_dir)
     total = round(sum(r["timings"].values()), 3)
     suspects = sorted(k for k, v in r["noise"].items() if v["suspect"])
 
@@ -455,7 +457,7 @@ def main() -> None:
         pass
     print(json.dumps({"metric": "noise_audit", **audit}))
 
-    print(headline_line(r, sf, cores, total, suspects))
+    print(headline_line(r, sf, r["cores"], total, suspects))
 
 
 def headline_line(r, sf, cores, total, suspects) -> str:

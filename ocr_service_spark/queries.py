@@ -1,6 +1,9 @@
-"""Driver-facing query registry: every implemented operator from
-SURVEY.md §2 exposed as a (spark, sf_dir) -> DataFrame callable plus a
-DuckDB-runnable ANSI-SQL oracle that computes the same result.
+"""Driver-facing query registry: the extraction system's operators
+(SURVEY.md §2; COVERAGE.md maps each to its query) exposed as
+(spark, sf_dir) -> DataFrame callables, each with a DuckDB-runnable
+ANSI-SQL oracle that computes the same result. The registry holds at
+most 50 queries, the number the driver's correctness gate checks, so a
+new query replaces or merges an existing one.
 
 Parity rules (the driver hash-compares values with columns sorted by
 name, rows order-insensitive):
@@ -9,7 +12,7 @@ name, rows order-insensitive):
   change the result;
 - timestamps leave the query as `date_format(...)` strings, so session
   timezone can't skew the comparison;
-- ranking ties always break on a unique key (vec_id / custkey / ...);
+- ranking ties always break on a unique key (vec_id / doc_id / ...);
 - aliases match exactly between the Spark plan and the oracle SQL.
 
 Scale notes ride on each query: the same plan is what we'd run at
@@ -57,473 +60,50 @@ _TOKS_SQL = (f"CASE WHEN {_NRM_SQL} = '' THEN [] "
 
 
 # ---------------------------------------------------------------------------
-# Aggregation tier (SURVEY.md §2.4: A1/A8 analogs on TPC-H-ish tables)
-# ---------------------------------------------------------------------------
-
-@query(
-    "q1_pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-           ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS avg_qty,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape — partial+final hash agg with map-side combine
-    (reference analog: hand-rolled sum/len accumulations,
-    core/processor.py:223-231; SURVEY.md A1/A8). Decimal-cast sums make
-    the result independent of partial-agg order at any parallelism."""
-    l = _t(spark, sf_dir, "lineitem")
-    dec2 = lambda c: F.col(c).cast("decimal(18,2)")
-    return (
-        l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec2("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec2("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum((F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-                  .cast("decimal(18,4)")).cast("double").alias("sum_disc_price"),
-            F.round(
-                F.sum(dec2("l_quantity")).cast("double") / F.count("*"), 4
-            ).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-@query(
-    "top_customers",
-    oracle="""
-    SELECT c.c_custkey, c.c_name,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
-           COUNT(*) AS n_orders
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY total_spent DESC, c.c_custkey
-    LIMIT 10
-    """,
-)
-def top_customers(spark, sf_dir):
-    """Join + agg + global top-k (SURVEY.md J/A4/O4). Aggregate the fact
-    FIRST (shrinks 15k orders -> 1.5k groups before the join), then
-    broadcast-join the customer dim: at 10^12 rows the pre-agg side of
-    the join is what keeps the shuffle small. Spark's TakeOrderedAndProject
-    handles the top-10 without a global sort."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total_spent"),
-        F.count("*").alias("n_orders"),
-    )
-    return (
-        per_cust.join(F.broadcast(c), per_cust.o_custkey == c.c_custkey)
-        .select("c_custkey", "c_name", "total_spent", "n_orders")
-        .orderBy(F.desc("total_spent"), F.asc("c_custkey"))
-        .limit(10)
-    )
-
-
-@query(
-    "region_revenue",
-    oracle="""
-    SELECT r.r_name, n.n_name,
-           CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem l
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey  = c.c_custkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name, n.n_name
-    """,
-)
-def region_revenue(spark, sf_dir):
-    """TPC-H Q5-shaped multiway star join (SURVEY.md §2.3 'multi-way
-    equi-joins'). Shuffle joins on the fact keys (lineitem x orders x
-    customer); only the genuinely small dims (nation, region — fixed
-    25/5 rows at every SF) carry broadcast hints. customer scales with
-    the data (billions of rows at the 100 TB target) so its join is
-    left to AQE: broadcast while it fits the threshold, shuffle-hash
-    beyond."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.sum((F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-                  .cast("decimal(18,4)")).cast("double").alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-@query(
-    "mktsegment_having",
-    oracle="""
-    SELECT c_mktsegment,
-           COUNT(*) AS n_customers,
-           ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS avg_acctbal
-    FROM customer
-    GROUP BY c_mktsegment
-    HAVING COUNT(*) >= 300
-    ORDER BY c_mktsegment
-    """,
-)
-def mktsegment_having(spark, sf_dir):
-    """GroupBy + HAVING (SURVEY.md A2: the reference's grouped feedback
-    mining with count/avg-confidence thresholds,
-    services/feedback_collector.py:185-234)."""
-    c = _t(spark, sf_dir, "customer")
-    return (
-        c.groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.round(
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double")
-                / F.count("*"), 4,
-            ).alias("avg_acctbal"),
-        )
-        .filter(F.col("n_customers") >= 300)
-        .orderBy("c_mktsegment")
-    )
-
-
-@query(
-    "priority_counts",
-    oracle="""
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_finished,
-           CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-)
-def priority_counts(spark, sf_dir):
-    """Conditional counts (SURVEY.md A7/A12: applied-vs-pending and
-    success counters, services/feedback_collector.py:251-267)."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("n_finished"),
-        F.sum(F.when(F.col("o_orderstatus") == "O", 1).otherwise(0)).alias("n_open"),
-    )
-
-
-@query(
-    "rollup_lineitem",
-    oracle="""
-    SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-           COALESCE(l_linestatus, 'ALL') AS linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           COUNT(*) AS n
-    FROM lineitem
-    GROUP BY ROLLUP(l_returnflag, l_linestatus)
-    """,
-)
-def rollup_lineitem(spark, sf_dir):
-    """ROLLUP grouping sets (SURVEY.md §2.4 'grouping sets available
-    built-in'; reference computes per-phase AND total stats separately,
-    scripts/process_certificates_all_phases.py:319-355 — rollup does
-    both in one pass)."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-            F.count("*").alias("n"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n",
-        )
-    )
-
-
-@query(
-    "part_brand_stats",
-    oracle="""
-    SELECT p_brand,
-           COUNT(*) AS n_parts,
-           ROUND(CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS avg_price,
-           CAST(MAX(p_size) AS BIGINT) AS max_size
-    FROM part
-    WHERE p_type LIKE '%PROMO%' OR p_type = 'ECONOMY'
-    GROUP BY p_brand
-    """,
-)
-def part_brand_stats(spark, sf_dir):
-    """Predicate-pushdown filter + agg (SURVEY.md P-tier + A-tier); the
-    LIKE filter reaches the parquet scan as a pushed StringContains."""
-    p = _t(spark, sf_dir, "part")
-    return (
-        p.filter(F.col("p_type").like("%PROMO%") | (F.col("p_type") == "ECONOMY"))
-        .groupBy("p_brand")
-        .agg(
-            F.count("*").alias("n_parts"),
-            F.round(
-                F.sum(F.col("p_retailprice").cast("decimal(18,2)")).cast("double")
-                / F.count("*"), 4,
-            ).alias("avg_price"),
-            F.max("p_size").cast("bigint").alias("max_size"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Window tier (SURVEY.md §2.5) over the events table
-# ---------------------------------------------------------------------------
-
-@query(
-    "window_running",
-    oracle="""
-    SELECT event_id, user_id,
-           ROW_NUMBER() OVER w AS rn,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
-           LAG(event_id) OVER w AS prev_event_id
-    FROM events
-    WHERE user_id < 50
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-)
-def window_running(spark, sf_dir):
-    """row_number / running sum / lag over a per-user event stream
-    (SURVEY.md §2.5 'ranking, lag/lead, sliding frames'). Total order
-    inside the partition is (ts, event_id) so parallel runs agree;
-    running sums go through DECIMAL so frame-prefix sums are exact."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return e.select(
-        "event_id",
-        "user_id",
-        F.row_number().over(w).alias("rn"),
-        F.sum(F.col("value").cast("decimal(18,6)"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("double")
-        .alias("running_value"),
-        F.lag("event_id").over(w).alias("prev_event_id"),
-    )
-
-
-@query(
-    "sessionize",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
-                  OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-      FROM events WHERE user_id < 50
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), s AS (
-      SELECT user_id, event_id, ts,
-             CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM g
-    )
-    SELECT user_id, session_id, COUNT(*) AS n_events,
-           epoch_ms(MAX(ts)) - epoch_ms(MIN(ts)) AS duration_ms
-    FROM s GROUP BY user_id, session_id
-    """,
-)
-def sessionize(spark, sf_dir):
-    """Gap-based sessionization (30-min inactivity) via lag + cumulative
-    flag sum — the batch twin of a Structured Streaming session window
-    (SURVEY.md §2.10 'session windows: none in reference, built for the
-    streaming tier'). At scale this is one shuffle on user_id."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # parquet TIMESTAMP(isAdjustedToUTC=false) reads as TIMESTAMP_NTZ in
-    # Spark 4; unix_millis wants an instant — the NTZ→LTZ cast uses the
-    # session tz (UTC) and cancels out in gap/duration arithmetic.
-    ms = F.unix_millis(F.col("ts").cast("timestamp_ltz"))
-    flagged = e.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.when(
-            (ms - F.lag(ms).over(w) > 1800000) | F.lag("ts").over(w).isNull(), 1
-        ).otherwise(0).alias("is_new"),
-    )
-    sessions = flagged.withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    dur = F.unix_millis(F.max("ts").cast("timestamp_ltz")) - F.unix_millis(
-        F.min("ts").cast("timestamp_ltz"))
-    return sessions.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_events"),
-        dur.alias("duration_ms"),
-    )
-
-
-@query(
-    "tumbling_window",
-    oracle="""
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def tumbling_window(spark, sf_dir):
-    """Tumbling event-time window agg — the batch shape of
-    `readStream → groupBy(window(ts, '1 hour')) → agg` (SURVEY.md §2.10;
-    streaming variant lives in ocr_service_spark/streaming/). Uses
-    F.window (real window struct), emitted as a formatted string so the
-    oracle's date_trunc matches byte-for-byte."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-@query(
-    "topk_per_group",
-    oracle="""
-    SELECT event_type, user_id, total_value, rnk FROM (
-      SELECT event_type, user_id,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY SUM(CAST(value AS DECIMAL(18,6))) DESC, user_id) AS rnk
-      FROM events GROUP BY event_type, user_id
-    ) WHERE rnk <= 3
-    """,
-)
-def topk_per_group(spark, sf_dir):
-    """Best-per-group / top-k per key (SURVEY.md W1: the reference's
-    max-by-confidence candidate pick, core/validators.py:186-191).
-    Aggregate first, then a window over the (small) aggregated set —
-    never a window over the raw fact table."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events")
-    per = e.groupBy("event_type", "user_id").agg(
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value")
-    )
-    w = Window.partitionBy("event_type").orderBy(F.desc("total_value"), F.asc("user_id"))
-    return (
-        per.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("event_type", "user_id", "total_value", "rnk")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Set operations / semi-anti joins (SURVEY.md §2.7, §2.3)
-# ---------------------------------------------------------------------------
-
-@query(
-    "set_ops_users",
-    oracle="""
-    SELECT 'click_and_purchase' AS kind, user_id FROM (
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
-      INTERSECT
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-    )
-    UNION ALL
-    SELECT 'view_no_signup' AS kind, user_id FROM (
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'view'
-      EXCEPT
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'signup'
-    )
-    """,
-)
-def set_ops_users(spark, sf_dir):
-    """INTERSECT / EXCEPT / UNION ALL (SURVEY.md U1-U3; reference only
-    has list-append unions, core/processor.py:412-438 — set ops come
-    free in Spark)."""
-    e = _t(spark, sf_dir, "events")
-    by = lambda t: e.filter(F.col("event_type") == t).select("user_id").distinct()
-    both = by("click").intersect(by("purchase")).select(
-        F.lit("click_and_purchase").alias("kind"), "user_id")
-    only = by("view").exceptAll(by("signup")).select(
-        F.lit("view_no_signup").alias("kind"), "user_id")
-    return both.unionByName(only)
-
-
-@query(
-    "anti_semi_customers",
-    oracle="""
-    SELECT c.c_custkey, c.c_name, FALSE AS has_orders
-    FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    UNION ALL
-    SELECT c.c_custkey, c.c_name, TRUE AS has_orders
-    FROM customer c WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """,
-)
-def anti_semi_customers(spark, sf_dir):
-    """Left-anti + left-semi joins (SURVEY.md §2.3: the reference's
-    'skip candidates already in the corrections DB',
-    services/active_learning.py:110). The orders side is reduced to
-    distinct keys before joining — at 10^12 rows the anti join probe
-    side must be the deduplicated key set, not the raw fact."""
-    c = _t(spark, sf_dir, "customer")
-    o_keys = _t(spark, sf_dir, "orders").select("o_custkey").distinct()
-    anti = c.join(o_keys, c.c_custkey == o_keys.o_custkey, "left_anti").select(
-        "c_custkey", "c_name", F.lit(False).alias("has_orders"))
-    semi = c.join(o_keys, c.c_custkey == o_keys.o_custkey, "left_semi").select(
-        "c_custkey", "c_name", F.lit(True).alias("has_orders"))
-    return anti.unionByName(semi)
-
-
-# ---------------------------------------------------------------------------
 # Dedup tier
 # ---------------------------------------------------------------------------
 
+# Every documents row crawled three times under one url: crawl k has
+# its own id (doc_id * 3 + k) and a warc_ts that permutes across the
+# crawls, so the latest crawl differs from doc to doc; on every tenth
+# url all three crawls share one warc_ts and the crawl id breaks the tie.
+_RECRAWL_DAYS = "CASE WHEN doc_id % 10 = 0 THEN 0 ELSE (doc_id + 2 * crawl) % 3 END"
+
+
 @query(
-    "dedup_latest_events",
-    oracle="""
-    SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s, event_type
-    FROM events
-    QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
+    "recrawl_dedup",
+    oracle=f"""
+    WITH c AS (
+      SELECT 'https://host' || CAST(doc_id % 97 AS VARCHAR)
+               || '.example/doc/' || CAST(doc_id AS VARCHAR) AS url,
+             doc_id * 3 + crawl AS crawl_id, crawl,
+             TIMESTAMP '2025-01-01' + INTERVAL ({_RECRAWL_DAYS}) DAY AS warc_ts
+      FROM documents, range(3) r(crawl)
+    )
+    SELECT url, crawl_id, crawl, strftime(warc_ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+    FROM c
+    QUALIFY ROW_NUMBER() OVER (PARTITION BY url ORDER BY warc_ts DESC, crawl_id DESC) = 1
     """,
 )
-def dedup_latest_events(spark, sf_dir):
-    """The north-rule dedup-and-validate shuffle: keep the latest row
-    per key via SALTED two-phase max-of-struct aggregation (no window,
-    no sort — operators/dedup.py). At 10^12 rows a hot key is split
-    across n_salts reducers in phase 1; phase 2 touches one row per
-    (key, salt)."""
-    e = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
-    d = dedup_latest(e, key="user_id", order_cols=("ts", "event_id"), n_salts=8)
-    return d.select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "event_type",
+def recrawl_dedup(spark, sf_dir):
+    """The pipeline's dedup-and-validate shuffle on its own input shape:
+    keep the latest crawl per url via SALTED two-phase max-of-struct
+    aggregation (operators/dedup.py; no window, no sort), ties on
+    warc_ts broken by the larger crawl id. At 10^12 rows a hot url is
+    split across n_salts reducers in phase 1; phase 2 touches one row
+    per (url, salt)."""
+    crawls = _t(spark, sf_dir, "documents").selectExpr(
+        "doc_id", "explode(sequence(0, 2)) AS crawl").selectExpr(
+        "concat('https://host', CAST(doc_id % 97 AS STRING), '.example/doc/', "
+        "CAST(doc_id AS STRING)) AS url",
+        "doc_id * 3 + crawl AS crawl_id",
+        "crawl",
+        f"TIMESTAMP'2025-01-01 00:00:00' + make_dt_interval({_RECRAWL_DAYS}) AS warc_ts",
     )
+    d = dedup_latest(crawls, key="url", order_cols=("warc_ts", "crawl_id"), n_salts=8)
+    return d.select(
+        "url", "crawl_id", "crawl",
+        F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"))
 
 
 # ---------------------------------------------------------------------------
@@ -594,53 +174,61 @@ def correction_join(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Feedback mining (SURVEY.md A2/A3/T4) over a synthesized feedback stream
+# Batch summary (SURVEY.md §3.2, A5-A9/A11/A12) over extraction output
 # ---------------------------------------------------------------------------
 
+# Every tenth page is a failed fetch: an empty payload, which the
+# extractor turns into an error row.
+_FAILED_FETCH = "doc_id % 10 = 0"
+
+
 @query(
-    "feedback_mining",
-    oracle="""
-    WITH feedback AS (
-      SELECT concat('w', CAST(event_id % 50 AS VARCHAR)) AS original,
-             upper(concat('w', CAST(event_id % 50 AS VARCHAR))) AS corrected,
-             ROUND((event_id % 100) / 100.0, 2) AS confidence,
-             (event_id % 4 = 0) AS applied
-      FROM events WHERE event_type = 'error'
-    )
-    SELECT original, corrected, COUNT(*) AS occurrences,
-           ROUND(CAST(SUM(CAST(confidence AS DECIMAL(10,2))) AS DOUBLE) / COUNT(*), 4) AS avg_confidence
-    FROM feedback
-    WHERE NOT applied
-    GROUP BY original, corrected
-    HAVING COUNT(*) >= 2 AND ROUND(CAST(SUM(CAST(confidence AS DECIMAL(10,2))) AS DOUBLE) / COUNT(*), 4) >= 0.5
-    ORDER BY occurrences DESC, avg_confidence DESC, original
-    LIMIT 20
+    "batch_summary",
+    oracle=f"""
+    WITH d AS (SELECT lang, text, NOT ({_FAILED_FETCH}) AS ok FROM documents)
+    SELECT COALESCE(lang, 'ALL') AS lang,
+           COUNT(*) AS n_docs,
+           CAST(count_if(ok) AS BIGINT) AS n_ok,
+           CAST(count_if(ok AND length(text) >= 300) AS BIGINT) AS n_long,
+           CAST(SUM(CASE WHEN ok THEN length(text) END) AS BIGINT) AS n_chars,
+           ROUND(count_if(ok) / COUNT(*), 4) AS accuracy,
+           count_if(ok) / COUNT(*) < 0.7 AS low_accuracy
+    FROM d GROUP BY ROLLUP(lang)
     """,
 )
-def feedback_mining(spark, sf_dir):
-    """The reference's active-learning candidate mining verbatim
-    (get_unapplied_corrections: group unapplied (original, corrected)
-    pairs, HAVING count>=min_occurrences AND avg_conf>=min_confidence,
-    multi-key desc sort, services/feedback_collector.py:185-234 +
-    A2/O1): here over a feedback stream synthesized deterministically
-    from the events table so the oracle sees identical input."""
-    e = _t(spark, sf_dir, "events").filter(F.col("event_type") == "error")
-    fb = e.select(
-        F.concat(F.lit("w"), (F.col("event_id") % 50).cast("string")).alias("original"),
-        F.upper(F.concat(F.lit("w"), (F.col("event_id") % 50).cast("string"))).alias("corrected"),
-        F.round((F.col("event_id") % 100) / 100.0, 2).alias("confidence"),
-        (F.col("event_id") % 4 == 0).alias("applied"),
-    )
-    avg_conf = F.round(
-        F.sum(F.col("confidence").cast("decimal(10,2)")).cast("double") / F.count("*"), 4
-    )
+def batch_summary(spark, sf_dir):
+    """The reference's batch summary (scripts/test_phase1.py:156-165,
+    core/processor.py:462-468) over real extraction output: render each
+    document into a boilerplated page, run the extraction UDF, join the
+    result back to the golden text and aggregate per language plus a
+    grand total in ONE pass (GROUP BY ROLLUP, A9). Columns: documents,
+    successes (A12), a conditional count of long texts (A7/A11), the
+    extracted char sum (A8), and accuracy = extracted text equals the
+    golden text (A5) with the below-0.7 flag (A6). The oracle states
+    what exact extraction must give: every fetched page comes back
+    byte-identical, every failed fetch is an error row."""
+    from ocr_service_spark.entry_pipeline import htmlified_documents
+    from ocr_service_spark.pipeline import extract_documents
+
+    pages = htmlified_documents(spark, sf_dir).selectExpr(
+        "doc_id", "url", "warc_ts", "lang",
+        f"CASE WHEN {_FAILED_FETCH} THEN X'' ELSE html END AS html")
+    golden = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    out = extract_documents(pages, separator=" ").join(golden, "doc_id")
+    ok = F.col("error").isNull()
+    acc = F.count_if(F.col("extracted_text") == F.col("text")) / F.count("*")
     return (
-        fb.filter(~F.col("applied"))
-        .groupBy("original", "corrected")
-        .agg(F.count("*").alias("occurrences"), avg_conf.alias("avg_confidence"))
-        .filter((F.col("occurrences") >= 2) & (F.col("avg_confidence") >= 0.5))
-        .orderBy(F.desc("occurrences"), F.desc("avg_confidence"), F.asc("original"))
-        .limit(20)
+        out.rollup("lang")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.count_if(ok).alias("n_ok"),
+            F.count_if(ok & (F.length("extracted_text") >= 300)).alias("n_long"),
+            F.sum(F.length("extracted_text")).cast("bigint").alias("n_chars"),
+            F.round(acc, 4).alias("accuracy"),
+            (acc < 0.7).alias("low_accuracy"),
+        )
+        .select(F.coalesce("lang", F.lit("ALL")).alias("lang"),
+                "n_docs", "n_ok", "n_long", "n_chars", "accuracy", "low_accuracy")
     )
 
 
@@ -1605,12 +1193,12 @@ def lineage_timetravel(spark, sf_dir):
 )
 def streaming_feedback(spark, sf_dir):
     """T1-T2 live: synthesize a feedback stream from the events table
-    (same derivation as feedback_mining), drop it as JSON, run ONE
-    availableNow Structured-Streaming pass of the auto-learning loop
-    (append → threshold mining → anti-join → corrections append →
-    applied-flag write-back), and return the learned corrections table.
-    The oracle recomputes what the loop must have learned with plain
-    SQL over the same events."""
+    (the stand-in for the reference's feedback store, S7), drop it as
+    JSON, run ONE availableNow Structured-Streaming pass of the
+    auto-learning loop (append → A2 group + HAVING threshold mining →
+    anti-join → corrections append → applied-flag write-back), and
+    return the learned corrections table. The oracle recomputes what
+    the loop must have learned with plain SQL over the same events."""
     import shutil
 
     from ocr_service_spark.streaming.feedback import run_feedback_loop
@@ -1639,116 +1227,8 @@ def streaming_feedback(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Ordered concat / error mining / JSON / correction-kernel tiers
+# Correction-kernel tier
 # ---------------------------------------------------------------------------
-
-@query(
-    "ordered_concat",
-    oracle="""
-    SELECT user_id,
-           string_agg(event_type, '>' ORDER BY ts, event_id) AS journey,
-           COUNT(*) AS n
-    FROM events
-    WHERE user_id < 30
-    GROUP BY user_id
-    """,
-)
-def ordered_concat(spark, sf_dir):
-    """W3 ordered per-group concat (reference: pages joined in page
-    order, core/processor.py:207-221 — order-sensitive aggregation).
-    sort_array(collect_list(struct(...))) carries an explicit total
-    order (ts, event_id) so the concat is deterministic at any
-    parallelism — never a bare collect_list."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 30)
-    return (
-        e.groupBy("user_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("ts", "event_id", "event_type"))),
-                    lambda s: s["event_type"],
-                ),
-                ">",
-            ).alias("journey"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-@query(
-    "error_mining",
-    oracle="""
-    WITH c AS (
-      SELECT concat('e', CAST(event_id % 60 AS VARCHAR)) AS original,
-             concat('f', CAST((CASE WHEN event_id % 60 < 30 THEN event_id % 60 ELSE event_id % 7 END) AS VARCHAR)) AS corrected
-      FROM events WHERE event_type = 'error' AND (event_id % 100) < 80
-    )
-    SELECT original,
-           list_distinct(list(corrected))[1] AS suggested,
-           COUNT(*) AS occurrences,
-           CAST(0.7 AS DOUBLE) AS confidence
-    FROM c
-    GROUP BY original
-    HAVING len(list_distinct(list(corrected))) = 1 AND COUNT(*) >= 2
-    """,
-)
-def error_mining(spark, sf_dir):
-    """A3 batch error mining (reference core/processor.py:441-460):
-    group low-confidence corrections by source token, suggest only when
-    ALL targets agree (collect_set size == 1), confidence 0.7. The
-    synthesized corrections make some tokens map consistently and
-    others inconsistently, so both branches of the HAVING are hit."""
-    e = _t(spark, sf_dir, "events").filter(
-        (F.col("event_type") == "error") & (F.col("event_id") % 100 < 80))
-    c = e.select(
-        F.concat(F.lit("e"), (F.col("event_id") % 60).cast("string")).alias("original"),
-        F.concat(
-            F.lit("f"),
-            F.when(F.col("event_id") % 60 < 30, F.col("event_id") % 60)
-            .otherwise(F.col("event_id") % 7).cast("string"),
-        ).alias("corrected"),
-    )
-    return (
-        c.groupBy("original")
-        .agg(
-            F.collect_set("corrected").alias("targets"),
-            F.count("*").alias("occurrences"),
-        )
-        .filter((F.size("targets") == 1) & (F.col("occurrences") >= 2))
-        .select(
-            "original",
-            F.get(F.col("targets"), 0).alias("suggested"),
-            "occurrences",
-            F.lit(0.7).alias("confidence"),
-        )
-    )
-
-
-@query(
-    "json_props",
-    oracle="""
-    SELECT CAST(json_extract(props, '$.k') AS BIGINT) % 10 AS k_bucket,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1
-    """,
-)
-def json_props(spark, sf_dir):
-    """F12 JSON parse (reference api/routes.py:66-74 json.loads of
-    selected_areas) as from_json over the events props column, grouped
-    by a derived key."""
-    e = _t(spark, sf_dir, "events")
-    k = F.from_json(F.col("props"), "k long")["k"]
-    return (
-        e.select((k % 10).alias("k_bucket"), "value")
-        .groupBy("k_bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-        )
-    )
-
 
 @query(
     "correction_kernel",
@@ -1781,70 +1261,6 @@ def correction_kernel(spark, sf_dir):
         "doc_id",
         F.col("c.corrected_text").alias("corrected_text"),
         F.size("c.corrections").alias("n_corrections"),
-    )
-
-
-@query(
-    "doc_type_accuracy",
-    oracle="""
-    WITH fb AS (
-      SELECT event_type AS predicted_type, (event_id % 3 > 0) AS correct
-      FROM events WHERE user_id < 100
-    )
-    SELECT predicted_type,
-           COUNT(*) AS total,
-           ROUND(SUM(CASE WHEN correct THEN 1 ELSE 0 END) / COUNT(*), 4) AS accuracy,
-           (SUM(CASE WHEN correct THEN 1 ELSE 0 END) / COUNT(*) < 0.7) AS low_accuracy
-    FROM fb GROUP BY predicted_type HAVING COUNT(*) >= 5
-    """,
-)
-def doc_type_accuracy(spark, sf_dir):
-    """A5 per-type accuracy + A6 low-accuracy detector (reference
-    services/active_learning.py:157-189: correct/total per predicted
-    type, flag types under 0.7 with >= 5 samples) over a synthesized
-    document-type feedback stream."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    fb = e.select(
-        F.col("event_type").alias("predicted_type"),
-        (F.col("event_id") % 3 > 0).alias("correct"),
-    )
-    acc = F.sum(F.when(F.col("correct"), 1).otherwise(0)) / F.count("*")
-    return (
-        fb.groupBy("predicted_type")
-        .agg(
-            F.count("*").alias("total"),
-            F.round(acc, 4).alias("accuracy"),
-            (acc < 0.7).alias("low_accuracy"),
-        )
-        .filter(F.col("total") >= 5)
-    )
-
-
-@query(
-    "date_parse",
-    oracle="""
-    SELECT o_orderkey,
-           strftime(strptime(strftime(o_orderdate, '%d.%m.%Y'), '%d.%m.%Y'), '%Y-%m-%d') AS parsed,
-           (strptime(strftime(o_orderdate, '%d.%m.%Y'), '%d.%m.%Y') IS NOT NULL) AS valid
-    FROM orders WHERE o_orderkey < 2000
-    """,
-)
-def date_parse(spark, sf_dir):
-    """F16 date detect/parse round-trip (reference
-    core/validators.py:41-45): render order dates into the reference's
-    dd.mm.yyyy document format, re-parse with to_date, emit ISO. Uses
-    try-semantics (coalesce over formats) — the Spark analog of the
-    reference's regex+strptime validation."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
-    s = F.date_format("o_orderdate", "dd.MM.yyyy")
-    parsed = F.coalesce(
-        F.try_to_timestamp(s, F.lit("dd.MM.yyyy")).cast("date"),
-        F.try_to_timestamp(s, F.lit("d.M.yy")).cast("date"),
-    )
-    return o.select(
-        "o_orderkey",
-        F.date_format(parsed, "yyyy-MM-dd").alias("parsed"),
-        parsed.isNotNull().alias("valid"),
     )
 
 
@@ -2108,83 +1524,6 @@ def _mk_stream_tmp(prefix: str) -> str:
             except OSError:
                 pass
     return tempfile.mkdtemp(prefix=prefix, dir=root)
-
-
-@query(
-    "sessionize_stream",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
-                  OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-      FROM events WHERE user_id < 50
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), s AS (
-      SELECT user_id, event_id, ts,
-             CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM g
-    ), agg AS (
-      SELECT user_id, session_id, COUNT(*) AS n_events,
-             epoch_ms(MAX(ts)) - epoch_ms(MIN(ts)) AS duration_ms
-      FROM s GROUP BY user_id, session_id
-    )
-    SELECT user_id, session_id, n_events, duration_ms,
-           CASE WHEN session_id = MAX(session_id) OVER (PARTITION BY user_id)
-                THEN 'timeout' ELSE 'gap' END AS closed_by
-    FROM agg
-    """,
-)
-def sessionize_stream_q(spark, sf_dir):
-    """Custom STATEFUL streaming operator, hard-gated against the batch
-    oracle: gap-based sessionization via applyInPandasWithState
-    (streaming/sessionize_stream.py — per-user GroupState, event-time
-    timeout). The events table is dropped as JSON in three
-    mtime-ordered files (real events, then two far-future sentinel
-    batches) so the event-time watermark sweeps past every open
-    session: after the final availableNow trigger the emitted rows are
-    EXACTLY the batch `sessionize` result, each user's final session
-    closed_by='timeout' and all earlier ones by 'gap'. This is the
-    north rule's session-window tier with custom state schema — not
-    expressible with built-in streaming windows, yet still
-    SQL-oracle-checkable because the flush protocol drains all state."""
-    import os
-    import time as _time
-
-    from ocr_service_spark.streaming.sessionize_stream import sessionize_stream
-
-    base = _mk_stream_tmp("sstream_")
-    drop, out, ck = f"{base}/drop", f"{base}/out", f"{base}/ck"
-    os.makedirs(drop)
-
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50).select(
-        "user_id", "event_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSS").alias("ts"))
-    e.coalesce(1).write.mode("overwrite").json(f"{drop}/a")
-    far = e.agg(F.max("ts")).first()[0]
-    for i, name in enumerate(("b", "c")):
-        spark.createDataFrame(
-            [(999990 + i, 999990 + i, f"2031-0{i + 1}-01T00:00:00")],
-            "user_id long, event_id long, ts string",
-        ).coalesce(1).write.mode("overwrite").json(f"{drop}/{name}")
-    # file-source ordering = modification time: force a > b > c
-    now = _time.time()
-    for i, name in enumerate(("a", "b", "c")):
-        d = f"{drop}/{name}"
-        for fn in os.listdir(d):
-            os.utime(os.path.join(d, fn), (now + i, now + i))
-
-    stream = spark.readStream.schema(
-        "user_id long, event_id long, ts timestamp"
-    ).option("maxFilesPerTrigger", "1").json(f"{drop}/*")
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append").option("checkpointLocation", ck)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col("user_id") < 50)
 
 
 @query(
@@ -3067,149 +2406,8 @@ ORACLE_SQL["corpus_build"] = _corpus_build_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Temporal joins (operators Spark lacks natively: as-of, range)
+# Sketches and incremental dedup
 # ---------------------------------------------------------------------------
-
-@query(
-    "asof_join",
-    oracle="""
-    WITH l AS (SELECT event_id, user_id, ts, value FROM events WHERE event_id % 2 = 0),
-         r AS (SELECT user_id, ts, event_id AS ref_id, value AS ref_value
-               FROM events WHERE event_id % 2 = 1)
-    SELECT l.event_id, l.user_id,
-           strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-           l.value, r.ref_id, r.ref_value
-    FROM l ASOF LEFT JOIN r
-      ON l.user_id = r.user_id AND r.ts <= l.ts
-    """,
-)
-def asof_join_events(spark, sf_dir):
-    """As-of join (operators/temporal.asof_join): each even-id event
-    picks up the latest odd-id event at or before its timestamp for
-    the same user — the classic trades⨝quotes shape. Implemented as
-    union + ordered-window last-non-null (one shuffle on user_id, no
-    Python); the oracle is DuckDB's native ASOF LEFT JOIN, a fully
-    independent implementation of the same semantics. 154 of 5000
-    left rows at sf0.01 have no prior quote and keep NULL refs."""
-    from ocr_service_spark.operators.temporal import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_id") % 2 == 0).select(
-        "event_id", "user_id", "ts", "value")
-    right = ev.filter(F.col("event_id") % 2 == 1).select(
-        "user_id", "ts",
-        F.col("event_id").alias("ref_id"), F.col("value").alias("ref_value"))
-    out = asof_join(left, right, on="ts", by=("user_id",))
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "value", "ref_id", "ref_value")
-
-
-_RANGE_TOL_US = 30 * 60 * 1_000_000  # ±30 min
-
-
-@query(
-    "range_join",
-    oracle="""
-    WITH err AS (SELECT event_id, ts FROM events WHERE event_type = 'error'),
-         clk AS (SELECT ts FROM events WHERE event_type = 'click')
-    SELECT e.event_id, COUNT(c.ts) AS n_nearby_clicks
-    FROM err e LEFT JOIN clk c
-      ON c.ts BETWEEN e.ts - INTERVAL 30 MINUTE AND e.ts + INTERVAL 30 MINUTE
-    GROUP BY e.event_id
-    """,
-)
-def range_join_events(spark, sf_dir):
-    """Tolerance/range join (operators/temporal.bucketed_range_join):
-    clicks within ±30 min of each error event, across ALL users — a
-    non-equi time predicate with no equi key at all, the worst case
-    for a join planner. The bucket trick (probe the 2-3
-    tolerance-width buckets the window touches, right side maps to
-    one bucket, refine exactly) replaces the cross product with an
-    equi-join; the oracle runs the plain inequality join. Zero-match
-    errors are restored by a left join against the (tiny,
-    broadcastable) per-error counts."""
-    from ocr_service_spark.operators.temporal import bucketed_range_join
-
-    ev = _t(spark, sf_dir, "events")
-    err = ev.filter(F.col("event_type") == "error").select("event_id", "ts")
-    clk = ev.filter(F.col("event_type") == "click").select(
-        F.col("ts").alias("c_ts"))
-    pairs = bucketed_range_join(err, clk, _RANGE_TOL_US, l_on="ts", r_on="c_ts")
-    counts = pairs.groupBy("event_id").agg(F.count("*").alias("n"))
-    return (
-        err.join(F.broadcast(counts), "event_id", "left")
-        .select("event_id",
-                F.coalesce(F.col("n"), F.lit(0)).cast("bigint")
-                 .alias("n_nearby_clicks"))
-    )
-
-
-@query(
-    "value_percentiles",
-    oracle="""
-    SELECT event_type,
-           ROUND(quantile_cont(value, 0.5), 6) AS p50,
-           ROUND(quantile_cont(value, 0.95), 6) AS p95,
-           ROUND(quantile_cont(value, 0.99), 6) AS p99
-    FROM events GROUP BY event_type
-    """,
-)
-def value_percentiles(spark, sf_dir):
-    """Exact interpolated percentiles per group — the monitoring/SLA
-    staple. Spark's `percentile` and DuckDB's `quantile_cont` both
-    compute the exact linear-interpolated quantile, so the gate is
-    value-level (rounded 6dp against interpolation-order float
-    noise). Scale note: EXACT percentile shuffles each group's values
-    to one reducer (sorted agg) — correct but hot-key-prone; at
-    10^12 rows swap in approx_percentile (t-digest, combinable,
-    bounded memory), which this query deliberately does not gate
-    because sketches are not cross-engine reproducible."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(*[
-        F.round(F.percentile("value", F.lit(q)), 6).alias(f"p{int(q*100)}")
-        for q in (0.5, 0.95, 0.99)
-    ])
-
-
-@query(
-    "time_rollup",
-    oracle="""
-    SELECT coalesce(event_type, 'ALL') AS event_type,
-           coalesce(strftime(date_trunc('day', ts), '%Y-%m-%d'), 'ALL') AS day,
-           coalesce(strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S'), 'ALL') AS hour,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY ROLLUP(event_type,
-                    date_trunc('day', ts),
-                    date_trunc('hour', ts))
-    """,
-)
-def time_rollup(spark, sf_dir):
-    """Hypertable-style multi-resolution time rollup: hourly, daily,
-    per-type and grand totals in ONE pass via ROLLUP grouping sets —
-    the continuous-aggregate shape. All four granularities share one
-    shuffle with map-side partial aggregation (decimal-cast sums keep
-    results independent of partial-agg order); NULL group levels are
-    sentinel-coalesced identically on both engines so the hash
-    compares."""
-    ev = _t(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-    hour = F.date_trunc("hour", F.col("ts"))
-    return (
-        ev.rollup(F.col("event_type"), day.alias("d"), hour.alias("h"))
-        .agg(F.count("*").alias("n"),
-             F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-              .alias("sum_value"))
-        .select(
-            F.coalesce(F.col("event_type"), F.lit("ALL")).alias("event_type"),
-            F.coalesce(F.date_format("d", "yyyy-MM-dd"), F.lit("ALL")).alias("day"),
-            F.coalesce(F.date_format("h", "yyyy-MM-dd HH:mm:ss"), F.lit("ALL")).alias("hour"),
-            "n", "sum_value")
-    )
-
 
 _KMV_K = 64
 # (k-1) * 2^60 as one float literal, so both engines perform the same
@@ -3352,192 +2550,6 @@ def _incremental_dedup_oracle() -> str:
 ORACLE_SQL["incremental_dedup"] = _incremental_dedup_oracle()
 
 
-@query(
-    "streaming_dedup",
-    oracle="""
-    SELECT DISTINCT event_id, user_id, event_type
-    FROM events WHERE user_id < 50
-    """,
-)
-def streaming_dedup(spark, sf_dir):
-    """Streaming exact dedup via `dropDuplicatesWithinWatermark`,
-    hard-gated against the batch DISTINCT oracle: the event feed is
-    dropped twice (the second copy a re-delivered batch with event
-    time shifted +60 s — the at-least-once redelivery every real feed
-    has), streamed file-by-file, and deduplicated on event_id within
-    a 30-day watermark. After the availableNow drain the emitted rows
-    are EXACTLY one per event_id — the batch distinct. Scale shape:
-    state is keyed by event_id and bounded by the watermark horizon
-    (entries evict when event time passes), so memory is
-    O(keys-per-horizon), not O(stream); this is the streaming twin of
-    `exact_dedup` and the ingest-side guard in front of the corpus
-    pipeline. The projected payload (user_id, event_type) is identical
-    across copies, so which copy wins is immaterial to the output."""
-    import os
-    import time as _time
-
-    base = _mk_stream_tmp("sdedup_")
-    drop, out, ck = f"{base}/drop", f"{base}/out", f"{base}/ck"
-    os.makedirs(drop)
-
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50).select(
-        "event_id", "user_id", "event_type",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSS").alias("ts"))
-    e.coalesce(1).write.mode("overwrite").json(f"{drop}/a")
-    # redelivered copy: same payload, event time nudged forward
-    e.withColumn(
-        "ts",
-        F.date_format(
-            F.to_timestamp("ts", "yyyy-MM-dd'T'HH:mm:ss.SSS") +
-            F.expr("INTERVAL 60 SECONDS"),
-            "yyyy-MM-dd'T'HH:mm:ss.SSS"),
-    ).coalesce(1).write.mode("overwrite").json(f"{drop}/b")
-    now = _time.time()
-    for i, name in enumerate(("a", "b")):
-        d = f"{drop}/{name}"
-        for fn in os.listdir(d):
-            os.utime(os.path.join(d, fn), (now + i, now + i))
-
-    stream = spark.readStream.schema(
-        "event_id long, user_id long, event_type string, ts timestamp"
-    ).option("maxFilesPerTrigger", "1").json(f"{drop}/*")
-    q = (
-        stream.withWatermark("ts", "30 days")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "user_id", "event_type")
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append").option("checkpointLocation", ck)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
-
-
-@query(
-    "funnel_stages",
-    oracle="""
-    -- greedy earliest-match per stage == the fold (greedy subsequence
-    -- matching is optimal). NOT list_reduce: DuckDB 1.0.0's
-    -- list_reduce returns wrong folds for some rows once the vector
-    -- holds many mixed-length lists (verified: same list correct in
-    -- isolation, wrong in the full scan).
-    WITH e AS (
-      SELECT user_id,
-             CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
-                  WHEN 'purchase' THEN 3 ELSE 0 END AS code,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-      FROM events WHERE event_id % 97 < 8
-    ), s1 AS (
-      SELECT user_id, MIN(rn) AS r1 FROM e WHERE code = 1 GROUP BY user_id
-    ), s2 AS (
-      SELECT e.user_id, MIN(rn) AS r2 FROM e JOIN s1 USING (user_id)
-      WHERE code = 2 AND rn > r1 GROUP BY e.user_id
-    ), s3 AS (
-      SELECT e.user_id, MIN(rn) AS r3 FROM e JOIN s2 USING (user_id)
-      WHERE code = 3 AND rn > r2 GROUP BY e.user_id
-    ), st AS (
-      SELECT u.user_id,
-             CASE WHEN s3.user_id IS NOT NULL THEN 3
-                  WHEN s2.user_id IS NOT NULL THEN 2
-                  WHEN s1.user_id IS NOT NULL THEN 1 ELSE 0 END AS stage
-      FROM (SELECT DISTINCT user_id FROM e) u
-      LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-      LEFT JOIN s3 USING (user_id)
-    )
-    SELECT stage, COUNT(*) AS n_users FROM st GROUP BY stage
-    """,
-)
-def funnel_stages(spark, sf_dir):
-    """Ordered conversion funnel (view → click → purchase), computed
-    EXACTLY — not the first-touch approximation — with a single
-    higher-order fold per user: events are collected ordered by
-    (ts, event_id), mapped to stage codes, and folded left-to-right
-    with the state machine `stage advances only when the next required
-    type appears later in time`. One shuffle (groupBy user); the fold
-    runs JVM-side via F.aggregate — no Python. The DuckDB oracle runs
-    the identical fold via list_reduce, so the state machine itself is
-    value-gated; the deterministic event sample (event_id % 97 < 8)
-    keeps the synthetic feed sparse enough that every funnel stage is
-    populated — the gate discriminates. Scale: per-user sequences are
-    bounded by the session
-    horizon in practice; for unbounded histories the same fold runs
-    incrementally as a streaming stateful op (sessionize_stream's
-    machinery)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 97 < 8)
-    code = (
-        F.when(F.col("event_type") == "view", 1)
-        .when(F.col("event_type") == "click", 2)
-        .when(F.col("event_type") == "purchase", 3)
-        .otherwise(0)
-    )
-    seq = (
-        ev.select("user_id", F.struct("ts", "event_id", code.alias("code")).alias("e"))
-        .groupBy("user_id")
-        .agg(F.array_sort(F.collect_list("e")).alias("es"))
-        .select(
-            "user_id",
-            F.aggregate(
-                F.transform("es", lambda e: e["code"]),
-                F.lit(0),
-                lambda acc, x: (
-                    F.when((acc == 0) & (x == 1), 1)
-                    .when((acc == 1) & (x == 2), 2)
-                    .when((acc == 2) & (x == 3), 3)
-                    .otherwise(acc)
-                ),
-            ).alias("stage"),
-        )
-    )
-    return seq.groupBy("stage").agg(F.count("*").alias("n_users"))
-
-
-@query(
-    "cohort_retention",
-    oracle="""
-    WITH first AS (
-      SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
-      FROM events WHERE event_id % 101 < 2 GROUP BY user_id
-    ), activity AS (
-      SELECT DISTINCT e.user_id, f.cohort_week,
-             date_diff('day', f.cohort_week,
-                       date_trunc('week', e.ts)) // 7 AS offset_weeks
-      FROM (SELECT * FROM events WHERE event_id % 101 < 2) e
-      JOIN first f USING (user_id)
-    )
-    SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-           CAST(offset_weeks AS BIGINT) AS offset_weeks,
-           COUNT(*) AS n_users
-    FROM activity GROUP BY 1, 2
-    """,
-)
-def cohort_retention(spark, sf_dir):
-    """Weekly cohort retention triangle: users are assigned to the
-    week of their first event; each (cohort_week, weeks-since) cell
-    counts users active in that offset week. Two shuffles — the
-    per-user min (map-side combinable) and the final cell count; the
-    cohort table re-joins events via broadcast (users ≪ events).
-    Week truncation is Monday-anchored on both engines; the offset is
-    an exact day-difference of week-aligned dates divided by 7, so no
-    timezone/rounding skew can split a cell."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 101 < 2)
-    first = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort_week"))
-    act = (
-        ev.join(F.broadcast(first), "user_id")
-        .select(
-            "user_id", "cohort_week",
-            (F.datediff(F.date_trunc("week", F.col("ts")),
-                        F.col("cohort_week")) / 7)
-            .cast("bigint").alias("offset_weeks"),
-        )
-        .distinct()
-    )
-    return act.groupBy(
-        F.date_format("cohort_week", "yyyy-MM-dd").alias("cohort_week"),
-        "offset_weeks",
-    ).agg(F.count("*").alias("n_users"))
-
-
 @query("compression_quality", oracle=None)
 def compression_quality(spark, sf_dir):
     """Deflate-compressibility quality gate over documents: ratio =
@@ -3559,77 +2571,11 @@ def compression_quality(spark, sf_dir):
     )
 
 
-@query(
-    "error_spikes",
-    oracle="""
-    -- variance from INTEGER sums (n, S, SS are exact BIGINTs), so both
-    -- engines feed identical doubles into the same expression tree;
-    -- z is floored (not rounded) at 4dp — floor of identical doubles
-    -- can only split at exact-integer products, which sqrt outputs
-    -- never hit
-    WITH c AS (
-      SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS n
-      FROM events GROUP BY 1, 2
-    ), s AS (
-      SELECT event_type, COUNT(*) AS n_hours,
-             SUM(n) AS sum_n, SUM(n * n) AS sum_nn
-      FROM c GROUP BY event_type
-    ), z AS (
-      SELECT c.event_type, c.h, c.n,
-             (c.n - s.sum_n / s.n_hours)
-             / sqrt((s.sum_nn - s.sum_n * s.sum_n / s.n_hours)
-                    / (s.n_hours - 1)) AS zval
-      FROM c JOIN s USING (event_type)
-      WHERE s.n_hours > 1 AND s.sum_nn * s.n_hours > s.sum_n * s.sum_n
-    )
-    SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, n,
-           FLOOR(zval * 10000) / 10000 AS z
-    FROM z WHERE abs(zval) >= 2
-    """,
-)
-def error_spikes(spark, sf_dir):
-    """Monitoring-tier anomaly detection: hourly event counts per type,
-    z-scored against that type's own hourly distribution; emit the
-    |z| >= 2 spikes. The variance is derived from exact integer sums
-    (count, sum, sum-of-squares — the map-side-combinable sufficient
-    statistics), so this is ONE pass over events + a tiny broadcast
-    join of 5 stat rows back onto the hourly counts; at 10^12 rows the
-    same sufficient statistics make it a streaming-incremental
-    aggregate. Cross-engine exactness: both engines compute the same
-    IEEE expression over the same integers; z is floored at 4dp."""
-    ev = _t(spark, sf_dir, "events")
-    c = (ev.groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("h"))
-         .agg(F.count("*").alias("n")))
-    s = c.groupBy("event_type").agg(
-        F.count("*").alias("n_hours"),
-        F.sum("n").alias("sum_n"),
-        F.sum(F.col("n") * F.col("n")).alias("sum_nn"),
-    )
-    j = c.join(F.broadcast(s), "event_type").filter(
-        (F.col("n_hours") > 1)
-        & (F.col("sum_nn") * F.col("n_hours") > F.col("sum_n") * F.col("sum_n"))
-    )
-    zval = (F.col("n") - F.col("sum_n") / F.col("n_hours")) / F.sqrt(
-        (F.col("sum_nn") - F.col("sum_n") * F.col("sum_n") / F.col("n_hours"))
-        / (F.col("n_hours") - 1)
-    )
-    return (
-        j.withColumn("zval", zval)
-        .filter(F.abs(F.col("zval")) >= 2)
-        .select(
-            "event_type",
-            F.date_format("h", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "n",
-            (F.floor(F.col("zval") * 10000) / 10000).alias("z"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Skew-observability + search tier (north_rule: "salts skewed hosts
 # before the dedup-and-validate shuffle" — host_stats is the detector
 # that feeds pipeline.py's n_salts; tfidf_keywords adds inverted-index
-# style term scoring; price_histogram a fixed-bin distribution sketch)
+# style term scoring)
 # ---------------------------------------------------------------------------
 
 # Deterministic skewed host synthesis shared by the Spark and DuckDB
@@ -3756,45 +2702,6 @@ def tfidf_keywords(spark, sf_dir):
                 * (F.log((F.col("n_docs") + 1) / (F.col("df") + 1).cast("double"))
                    + 1), 4).alias("tfidf"),
         )
-    )
-
-
-@query(
-    "price_histogram",
-    oracle="""
-    SELECT CAST(FLOOR(l_extendedprice / 5500.0) AS BIGINT) AS bin,
-           CAST(FLOOR(l_extendedprice / 5500.0) AS BIGINT) * 5500 AS lo,
-           COUNT(*) AS n,
-           MIN(l_extendedprice) AS min_price,
-           MAX(l_extendedprice) AS max_price,
-           ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                 / COUNT(*), 4) AS avg_price
-    FROM lineitem
-    GROUP BY 1
-    """,
-)
-def price_histogram(spark, sf_dir):
-    """Fixed-width histogram of l_extendedprice (5500-wide bins) — the
-    distribution sketch a planner uses for range pruning and bin-packed
-    sampling. Entirely map-side-combinable (bin id is a pure projection,
-    every agg associative; decimal-cast sum keeps the mean independent
-    of partial order), so at 10^12 rows the shuffle moves one row per
-    (partition, bin). Bin edges are exact: price/5500.0 is one IEEE
-    division on both engines."""
-    l = _t(spark, sf_dir, "lineitem")
-    b = F.floor(F.col("l_extendedprice") / 5500.0).cast("bigint")
-    return (
-        l.groupBy(b.alias("bin"))
-        .agg(
-            F.count("*").alias("n"),
-            F.min("l_extendedprice").alias("min_price"),
-            F.max("l_extendedprice").alias("max_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                .cast("double") / F.count("*"), 4).alias("avg_price"),
-        )
-        .select("bin", (F.col("bin") * 5500).alias("lo"),
-                "n", "min_price", "max_price", "avg_price")
     )
 
 
@@ -4502,56 +3409,3 @@ def incremental_pagerank(spark, sf_dir):
             "is_new",
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Driver-facing registry order (VERDICT r4 item 2)
-# ---------------------------------------------------------------------------
-# The driver's correctness gate provably takes the FIRST 50 entries of
-# the queries() dict (r2=49, r3=50, r4=50 on final HEAD), so
-# registration order decides which queries ever get a driver-proven
-# green row. DRIVER_PRIORITY holds the 27 queries that sat at
-# positions 51-77 through r3/r4 and were only ever judge-verified,
-# plus any newly added query; DRIVER_SENTINELS is a diverse
-# continuity set from the already-driver-proven 50 (one per tier:
-# agg/window/join/kernel/dedup/ANN/lineage/streaming/sources). The
-# remaining proven queries follow after position 50 — COVERAGE.md
-# documents the rotation.
-
-DRIVER_PRIORITY = [
-    # corpus-construction tier
-    "corpus_build", "gopher_rules", "ngram_repetition", "decontaminate",
-    "dup_clusters", "url_filter", "boilerplate_strip", "host_stats",
-    "host_cap", "link_graph", "host_pagerank", "incremental_pagerank",
-    # incremental / streaming dedup tier
-    "incremental_dedup", "streaming_dedup", "sequence_pack", "source_mix",
-    # temporal tier
-    "asof_join", "range_join", "time_rollup",
-    # analytics tier
-    "value_percentiles", "kmv_distinct", "funnel_stages",
-    "cohort_retention", "error_spikes", "tfidf_keywords",
-    "price_histogram", "unigram_logprob", "compression_quality",
-]
-
-DRIVER_SENTINELS = [
-    "q1_pricing_summary", "top_customers", "window_running", "sessionize",
-    "dedup_latest_events", "correction_join", "extract_roundtrip",
-    "area_reextract", "field_validation", "text_quality", "lang_profile",
-    "token_stats", "exact_dedup", "jaccard_pairs", "minhash_lsh_pairs",
-    "simhash", "embedding_topk", "lineage_restart", "streaming_feedback",
-    "pdf_extract", "chunk_dedup", "warc_extract",
-]
-
-
-def ordered_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """QUERIES reordered so every never-driver-proven query lands inside
-    the driver's 50-row window, followed by proven sentinels, then the
-    rest of the proven set. Fails loudly on drift (a listed name that
-    was never registered, or a duplicate)."""
-    order = DRIVER_PRIORITY + DRIVER_SENTINELS
-    listed = set(order)
-    assert len(listed) == len(order), "duplicate name in driver order"
-    missing = listed - set(QUERIES)
-    assert not missing, f"driver order names not registered: {missing}"
-    rest = [n for n in QUERIES if n not in listed]
-    return {n: QUERIES[n] for n in [*order, *rest]}

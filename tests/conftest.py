@@ -10,8 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from ocr_service_spark.session import build_session
 
-    s = build_session("ocr_service_spark_tests",
-                      cores=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")),
-                      shuffle_partitions=8)
+    s = build_session("ocr_service_spark_tests")
     yield s
     s.stop()

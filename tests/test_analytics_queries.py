@@ -1,11 +1,10 @@
 """Semantic pins for the skew-observability + search tier queries
-(host_stats / tfidf_keywords / price_histogram) — properties the
-DuckDB value-hash gate can't express: flag exactness at the threshold,
-rank bounds, bin containment."""
+(host_stats / tfidf_keywords) — properties the DuckDB value-hash
+gate can't express: flag exactness at the threshold, rank bounds."""
 
 import pyspark.sql.functions as F
 
-from ocr_service_spark.queries import host_stats, price_histogram, tfidf_keywords
+from ocr_service_spark.queries import host_stats, tfidf_keywords
 
 SF = "/root/testdata/sf0.001"
 
@@ -36,17 +35,6 @@ def test_tfidf_top3_ranked_and_bounded(spark):
         assert keys == sorted(keys)
         for r in doc_rows:
             assert r.tfidf > 0
-
-
-def test_price_histogram_bins_partition_the_table(spark):
-    rows = price_histogram(spark, SF).collect()
-    n_lineitem = spark.read.parquet(f"{SF}/lineitem.parquet").count()
-    assert sum(r.n for r in rows) == n_lineitem
-    assert len({r.bin for r in rows}) == len(rows)
-    for r in rows:
-        assert r.lo == r.bin * 5500
-        assert r.lo <= r.min_price <= r.max_price < r.lo + 5500
-        assert r.lo <= r.avg_price < r.lo + 5500
 
 
 def test_boilerplate_strip_keep_first_and_reconstruction(spark):

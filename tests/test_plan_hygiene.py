@@ -3,8 +3,8 @@ about the 100 TB shapes, asserted on the actual executed plans so a
 refactor can't silently regress them (SURVEY.md §4.2).
 
 Kept deliberately robust to AQE/stats variation: assert the invariant
-(no cartesian product, no window sort, filter reached the scan, pure
-map has no exchange), not exact operator counts.
+(no cartesian product, no window sort, pure map has no exchange), not
+exact operator counts.
 """
 
 import re
@@ -18,11 +18,6 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(spark, name):
     return QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
-
-
-def test_q1_filter_pushed_to_scan(spark):
-    plan = _plan(spark, "q1_pricing_summary")
-    assert "PushedFilters:" in plan and "l_shipdate" in plan.split("PushedFilters:")[1][:200]
 
 
 def test_jaccard_self_join_is_equi_not_cartesian(spark):
@@ -40,7 +35,7 @@ def test_dedup_latest_has_no_window_or_global_sort(spark):
     # salted two-phase max-of-struct: a Window or Sort here would mean
     # the operator regressed to the rank-per-key shape that single-sorts
     # every hot key's rows through one reducer
-    plan = _plan(spark, "dedup_latest_events")
+    plan = _plan(spark, "recrawl_dedup")
     assert "Window" not in plan
     assert "TakeOrderedAndProject" not in plan
 
@@ -58,12 +53,6 @@ def test_pii_scrub_is_pure_map(spark):
     plan = _plan(spark, "pii_scrub")
     assert "Exchange" not in plan, "redaction pass must not shuffle"
     assert "EvalPython" not in plan, "redaction must stay JVM-side"
-
-
-def test_region_revenue_small_dims_broadcast(spark):
-    plan = _plan(spark, "region_revenue")
-    assert "BroadcastHashJoin" in plan  # nation/region hints honored
-    assert "CartesianProduct" not in plan
 
 
 def test_no_per_row_python_anywhere_in_headliners(spark):

@@ -89,74 +89,68 @@ def canon(tab, cols):
     return sorted(tuple(normalize(data[c][i]) for c in order) for i in range(n))
 
 
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per driver table under sf_dir."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings", "events"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(spark, con, sf_dir: str, name: str, fn, oracle: str | None) -> tuple[bool, str]:
+    """Run query `name` on Spark and its oracle on DuckDB; return
+    (ok, message). A query without an oracle is checked rows-only (it
+    only has to run)."""
+    t0 = time.time()
+    try:
+        stab = fn(spark, sf_dir).toArrow()
+    except Exception as e:
+        return False, f"FAIL {name}: spark error: {e}"
+    if oracle is None:
+        return True, f"SKIP {name}: rows-only ({stab.num_rows} rows, {time.time()-t0:.1f}s)"
+    try:
+        dtab = con.execute(oracle).arrow()
+    except Exception as e:
+        return False, f"FAIL {name}: duckdb error: {e}"
+    scols, dcols = list(stab.column_names), list(dtab.column_names)
+    if sorted(scols) != sorted(dcols):
+        return False, f"FAIL {name}: columns spark={sorted(scols)} duck={sorted(dcols)}"
+    stypes = {c: canonical_type(stab.schema.field(c).type) for c in scols}
+    dtypes = {c: canonical_type(dtab.schema.field(c).type) for c in dcols}
+    tdiff = {c: (stypes[c], dtypes[c]) for c in scols if stypes[c] != dtypes[c]}
+    if tdiff:
+        return False, f"FAIL {name}: TYPE mismatch (spark vs duck): {tdiff}"
+    if stab.num_rows != dtab.num_rows:
+        return False, f"FAIL {name}: rowcount spark={stab.num_rows} duck={dtab.num_rows}"
+    cs, cd = canon(stab, scols), canon(dtab, dcols)
+    if cs != cd:
+        diffs = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
+        return False, (f"FAIL {name}: value mismatch; first diffs:\n"
+                       + "\n".join(f"  spark={a}\n  duck ={b}" for a, b in diffs))
+    return True, f"OK   {name}: {stab.num_rows} rows ({time.time()-t0:.1f}s)"
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    import duckdb
-
     from __spark_entry__ import oracle_sql, queries
     from ocr_service_spark.session import build_session
 
-    spark = build_session("check_correctness", cores=8, shuffle_partitions=8)
-
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
-
+    spark = build_session("check_correctness")
+    con = duckdb_views(args.sf)
     qs = queries()
     oracles = oracle_sql()
     names = args.names or list(qs)
     failed = []
     for name in names:
-        t0 = time.time()
-        try:
-            sdf = qs[name](spark, args.sf)
-            stab = sdf.toArrow()
-            scols = list(stab.column_names)
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            failed.append(name)
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: rows-only ({stab.num_rows} rows, {time.time()-t0:.1f}s)")
-            continue
-        try:
-            dtab = con.execute(oracles[name]).arrow()
-            dcols = list(dtab.column_names)
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            failed.append(name)
-            continue
-        ok = True
-        if sorted(scols) != sorted(dcols):
-            print(f"FAIL {name}: columns spark={sorted(scols)} duck={sorted(dcols)}")
-            ok = False
-        else:
-            stypes = {c: canonical_type(stab.schema.field(c).type) for c in scols}
-            dtypes = {c: canonical_type(dtab.schema.field(c).type) for c in dcols}
-            tdiff = {c: (stypes[c], dtypes[c]) for c in scols if stypes[c] != dtypes[c]}
-            if tdiff:
-                print(f"FAIL {name}: TYPE mismatch (spark vs duck): {tdiff}")
-                ok = False
-            elif stab.num_rows != dtab.num_rows:
-                print(f"FAIL {name}: rowcount spark={stab.num_rows} duck={dtab.num_rows}")
-                ok = False
-            else:
-                cs, cd = canon(stab, scols), canon(dtab, dcols)
-                if cs != cd:
-                    diffs = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
-                    print(f"FAIL {name}: value mismatch; first diffs:")
-                    for a, b in diffs:
-                        print(f"  spark={a}\n  duck ={b}")
-                    ok = False
-        if ok:
-            print(f"OK   {name}: {stab.num_rows} rows ({time.time()-t0:.1f}s)")
-        else:
+        ok, msg = compare(spark, con, args.sf, name, qs[name], oracles.get(name))
+        print(msg)
+        if not ok:
             failed.append(name)
     print(f"\n{len(names) - len(failed)}/{len(names)} passed")
     if failed:

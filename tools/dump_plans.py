@@ -18,15 +18,11 @@ sys.path.insert(0, ROOT)
 
 SHOW = [
     "extract_roundtrip",
-    "q1_pricing_summary",
-    "top_customers",
-    "region_revenue",
-    "window_running",
-    "dedup_latest_events",
+    "recrawl_dedup",
+    "batch_summary",
     "correction_join",
     "minhash_signatures",
     "embedding_topk",
-    "part_brand_stats",
     "jaccard_pairs",
     "chunk_dedup",
     "pii_scrub",
@@ -35,14 +31,8 @@ SHOW = [
     "decontaminate",
     "corpus_build",
     "incremental_dedup",
-    "asof_join",
-    "range_join",
-    "time_rollup",
-    "funnel_stages",
-    "cohort_retention",
     "host_stats",
     "tfidf_keywords",
-    "price_histogram",
     "boilerplate_strip",
     "unigram_logprob",
     "sequence_pack",
@@ -62,7 +52,7 @@ def main() -> None:
     from ocr_service_spark.queries import QUERIES
     from ocr_service_spark.session import build_session
 
-    spark = build_session("plans", cores=4, shuffle_partitions=8)
+    spark = build_session("plans")
     out = ["# PLANS — physical-plan hygiene for headline queries",
            "",
            "Generated by `tools/dump_plans.py` (sf0.01). Checks per query:",

@@ -19,6 +19,7 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import time
@@ -28,9 +29,9 @@ BUSY = (
     "while time.time()-t0<10: x+=1\nprint(x)"
 )
 
+# run with the repo root as cwd, which `python -c` puts on sys.path
 KERNEL = r'''
-import sys, time
-sys.path.insert(0, "/root/repo")
+import time
 from ocr_service_spark.corpus import gen_docs
 from ocr_service_spark.kernel.dispatch import extract_document
 from ocr_service_spark.kernel.correct import contextual_digit_fix, apply_corrections_map
@@ -46,8 +47,11 @@ print(n)
 '''
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def run(code: str, nproc: int) -> int:
-    ps = [subprocess.Popen([sys.executable, "-c", code],
+    ps = [subprocess.Popen([sys.executable, "-c", code], cwd=ROOT,
                            stdout=subprocess.PIPE) for _ in range(nproc)]
     return sum(int(p.communicate()[0]) for p in ps)
 

@@ -33,18 +33,19 @@ def main() -> None:
     from ocr_service_spark.pipeline import process_documents
     from ocr_service_spark.session import build_session
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_corpus = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "240000"))
     reps = int(os.environ.get("SPARK_GRAFT_CHILD_REPS", "2"))
     ui_port = int(os.environ.get("SPARK_GRAFT_UI_PORT", "4048"))
     corpus_path = os.environ.get(
         "SPARK_GRAFT_BENCH_CORPUS",
-        f"/root/repo/.bench/corpus_{n_corpus}.parquet")
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     ".bench", f"corpus_{n_corpus}.parquet"))
 
     spark = build_session(
-        "scaling_job", cores=cores, shuffle_partitions=max(cores, 8),
+        "scaling_job",
         extra_conf={"spark.ui.enabled": "true",
                     "spark.ui.port": str(ui_port)})
+    cores = spark.sparkContext.defaultParallelism
     from ocr_service_spark.corpus import ensure_bench_corpus
     ensure_bench_corpus(spark, corpus_path, n_corpus)
     docs = spark.read.parquet(corpus_path)
