@@ -1,24 +1,24 @@
 """Deduplication operators.
 
 1. `dedup_latest` — the north-rule "dedup-and-validate" shuffle: one
-   row per url keeping max warc_ts, with EXPLICIT two-phase salting for
-   skewed hosts (a few hosts own most pages — FIXTURES.md §1). The
-   reference has no analog (it never sees two crawls of one document);
-   the semantics come from the north rule's
-   "salts skewed hosts before the dedup-and-validate shuffle".
+   row per url keeping max warc_ts. The reference has no analog (it
+   never sees two crawls of one document); the semantics come from the
+   north rule's "dedup-and-validate shuffle".
 
    Determinism: the keeper is max over struct(warc_ts, doc_id, ...) —
    lexicographic struct ordering with a total-order prefix, so ties
    can't flip between runs/parallelism levels (SURVEY.md §7).
 
-   Scale note: phase 1 (url, salt) aggregation is a map-side-combinable
-   hash agg that splits each hot url across `n_salts` reducers; phase 2
-   re-aggregates the survivor set, at most `n_salts` records per url.
-   At 10^12 rows this bounds any single reducer to ~rows(url)/n_salts.
-   AQE skew handling only fixes joins, not aggregations — hence manual
-   salt. The cost: the payload crosses the wire twice, since both
-   phases exchange the full record struct (on (url, _salt), then on
-   url).
+   Skew, and why there is no salt: `max` is algebraic, so Spark plans
+   it as a partial aggregate in each map task before the one exchange
+   and a final aggregate after it. A hot url therefore reaches its
+   reducer as at most one record per map task, whatever its row count
+   (tests/test_operators_tiers.py measures exactly that). A salt
+   cannot lower that bound; it only adds a second full-payload
+   exchange. Salting is for per-host work that cannot be combined
+   map-side, not for this `max`. On input bucketed by url the scan
+   already satisfies the distribution and the exchange disappears
+   (tests/test_bucketed_dedup.py).
 
 2. Exact + near-duplicate *content* dedup (training-data tier):
    `exact_text_dedup`, plus MinHash/SimHash/Jaccard live in
@@ -37,25 +37,21 @@ def dedup_latest(
     df: DataFrame,
     key: str = "url",
     order_cols: tuple[str, ...] = ("warc_ts", "doc_id"),
-    n_salts: int = 16,
 ) -> DataFrame:
     """Keep, per `key`, the row with the greatest (order_cols) tuple.
 
-    Implemented as salted two-phase max-of-struct aggregation (no
-    window, no sort): payload columns ride inside the struct, so each
-    of the two exchanges carries at most one combined record per
-    (key, salt) out of each map-side partition — payload included.
+    One max-of-struct aggregation (no window): payload columns ride
+    inside the struct behind `order_cols`, so the single exchange
+    carries at most one combined record per key out of each map task.
+    Output columns: key, then order_cols, then the rest in input order.
     """
-    payload = [c for c in df.columns if c != key]
-    ordered = [*order_cols, *[c for c in payload if c not in order_cols]]
-    packed = df.select(
-        F.col(key),
-        F.pmod(F.xxhash64(*[F.col(c) for c in ordered[:2]]), F.lit(n_salts)).alias("_salt"),
-        F.struct(*[F.col(c) for c in ordered]).alias("_rec"),
+    rest = [c for c in df.columns if c != key and c not in order_cols]
+    fields = ", ".join(f"`{c}`" for c in (*order_cols, *rest))
+    return (
+        df.selectExpr(f"`{key}`", f"struct({fields}) AS _rec")
+        .groupBy(key).agg(F.expr("max(_rec) AS _rec"))
+        .selectExpr(f"`{key}`", "_rec.*")
     )
-    partial = packed.groupBy(key, "_salt").agg(F.max("_rec").alias("_rec"))
-    final = partial.groupBy(key).agg(F.max("_rec").alias("_rec"))
-    return final.select(F.col(key), *[F.col(f"_rec.{c}").alias(c) for c in ordered])
 
 
 def drop_hot_shingles(

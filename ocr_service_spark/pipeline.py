@@ -5,7 +5,7 @@ Spark restatement of the reference's `POST /api/v1/process` lifecycle
 DataFrame chain —
 
   scan(documents)
-    → dedup-and-validate shuffle (salted, keep latest warc_ts crawl)
+    → dedup-and-validate shuffle (one exchange, keep latest warc_ts crawl)
     → FUSED extraction + correction UDF (one Arrow batch round-trip;
       HTML density classify / PDF block merge + contextual digit fix +
       dictionary token map — replaces stages 2-5 of the reference
@@ -21,7 +21,7 @@ DataFrame chain —
 
 Building the plan parses a few SQL strings rather than assembling
 Column trees node by node over py4j. Catalyst plans it as: one scan
-stage into the salted partial-dedup shuffle, one post-shuffle stage
+stage into the partial-dedup shuffle, one post-shuffle stage
 carrying the single ArrowEvalPython node plus every native expr — vs
 the reference's fully serial per-file loop (processor.py:415-417).
 
@@ -65,24 +65,15 @@ def extract_documents(docs: DataFrame, separator: str = "\n\n") -> DataFrame:
     return flatten_extraction(with_extraction(docs, "html", "x", separator=separator))
 
 
-def process_documents(
-    docs: DataFrame,
-    field_names: list[str] | None = None,
-    n_salts: int = 16,
-    dedup: bool = True,
-) -> DataFrame:
+def process_documents(docs: DataFrame) -> DataFrame:
     """Full result-record pipeline (P1 final projection)."""
-    names = field_names or list(FIELD_EXPRS)
+    names = list(FIELD_EXPRS)
     # Dedup FIRST, on the raw crawl rows: the expensive extraction UDF
     # never runs for rows that lose the keep-latest race, and extraction
     # executes pipelined in the post-shuffle stage. The html payload
-    # crosses the wire twice, not once: the salted two-phase
-    # max-of-struct has two full-payload exchanges, on (url, _salt) and
-    # then on url (see dedup_latest). With an Iceberg table bucketed by
-    # url-hash the exchanges disappear entirely.
-    if dedup:
-        docs = dedup_latest(docs, key="url", order_cols=("warc_ts", "doc_id"),
-                            n_salts=n_salts)
+    # crosses the wire once, in dedup_latest's single exchange; with an
+    # Iceberg table bucketed by url-hash that exchange disappears too.
+    docs = dedup_latest(docs, key="url", order_cols=("warc_ts", "doc_id"))
     # Fused extraction + stage-5 autocorrect (processor.py:253) in ONE
     # Arrow round-trip: the unfused extract→correct pair would ship the
     # extracted text JVM→Python→JVM→Python; the fusion corrects while

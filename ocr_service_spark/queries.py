@@ -16,8 +16,8 @@ name, rows order-insensitive):
 - aliases match exactly between the Spark plan and the oracle SQL.
 
 Scale notes ride on each query: the same plan is what we'd run at
-10^12 rows — broadcast hints on dimension tables, salted two-phase
-aggregation for skewed keys, map-side-combinable aggs, no collect().
+10^12 rows — broadcast hints on dimension tables, map-side partial
+aggregation bounding skewed keys, no collect().
 """
 
 from __future__ import annotations
@@ -87,11 +87,11 @@ _RECRAWL_DAYS = "CASE WHEN doc_id % 10 = 0 THEN 0 ELSE (doc_id + 2 * crawl) % 3 
 )
 def recrawl_dedup(spark, sf_dir):
     """The pipeline's dedup-and-validate shuffle on its own input shape:
-    keep the latest crawl per url via SALTED two-phase max-of-struct
-    aggregation (operators/dedup.py; no window, no sort), ties on
-    warc_ts broken by the larger crawl id. At 10^12 rows a hot url is
-    split across n_salts reducers in phase 1; phase 2 touches one row
-    per (url, salt)."""
+    keep the latest crawl per url via one max-of-struct aggregation
+    (operators/dedup.py; no window), ties on warc_ts broken by the
+    larger crawl id. At 10^12 rows the partial aggregate in each map
+    task sends a hot url to its reducer as at most one row per map
+    task."""
     crawls = _t(spark, sf_dir, "documents").selectExpr(
         "doc_id", "explode(sequence(0, 2)) AS crawl").selectExpr(
         "concat('https://host', CAST(doc_id % 97 AS STRING), '.example/doc/', "
@@ -100,7 +100,7 @@ def recrawl_dedup(spark, sf_dir):
         "crawl",
         f"TIMESTAMP'2025-01-01 00:00:00' + make_dt_interval({_RECRAWL_DAYS}) AS warc_ts",
     )
-    d = dedup_latest(crawls, key="url", order_cols=("warc_ts", "crawl_id"), n_salts=8)
+    d = dedup_latest(crawls, key="url", order_cols=("warc_ts", "crawl_id"))
     return d.select(
         "url", "crawl_id", "crawl",
         F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"))
@@ -2572,10 +2572,10 @@ def compression_quality(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Skew-observability + search tier (north_rule: "salts skewed hosts
-# before the dedup-and-validate shuffle" — host_stats is the detector
-# that feeds pipeline.py's n_salts; tfidf_keywords adds inverted-index
-# style term scoring)
+# Skew-observability + search tier (north_rule: skewed hosts are
+# handled explicitly — host_stats is the heavy-hitter detector for
+# per-host work that cannot be combined map-side; tfidf_keywords adds
+# inverted-index style term scoring)
 # ---------------------------------------------------------------------------
 
 # Deterministic skewed host synthesis shared by the Spark and DuckDB
@@ -2610,9 +2610,11 @@ _HOST_SQL = (
 )
 def host_stats(spark, sf_dir):
     """Heavy-hitter host detection — the observability half of the
-    north rule's "salt skewed hosts" requirement (pipeline.py picks
-    n_salts from exactly this shape; reference analog: per-source batch
-    stats, scripts/process_certificates_all_phases.py:319-355). One
+    north rule's skewed-host requirement: it names the hosts whose
+    non-combinable per-host work (windows, joins) would need a salt;
+    the pipeline's dedup needs none (operators/dedup.py). Reference
+    analog: per-source batch stats,
+    scripts/process_certificates_all_phases.py:319-355. One
     map-side-combinable count/sum agg keyed by host plus a broadcast
     1-row total; the heavy verdict is integer-exact (n*20 >= total, no
     float threshold). At 10^12 rows the host-keyed agg is the only

@@ -9,7 +9,7 @@ sources and sinks:
     read_document_stream(dir) → extract/correct/validate → sink
 
 Late/duplicate crawls are handled with watermark + dropDuplicates on
-url (streaming twin of the batch salted dedup — state-store backed,
+url (streaming twin of the batch max-of-struct dedup — state-store backed,
 keyed by url, expired by the watermark), matching north-rule dedup
 semantics for the continuous case.
 """

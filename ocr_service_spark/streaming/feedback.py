@@ -149,6 +149,13 @@ def mine_from_stats(
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at `path`, or None before its first write. The
+    existence check comes first: a parquet read of a missing path logs
+    a FileNotFoundException stack trace on every first micro-batch."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(hpath):
+        return None
     try:
         return spark.read.parquet(path)
     except Exception:

@@ -1,6 +1,6 @@
 """Unit tests for the training-data operator tiers: text stats,
 fingerprints, minhash/simhash, embedding similarity, multimodal
-plumbing, salted dedup determinism."""
+plumbing, the dedup skew bound."""
 
 import pyspark.sql.functions as F
 
@@ -123,16 +123,47 @@ def test_multimodal_meta_matches_stub(spark):
     assert out[3].n_bytes == 0
 
 
-def test_dedup_latest_salt_invariance(spark):
-    rows = [(f"u{i % 7}", i, f"p{i}") for i in range(100)]
-    df = spark.createDataFrame(rows, "url string, ts long, payload string")
-    a = {(r.url, r.ts) for r in
-         dedup_latest(df, key="url", order_cols=("ts",), n_salts=1).collect()}
-    b = {(r.url, r.ts) for r in
-         dedup_latest(df, key="url", order_cols=("ts",), n_salts=13).collect()}
-    assert a == b
-    assert len(a) == 7
-    assert all(ts >= 93 for _, ts in a)
+def test_dedup_latest_hot_url_sends_one_row_per_map_task(spark):
+    # one url owns 40,000 of 41,000 rows, 200 cold urls share the rest:
+    # the partial max in each map task must collapse every url before
+    # the single exchange, so it writes one row per distinct
+    # (input partition, url) pair
+    hot = spark.range(40_000).selectExpr("'hot' AS url", "id AS ts",
+                                         "concat('p', id) AS payload")
+    cold = spark.range(1_000).selectExpr("concat('u', id % 200) AS url", "id AS ts",
+                                         "concat('c', id) AS payload")
+    df = hot.union(cold).repartition(8).localCheckpoint()
+    pairs = df.select(F.spark_partition_id().alias("p"), "url").distinct().count()
+
+    out = dedup_latest(df, key="url", order_cols=("ts",))
+    got = sorted(map(tuple, out.collect()))
+    latest = {}
+    for r in df.collect():
+        if r.url not in latest or r.ts > latest[r.url][1]:
+            latest[r.url] = (r.url, r.ts, r.payload)
+    assert got == sorted(latest.values())
+
+    plan = out._jdf.queryExecution().executedPlan()
+    exchanges = [n for n in _plan_nodes(plan) if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 1, plan.toString()
+    written = exchanges[0].metrics().apply("shuffleRecordsWritten").value()
+    assert written == pairs, (written, pairs)
+
+
+def _plan_nodes(node):
+    """Every physical operator under `node`, looking through adaptive
+    query stages to the plans they ran."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+        return
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
 
 
 def test_ivf_topk_finds_planted_neighbor(spark):
