@@ -19,6 +19,16 @@ corpus.py   deterministic, distributed synthetic Common-Crawl-style
             corpus generator (no external data; seeded by doc_id).
 pipeline.py end-to-end extraction pipeline (the flagship query).
 session.py  SparkSession builder tuned for the sandbox (local[N]).
+
+Importing the package gates zipimport's directory re-read on archive
+change (`_zipimport.py`): before CPython 3.13 (python/cpython gh-103200)
+the `importlib.invalidate_caches()` call at the start of every PySpark
+task re-parses every zip on the path, ~0.2 CPU-s per task, and every
+worker imports this package when it unpickles one of its UDFs.
 """
+
+from ocr_service_spark import _zipimport
+
+_zipimport.install()
 
 __version__ = "0.1.0"

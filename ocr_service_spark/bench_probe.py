@@ -15,10 +15,12 @@ few percent — see bench.py --scaling-child).
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import time
 import urllib.request
+import zipimport
 
 __all__ = [
     "materialize",
@@ -27,6 +29,7 @@ __all__ = [
     "host_cpu_seconds",
     "session_tree_cpu_seconds",
     "stage_metrics",
+    "worker_setup_probe",
 ]
 
 _CLK_TCK = os.sysconf("SC_CLK_TCK")
@@ -128,3 +131,54 @@ def stage_metrics(spark, ui_port: int, seen: set[int]) -> tuple[list[dict], set[
         })
     out.sort(key=lambda x: -x["run_ms"])
     return out, new_seen
+
+
+# this worker's last task-start `importlib.invalidate_caches()`:
+# (zip directories re-read, CPU s); set once `_setup_probe` timed it
+_task_start: tuple[int, float] | None = None
+
+
+def _timed_invalidate_caches(invalidate=importlib.invalidate_caches) -> None:
+    global _task_start
+    read, reads = zipimport._read_directory, 0
+
+    def counting(archive):
+        nonlocal reads
+        reads += 1
+        return read(archive)
+
+    zipimport._read_directory = counting
+    t0 = time.process_time()
+    try:
+        invalidate()
+    finally:
+        zipimport._read_directory = read
+    _task_start = reads, time.process_time() - t0
+
+
+def _setup_probe(batches):
+    import pyarrow as pa
+
+    reads, cpu_s = _task_start or (None, None)
+    importlib.invalidate_caches = _timed_invalidate_caches  # from the next task on
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_pydict(
+        {"reads": pa.array([reads], pa.int32()), "cpu_s": pa.array([cpu_s], pa.float64())})
+
+
+def worker_setup_probe(spark) -> list[dict]:
+    """Per-task Python-worker set-up cost, measured inside the workers.
+
+    PySpark's worker calls `importlib.invalidate_caches()` at the start
+    of every task; before CPython 3.13 that re-reads the directory of
+    every zip on the path. A probe task times that call in its worker
+    from the worker's next task on, and reports the CPU seconds and the
+    zip directories re-read (`reads`) of its own task start, or nulls
+    if its worker had not run a probe task yet; the timer stays in the
+    worker. Runs two jobs of twice the task slots and returns the
+    second's tasks. Warm the workers up first to see the steady state."""
+    n = 2 * spark.sparkContext.defaultParallelism
+    probe = spark.range(n, numPartitions=n).mapInArrow(_setup_probe, "reads int, cpu_s double")
+    probe.collect()
+    return [r.asDict() for r in probe.collect()]

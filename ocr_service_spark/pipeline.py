@@ -73,7 +73,11 @@ def process_documents(docs: DataFrame) -> DataFrame:
     # executes pipelined in the post-shuffle stage. The html payload
     # crosses the wire once, in dedup_latest's single exchange; with an
     # Iceberg table bucketed by url-hash that exchange disappears too.
-    docs = dedup_latest(docs, key="url", order_cols=("warc_ts", "doc_id"))
+    # Only the columns read below ride through it: an input's plain
+    # `text` would be scanned, shuffled and sorted, then dropped. Rows
+    # equal on url, warc_ts, doc_id and html break the tie on lang.
+    docs = dedup_latest(docs.select("doc_id", "url", "warc_ts", "html", "lang"),
+                        key="url", order_cols=("warc_ts", "doc_id"))
     # Fused extraction + stage-5 autocorrect (processor.py:253) in ONE
     # Arrow round-trip: the unfused extract→correct pair would ship the
     # extracted text JVM→Python→JVM→Python; the fusion corrects while

@@ -211,3 +211,20 @@ def test_process_documents_builds_in_few_jvm_round_trips(spark):
     finally:
         del client.send_command
     assert counts[0] == counts[1] <= 350, counts
+
+
+def test_process_documents_does_not_scan_unread_text(spark, tmp_path):
+    # the input's plain `text` column is read by nothing after the dedup,
+    # so the scan must not read it (it used to ride through the dedup
+    # exchange and sort inside the max-of-struct record)
+    from ocr_service_spark.corpus import corpus_df
+    from ocr_service_spark.pipeline import process_documents
+
+    corpus_df(spark, 20, partitions=2).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    assert "text" in docs.columns
+    plan = process_documents(docs)._jdf.queryExecution().executedPlan().toString()
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert len(schemas) == 1, plan
+    assert sorted(f.split(":")[0] for f in schemas[0].split(",")) == \
+        ["doc_id", "html", "lang", "url", "warc_ts"], schemas
