@@ -1,487 +1,149 @@
-"""Benchmark harness (driver contract: prints ONE JSON line).
+"""Benchmark emitter; the last stdout line is one compact JSON object.
 
-Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on build_session's host-derived local[N] ($SPARK_GRAFT_CPUS overrides):
+    python bench.py              # headline, data at $SPARK_GRAFT_SF_DIR
+    python bench.py --scaling    # scaling efficiency via spark-submit
 
-- `extract_flagship`: the north-star path — render every documents row
-  into a boilerplated page and run the full extraction + dedup +
-  validation + quality pipeline, written to the `noop` sink so every
-  output column is computed (bench_probe.materialize). Also reported
-  as docs/sec.
-- `extract_corpus`: the same pipeline over the richer synthetic corpus
-  (PDF branch, charset variants, skewed hosts, re-crawl dups) at
-  $SPARK_GRAFT_BENCH_DOCS (default 20000) generated docs — the
-  throughput number the scaling check uses.
-- a dedup/near-dup/corpus-construction sample from the query registry.
+Headline: `extract_corpus` and `extract_docs_per_sec` come from
+perfbench's checked `crawl_extract` run, a subprocess run before this
+process starts a JVM. The flagship (documents rendered into pages,
+through `process_documents` into the `noop` sink) and the HEADLINE
+registry queries share one build_session() session: each gets one
+untimed warm run, then the median of TIMED_RUNS timed runs.
 
-Modes:
-    python bench.py                 # one JSON line (driver contract)
-    python bench.py --scaling       # run extract_corpus at local[8] and
-                                    # local[32] in fresh JVMs, print
-                                    # throughput@8, @32, efficiency
+Scaling: tools/scaling_job.py through `spark-submit --py-files <package
+zip>` (the north rule's deployment contract) at big = build_session's
+default task slots and small = max(1, big // 4), ROUNDS interleaved
+rounds; efficiency is the median-pass speedup over the slot ratio.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import statistics
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 HEADLINE = [
-    "recrawl_dedup",
-    "minhash_signatures",
-    "simhash",
-    "embedding_topk",
-    "extract_roundtrip",
-    # training-data heavyweights (judge r2 #3): without a
-    # round-over-round timing record a regression here is invisible
-    "jaccard_pairs",
-    "chunk_dedup",
-    "embedding_ivf_ann",
-    "token_entropy",
-    "ngram_repetition",
-    # the composed corpus-construction flagship (r3): URL gate →
-    # canonical keep-one → decontaminate → quality → split
-    "corpus_build",
-    # r4 additions: per-host quota (WindowGroupLimit pushdown),
-    # link-graph extraction (html.parser anchor kernel), integer-exact
-    # host PageRank — in the headline so regressions stay visible
-    "host_cap",
-    "link_graph",
-    "host_pagerank",
-    # r5: the crawl-frontier incremental rank update (broadcast-probe
-    # delta sweep) — in the headline so a shape regression is visible
-    "incremental_pagerank",
+    "recrawl_dedup", "minhash_signatures", "simhash", "embedding_topk",
+    "extract_roundtrip", "jaccard_pairs", "chunk_dedup", "embedding_ivf_ann",
+    "token_entropy", "ngram_repetition", "corpus_build", "host_cap",
+    "link_graph", "host_pagerank", "incremental_pagerank",
 ]
+# The 16-query set BENCH_r03 recorded, a round-over-round subtotal; 12
+# remain in the registry: the two extraction figures and HEADLINE[1:11].
+OVERLAP16 = ["extract_flagship", "extract_corpus", *HEADLINE[1:11]]
+TIMED_RUNS = 3
+CRAWL_DOCS = 3000  # perfbench's crawl_extract input, docs per pass
+PERFBENCH = [sys.executable, os.path.join(REPO, "perfbench", "run.py"),
+             "--workload", "crawl_extract", "--seed", "1", "--seconds", "10", "--trace", "0"]
 
 
-_FLOORS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "bench_data", "floors.json")
-_SEED_FLOORS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                 "bench_data", "bench_r3_final_floor.json")
-
-# The 16-query set BENCH_r03 recorded — kept as a round-over-round
-# comparable subtotal (VERDICT r4 item 3) no matter how the headline
-# grows. q1_pricing_summary, region_revenue, window_running and
-# dedup_latest_events have since left the registry, so the subtotal
-# sums the remaining 12 and is not comparable with BENCH_r03-r05.
-OVERLAP16 = [
-    "extract_flagship", "extract_corpus",
-    "minhash_signatures", "simhash", "embedding_topk",
-    "extract_roundtrip", "jaccard_pairs", "chunk_dedup",
-    "embedding_ivf_ann", "token_entropy", "ngram_repetition",
-    "corpus_build",
-]
+def scale_factor(sf_dir: str) -> float:
+    """The X of an `sfX` data directory."""
+    name = os.path.basename(sf_dir.rstrip("/"))
+    if not re.fullmatch(r"sf\d+(\.\d+)?", name):
+        raise ValueError(f"SPARK_GRAFT_SF_DIR must name an sfX directory, got {sf_dir!r}")
+    return float(name[2:])
 
 
-def _cfg_key(sf_dir: str, cores: int, bench_docs: int, cap: int) -> str:
-    return f"{os.path.basename(sf_dir.rstrip('/'))}_c{cores}_d{bench_docs}_cap{cap}"
+def parse_perfbench(stdout: str) -> float:
+    """docs/s from perfbench's final line; raises unless every pass was
+    checked correct."""
+    last = json.loads(stdout.strip().splitlines()[-1])
+    if not last["correct"]:
+        raise RuntimeError(f"perfbench crawl_extract failed its output check: {last}")
+    return last["metrics"]["docs_per_s"]["value"]
 
 
-# The config every pre-r5 floor was recorded under — floors from it
-# stay loadable after the keying change (ADVICE r4: a run at a smaller
-# scale must not ratchet the default config's floors down).
-_LEGACY_CFG = "sf0.1_c32_d20000_cap16"
-
-
-def _load_floors(cfg: str) -> dict[str, float]:
-    """Per-query best-known wall seconds on this host FOR THIS CONFIG —
-    provenance for the adaptive retry (a measurement 3x over its own
-    floor under elevated load is host noise, not the plan; VERDICT r3).
-    Keyed by (sf, cores, bench_docs, shuffle cap) so a one-off run at a
-    different scale can neither ratchet the default floors down nor be
-    flagged suspect against them (ADVICE r4). Seeded from the r3
-    28-attempt floor file, then ratcheted down after every run."""
-    for path in (_FLOORS_PATH, _SEED_FLOORS_PATH):
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except Exception:
-            continue
-        if "configs" in d:
-            if cfg in d["configs"]:
-                return dict(d["configs"][cfg])
-            continue  # keyed file without this config: try the seed
-        if cfg == _LEGACY_CFG:  # pre-keying file: default config only
-            return dict(d.get("per_query_floor", d))
-    return {}
-
-
-def _save_floors(cfg: str, floors: dict[str, float]) -> None:
-    try:
-        os.makedirs(os.path.dirname(_FLOORS_PATH), exist_ok=True)
-        try:
-            with open(_FLOORS_PATH) as f:
-                d = json.load(f)
-        except Exception:
-            d = {}
-        configs = d.get("configs", {})
-        if "per_query_floor" in d and _LEGACY_CFG not in configs:
-            configs[_LEGACY_CFG] = d["per_query_floor"]  # migrate once
-        configs[cfg] = floors
-        with open(_FLOORS_PATH, "w") as f:
-            json.dump({"configs": configs,
-                       "note": "best-known per-query wall seconds on this "
-                               "host keyed by (sf, cores, docs, cap); "
-                               "retry provenance for bench.py"}, f, indent=1)
-    except Exception:
-        pass  # floors are an optimization, never fail the bench
-
-
-def _loadavg() -> float:
-    try:
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
-    except Exception:
-        return -1.0
-
-
-def run_once(sf_dir: str) -> dict:
+def run_headline(sf_dir: str, extract_docs_per_sec: float) -> dict:
     from ocr_service_spark.bench_probe import materialize
     from ocr_service_spark.entry_pipeline import htmlified_documents
     from ocr_service_spark.pipeline import process_documents
     from ocr_service_spark.queries import QUERIES
     from ocr_service_spark.session import build_session
 
-    # Shuffle width caps on wide sessions: the UDF stage runs one
-    # Python worker per post-shuffle partition, and this host's peak
-    # measured extraction throughput is at ~16 concurrent workers
-    # (13.6k docs/s; beyond that, overcommitted vCPUs inflate per-doc
-    # CPU 3-5x with multi-minute bad phases — BENCH.md "why 8->32
-    # cannot"). Same tuning a real cluster does per-node via executor
-    # sizing; scan/join parallelism is unaffected. The cap is an env
-    # override (ADVICE r2) — this host's measured peak is merely the
-    # DEFAULT, so wider hosts can open it up — and the effective width
-    # rides the emitted JSON so results are self-describing.
-    cap = int(os.environ.get("SPARK_GRAFT_SHUFFLE_CAP", "16"))
     spark = build_session("bench")
-    cores = spark.sparkContext.defaultParallelism
-    shuffle_partitions = min(max(cores, 8), cap)
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    timings: dict[str, float] = {}
-    noise: dict[str, dict] = {}
-    n_corpus = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
-    cfg = _cfg_key(sf_dir, cores, n_corpus, cap)
-    floors = _load_floors(cfg)
-    retry_factor = float(os.environ.get("SPARK_GRAFT_RETRY_FACTOR", "3.0"))
-    max_attempts = int(os.environ.get("SPARK_GRAFT_MAX_ATTEMPTS", "5"))
+    spark.read.parquet(f"{sf_dir}/documents.parquet").count()  # JVM warm-up
 
-    # warm the JVM/codegen so per-query numbers measure the plan, not startup
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    def median_s(fn) -> tuple[float, int]:
+        n = fn()  # untimed: first runs pay one-off caching and codegen
+        secs = []
+        for _ in range(TIMED_RUNS):
+            t0 = time.perf_counter()
+            fn()
+            secs.append(time.perf_counter() - t0)
+        return statistics.median(secs), n
 
-    def best_of(name, fn, reps: int = 2, warm: bool = False):
-        # The sandbox host has periodic EXTERNAL contention bursts (load
-        # spikes with no local process; r3 published 60.7s for code whose
-        # same-session floor was 19.0s). Adaptive retry: after the base
-        # reps, keep retrying while the best attempt is still
-        # retry_factor x over this query's recorded floor — a genuine
-        # plan regression stabilizes above the floor and stops retrying
-        # at max_attempts; a noise burst eventually hits a quiet window.
-        # Every attempt's wall + loadavg ride the emitted JSON so the
-        # number is auditable.
-        best, n = None, 0
-        attempts = []
-        floor = floors.get(name)
-        if warm:
-            # One UNTIMED warm execution: the heaviest queries pay a
-            # one-off materialization (shared-shingle localCheckpoint,
-            # page-cache fill) on their first run that later attempts
-            # reuse — that asymmetry is measurement, not plan (VERDICT
-            # r4 item 4). The warm run is flagged in the noise audit.
-            n = fn()
-        while len(attempts) < max_attempts:
-            l0 = _loadavg()
-            t0 = time.time()
-            n = fn()
-            dt = time.time() - t0
-            attempts.append({"sec": round(dt, 3), "load1_before": l0,
-                             "load1_after": _loadavg()})
-            best = dt if best is None or dt < best else best
-            if len(attempts) >= reps and not (
-                    floor is not None and best > retry_factor * floor):
-                break
-        noise[name] = {"attempts": attempts, "floor": floor,
-                       "warmed": warm,
-                       "suspect": bool(floor is not None
-                                       and best > retry_factor * floor)}
-        floors[name] = round(min(best, floor) if floor is not None else best, 3)
-        return best, n
-
-    # The UDF-heavy extraction queries see the widest host-noise spread
-    # (32 concurrent Python workers on overcommitted vCPUs vary 2-4x
-    # run-to-run — BENCH.md "why 8->32 cannot"); give them an extra rep.
-    flagship_s, n_docs = best_of(
-        "extract_flagship",
-        lambda: materialize(process_documents(htmlified_documents(spark, sf_dir))),
-        reps=3)
-    timings["extract_flagship"] = round(flagship_s, 3)
-
-    from ocr_service_spark.corpus import corpus_df
-
-    corpus_s, n_c = best_of(
-        "extract_corpus",
-        lambda: materialize(
-            process_documents(corpus_df(spark, n_corpus, partitions=cores * 4))),
-        reps=3)
-    timings["extract_corpus"] = round(corpus_s, 3)
-
-    # corpus_build's first run materializes its shared-shingle
-    # localCheckpoint; ngram_repetition is short enough that one cold
-    # page-cache miss doubles it. Both exceeded 2x floor in the r4
-    # driver window purely from that asymmetry — warm them untimed.
-    warm_queries = {"corpus_build", "ngram_repetition"}
+    flagship_s, n_docs = median_s(
+        lambda: materialize(process_documents(htmlified_documents(spark, sf_dir))))
+    queries = {"extract_flagship": round(flagship_s, 3),
+               "extract_corpus": round(CRAWL_DOCS / extract_docs_per_sec, 3)}
     for name in HEADLINE:
-        dt, _ = best_of(name, lambda: QUERIES[name](spark, sf_dir).count(),
-                        warm=name in warm_queries)
-        timings[name] = round(dt, 3)
-
+        queries[name] = round(median_s(lambda: QUERIES[name](spark, sf_dir).count())[0], 3)
+    r = {"queries": queries, "cores": spark.sparkContext.defaultParallelism,
+         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+         "extract_docs_per_sec": round(extract_docs_per_sec, 1),
+         "flagship_docs_per_sec": round(n_docs / flagship_s, 1)}
     spark.stop()
-    _save_floors(cfg, floors)
-    return {
-        "timings": timings,
-        "noise": noise,
-        "cores": cores,
-        "shuffle_partitions": shuffle_partitions,
-        "flagship_docs": n_docs,
-        "flagship_docs_per_sec": round(n_docs / flagship_s, 1),
-        "corpus_docs": n_corpus,
-        "corpus_rows_out": n_c,
-        "corpus_docs_per_sec": round(n_corpus / corpus_s, 1),
-    }
+    return r
+
+
+def headline_line(r: dict, sf: float) -> str:
+    """The last stdout line of a headline run: one compact JSON object
+    from run_headline's result `r`."""
+    q = r["queries"]
+    return json.dumps({"metric": "headline_total", "value": round(sum(q.values()), 3),
+                       "unit": "sec", **r, "sf": sf,
+                       "overlap16_total": round(sum(q.get(k, 0.0) for k in OVERLAP16), 3)})
+
+
+def scaling() -> dict:
+    from ocr_service_spark.session import _driver_memory, default_cores
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from make_pyfiles import build
+    from scaling_job import ROUNDS
+
+    big = default_cores()
+    small = max(1, big // 4)
+    zip_path = build(os.path.join(REPO, ".bench", "ocr_service_spark.zip"))
+    runs = {small: [], big: []}
+    for _ in range(ROUNDS):
+        for c in (small, big):
+            # --driver-memory rides the command line: the JVM exists before
+            # build_session runs, so the builder's spark.driver.memory is ignored.
+            cmd = ["spark-submit", "--master", f"local[{c}]", "--driver-memory",
+                   os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(),
+                   "--py-files", zip_path, os.path.join(REPO, "tools", "scaling_job.py")]
+            # a session of its own: the child's CPU count is its tree alone
+            out = subprocess.run(cmd, env=dict(os.environ, SPARK_GRAFT_CPUS=str(c)), text=True,
+                                 stdout=subprocess.PIPE, check=True, start_new_session=True)
+            child = json.loads(out.stdout.strip().splitlines()[-1])
+            docs = child["docs"]
+            runs[c] += child["runs"]
+    med = {c: {k: statistics.median(r[k] for r in rs) for k in ("sec", "cpu_s")}
+           for c, rs in runs.items()}
+    return {"metric": f"scaling_efficiency_{small}_to_{big}_slots", "unit": "ratio",
+            "value": round(med[small]["sec"] / med[big]["sec"] / (big / small), 3), "docs": docs,
+            "docs_per_sec": {c: round(docs / m["sec"], 1) for c, m in med.items()},
+            "cpu_s_per_1k_docs": {c: round(m["cpu_s"] / docs * 1e3, 3) for c, m in med.items()},
+            "runs": runs}
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    if "--scaling-child" in sys.argv:
-        # One fresh-JVM extraction run at $SPARK_GRAFT_CPUS over a
-        # MATERIALIZED corpus parquet (written once, untimed): the
-        # north metric is docs/sec extraction over a stored table, and
-        # inline generation would compete with the extraction UDF for
-        # Python workers.
-        #
-        # Measurement discipline (the host has EXTERNAL load bursts):
-        # every rep is (a) load-gated — we wait for /proc/loadavg to
-        # drop below $SPARK_GRAFT_LOAD_GATE before starting, (b)
-        # CPU-accounted — we record our own process-tree CPU seconds
-        # (JVM + forked Python workers, via /proc session-id match,
-        # so Arrow-UDF Python time is included) AND host-wide busy CPU
-        # seconds (/proc/stat delta). host_minus_ours_cpu_s is CPU
-        # burned by neighbours DURING the rep; cpu_s per doc flat
-        # across core counts while wall inflates = the plan scales and
-        # the residual is contention. Per-stage JVM run/cpu time comes
-        # from the UI REST API for the same rep.
-        from ocr_service_spark.bench_probe import (
-            host_cpu_seconds,
-            loadavg1,
-            materialize,
-            session_tree_cpu_seconds,
-            stage_metrics,
-            wait_for_quiet,
-        )
-        from ocr_service_spark.corpus import ensure_bench_corpus
-        from ocr_service_spark.pipeline import process_documents
-        from ocr_service_spark.session import build_session
-
-        n_corpus = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))
-        reps = int(os.environ.get("SPARK_GRAFT_CHILD_REPS", "2"))
-        ui_port = int(os.environ.get("SPARK_GRAFT_UI_PORT", "4048"))
-        corpus_path = os.environ.get(
-            "SPARK_GRAFT_BENCH_CORPUS",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".bench", f"corpus_{n_corpus}.parquet"))
-        spark = build_session(
-            "bench_scaling",
-            extra_conf={"spark.ui.enabled": "true",
-                        "spark.ui.port": str(ui_port)})
-        cores = spark.sparkContext.defaultParallelism
-        ensure_bench_corpus(spark, corpus_path, n_corpus)
-        docs = spark.read.parquet(corpus_path)
-        docs.count()  # warm JVM + page cache
-        runs = []
-        seen_stages: set[int] = set()
-        for _ in range(reps):
-            waited = wait_for_quiet()
-            load0 = loadavg1()
-            cpu0, host0 = session_tree_cpu_seconds(), host_cpu_seconds()
-            t0 = time.time()
-            materialize(process_documents(docs))
-            wall = time.time() - t0
-            ours = round(session_tree_cpu_seconds() - cpu0, 1)
-            host = round(host_cpu_seconds() - host0, 1)
-            stages, seen_stages = stage_metrics(spark, ui_port, seen_stages)
-            runs.append({
-                "sec": round(wall, 3),
-                "load_before": load0,
-                "load_after": loadavg1(),
-                "gate_wait_s": waited,
-                "ours_cpu_s": ours,
-                "host_cpu_s": host,
-                # host-wide busy minus our tree: >0 under external load.
-                # Can go slightly NEGATIVE (a few %) because /proc/stat
-                # is tick-sampled while per-process time is precise —
-                # treat near-zero as "host was ours alone".
-                "host_minus_ours_cpu_s": round(host - ours, 1),
-                "stages": stages,
-            })
-        best = min(runs, key=lambda r: r["sec"])
-        print(json.dumps({"corpus_docs_per_sec": round(n_corpus / best["sec"], 1),
-                          "cores": cores, "sec": best["sec"],
-                          "best": best, "runs": runs}))
-        return
-
     if "--scaling" in sys.argv:
-        # Two-cluster-size proxy: the same job in fresh JVMs at N and 4N
-        # cores. The sandbox host has external load bursts, so the runs
-        # are INTERLEAVED over several rounds, every rep inside a child
-        # is load-gated and CPU-accounted (see --scaling-child), and the
-        # best per config wins — a burst then penalizes both configs
-        # equally AND shows up in the rep's external_cpu_s.
-        rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "3"))
-        pair = os.environ.get("SPARK_GRAFT_SCALE_PAIR", "8,32")
-        n_small, n_big = (int(x) for x in pair.split(","))
-        n_corpus = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))
-        repo = os.path.dirname(os.path.abspath(__file__))
-        # SPARK_GRAFT_SUBMIT=1 → launch each child via the north rule's
-        # deployment contract: spark-submit --py-files <package zip>
-        # tools/scaling_job.py (imports resolve from the zip; the same
-        # command line runs unchanged on a yarn/k8s cluster).
-        submit = os.environ.get("SPARK_GRAFT_SUBMIT") == "1"
-        if submit:
-            from ocr_service_spark.session import _driver_memory
-
-            sys.path.insert(0, os.path.join(repo, "tools"))
-            from make_pyfiles import build as build_zip
-            zip_path = build_zip(os.path.join(repo, ".bench", "ocr_service_spark.zip"))
-        best: dict[int, dict] = {}
-        all_runs: dict[int, list] = {n_small: [], n_big: []}
-        for _ in range(rounds):
-            for c in (n_small, n_big):
-                env = dict(os.environ, SPARK_GRAFT_CPUS=str(c))
-                if submit:
-                    # --driver-memory MUST ride the command line: under
-                    # spark-submit the JVM exists before build_session
-                    # runs, so the builder's spark.driver.memory is
-                    # silently ignored (1g default → OOM, exit 52).
-                    cmd = ["spark-submit", "--master", f"local[{c}]",
-                           "--driver-memory",
-                           os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(),
-                           "--py-files", zip_path,
-                           os.path.join(repo, "tools", "scaling_job.py")]
-                else:
-                    cmd = [sys.executable, os.path.abspath(__file__),
-                           "--scaling-child"]
-                out = subprocess.run(
-                    cmd, env=env, capture_output=True, text=True)
-                if out.returncode != 0:
-                    sys.stderr.write(
-                        f"[scaling] child cores={c} rc={out.returncode}; "
-                        f"stderr tail:\n{out.stderr[-2000:]}\n")
-                    out.check_returncode()
-                r = json.loads(out.stdout.strip().splitlines()[-1])
-                all_runs[c].extend(r.get("runs", []))
-                if c not in best or r["sec"] < best[c]["sec"]:
-                    best[c] = r
-        tp_s = best[n_small]["corpus_docs_per_sec"]
-        tp_b = best[n_big]["corpus_docs_per_sec"]
-        eff = round((tp_b / tp_s) / (n_big / n_small), 3)
-        result = {
-            "metric": f"scaling_efficiency_{n_small}_to_{n_big}_cores",
-            "value": eff,
-            "unit": "ratio",
-            f"docs_per_sec_{n_small}": tp_s,
-            f"docs_per_sec_{n_big}": tp_b,
-            "sf": sf,
-        }
-        # CPU-time efficiency: per-doc CPU seconds of our whole process
-        # tree (JVM + Python workers), best rep per config. ~1.0 here
-        # while wall efficiency lags = the PLAN scales (same work per
-        # doc at both widths); the wall gap is host contention, visible
-        # in external_cpu_s.
-        bs, bb = best[n_small].get("best"), best[n_big].get("best")
-        if bs and bb and bs.get("ours_cpu_s") and bb.get("ours_cpu_s"):
-            # per-child doc count derived from the child's own output
-            # (docs/s * sec), NOT this process's n_corpus: the
-            # spark-submit child (tools/scaling_job.py) defaults
-            # SPARK_GRAFT_BENCH_DOCS to 240000 while this parent
-            # defaults to 120000, which silently doubled cpu_s_per_kdoc
-            # whenever the env var was unset.
-            n_small_docs = best[n_small]["corpus_docs_per_sec"] * best[n_small]["sec"]
-            n_big_docs = best[n_big]["corpus_docs_per_sec"] * best[n_big]["sec"]
-            cpu_small = bs["ours_cpu_s"] / n_small_docs
-            cpu_big = bb["ours_cpu_s"] / n_big_docs
-            result["cpu_s_per_kdoc"] = {str(n_small): round(cpu_small * 1000, 3),
-                                        str(n_big): round(cpu_big * 1000, 3)}
-            result["cpu_time_efficiency"] = round(cpu_small / cpu_big, 3)
-            result["host_minus_ours_cpu_s_best"] = {
-                str(n_small): bs.get("host_minus_ours_cpu_s"),
-                str(n_big): bb.get("host_minus_ours_cpu_s")}
-            result["best_rep"] = {str(n_small): bs, str(n_big): bb}
-        # every rep, compact — the run-to-run spread IS the host-noise
-        # evidence, don't discard it
-        result["all_reps"] = {
-            str(c): [{"sec": r["sec"], "ours_cpu_s": r.get("ours_cpu_s"),
-                      "load_before": r.get("load_before"),
-                      "load_after": r.get("load_after")}
-                     for r in rs]
-            for c, rs in all_runs.items()}
-        print(json.dumps(result))
+        print(json.dumps(scaling()))
         return
-
-    load_start = _loadavg()
-    r = run_once(sf_dir)
-    total = round(sum(r["timings"].values()), 3)
-    suspects = sorted(k for k, v in r["noise"].items() if v["suspect"])
-
-    # Noise audit trail (VERDICT r3 item 2): every attempt's wall +
-    # loadavg, the query's recorded floor, and which queries remained
-    # >3x floor after exhausting retries. It is LARGE, and the driver
-    # parses only a bounded tail of stdout (BENCH_r04 came back
-    # parsed:null because this dict rode the final line — VERDICT r4
-    # item 1), so it goes to a file + an EARLIER stdout line; the final
-    # line stays the compact r3-shaped headline.
-    audit = {"load1_bench_start": load_start, "load1_bench_end": _loadavg(),
-             "noise": r["noise"]}
-    audit_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "bench_data", "noise_audit_last.json")
-    try:
-        os.makedirs(os.path.dirname(audit_path), exist_ok=True)
-        with open(audit_path, "w") as f:
-            json.dump(audit, f, indent=1)
-    except Exception:
-        pass
-    print(json.dumps({"metric": "noise_audit", **audit}))
-
-    print(headline_line(r, sf, r["cores"], total, suspects))
-
-
-def headline_line(r, sf, cores, total, suspects) -> str:
-    """The LAST stdout line of a headline run — the driver's parse
-    contract (VERDICT r4 item 1: it must be compact, self-contained
-    JSON; the noise audit goes to an earlier line + a file).
-    test_bench_floors pins parseability, size and required keys."""
-    return json.dumps({
-        "metric": "headline_total",
-        "value": total,
-        "unit": "sec",
-        "queries": r["timings"],
-        # stable round-over-round comparable: the exact 16-query set
-        # BENCH_r03 recorded (VERDICT r4 item 3)
-        "overlap16_total": round(
-            sum(r["timings"].get(k, 0.0) for k in OVERLAP16), 3),
-        "sf": sf,
-        "cores": cores,
-        "shuffle_partitions": r["shuffle_partitions"],
-        "extract_docs_per_sec": r["corpus_docs_per_sec"],
-        "flagship_docs_per_sec": r["flagship_docs_per_sec"],
-        "noise_suspect_queries": suspects,
-        "noise_audit_file": "bench_data/noise_audit_last.json",
-    })
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = scale_factor(sf_dir)
+    out = subprocess.run(PERFBENCH, stdout=subprocess.PIPE, text=True, check=True)
+    print(headline_line(run_headline(sf_dir, parse_perfbench(out.stdout)), sf))
 
 
 if __name__ == "__main__":

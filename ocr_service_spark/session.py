@@ -29,6 +29,11 @@ def _driver_memory() -> str:
     return f"{min(4096, max(1024, mem_kib // 1024 // 8))}m"
 
 
+def default_cores() -> int:
+    """Task slots: $SPARK_GRAFT_CPUS, else the usable CPUs less one."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or max(1, len(os.sched_getaffinity(0)) - 1))
+
+
 def build_session(
     app_name: str = "ocr_service_spark",
     cores: int | None = None,
@@ -36,8 +41,7 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS")
-                    or max(1, len(os.sched_getaffinity(0)) - 1))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (

@@ -54,8 +54,8 @@ def test_missing_dir_regenerates(spark, tmp_path):
 
 
 def test_complete_dir_of_another_size_regenerates(spark, tmp_path):
-    # a complete corpus written for another SPARK_GRAFT_BENCH_DOCS must
-    # not be reused: every docs/s figure divides by n_docs
+    # a complete corpus written for another doc count must not be
+    # reused: every docs/s figure divides by n_docs
     path = str(tmp_path / "corpus.parquet")
     ensure_bench_corpus(spark, path, 30, partitions=4)
     ensure_bench_corpus(spark, path, 45, partitions=4)
