@@ -5,7 +5,7 @@ Schema (authoritative input shape, BASELINE.json input_hint):
               text string, lang string)
 
 Every row is a pure function of (doc_id, seed) — generation is
-DISTRIBUTED (mapInPandas over spark.range) so the same generator scales
+DISTRIBUTED (mapInArrow over spark.range) so the same generator scales
 from 100 pytest docs to bench corpora without a driver-side loop.
 
 Engineered properties (FIXTURES.md §1):
@@ -35,8 +35,11 @@ import random
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
+
 from ocr_service_spark.kernel.extract_pdf import PdfBlock, make_graft_pdf
 from ocr_service_spark.kernel.htmlgen import render_page
+from ocr_service_spark.operators.pystage import arrow_schema
 
 __all__ = ["GenDoc", "gen_doc", "gen_docs", "corpus_df", "CORPUS_SCHEMA"]
 
@@ -199,26 +202,19 @@ CORPUS_SCHEMA = (
 
 
 def corpus_df(spark, n_docs: int, seed: int = 42, partitions: int | None = None):
-    """Distributed corpus: spark.range → mapInPandas(gen). No driver
+    """Distributed corpus: spark.range → mapInArrow(gen). No driver
     loop, no collect — generation parallelism == input partitions."""
-    import pandas as pd  # noqa: deferred for executor import
+    schema = arrow_schema(CORPUS_SCHEMA)
 
     def gen_batches(batches):
-        for pdf in batches:
-            rows = [gen_doc(int(i), seed) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [d.doc_id for d in rows],
-                    "url": [d.url for d in rows],
-                    "warc_ts": [d.warc_ts.replace(tzinfo=None) for d in rows],
-                    "html": [d.html for d in rows],
-                    "text": [None] * len(rows),
-                    "lang": [d.lang for d in rows],
-                }
-            )
+        for batch in batches:
+            # a GenDoc has no `text` field: the column stays null
+            yield pa.RecordBatch.from_pylist(
+                [vars(gen_doc(i, seed)) for i in batch.column("id").to_pylist()],
+                schema=schema)
 
     rng = spark.range(n_docs, numPartitions=partitions or max(8, spark.sparkContext.defaultParallelism))
-    return rng.mapInPandas(gen_batches, schema=CORPUS_SCHEMA)
+    return rng.mapInArrow(gen_batches, schema=CORPUS_SCHEMA)
 
 
 def ensure_bench_corpus(spark, path: str, n_docs: int,

@@ -6,15 +6,16 @@ first renders each document into a full Common-Crawl-style page
 article body — kernel/htmlgen.htmlify_roundtrip), then runs the real
 hot path: Arrow-batched extraction UDF → dedup → validation → quality
 (SURVEY.md §3.1 Spark restatement). Page rendering happens in the same
-mapInPandas stage as the scan, so the whole flagship is one
+mapInArrow stage as the scan, so the whole flagship is one
 scan→render→extract→project chain plus the dedup shuffle.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
+from ocr_service_spark.operators.pystage import arrow_schema
 from ocr_service_spark.pipeline import process_documents
 
 __all__ = ["htmlified_documents", "flagship"]
@@ -33,31 +34,24 @@ def htmlified_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text column."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
+    schema = arrow_schema(HTMLIFIED_SCHEMA)
+
     def render(batches):
         from datetime import datetime, timedelta, timezone
 
         from ocr_service_spark.kernel.htmlgen import htmlify_roundtrip
 
         epoch = datetime(2025, 1, 1, tzinfo=timezone.utc)
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            texts = pdf["text"].tolist()
-            langs = pdf["lang"].tolist()
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "url": [f"https://host{i % 97}.example/doc/{i}" for i in ids],
-                    "warc_ts": [
-                        (epoch + timedelta(seconds=(i * 37) % 10_000_000)).replace(tzinfo=None)
-                        for i in ids
-                    ],
-                    "html": [htmlify_roundtrip(t, i) for i, t in zip(ids, texts)],
-                    "text": texts,
-                    "lang": langs,
-                }
-            )
+        for batch in batches:
+            yield pa.RecordBatch.from_pylist([
+                {"doc_id": d["doc_id"],
+                 "url": f"https://host{d['doc_id'] % 97}.example/doc/{d['doc_id']}",
+                 "warc_ts": epoch + timedelta(seconds=(d["doc_id"] * 37) % 10_000_000),
+                 "html": htmlify_roundtrip(d["text"], d["doc_id"]),
+                 "text": d["text"], "lang": d["lang"]}
+                for d in batch.to_pylist()], schema=schema)
 
-    return docs.mapInPandas(render, schema=HTMLIFIED_SCHEMA)
+    return docs.select("doc_id", "text", "lang").mapInArrow(render, schema=HTMLIFIED_SCHEMA)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

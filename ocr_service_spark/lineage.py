@@ -91,7 +91,7 @@ def _read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
     exist (first run). A transient read failure must RAISE, never pass
     for "no lineage": committed_buckets()=∅ would send
     clean_uncommitted after every committed data bucket, and
-    _next_commit_seq()=1 would mint duplicate commit_seq values that
+    a next commit_seq of 1 would mint duplicate commit_seq values that
     silently corrupt time-travel/rollback (ADVICE r4). If the primary
     dir is missing but `.lineage_old` exists, a concurrent (or crashed)
     _swap_lineage is mid-swap — read the parked copy rather than
@@ -128,12 +128,34 @@ def committed_buckets(spark: SparkSession, lineage_dir: str,
     return {r.bucket for r in df.select("bucket").collect()}
 
 
-def _next_commit_seq(spark: SparkSession, lineage_dir: str) -> int:
+def _commit_state(spark: SparkSession, lineage_dir: str) -> tuple[set[int], int]:
+    """(committed buckets, next commit_seq) from one read of the log."""
     df = _read_lineage(spark, lineage_dir)
     if df is None:
-        return 1
-    row = df.agg(F.max("commit_seq").alias("m")).collect()[0]
-    return int(row.m or 0) + 1
+        return set(), 1
+    row = df.agg(F.collect_set("bucket").alias("b"), F.max("commit_seq").alias("m")).collect()[0]
+    return set(row.b), int(row.m or 0) + 1
+
+
+def _lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The commit log of `out_dir` for readers (a parked log included)."""
+    df = _read_lineage(spark, f"{out_dir}/lineage")
+    if df is None:
+        raise FileNotFoundError(f"no lineage log under {out_dir}")
+    return df
+
+
+def _unpark(spark: SparkSession, out_dir: str) -> None:
+    """Writers first move a log that a crashed _swap_lineage left at
+    .lineage_old back into place (as compact_buckets restores a parked
+    bucket): appending beside it would start a second log holding only
+    the new rows, and the next run would take every earlier bucket for
+    uncommitted."""
+    fs, jvm = _fs(spark, out_dir)
+    Path = jvm.org.apache.hadoop.fs.Path
+    primary, parked = Path(f"{out_dir}/lineage"), Path(f"{out_dir}/.lineage_old")
+    if not fs.exists(primary) and fs.exists(parked) and not fs.rename(parked, primary):
+        raise RuntimeError(f"lineage: failed to restore the log parked at {parked}")
 
 
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -141,7 +163,7 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     analog on the parquet emulation): (commit_seq, run_id, n_buckets,
     total_rows). Ordered oldest-first."""
     return (
-        spark.read.parquet(f"{out_dir}/lineage")
+        _lineage(spark, out_dir)
         .groupBy("commit_seq", "run_id")
         .agg(F.count("*").alias("n_buckets"),
              F.sum("n_rows").alias("total_rows"))
@@ -159,11 +181,13 @@ def _swap_lineage(spark: SparkSession, out_dir: str, new_rows: DataFrame) -> Non
     yet installed is covered for READERS: _read_lineage falls back to
     the parked copy, so a concurrent run_with_lineage can no longer
     observe an empty commit log and clean_uncommitted the committed
-    data buckets (ADVICE r4). Two concurrent WRITERS remain out of
-    scope — run them serially."""
+    data buckets (ADVICE r4), and for the next writer after a crash in
+    that window: it moves the parked log back first (_unpark). Two
+    concurrent WRITERS remain out of scope — run them serially."""
     lineage_dir = f"{out_dir}/lineage"
     tmp = f"{out_dir}/.lineage_tmp"
     old = f"{out_dir}/.lineage_old"
+    _unpark(spark, out_dir)
     fs, jvm = _fs(spark, out_dir)
     Path = jvm.org.apache.hadoop.fs.Path
     for leftover in (tmp, old):
@@ -189,7 +213,7 @@ def rollback_to_snapshot(spark: SparkSession, out_dir: str,
     the rewrite byte-identical (restart test). Returns the bucket list
     that was rolled back. Raises if the target snapshot has been
     expired (`expire_snapshots`)."""
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    lineage = _lineage(spark, out_dir)
     min_seq = lineage.agg(F.min("commit_seq").alias("m")).collect()[0].m
     if min_seq is not None and commit_seq < int(min_seq):
         raise ValueError(
@@ -212,7 +236,7 @@ def expire_snapshots(spark: SparkSession, out_dir: str,
     so unlike real Iceberg there are no old data files to reclaim —
     expiry here trims exactly what it retains the right to: the commit
     log.)"""
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    lineage = _lineage(spark, out_dir)
     n = lineage.filter(F.col("commit_seq") < int(older_than_seq)).count()
     if n == 0:
         return 0
@@ -244,7 +268,8 @@ def run_with_lineage(
     lineage_dir = f"{out_dir}/lineage"
     bucketed = with_bucket(result, key=key, n_buckets=n_buckets)
 
-    done = committed_buckets(spark, lineage_dir)
+    _unpark(spark, out_dir)
+    done, commit_seq = _commit_state(spark, lineage_dir)
     # a crash between a bucket's data commit (below) and its lineage
     # append leaves orphan data — drop it before re-appending
     clean_uncommitted(spark, data_dir, done)
@@ -268,8 +293,7 @@ def run_with_lineage(
         )
         .withColumn("wall_clock_s", F.lit(round(time.time() - t0, 3)))
         .withColumn("run_id", F.lit(run_id))
-        .withColumn("commit_seq",
-                    F.lit(_next_commit_seq(spark, lineage_dir)))
+        .withColumn("commit_seq", F.lit(commit_seq))
     )
     # lineage row lands only after the data commit returned — a crash
     # between the two leaves an uncommitted bucket that the next run
@@ -284,7 +308,7 @@ def verify_lineage(spark: SparkSession, out_dir: str, key: str = "url") -> DataF
     """Recompute per-bucket checksums from the data and join against the
     lineage claims — the restart driver's integrity check."""
     data = spark.read.parquet(f"{out_dir}/data")
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    lineage = _lineage(spark, out_dir)
     actual = data.groupBy("bucket").agg(
         F.count("*").alias("actual_rows"),
         F.bit_xor(F.xxhash64(F.col(key), F.col("extracted_text"))).alias("actual_checksum"),

@@ -15,11 +15,10 @@ exactly the reference's ordering: labeled areas first, then main text.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from ocr_service_spark.operators.pystage import batch_map
 
 __all__ = ["extract_area_texts", "with_area_extraction", "spliced_text"]
 
@@ -44,19 +43,12 @@ def with_area_extraction(
 ) -> DataFrame:
     """df + array<string> of the selected nodes' re-extracted texts."""
 
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def areas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        for pdf in batches:
-            outs = []
-            for raw, sel in zip(pdf[html_col], pdf[areas_col]):
-                if raw is None or sel is None or len(sel) == 0:
-                    outs.append([])
-                    continue
-                outs.append(extract_area_texts(bytes(raw), [int(i) for i in sel]))
-            yield pd.Series(outs)
+    def areas(rows: list[dict]) -> list[list[str | None]]:
+        return [extract_area_texts(r[html_col], r[areas_col])
+                if r[html_col] is not None and r[areas_col] else [] for r in rows]
 
-    return df.withColumn(
-        out_col, areas.asNondeterministic()(F.struct(html_col, areas_col)))
+    udf = batch_map(lambda: areas, T.ArrayType(T.StringType()))
+    return df.withColumn(out_col, udf(F.struct(html_col, areas_col)))
 
 
 def spliced_text(area_texts, main_text):

@@ -1,6 +1,6 @@
 """Extraction UDF stage — the M1 centerpiece (SURVEY.md §2.9).
 
-A single iterator-style Arrow UDF (pyarrow arrays in and out; plan
+A single iterator-style Arrow UDF (operators/pystage.batch_map; plan
 shows ArrowEvalPython, never BatchEvalPython) wraps the pure kernel
 `extract_document` and, given a correction map, runs `correct_document`
 on each extracted text in the same batch. Iterator form so per-batch
@@ -10,26 +10,22 @@ the reference's compile-once validators (core/validators.py:78-83).
 The UDF replaces the reference's whole OCR stack: image preprocess
 (core/ocr_engine.py:51-82) → Vision OCR (178-293) → per-page loop
 (137-176) → temp-file round-trips (312-325). Bytes stay in Arrow
-buffers end-to-end; each batch's result is built as a pyarrow
-StructArray straight from the kernel's Python values, and per-page
+buffers end-to-end; each batch's result is one pyarrow StructArray
+built straight from the kernel's Python values, and per-page
 results stay inside the row's array until the caller explodes them.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
 
 from ocr_service_spark.operators.correct import (
     CORRECT_RESULT_TYPE,
     DEFAULT_CORRECTIONS,
-    correction_arrays,
-    struct_list_array,
+    correct_row,
 )
+from ocr_service_spark.operators.pystage import batch_map
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -80,44 +76,23 @@ def make_extract_udf(separator: str = "\n\n",
     if corrections is not None:
         fields = fields + CORRECT_RESULT_TYPE.fields
         corrections = dict(corrections)
-    result_type = T.StructType(fields)
-    arrow_type = to_arrow_type(result_type)
 
-    @F.arrow_udf(result_type)
-    def extract(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+    def factory():
         # import inside the UDF: runs on executors after --py-files ship
         from ocr_service_spark.kernel.dispatch import extract_document
 
-        for payloads in batches:
-            rs = [extract_document(raw, separator=separator)
-                  for raw in payloads.to_pylist()]
-            texts = [r.text for r in rs]
-            offsets = [0]
-            spans = []
-            for r in rs:
-                spans += r.spans
-                offsets.append(len(spans))
-            columns = [
-                pa.array(texts, pa.string()),
-                struct_list_array(arrow_type.field("spans").type, offsets, spans),
-                pa.array([r.kind for r in rs], pa.string()),
-                pa.array([r.n_nodes for r in rs], pa.int32()),
-                pa.array([r.n_content for r in rs], pa.int32()),
-                pa.array([r.charset for r in rs], pa.string()),
-                pa.array([r.error for r in rs], pa.string()),
-            ]
-            if corrections is not None:
-                columns += correction_arrays(texts, corrections)
-            yield pa.StructArray.from_arrays(columns, fields=list(arrow_type))
+        def run(payloads: list) -> list[tuple]:
+            rows = []
+            for raw in payloads:
+                r = extract_document(raw, separator=separator)
+                row = (r.text, r.spans, r.kind, r.n_nodes, r.n_content, r.charset, r.error)
+                rows.append(row if corrections is None
+                            else row + correct_row(r.text, corrections))
+            return rows
 
-    # The kernel IS deterministic, but Catalyst treats deterministic
-    # UDFs as free to duplicate: a filter on a UDF-derived column (the
-    # error-skip predicate) gets pushed below the projection and the
-    # plan grows a SECOND ArrowEvalPython node — the whole corpus would
-    # be extracted twice. asNondeterministic() pins exactly one
-    # evaluation per row (verified by tests/test_pipeline_spark.py's
-    # single-node plan assertion).
-    return extract.asNondeterministic()
+        return run
+
+    return batch_map(factory, T.StructType(fields))
 
 
 def make_extract_correct_udf():

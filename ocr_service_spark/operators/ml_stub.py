@@ -8,8 +8,8 @@ core/processor.py:482-483), the rut5 spell corrector (hard-coded
 use_ml_correction=False, core/processor.py:259), and the ML quality
 scorer (use_ml_quality=False, core/processor.py:287). They are
 therefore OUT of the correctness path here too; what this module
-provides is the production-shaped Spark stage: an iterator pandas UDF
-with one-time per-executor "model" init (the broadcast-once pattern of
+provides is the production-shaped Spark stage: an iterator Arrow UDF
+(operators/pystage.batch_map) with one-time per-executor "model" init (the broadcast-once pattern of
 predict_batch_udf), batch scoring, and the confidence-gated
 classification merge (P11, core/processor.py:331-340).
 
@@ -20,11 +20,10 @@ module is the only change a GPU cluster needs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from ocr_service_spark.operators.pystage import batch_map
 
 __all__ = [
     "CLASSIFY_TYPE",
@@ -132,18 +131,12 @@ def with_doc_classification(df: DataFrame, text_col: str = "corrected_text",
     a NumpyLinearModel) swaps in real weights; the default keeps the
     reference's shipped-untrained behavior (_StubModel)."""
 
-    @F.pandas_udf(CLASSIFY_TYPE)
-    def classify(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    def factory():
         # one-time init per executor task stream
         model = model_factory() if model_factory is not None else _StubModel()
-        for texts in batches:
-            preds = model.predict(list(texts))
-            yield pd.DataFrame(
-                {"predicted_type": [p[0] for p in preds],
-                 "confidence": [p[1] for p in preds]}
-            )
+        return model.predict
 
-    return df.withColumn(out_col, classify.asNondeterministic()(F.col(text_col)))
+    return df.withColumn(out_col, batch_map(factory, CLASSIFY_TYPE)(F.col(text_col)))
 
 
 def with_spell_correction(df: DataFrame, text_col: str = "corrected_text",
@@ -161,18 +154,15 @@ def with_spell_correction(df: DataFrame, text_col: str = "corrected_text",
     constructed ONCE per partition iterator (load-once/score-many) and
     the pre/post gates stay byte-identical to the reference's."""
 
-    @F.pandas_udf(T.StringType())
-    def correct(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def factory():
         from ocr_service_spark.kernel.spell_guard import guarded_correct
 
         model_fn = model_factory() if model_factory is not None else None
-        for texts in batches:
-            if model_fn is None:
-                yield texts
-            else:
-                yield texts.map(lambda t: guarded_correct(t, model_fn))
+        if model_fn is None:
+            return lambda texts: texts
+        return lambda texts: [guarded_correct(t, model_fn) for t in texts]
 
-    return df.withColumn(out_col, correct.asNondeterministic()(F.col(text_col)))
+    return df.withColumn(out_col, batch_map(factory, T.StringType())(F.col(text_col)))
 
 
 def apply_confidence_gate(df: DataFrame, template_col: str = "template",

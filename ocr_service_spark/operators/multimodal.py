@@ -11,16 +11,16 @@ called on a real cluster.
 Reference analog: the binary image path of `load_image`
 (core/ocr_engine.py:84-119) and quality metrics over decoded pixels
 (services/quality_check.py:17-91) — here re-expressed as an
-iterator-of-batches pandas UDF over the binary column.
+iterator-of-batches Arrow UDF (operators/pystage.batch_map) over the
+binary column.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from ocr_service_spark.operators.pystage import batch_map
 
 __all__ = ["MEDIA_META_TYPE", "decode_stub", "with_media_meta"]
 
@@ -67,11 +67,6 @@ def with_media_meta(df: DataFrame, payload_col: str, out_col: str = "media_meta"
     """Attach the decoded-metadata struct via an Arrow-batched iterator
     UDF (one-time init per partition, bytes never leave Arrow buffers
     until the decode call)."""
-
-    @F.pandas_udf(MEDIA_META_TYPE)
-    def decode_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for payloads in batches:
-            metas = [decode_stub(bytes(p) if p is not None else None) for p in payloads]
-            yield pd.DataFrame(metas)
-
-    return df.withColumn(out_col, decode_udf(F.col(payload_col)))
+    udf = batch_map(lambda: lambda payloads: [decode_stub(p) for p in payloads],
+                    MEDIA_META_TYPE)
+    return df.withColumn(out_col, udf(F.col(payload_col)))

@@ -20,13 +20,12 @@ Column arguments into the same text. Doubles are written 0.0D: a bare
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ocr_service_spark.functions.textstats import sql_over, tokens
+from ocr_service_spark.operators.pystage import batch_map
 
 __all__ = ["quality_stats", "overall_quality_sql", "span_confidence_sql", "needs_review_sql",
            "text_quality", "overall_quality", "needs_review", "compression_ratio"]
@@ -104,20 +103,15 @@ def compression_ratio(text: Column) -> Column:
     highly repetitive boilerplate compresses far below natural prose,
     so `compressed_bytes / utf8_bytes` separates template spam from
     content. zlib level 6 on UTF-8 bytes; NULL for empty/NULL text.
-    Iterator Arrow UDF over pyarrow arrays (no SQL twin exists for
-    deflate — the driver records this query rows-only; tests pin exact
-    values against direct zlib). Scale: pure map, no state, ~100
+    One batch_map stage (no SQL twin exists for deflate — the driver
+    records this query rows-only; tests pin exact values against direct
+    zlib). Scale: pure map, no state, ~100
     MB/s/core — at 10^12 docs it rides the same Arrow stage as
     extraction."""
     import zlib
 
-    @F.arrow_udf("double")
-    def _ratio(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        for texts in batches:
-            encoded = (t.encode("utf-8") if t else b"" for t in texts.to_pylist())
-            yield pa.array([len(zlib.compress(b, 6)) / len(b) if b else None for b in encoded],
-                           pa.float64())
+    def ratios(texts: list) -> list[float | None]:
+        encoded = (t.encode("utf-8") if t else b"" for t in texts)
+        return [len(zlib.compress(b, 6)) / len(b) if b else None for b in encoded]
 
-    # nondeterministic pin: stops Catalyst from duplicating the Arrow
-    # node when a filter references the derived column (see BENCH.md)
-    return _ratio.asNondeterministic()(text)
+    return batch_map(lambda: ratios, T.DoubleType())(text)

@@ -23,10 +23,11 @@ equivalents:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ocr_service_spark.operators.correct import DEFAULT_CORRECTIONS
+from ocr_service_spark.operators.pystage import batch_map
 
 __all__ = ["read_binary_pages", "read_corrections", "read_goldens"]
 
@@ -63,17 +64,18 @@ def read_corrections(spark: SparkSession, path: str | None = None) -> DataFrame:
         list(DEFAULT_CORRECTIONS.items()), "original string, corrected string")
 
 
-def _golden_text(path_s: pd.Series, content_s: pd.Series) -> pd.Series:
-    """Extension-dispatched golden decode, one Arrow batch at a time
-    (the reference's load_reference_text, utils/dataset_loader.py:
-    104-152): txt → utf-8, docx/doc → paragraph join, xlsx → per-sheet
-    grid; anything unreadable → '' (reference logs-and-returns-'')."""
+def _golden_text(files: list[dict]) -> list[str]:
+    """Extension-dispatched golden decode of binaryFile (path, content)
+    rows, one Arrow batch at a time (the reference's load_reference_text,
+    utils/dataset_loader.py:104-152): txt → utf-8, docx/doc → paragraph
+    join, xlsx → per-sheet grid; anything unreadable → '' (reference
+    logs-and-returns-'')."""
     from ocr_service_spark.sources.office import docx_text, xlsx_text
 
     out = []
-    for p, c in zip(path_s, content_s):
+    for f in files:
+        p, b = f["path"], f["content"]
         ext = p.rsplit(".", 1)[-1].lower() if "." in p else ""
-        b = bytes(c)
         if ext == "txt":
             try:
                 out.append(b.decode("utf-8"))
@@ -85,7 +87,7 @@ def _golden_text(path_s: pd.Series, content_s: pd.Series) -> pd.Series:
             out.append(xlsx_text(b))
         else:
             out.append("")
-    return pd.Series(out, dtype="object")
+    return out
 
 
 def read_goldens(spark: SparkSession, path: str,
@@ -100,10 +102,10 @@ def read_goldens(spark: SparkSession, path: str,
     raw = (
         spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
     )
-    golden_udf = F.pandas_udf(_golden_text, "string").asNondeterministic()
+    golden_udf = batch_map(lambda: _golden_text, T.StringType())
     stem = F.regexp_replace(
         F.element_at(F.split(F.col("path"), "/"), -1), r"\.[^.]*$", "")
     return raw.select(
         F.regexp_replace(stem, r"^\d+\s+", "").alias("base_name"),
-        golden_udf(F.col("path"), F.col("content")).alias("expected_text"),
+        golden_udf(F.struct("path", "content")).alias("expected_text"),
     )

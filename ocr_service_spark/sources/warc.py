@@ -13,9 +13,9 @@ Scale shape (the industry-standard one for CC): WARC gzip members are
 NOT splittable without an index, so parallelism is FILE-level — one
 task per archive file (Common Crawl ships ~64k files of ~1 GB per
 snapshot, far more files than executors at any realistic cluster
-size). `read_warc` is binaryFile scan → mapInPandas(parse) so a file's
+size). `read_warc` is binaryFile scan → mapInArrow(parse) so a file's
 records stream out of one Arrow batch iterator without materializing
-the whole archive as rows first; payload bytes go straight into the
+the whole scan as rows first; payload bytes go straight into the
 extraction UDF's binary column.
 
 `write_warc_bytes` builds spec-shaped archives (used by tests and the
@@ -35,8 +35,10 @@ import zlib
 from collections.abc import Iterator
 from datetime import datetime
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from ocr_service_spark.operators.pystage import arrow_schema
 
 __all__ = ["build_record", "write_warc_bytes", "parse_warc", "read_warc",
            "warc_file_stats", "WARC_SCHEMA", "WARC_STATS_SCHEMA"]
@@ -49,6 +51,8 @@ WARC_STATS_SCHEMA = "warc_file string, n_records long, n_skipped long"
 _CRLF = b"\r\n"
 # gzip member header: magic 1f8b, CM=8 (deflate), FLG reserved bits clear
 _MEMBER_HEADER = re.compile(rb"\x1f\x8b\x08[\x00-\x1f]")
+# compressed bytes handed to zlib per call: a few typical members
+_FEED = 1 << 16
 
 
 def build_record(url: str, ts: datetime, payload: bytes,
@@ -99,14 +103,21 @@ def _split_members(raw: bytes, stats: dict | None = None) -> Iterator[bytes]:
     if raw[:2] != b"\x1f\x8b":
         yield raw
         return
+    view = memoryview(raw)
     pos = 0
     while pos < len(raw):
+        # feed bounded slices until the member ends: handing zlib the
+        # whole remainder would copy it (and again into unused_data)
+        # once per member, quadratic in archive size
         d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
+        fed, parts = pos, []
         try:
-            chunk = d.decompress(raw[pos:])
+            while not d.eof and fed < len(raw):
+                parts.append(d.decompress(view[fed:fed + _FEED]))
+                fed = min(fed + _FEED, len(raw))
         except zlib.error:
-            chunk = None
-        if chunk is None or not d.eof:
+            parts = None
+        if parts is None or not d.eof:
             # CRC/stream error, or a stall before stream end (flip or
             # truncation): drop the unverifiable bytes, count, resync
             if stats is not None:
@@ -116,8 +127,8 @@ def _split_members(raw: bytes, stats: dict | None = None) -> Iterator[bytes]:
                 return
             pos = nxt.start()
             continue
-        yield chunk
-        consumed = len(raw) - pos - len(d.unused_data)
+        yield b"".join(parts)
+        consumed = fed - pos - len(d.unused_data)
         if consumed <= 0:  # pragma: no cover - corrupt trailing garbage
             return
         pos += consumed
@@ -196,35 +207,40 @@ def parse_warc(raw: bytes, stats: dict | None = None) -> Iterator[dict]:
             }
 
 
-def read_warc(spark: SparkSession, path: str,
-              glob: str = "*.warc.gz") -> DataFrame:
-    """Directory of WARC archives → documents-shaped rows. File-level
-    parallelism (see module docstring); the parse runs inside
-    mapInPandas so record rows stream out per Arrow batch."""
+def _archives(spark: SparkSession, path: str, glob: str, ddl: str, rows) -> DataFrame:
+    """binaryFile scan of `path` → mapInArrow: one batch of
+    `rows(path, records, n_skipped)` (Arrow schema of `ddl`) per archive,
+    so each file's rows stream out without materializing the whole
+    scan as rows first."""
+    schema = arrow_schema(ddl)
+
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for f in batch.to_pylist():
+                stats: dict = {}
+                recs = list(parse_warc(f["content"], stats))
+                out = rows(f["path"], recs, stats.get("n_skipped", 0))
+                if out:
+                    yield pa.RecordBatch.from_pylist(out, schema=schema)
+
     files = (
         spark.read.format("binaryFile").option("pathGlobFilter", glob)
         .load(path).select("path", "content")
     )
+    return files.mapInArrow(parse, schema=ddl)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                stats: dict = {}
-                recs = list(parse_warc(bytes(content), stats))
-                if not recs:
-                    # a fully-corrupt archive yields no rows here; its
-                    # drop count stays observable via warc_file_stats
-                    continue
-                yield pd.DataFrame({
-                    "url": [r["url"] for r in recs],
-                    "warc_ts": [r["warc_ts"] for r in recs],
-                    "html": [r["payload"] for r in recs],
-                    "content_type": [r["content_type"] for r in recs],
-                    "warc_file": [path_] * len(recs),
-                    "n_skipped": [stats.get("n_skipped", 0)] * len(recs),
-                })
 
-    return files.mapInPandas(parse, schema=WARC_SCHEMA)
+def read_warc(spark: SparkSession, path: str,
+              glob: str = "*.warc.gz") -> DataFrame:
+    """Directory of WARC archives → documents-shaped rows. File-level
+    parallelism (see module docstring); the parse runs inside
+    mapInArrow so record rows stream out per archive. A fully-corrupt
+    archive yields no rows here; its drop count stays observable via
+    warc_file_stats."""
+    return _archives(spark, path, glob, WARC_SCHEMA, lambda path_, recs, n_skipped: [
+        {"url": r["url"], "warc_ts": r["warc_ts"], "html": r["payload"],
+         "content_type": r["content_type"], "warc_file": path_, "n_skipped": n_skipped}
+        for r in recs])
 
 
 def warc_file_stats(spark: SparkSession, path: str,
@@ -234,20 +250,5 @@ def warc_file_stats(spark: SparkSession, path: str,
     can't disappear silently (read_warc emits no rows for it). Same
     file-level parallelism as read_warc; meant for ingest monitoring
     and lineage, not the hot path."""
-    files = (
-        spark.read.format("binaryFile").option("pathGlobFilter", glob)
-        .load(path).select("path", "content")
-    )
-
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                stats: dict = {}
-                n = sum(1 for _ in parse_warc(bytes(content), stats))
-                yield pd.DataFrame({
-                    "warc_file": [path_],
-                    "n_records": [n],
-                    "n_skipped": [stats.get("n_skipped", 0)],
-                })
-
-    return files.mapInPandas(audit, schema=WARC_STATS_SCHEMA)
+    return _archives(spark, path, glob, WARC_STATS_SCHEMA, lambda path_, recs, n_skipped: [
+        {"warc_file": path_, "n_records": len(recs), "n_skipped": n_skipped}])

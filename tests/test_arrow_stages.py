@@ -1,0 +1,32 @@
+"""The package's Python stages are Arrow-native: no module imports
+pandas or builds a pandas UDF / mapInPandas stage, and every column UDF
+goes through the one batch-map helper (operators/pystage.py), the only
+place that pins a stage nondeterministic."""
+
+from __future__ import annotations
+
+import re
+import subprocess
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _package_lines():
+    tracked = subprocess.run(
+        ["git", "ls-files", "--cached", "--others", "--exclude-standard", "ocr_service_spark/*.py"],
+        cwd=REPO, capture_output=True, text=True, check=True).stdout.split()
+    assert tracked
+    for path in tracked:
+        for i, line in enumerate((REPO / path).read_text().splitlines(), 1):
+            yield f"{path}:{i}", line
+
+
+def test_package_has_no_pandas_stage():
+    pattern = re.compile(r"import pandas|pandas_udf|mapInPandas")
+    assert [where for where, line in _package_lines() if pattern.search(line)] == []
+
+
+def test_one_nondeterministic_pin():
+    pins = [where for where, line in _package_lines() if "asNondeterministic" in line]
+    assert [p.split(":")[0] for p in pins] == ["ocr_service_spark/operators/pystage.py"]

@@ -159,15 +159,37 @@ def test_committed_buckets_reads_parked_log_mid_swap(spark, tmp_path):
                             n_buckets=N_BUCKETS, run_id="r1")
     os.rename(f"{out}/lineage", f"{out}/.lineage_old")
     assert committed_buckets(spark, f"{out}/lineage") == set(done)
-    from ocr_service_spark.lineage import _next_commit_seq
+    from ocr_service_spark.lineage import _commit_state
 
-    assert _next_commit_seq(spark, f"{out}/lineage") == 2
+    assert _commit_state(spark, f"{out}/lineage") == (set(done), 2)
+
+
+def test_run_after_crash_mid_swap_restores_the_parked_log(spark, tmp_path):
+    # a crash between _swap_lineage's two renames leaves the whole log
+    # at .lineage_old; the next writer must append to THAT history, not
+    # start a new log holding only its own rows (the run after would
+    # then clean and recompute every earlier bucket)
+    import os
+
+    out = str(tmp_path / "t")
+    assert run_with_lineage(spark, _result(spark), out, n_buckets=4,
+                            max_buckets_this_run=2, run_id="r1") == [0, 1]
+    assert run_with_lineage(spark, _result(spark), out, n_buckets=4,
+                            max_buckets_this_run=1, run_id="r2") == [2]
+    os.rename(f"{out}/lineage", f"{out}/.lineage_old")
+
+    assert run_with_lineage(spark, _result(spark), out, n_buckets=4, run_id="r3") == [3]
+    log = spark.read.parquet(f"{out}/lineage")
+    assert {(r.bucket, r.commit_seq) for r in log.collect()} == {(0, 1), (1, 1), (2, 2), (3, 3)}
+    assert run_with_lineage(spark, _result(spark), out, n_buckets=4, run_id="r4") == []
+    assert not os.path.exists(f"{out}/.lineage_old")
+    assert all(r.ok for r in verify_lineage(spark, out).collect())
 
 
 def test_pre_commit_seq_lineage_rejected(spark, tmp_path):
     # A lineage dir from before the commit_seq column must fail loudly:
     # its null commit_seq rows would be silently dropped by every
-    # as_of filter and _next_commit_seq would restart at 1.
+    # as_of filter and the next commit_seq would restart at 1.
     import pytest
 
     out = str(tmp_path / "legacy")

@@ -1,7 +1,7 @@
 """Dump physical plans for the headline queries into PLANS.md with a
 hygiene summary per query: parquet pushed filters, whole-stage codegen
-coverage, Python-eval node kinds (Arrow only — BatchEvalPython is a
-hot-path bug), shuffle (Exchange) count.
+coverage, Python-eval node kinds (Arrow only — BatchEvalPython and
+MapInPandas are hot-path bugs), shuffle (Exchange) count.
 
 Usage: python tools/dump_plans.py [--sf DIR]
 """
@@ -67,13 +67,15 @@ def main() -> None:
         n_codegen = len(set(re.findall(r"\*\((\d+)\)", plan)))
         n_shuffle = len(re.findall(r"Exchange (?:hash|range|Single|rebalance)", plan))
         n_bcast = plan.count("BroadcastExchange")
-        arrow = plan.count("ArrowEvalPython") + plan.count("MapInPandas") + plan.count("MapInArrow")
+        arrow = plan.count("ArrowEvalPython") + plan.count("MapInArrow")
         batchpy = plan.count("BatchEvalPython")
+        pandas = plan.count("MapInPandas")
         out.append(f"## {name}")
         out.append("")
         out.append(f"- WholeStageCodegen spans: {n_codegen}; shuffle Exchanges: {n_shuffle}; "
                    f"broadcasts: {n_bcast}; Arrow Python nodes: {arrow}; "
-                   f"per-row Python nodes: {batchpy}" + (" ❌" if batchpy else ""))
+                   f"per-row Python nodes: {batchpy}" + (" ❌" if batchpy else "")
+                   + (f"; pandas map nodes: {pandas} ❌" if pandas else ""))
         if pushed:
             out.append(f"- PushedFilters: {'; '.join(pushed[:4])}")
         scan_schemas = sorted(set(re.findall(r"ReadSchema: (struct<[^>]{0,120})", plan)))
