@@ -30,7 +30,6 @@ __all__ = [
     "minhash_fold",
     "minhash_row_sigs",
     "stop_ratio",
-    "bpe_ish_count",
     "MINHASH_PRIME",
 ]
 
@@ -147,30 +146,12 @@ def minhash_expr(shingle_hash_mod: Column, k: int = 8) -> list[Column]:
     ]
 
 
-def minhash_sql_term(i: int, x_expr: str) -> str:
-    """The DuckDB-side twin of minhash_expr for hash i."""
-    a, b = MINHASH_COEFFS[i]
-    return f"MIN(({a % MINHASH_PRIME} * {x_expr} + {b}) % {MINHASH_PRIME})"
-
-
 def stop_ratio(text: Column, stopwords: tuple[str, ...]) -> Column:
     """Fraction of tokens that are stopwords (language-ID signal)."""
     toks = tokens(text)
     stops = F.array(*[F.lit(w) for w in stopwords])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
     return F.round(hits / F.greatest(F.size(toks), F.lit(1)), 4)
-
-
-def bpe_ish_count(text: Column) -> Column:
-    """Sub-word-ish token count: alpha runs, digit runs, single
-    punctuation — a cheap proxy for BPE token counts. Whitespace is the
-    explicit WS_CLASS set (never \\s — engine classes disagree on VT)."""
-    return F.size(
-        F.regexp_extract_all(
-            text,
-            F.lit(r"[A-Za-z\p{L}]+|[0-9]+|[^A-Za-z0-9 \x09\x0A\x0B\x0C\x0D]"),
-            F.lit(0))
-    )
 
 
 def minhash_fold(hx: Column, k: int = 8) -> Column:

@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ocr_service_spark.operators.validate import FIELD_EXPRS
+
 __all__ = [
     "ICEBERG_RUNTIME_ARTIFACT",
     "iceberg_available",
@@ -84,7 +86,11 @@ def create_extracted_table_ddl(
 ) -> list[str]:
     """North-rule output table: bucket(url) partitioning so restart
     pruning and the dedup shuffle co-locate, warc_ts write order for
-    range-pruned incremental reads. Returned as executable statements."""
+    range-pruned incremental reads. Returned as executable statements.
+    The columns are process_documents' output, in its order and with
+    its types (tests/test_iceberg_gate.py compares them)."""
+    field = "STRUCT<field_name: STRING, value: STRING, valid: BOOLEAN, confidence: DOUBLE>"
+    critical = ", ".join(f"{name}: {field}" for name in FIELD_EXPRS)
     return [
         f"""
         CREATE TABLE IF NOT EXISTS {table} (
@@ -95,10 +101,19 @@ def create_extracted_table_ddl(
             kind STRING,
             extracted_text STRING,
             corrected_text STRING,
+            corrections_applied ARRAY<STRUCT<original: STRING, corrected: STRING,
+                                             confidence: DOUBLE, method: STRING>>,
             spans ARRAY<STRUCT<start: INT, end: INT, node_idx: INT,
                                confidence: DOUBLE>>,
+            n_nodes INT,
+            n_content INT,
             extraction_confidence DOUBLE,
+            quality_stats STRUCT<alpha_ratio: DOUBLE, length_score: DOUBLE,
+                                 n_chars: INT, n_tokens: INT>,
             overall_quality DOUBLE,
+            critical_fields STRUCT<{critical}>,
+            important_data STRUCT<inn: ARRAY<STRING>, snils: ARRAY<STRING>,
+                                  surnames: ARRAY<STRING>>,
             needs_review BOOLEAN
         )
         USING iceberg

@@ -24,9 +24,12 @@ lineage row written only after the bucket's data commit returns.
 
 from __future__ import annotations
 
+import math
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ocr_service_spark.functions.textstats import token_hash
 
 __all__ = [
     "bucket_expr",
@@ -43,21 +46,77 @@ __all__ = [
 
 
 def bucket_expr(key: str, n_buckets: int) -> F.Column:
-    """Portable bucket assignment: first 15 md5 hex chars → 60-bit int
-    → mod n_buckets. Engine-independent (DuckDB twin:
-    ('0x'||substr(md5(url),1,15))::BIGINT % n), so external systems —
-    and the driver's SQL oracle — can compute a row's bucket without
-    Spark. On a real cluster the Iceberg table's bucket(N, url) partition
-    transform replaces this expression; the lineage contract is
-    unchanged."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(F.col(key)), 1, 15), 16, 10).cast("bigint"),
-        F.lit(n_buckets),
+    """Portable bucket assignment: the 60-bit md5 prefix hash
+    (textstats.token_hash) mod n_buckets. Engine-independent (DuckDB
+    twin: ('0x'||substr(md5(url),1,15))::BIGINT % n), so external
+    systems — and the DuckDB SQL oracles — can compute a row's bucket
+    without Spark. On a real cluster the Iceberg table's bucket(N, url)
+    partition transform replaces this expression; the lineage contract
+    is unchanged."""
+    return F.pmod(token_hash(F.col(key)), F.lit(n_buckets))
+
+
+def with_bucket(df: DataFrame, n_buckets: int = 16) -> DataFrame:
+    return df.withColumn("bucket", bucket_expr("url", n_buckets))
+
+
+def _bucket_fold(df: DataFrame) -> DataFrame:
+    """(bucket, n_rows, checksum = bit_xor(xxhash64(url, extracted_text)))
+    per bucket — order-independent, parallelism-independent."""
+    return df.groupBy("bucket").agg(
+        F.count("*").alias("n_rows"),
+        F.bit_xor(F.xxhash64("url", "extracted_text")).alias("checksum"),
     )
 
 
-def with_bucket(df: DataFrame, key: str = "url", n_buckets: int = 16) -> DataFrame:
-    return df.withColumn("bucket", bucket_expr(key, n_buckets))
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem of `path`, the JVM Path class) — the file
+    operations here work on any scheme, not just file://."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    return Path(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), Path
+
+
+def _visible(status) -> bool:
+    """Spark reads no file or dir named `_…` or `.…` (_SUCCESS,
+    _temporary, .crc checksums)."""
+    return not status.getPath().getName().startswith(("_", "."))
+
+
+def _buckets(fs, Path, data_dir: str) -> dict:
+    """{bucket: [FileStatus of its data files]} under `data_dir`, {} if
+    the dir does not exist yet."""
+    if not fs.exists(Path(data_dir)):
+        return {}
+    return {
+        int(d.getPath().getName().split("=", 1)[1]):
+            [f for f in fs.listStatus(d.getPath()) if f.isFile() and _visible(f)]
+        for d in fs.listStatus(Path(data_dir))
+        if d.getPath().getName().startswith("bucket=")
+    }
+
+
+def _restore(fs, Path, live: str, parked: str) -> None:
+    """Move the copy a cut-short _swap parked back to `live` (beside a
+    live copy it is stale: the install completed). The rename is checked:
+    rename returns False instead of raising, and the caller's sweep after
+    a silent failure would delete the only copy."""
+    if fs.exists(Path(live)) or not fs.exists(Path(parked)):
+        return
+    if not fs.rename(Path(parked), Path(live)):
+        raise RuntimeError(f"failed to restore the copy parked at {parked} to {live}")
+
+
+def _swap(fs, Path, live: str, new: str, parked: str) -> None:
+    """Replace dir `live` with dir `new` via `parked`. Both renames are
+    checked; a failed install restores the old copy before raising. A
+    crash between them leaves the only copy at `parked`, so writers
+    _restore before their next rewrite."""
+    if not fs.rename(Path(live), Path(parked)):
+        raise RuntimeError(f"swap: failed to park {live}; it is untouched")
+    if not fs.rename(Path(new), Path(live)):
+        _restore(fs, Path, live, parked)
+        raise RuntimeError(f"swap: failed to install {new} at {live}")
+    fs.delete(Path(parked), True)
 
 
 def clean_uncommitted(spark: SparkSession, data_dir: str, done: set[int]) -> list[int]:
@@ -67,26 +126,15 @@ def clean_uncommitted(spark: SparkSession, data_dir: str, done: set[int]) -> lis
     write those rows a second time (duplicate-rows window). Iceberg
     analog: rolling back to the last committed snapshot / orphan-file
     cleanup; on the parquet emulation it's an explicit directory drop
-    via the Hadoop FileSystem API (works on any scheme, not just
-    file://)."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    path = jvm.org.apache.hadoop.fs.Path(data_dir)
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    removed = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if name.startswith("bucket="):
-            b = int(name.split("=", 1)[1])
-            if b not in done:
-                fs.delete(st.getPath(), True)
-                removed.append(b)
-    return sorted(removed)
+    via the Hadoop FileSystem API."""
+    fs, Path = _fs(spark, data_dir)
+    removed = sorted(set(_buckets(fs, Path, data_dir)) - set(done))
+    for b in removed:
+        fs.delete(Path(f"{data_dir}/bucket={b}"), True)
+    return removed
 
 
-def _read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
+def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Read the commit log, or None ONLY when it genuinely does not
     exist (first run). A transient read failure must RAISE, never pass
     for "no lineage": committed_buckets()=∅ would send
@@ -99,14 +147,11 @@ def _read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
     before the commit_seq column existed are rejected loudly (their
     null commit_seq rows would be silently dropped by every as_of
     filter)."""
-    fs, jvm = _fs(spark, lineage_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    read_dir = lineage_dir
-    if not fs.exists(Path(lineage_dir)):
-        parked = lineage_dir.rstrip("/").rsplit("/", 1)[0] + "/.lineage_old"
-        if not fs.exists(Path(parked)):
-            return None  # first run
-        read_dir = parked
+    fs, Path = _fs(spark, out_dir)
+    read_dir = next((d for d in (f"{out_dir}/lineage", f"{out_dir}/.lineage_old")
+                     if fs.exists(Path(d))), None)
+    if read_dir is None:
+        return None  # first run
     df = spark.read.parquet(read_dir)  # any failure here propagates
     if "commit_seq" not in df.columns:
         raise ValueError(
@@ -116,11 +161,11 @@ def _read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
     return df
 
 
-def committed_buckets(spark: SparkSession, lineage_dir: str,
+def committed_buckets(spark: SparkSession, out_dir: str,
                       as_of: int | None = None) -> set[int]:
     """Buckets with a lineage row; `as_of` restricts to snapshots with
     commit_seq <= as_of (time travel over the commit log)."""
-    df = _read_lineage(spark, lineage_dir)
+    df = _read_lineage(spark, out_dir)
     if df is None:  # first run: no lineage yet
         return set()
     if as_of is not None:
@@ -128,9 +173,9 @@ def committed_buckets(spark: SparkSession, lineage_dir: str,
     return {r.bucket for r in df.select("bucket").collect()}
 
 
-def _commit_state(spark: SparkSession, lineage_dir: str) -> tuple[set[int], int]:
+def _commit_state(spark: SparkSession, out_dir: str) -> tuple[set[int], int]:
     """(committed buckets, next commit_seq) from one read of the log."""
-    df = _read_lineage(spark, lineage_dir)
+    df = _read_lineage(spark, out_dir)
     if df is None:
         return set(), 1
     row = df.agg(F.collect_set("bucket").alias("b"), F.max("commit_seq").alias("m")).collect()[0]
@@ -139,7 +184,7 @@ def _commit_state(spark: SparkSession, lineage_dir: str) -> tuple[set[int], int]
 
 def _lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """The commit log of `out_dir` for readers (a parked log included)."""
-    df = _read_lineage(spark, f"{out_dir}/lineage")
+    df = _read_lineage(spark, out_dir)
     if df is None:
         raise FileNotFoundError(f"no lineage log under {out_dir}")
     return df
@@ -151,11 +196,8 @@ def _unpark(spark: SparkSession, out_dir: str) -> None:
     bucket): appending beside it would start a second log holding only
     the new rows, and the next run would take every earlier bucket for
     uncommitted."""
-    fs, jvm = _fs(spark, out_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    primary, parked = Path(f"{out_dir}/lineage"), Path(f"{out_dir}/.lineage_old")
-    if not fs.exists(primary) and fs.exists(parked) and not fs.rename(parked, primary):
-        raise RuntimeError(f"lineage: failed to restore the log parked at {parked}")
+    fs, Path = _fs(spark, out_dir)
+    _restore(fs, Path, f"{out_dir}/lineage", f"{out_dir}/.lineage_old")
 
 
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -172,8 +214,7 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def _swap_lineage(spark: SparkSession, out_dir: str, new_rows: DataFrame) -> None:
-    """Atomically replace the lineage dir (write tmp → park old → swap,
-    both renames checked — same discipline as compact_buckets).
+    """Atomically replace the lineage dir (write tmp, then _swap).
 
     Concurrency: mutating ops (rollback/expire/compact) assume a SINGLE
     writer per table, like Iceberg without a catalog lock. The window
@@ -184,24 +225,12 @@ def _swap_lineage(spark: SparkSession, out_dir: str, new_rows: DataFrame) -> Non
     data buckets (ADVICE r4), and for the next writer after a crash in
     that window: it moves the parked log back first (_unpark). Two
     concurrent WRITERS remain out of scope — run them serially."""
-    lineage_dir = f"{out_dir}/lineage"
-    tmp = f"{out_dir}/.lineage_tmp"
-    old = f"{out_dir}/.lineage_old"
+    tmp, parked = f"{out_dir}/.lineage_tmp", f"{out_dir}/.lineage_old"
     _unpark(spark, out_dir)
-    fs, jvm = _fs(spark, out_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    for leftover in (tmp, old):
-        if fs.exists(Path(leftover)):
-            fs.delete(Path(leftover), True)
+    fs, Path = _fs(spark, out_dir)
+    fs.delete(Path(parked), True)  # stale after _unpark; the overwrite clears tmp
     new_rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if not fs.rename(Path(lineage_dir), Path(old)):
-        raise RuntimeError("lineage swap: failed to park current lineage")
-    if not fs.rename(Path(tmp), Path(lineage_dir)):
-        restored = fs.rename(Path(old), Path(lineage_dir))
-        raise RuntimeError(
-            "lineage swap: failed to install new lineage (old "
-            f"{'restored' if restored else 'parked at ' + old})")
-    fs.delete(Path(old), True)
+    _swap(fs, Path, f"{out_dir}/lineage", tmp, parked)
 
 
 def rollback_to_snapshot(spark: SparkSession, out_dir: str,
@@ -252,24 +281,18 @@ def run_with_lineage(
     spark: SparkSession,
     result: DataFrame,
     out_dir: str,
-    key: str = "url",
     n_buckets: int = 16,
     max_buckets_this_run: int | None = None,
     run_id: str = "run",
 ) -> list[int]:
     """Write `result` bucket-partitioned with lineage; returns the list
     of buckets committed by THIS run. `max_buckets_this_run` simulates
-    a mid-job crash for the restart test (commit only a prefix).
-
-    Checksum = bit_xor(xxhash64(url, extracted_text)) per bucket —
-    order-independent, parallelism-independent.
+    a mid-job crash for the restart test (commit only a prefix). A
+    bucket's lineage row is its _bucket_fold over the committed data.
     """
     data_dir = f"{out_dir}/data"
-    lineage_dir = f"{out_dir}/lineage"
-    bucketed = with_bucket(result, key=key, n_buckets=n_buckets)
-
     _unpark(spark, out_dir)
-    done, commit_seq = _commit_state(spark, lineage_dir)
+    done, commit_seq = _commit_state(spark, out_dir)
     # a crash between a bucket's data commit (below) and its lineage
     # append leaves orphan data — drop it before re-appending
     clean_uncommitted(spark, data_dir, done)
@@ -280,17 +303,11 @@ def run_with_lineage(
         return []
 
     t0 = time.time()
-    subset = bucketed.filter(F.col("bucket").isin([int(b) for b in todo]))
-    subset.write.partitionBy("bucket").mode("append").parquet(data_dir)
-
+    in_todo = F.col("bucket").isin(todo)
+    (with_bucket(result, n_buckets).filter(in_todo)
+     .write.partitionBy("bucket").mode("append").parquet(data_dir))
     stats = (
-        spark.read.parquet(data_dir)
-        .filter(F.col("bucket").isin([int(b) for b in todo]))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.bit_xor(F.xxhash64(F.col(key), F.col("extracted_text"))).alias("checksum"),
-        )
+        _bucket_fold(spark.read.parquet(data_dir).filter(in_todo))
         .withColumn("wall_clock_s", F.lit(round(time.time() - t0, 3)))
         .withColumn("run_id", F.lit(run_id))
         .withColumn("commit_seq", F.lit(commit_seq))
@@ -300,21 +317,17 @@ def run_with_lineage(
     # redoes (idempotent: same deterministic rows, rewrite-in-place
     # semantics on Iceberg; on the parquet emulation the restart test
     # asserts the no-crash and crash+restart outputs are identical)
-    stats.write.mode("append").parquet(lineage_dir)
-    return [int(b) for b in todo]
+    stats.write.mode("append").parquet(f"{out_dir}/lineage")
+    return todo
 
 
-def verify_lineage(spark: SparkSession, out_dir: str, key: str = "url") -> DataFrame:
+def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """Recompute per-bucket checksums from the data and join against the
     lineage claims — the restart driver's integrity check."""
-    data = spark.read.parquet(f"{out_dir}/data")
-    lineage = _lineage(spark, out_dir)
-    actual = data.groupBy("bucket").agg(
-        F.count("*").alias("actual_rows"),
-        F.bit_xor(F.xxhash64(F.col(key), F.col("extracted_text"))).alias("actual_checksum"),
-    )
+    actual = _bucket_fold(spark.read.parquet(f"{out_dir}/data")).toDF(
+        "bucket", "actual_rows", "actual_checksum")
     return (
-        lineage.join(actual, "bucket", "full_outer")
+        _lineage(spark, out_dir).join(actual, "bucket", "full_outer")
         .select(
             "bucket",
             "n_rows",
@@ -327,16 +340,9 @@ def verify_lineage(spark: SparkSession, out_dir: str, key: str = "url") -> DataF
     )
 
 
-def _fs(spark: SparkSession, path_str: str):
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    return path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jvm
-
-
 def compact_buckets(
     spark: SparkSession,
     out_dir: str,
-    key: str = "url",
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict[int, tuple[int, int]]:
     """Small-file compaction for the bucket-parquet sink — the Iceberg
@@ -351,7 +357,7 @@ def compact_buckets(
     hash-distributed into exactly that many partitions per bucket via
     repartition on (bucket, slice) where slice = portable key-hash mod
     the bucket's target count — then swapped in per bucket with an
-    atomic directory rename (local/HDFS; on Iceberg this is the
+    atomic directory rename (_swap; local/HDFS; on Iceberg this is the
     snapshot commit and readers never see a half-compacted bucket).
     Data is NEVER changed — only file layout — so every lineage row
     (n_rows, checksum) stays valid; callers re-verify with
@@ -361,102 +367,43 @@ def compact_buckets(
 
     Returns {bucket: (n_files_before, n_files_after)}.
     """
-    import math
-
     data_dir = f"{out_dir}/data"
     tmp_dir = f"{out_dir}/.compact_tmp"
-    fs, jvm = _fs(spark, data_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
+    fs, Path = _fs(spark, out_dir)
     if fs.exists(Path(tmp_dir)):
-        # leftovers of a crashed compaction. A crash between the two
-        # swap renames below leaves a bucket's ONLY copy parked at
-        # .old-bucket=B — restore it before sweeping, or the sweep
-        # would destroy committed data.
+        # leftovers of a crashed compaction. A crash inside a bucket's
+        # _swap leaves its ONLY copy parked at .old-bucket=B — restore
+        # it before sweeping, or the sweep would destroy committed data.
         for st in fs.listStatus(Path(tmp_dir)):
             name = st.getPath().getName()
             if name.startswith(".old-bucket="):
-                b = name.split("=", 1)[1]
-                dest = Path(f"{data_dir}/bucket={b}")
-                if not fs.exists(dest):
-                    fs.rename(st.getPath(), dest)
+                _restore(fs, Path, f"{data_dir}/{name[len('.old-'):]}", f"{tmp_dir}/{name}")
         fs.delete(Path(tmp_dir), True)
-    if not fs.exists(Path(data_dir)):
-        return {}
 
-    # survey current layout: per-bucket file count + bytes
-    sizes: dict[int, tuple[int, int]] = {}
-    for st in fs.listStatus(Path(data_dir)):
-        name = st.getPath().getName()
-        if not name.startswith("bucket="):
-            continue
-        b = int(name.split("=", 1)[1])
-        n_files, n_bytes = 0, 0
-        for f in fs.listStatus(st.getPath()):
-            if f.getPath().getName().startswith(("part-", "part=")) or \
-               f.getPath().getName().endswith(".parquet"):
-                n_files += 1
-                n_bytes += f.getLen()
-        sizes[b] = (n_files, n_bytes)
-
+    files = _buckets(fs, Path, data_dir)
     targets = {
-        b: max(1, math.ceil(n_bytes / target_file_bytes))
-        for b, (n_files, n_bytes) in sizes.items()
+        b: max(1, math.ceil(sum(f.getLen() for f in fl) / target_file_bytes))
+        for b, fl in files.items()
     }
-    todo = [b for b in sorted(targets) if sizes[b][0] > targets[b]]
+    todo = [b for b in sorted(targets) if len(files[b]) > targets[b]]
     if not todo:
-        return {b: (n, n) for b, (n, _) in sizes.items()}
+        return {b: (len(f), len(f)) for b, f in files.items()}
 
     # one job: read only the buckets being rewritten, slice each into
     # its target file count, write the compacted tree under tmp
-    df = (
-        spark.read.parquet(data_dir)
-        .filter(F.col("bucket").isin([int(b) for b in todo]))
-    )
-    slice_map = F.create_map(
-        *[x for b in todo for x in (F.lit(b), F.lit(targets[b]))])
-    sliced = df.withColumn(
-        "_slice",
-        F.pmod(F.xxhash64(F.col(key)), slice_map[F.col("bucket")]),
-    )
-    n_parts = max(sum(targets[b] for b in todo), 1)
-    (
-        sliced.repartition(n_parts, "bucket", "_slice")
-        .drop("_slice")
-        .write.partitionBy("bucket").mode("overwrite").parquet(tmp_dir)
-    )
+    slices = F.create_map(*[x for b in todo for x in (F.lit(b), F.lit(targets[b]))])
+    (spark.read.parquet(data_dir).filter(F.col("bucket").isin(todo))
+     .repartition(sum(targets[b] for b in todo), F.col("bucket"),
+                  F.pmod(F.xxhash64("url"), slices[F.col("bucket")]))
+     .write.partitionBy("bucket").mode("overwrite").parquet(tmp_dir))
 
-    # per-bucket atomic swap: old dir out, compacted dir in.
-    # FileSystem.rename returns False instead of raising (e.g. a
-    # concurrent append re-created data/bucket=B between the two
-    # renames); an unchecked failure here followed by the tmp-dir
-    # sweep below would delete .old-bucket=B — the only remaining
-    # copy of committed data. Check both returns and restore the
-    # parked copy before raising.
+    # per-bucket atomic swap: old dir parked under tmp, compacted dir
+    # in; a failed swap raises before the sweep below can reach a
+    # parked copy
     for b in todo:
-        old = Path(f"{data_dir}/bucket={b}")
-        new = Path(f"{tmp_dir}/bucket={b}")
-        trash = Path(f"{tmp_dir}/.old-bucket={b}")
-        if not fs.rename(old, trash):
-            raise RuntimeError(
-                f"compact_buckets: failed to park bucket={b}; "
-                "committed data untouched, aborting before sweep")
-        if not fs.rename(new, old):
-            restored = fs.rename(trash, old)
-            raise RuntimeError(
-                f"compact_buckets: failed to swap in compacted bucket={b} "
-                f"(parked copy {'restored' if restored else 'STILL AT ' + str(trash)}); "
-                "aborting before sweep")
+        _swap(fs, Path, f"{data_dir}/bucket={b}", f"{tmp_dir}/bucket={b}",
+              f"{tmp_dir}/.old-bucket={b}")
     fs.delete(Path(tmp_dir), True)
 
-    result = {}
-    for b, (n_before, _) in sizes.items():
-        if b in todo:
-            n_after = sum(
-                1 for f in fs.listStatus(Path(f"{data_dir}/bucket={b}"))
-                if f.getPath().getName().endswith(".parquet")
-                or f.getPath().getName().startswith("part-")
-            )
-            result[b] = (n_before, n_after)
-        else:
-            result[b] = (n_before, n_before)
-    return result
+    after = _buckets(fs, Path, data_dir)
+    return {b: (len(f), len(after[b])) for b, f in files.items()}

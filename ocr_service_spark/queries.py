@@ -26,6 +26,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocr_service_spark.functions.textstats import token_hash
 from ocr_service_spark.operators.dedup import dedup_latest
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -864,7 +865,7 @@ def simhash(spark, sf_dir):
     multiplicity), one conditional ±1 sum per bit, reassemble the
     fingerprint. Single shuffle on doc_id with 32 map-side-combinable
     sums — the standard near-dup fingerprint at corpus scale."""
-    from ocr_service_spark.functions.textstats import token_hash, tokens
+    from ocr_service_spark.functions.textstats import tokens
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
@@ -966,20 +967,33 @@ def _lsh_bucket_sql(v: str) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
-def _lsh_oracle() -> str:
-    return f"""
-    WITH b AS (SELECT vec_id, embedding, {_lsh_bucket_sql('embedding')} AS bucket FROM embeddings),
-    q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM b WHERE vec_id < 20),
-    s AS (
+def _top_k(scored: str, k: int, cols: str = "query_id, neighbor_id, cos_sim, rnk") -> str:
+    """The ANN oracles' ranking: each query's k best rows of CTE
+    `scored` by cos_sim, neighbor_id breaking ties."""
+    return f"""SELECT {cols} FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM {scored}
+    ) WHERE rnk <= {k}"""
+
+
+def _lsh_ctes(n_queries: int) -> str:
+    """CTEs b, qb, lsh_s: every LSH bucket-mate of each query scored
+    by cosine (DuckDB twin of similarity.lsh_topk's candidates)."""
+    return f"""b AS (
+      SELECT vec_id, embedding, {_lsh_bucket_sql('embedding')} AS bucket
+      FROM embeddings
+    ), qb AS (
+      SELECT vec_id AS query_id, embedding AS qv, bucket FROM b
+      WHERE vec_id < {n_queries}
+    ), lsh_s AS (
       SELECT q.query_id, e.vec_id AS neighbor_id,
              {_COS_SQL.format(a="q.qv", b="e.embedding")} AS cos_sim
-      FROM b e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.query_id
-    )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM s
-    ) WHERE rnk <= 3
-    """
+      FROM b e JOIN qb q ON e.bucket = q.bucket AND e.vec_id <> q.query_id
+    )"""
+
+
+def _lsh_oracle() -> str:
+    return f"WITH {_lsh_ctes(20)}\n{_top_k('lsh_s', 3)}"
 
 
 ORACLE_SQL["embedding_lsh_ann"] = _lsh_oracle()
@@ -1082,7 +1096,7 @@ def lineage_restart(spark, sf_dir):
                      max_buckets_this_run=3, run_id="r1")  # "crash"
     # crash INSIDE the commit window: one more bucket's data lands but
     # its lineage append never happens
-    orphan = sorted(set(range(8)) - committed_buckets(spark, f"{out}/lineage"))[0]
+    orphan = sorted(set(range(8)) - committed_buckets(spark, out))[0]
     (with_bucket(result, n_buckets=8)
      .filter(F.col("bucket") == orphan)
      .write.partitionBy("bucket").mode("append").parquet(f"{out}/data"))
@@ -1147,7 +1161,7 @@ def lineage_timetravel(spark, sf_dir):
                      max_buckets_this_run=4, run_id="r1")  # snapshot 1
     run_with_lineage(spark, result, out, n_buckets=8, run_id="r2")  # snapshot 2
     # time-travel view: buckets of snapshot 1, counted from the data
-    asof1 = sorted(committed_buckets(spark, f"{out}/lineage", as_of=1))
+    asof1 = sorted(committed_buckets(spark, out, as_of=1))
     dropped = set(rollback_to_snapshot(spark, out, 1))
     run_with_lineage(spark, result, out, n_buckets=8, run_id="r3")  # replay
     expire_snapshots(spark, out, older_than_seq=2)
@@ -1551,14 +1565,12 @@ def train_split(spark, sf_dir):
     cluster sizes — never rand()/sample(), which both break restart
     idempotency and can't be oracle-checked. Pure map, no shuffle;
     the hash is the portable 60-bit md5 prefix used across the repo
-    (lineage.bucket_expr twin)."""
+    (textstats.token_hash, as lineage.bucket_expr)."""
     from ocr_service_spark.functions.textstats import tokens
 
     docs = _t(spark, sf_dir, "documents")
     bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("split:"),
-                                          F.col("doc_id").cast("string"))),
-                           1, 15), 16, 10).cast("bigint"),
+        token_hash(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
         F.lit(100))
     rate = F.when(F.col("lang") == "en", F.lit(50)).otherwise(F.lit(100))
     return docs.select(
@@ -1646,115 +1658,17 @@ def warc_extract(spark, sf_dir):
     )
 
 
-def _ivf_oracle(n_clusters: int = 8, n_probe: int = 2, k: int = 3,
-                n_queries: int = 20) -> str:
-    """DuckDB twin of operators/similarity.ivf_topk: same seeds, same
-    single Lloyd pass (DECIMAL-summed, 6-dp-rounded centroid means),
-    same rounded-cosine rankings with cid/neighbor tiebreaks."""
+def _ivf_ctes(n_clusters: int, n_probe: int, n_queries: int) -> str:
+    """CTEs seeds … ivf_s: DuckDB twin of operators/similarity.ivf_topk's
+    candidates — same seeds, same single Lloyd pass (DECIMAL-summed,
+    6-dp-rounded centroid means), same rounded-cosine probe rankings
+    with cid tiebreaks; ivf_s scores every vector in each query's
+    probed lists."""
     cos_es = _COS_SQL.format(a="e.embedding", b="s.sv")
     cos_ec = _COS_SQL.format(a="e.embedding", b="c.centroid")
     cos_qc = _COS_SQL.format(a="q.embedding", b="c.centroid")
     cos_qv = _COS_SQL.format(a="p.qv", b="i.embedding")
-    return f"""
-    WITH seeds AS (
-      SELECT vec_id AS cid, embedding AS sv FROM embeddings
-      ORDER BY vec_id LIMIT {n_clusters}
-    ), a0 AS (
-      SELECT e.vec_id, e.embedding, s.cid, {cos_es} AS cs
-      FROM embeddings e CROSS JOIN seeds s
-    ), assign1 AS MATERIALIZED (
-      SELECT vec_id, embedding, cid FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-        FROM a0) WHERE rn = 1
-    ), cent AS (
-      SELECT cid, list(m ORDER BY pos) AS centroid FROM (
-        SELECT a.cid, t.i AS pos,
-               ROUND(CAST(SUM(CAST(a.embedding[t.i] AS DECIMAL(18,9))) AS DOUBLE)
-                     / COUNT(*), 6) AS m
-        FROM assign1 a, range(1, 65) t(i)
-        GROUP BY a.cid, t.i) GROUP BY cid
-    ), inv AS (
-      SELECT vec_id, embedding, cid FROM (
-        SELECT e.vec_id, e.embedding, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY {cos_ec} DESC, c.cid) AS rn
-        FROM embeddings e CROSS JOIN cent c) WHERE rn = 1
-    ), probes AS (
-      SELECT query_id, qv, cid FROM (
-        SELECT q.vec_id AS query_id, q.embedding AS qv, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                   ORDER BY {cos_qc} DESC, c.cid) AS rn
-        FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < {n_queries}
-      ) WHERE rn <= {n_probe}
-    ), scored AS (
-      SELECT p.query_id, i.vec_id AS neighbor_id, {cos_qv} AS cos_sim
-      FROM inv i JOIN probes p ON i.cid = p.cid AND i.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM scored
-    ) WHERE rnk <= {k}
-    """
-
-
-@query("embedding_ivf_ann", oracle=None)
-def embedding_ivf_ann(spark, sf_dir):
-    """IVF-ANN (training-data tier, the brief's 'IVF or LSH-bucketed
-    variant as the scale path'): deterministic coarse quantizer (lowest
-    -id seeds + one DECIMAL-exact Lloyd pass), inverted lists keyed by
-    centroid, nprobe=2 probing, exact rounded-cosine ranking inside the
-    probed lists. Complements embedding_lsh_ann: IVF adapts to the
-    data's cluster structure where fixed hyperplanes can't. The oracle
-    replays the identical quantizer training in SQL — every centroid
-    component matches bit-for-bit thanks to decimal-summed means."""
-    from ocr_service_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, emb.filter(F.col("vec_id") < 20),
-                    k=3, n_clusters=8, n_probe=2)
-
-
-ORACLE_SQL["embedding_ivf_ann"] = _ivf_oracle()
-
-
-def _ann_recall_oracle(k: int = 3, n_queries: int = 20,
-                       n_clusters: int = 8, n_probe: int = 2) -> str:
-    """DuckDB twin of embedding_ann_recall: exact top-k (the truth
-    set), the LSH and IVF candidate rankings — each identical to its
-    own gated oracle — and per-method recall@k over the same query
-    set."""
-    cos_qe = _COS_SQL.format(a="q.qv", b="e.embedding")
-    cos_es = _COS_SQL.format(a="e.embedding", b="s.sv")
-    cos_ec = _COS_SQL.format(a="e.embedding", b="c.centroid")
-    cos_qc = _COS_SQL.format(a="q.embedding", b="c.centroid")
-    cos_qv = _COS_SQL.format(a="p.qv", b="i.embedding")
-    return f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-      WHERE vec_id < {n_queries}
-    ), ex_s AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id, {cos_qe} AS cos_sim
-      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id
-    ), exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                  ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM ex_s
-      ) WHERE rnk <= {k}
-    ), b AS (
-      SELECT vec_id, embedding, {_lsh_bucket_sql('embedding')} AS bucket
-      FROM embeddings
-    ), qb AS (
-      SELECT vec_id AS query_id, embedding AS qv, bucket FROM b
-      WHERE vec_id < {n_queries}
-    ), lsh_s AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id, {cos_qe} AS cos_sim
-      FROM b e JOIN qb q ON e.bucket = q.bucket AND e.vec_id <> q.query_id
-    ), lsh AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                  ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM lsh_s
-      ) WHERE rnk <= {k}
-    ), seeds AS (
+    return f"""seeds AS (
       SELECT vec_id AS cid, embedding AS sv FROM embeddings
       ORDER BY vec_id LIMIT {n_clusters}
     ), a0 AS (
@@ -1787,12 +1701,52 @@ def _ann_recall_oracle(k: int = 3, n_queries: int = 20,
     ), ivf_s AS (
       SELECT p.query_id, i.vec_id AS neighbor_id, {cos_qv} AS cos_sim
       FROM inv i JOIN probes p ON i.cid = p.cid AND i.vec_id <> p.query_id
-    ), ivf AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                  ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM ivf_s
-      ) WHERE rnk <= {k}
-    )
+    )"""
+
+
+def _ivf_oracle(n_clusters: int = 8, n_probe: int = 2, k: int = 3,
+                n_queries: int = 20) -> str:
+    return f"WITH {_ivf_ctes(n_clusters, n_probe, n_queries)}\n{_top_k('ivf_s', k)}"
+
+
+@query("embedding_ivf_ann", oracle=None)
+def embedding_ivf_ann(spark, sf_dir):
+    """IVF-ANN (training-data tier, the brief's 'IVF or LSH-bucketed
+    variant as the scale path'): deterministic coarse quantizer (lowest
+    -id seeds + one DECIMAL-exact Lloyd pass), inverted lists keyed by
+    centroid, nprobe=2 probing, exact rounded-cosine ranking inside the
+    probed lists. Complements embedding_lsh_ann: IVF adapts to the
+    data's cluster structure where fixed hyperplanes can't. The oracle
+    replays the identical quantizer training in SQL — every centroid
+    component matches bit-for-bit thanks to decimal-summed means."""
+    from ocr_service_spark.operators.similarity import ivf_topk
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return ivf_topk(emb, emb.filter(F.col("vec_id") < 20),
+                    k=3, n_clusters=8, n_probe=2)
+
+
+ORACLE_SQL["embedding_ivf_ann"] = _ivf_oracle()
+
+
+def _ann_recall_oracle(k: int = 3, n_queries: int = 20,
+                       n_clusters: int = 8, n_probe: int = 2) -> str:
+    """DuckDB twin of embedding_ann_recall: exact top-k (the truth
+    set), the LSH and IVF candidate rankings — built from the same CTEs
+    as their own gated oracles — and per-method recall@k over the same
+    query set."""
+    pairs = "query_id, neighbor_id"
+    return f"""
+    WITH q AS (
+      SELECT vec_id AS query_id, embedding AS qv FROM embeddings
+      WHERE vec_id < {n_queries}
+    ), ex_s AS (
+      SELECT q.query_id, e.vec_id AS neighbor_id,
+             {_COS_SQL.format(a="q.qv", b="e.embedding")} AS cos_sim
+      FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id
+    ), exact AS ({_top_k('ex_s', k, pairs)}
+    ), {_lsh_ctes(n_queries)}, lsh AS ({_top_k('lsh_s', k, pairs)}
+    ), {_ivf_ctes(n_clusters, n_probe, n_queries)}, ivf AS ({_top_k('ivf_s', k, pairs)})
     SELECT 'lsh' AS method,
            CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
            COUNT(*) AS n_exact,
@@ -2386,9 +2340,7 @@ def corpus_build(spark, sf_dir):
             / n_words.cast("double"), 4)
     ).otherwise(F.lit(0.0))
     bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("split:"),
-                                          F.col("doc_id").cast("string"))),
-                           1, 15), 16, 10).cast("bigint"),
+        token_hash(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
         F.lit(100))
     rate = F.when(F.col("lang") == "en", F.lit(50)).otherwise(F.lit(100))
     return (
@@ -2869,9 +2821,7 @@ def sequence_pack(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     shard = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("shard:"),
-                                          F.col("doc_id").cast("string"))),
-                           1, 15), 16, 10).cast("bigint"),
+        token_hash(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))),
         F.lit(8))
     d = docs.select(
         "doc_id", shard.alias("shard"),
@@ -2941,9 +2891,7 @@ def source_mix(spark, sf_dir):
     dim = (wts.crossJoin(F.broadcast(totals))
            .select("source", "src_tokens", "w", "total_tokens", "sum_w"))
     bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("mix:"),
-                                          F.col("doc_id").cast("string"))),
-                           1, 15), 16, 10).cast("bigint"),
+        token_hash(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))),
         F.lit(1_000_000))
     DEC = "decimal(38,0)"
     keep = (
@@ -3049,9 +2997,8 @@ _LK_DST_SQL = (
 def _lk_dst(j: int):
     """Spark twin of _LK_DST_SQL: portable md5 bucket -> dst host id."""
     return F.pmod(
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
-                           F.lit(f":{j}"))), 1, 15), 16, 10).cast("bigint"),
+        token_hash(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
+                            F.lit(f":{j}"))),
         F.lit(97))
 
 
@@ -3207,10 +3154,8 @@ def host_pagerank(spark, sf_dir):
     dj = d.select(
         "doc_id", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j"))
     dst = F.pmod(
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
-                           F.lit(":"), F.col("j").cast("string"))),
-            1, 15), 16, 10).cast("bigint"),
+        token_hash(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
+                            F.lit(":"), F.col("j").cast("string"))),
         F.lit(97))
     e = dj.select((F.col("doc_id") % 97).alias("src"),
                   dst.alias("dst")).distinct()
@@ -3317,10 +3262,8 @@ def incremental_pagerank(spark, sf_dir):
     dj = d.select(
         "doc_id", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j"))
     dst = F.pmod(
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
-                           F.lit(":"), F.col("j").cast("string"))),
-            1, 15), 16, 10).cast("bigint"),
+        token_hash(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
+                            F.lit(":"), F.col("j").cast("string"))),
         F.lit(97))
     edges = dj.select("doc_id", (F.col("doc_id") % 97).alias("src"),
                       dst.alias("dst"))

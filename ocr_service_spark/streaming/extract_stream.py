@@ -9,9 +9,12 @@ sources and sinks:
     read_document_stream(dir) → extract/correct/validate → sink
 
 Late/duplicate crawls are handled with watermark + dropDuplicates on
-url (streaming twin of the batch max-of-struct dedup — state-store backed,
-keyed by url, expired by the watermark), matching north-rule dedup
-semantics for the continuous case.
+url (state-store backed, keyed by url, expired by the watermark). Unlike
+the batch max-of-struct dedup (`dedup_latest`), which keeps each url's
+LATEST warc_ts, it keeps the FIRST-ARRIVING crawl of a url (within one
+micro-batch, whichever duplicate reaches the state store first): a
+later micro-batch's newer crawl of an already-seen url is dropped until
+the watermark expires that url's state.
 """
 
 from __future__ import annotations
@@ -40,8 +43,9 @@ def read_document_stream(spark: SparkSession, in_dir: str,
 
 
 def streaming_extract(docs: DataFrame, dedup_watermark: str = "1 hour") -> DataFrame:
-    """Stream-side extraction: watermarked per-url dedup, then the same
-    fused Arrow extraction + correction UDF as the batch pipeline."""
+    """Stream-side extraction: watermarked per-url dedup (first-arriving
+    crawl wins, see module docstring), then the same fused Arrow
+    extraction + correction UDF as the batch pipeline."""
     deduped = docs.withWatermark("warc_ts", dedup_watermark).dropDuplicates(["url"])
     x = deduped.withColumn("x", make_extract_correct_udf()(F.col("html")))
     return flatten_extraction(x.filter(F.col("x.error").isNull())).select(

@@ -58,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ocr_service_spark.lineage import _fs, _visible
+
 __all__ = [
     "FEEDBACK_SCHEMA",
     "read_feedback_stream",
@@ -149,17 +151,24 @@ def mine_from_stats(
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """The table at `path`, or None before its first write. The
-    existence check comes first: a parquet read of a missing path logs
-    a FileNotFoundException stack trace on every first micro-batch."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    if not hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(hpath):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+    """The table at `path`, or None before its first commit: the path is
+    absent or holds no data file (a crash before that commit, or only
+    empty deltas so far). Listing first also spares every first
+    micro-batch the FileNotFoundException stack trace a parquet read of
+    a missing path logs. Any failure to read a table that has data
+    raises: taking a transiently unreadable `corrections` for "none
+    yet" would drop the known-pair pre-flip and the mining anti-join,
+    and re-append every learned pair (as lineage._read_lineage)."""
+    fs, Path = _fs(spark, path)
+    return spark.read.parquet(path) if _has_data(fs, Path(path)) else None
+
+
+def _has_data(fs, path) -> bool:
+    """Whether the tree at Hadoop Path `path` holds a file Spark reads
+    (not under a hidden dir such as an unfinished write's _temporary)."""
+    return fs.exists(path) and any(
+        _visible(st) and (st.isFile() or _has_data(fs, st.getPath()))
+        for st in fs.listStatus(path))
 
 
 def _stats_delta(batch: DataFrame, known: DataFrame | None) -> DataFrame:

@@ -5,6 +5,9 @@ statement builder ready to run unchanged once the jar ships, and
 
 import re
 
+from pyspark.sql import types as T
+
+from ocr_service_spark.corpus import corpus_df
 from ocr_service_spark.iceberg import (
     ICEBERG_RUNTIME_ARTIFACT,
     catalog_conf,
@@ -14,6 +17,7 @@ from ocr_service_spark.iceberg import (
     merge_corrections_sql,
     upsert_feedback_sql,
 )
+from ocr_service_spark.pipeline import process_documents
 
 
 def test_probe_reports_absent_in_sandbox(spark):
@@ -36,6 +40,17 @@ def test_ddl_has_bucket_partition_and_sort_order():
     assert re.search(r"PARTITIONED BY \(bucket\(512, url\)\)", stmts[0])
     assert "WRITE ORDERED BY warc_ts" in stmts[1]
     assert "USING iceberg" in stmts[0]
+
+
+def test_ddl_columns_hold_the_pipeline_output(spark):
+    # the flip-on table must take process_documents' rows as they are:
+    # every output column, in order, with its type (nullability is
+    # Spark's inference, not part of the table contract)
+    cols = re.search(r"CREATE TABLE IF NOT EXISTS \S+ \((.*)\)\s*USING iceberg",
+                     create_extracted_table_ddl()[0], re.S).group(1)
+    declared = T.StructType.fromDDL(" ".join(cols.split()))
+    out = process_documents(corpus_df(spark, 20)).schema
+    assert declared.simpleString() == out.simpleString()
 
 
 def test_merge_statements_cover_emulated_steps():

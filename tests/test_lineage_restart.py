@@ -44,7 +44,7 @@ def test_crash_restart_identical_to_oneshot(spark, tmp_path):
                              n_buckets=N_BUCKETS, max_buckets_this_run=3,
                              run_id="r1")
     assert len(first) == 3
-    assert committed_buckets(spark, f"{crashed}/lineage") == set(first)
+    assert committed_buckets(spark, crashed) == set(first)
 
     second = run_with_lineage(spark, _result(spark), crashed,
                               n_buckets=N_BUCKETS, run_id="r2")
@@ -72,7 +72,7 @@ def test_crash_in_commit_window_no_duplicates(spark, tmp_path):
 
     run_with_lineage(spark, result, crashed, n_buckets=N_BUCKETS,
                      max_buckets_this_run=2, run_id="r1")
-    done = committed_buckets(spark, f"{crashed}/lineage")
+    done = committed_buckets(spark, crashed)
     orphan = sorted(set(range(N_BUCKETS)) - done)[0]
     # simulate the window: data written, lineage append never happened
     (with_bucket(result, n_buckets=N_BUCKETS)
@@ -121,16 +121,16 @@ def test_snapshot_rollback_and_expiry(spark, tmp_path):
         (1, "r1", 3), (2, "r2", N_BUCKETS - 3)]
 
     # time travel: the as_of view of snapshot 1 is exactly r1's buckets
-    assert committed_buckets(spark, f"{out}/lineage", as_of=1) == \
-        committed_buckets(spark, f"{out}/lineage") - {
+    assert committed_buckets(spark, out, as_of=1) == \
+        committed_buckets(spark, out) - {
             r.bucket for r in spark.read.parquet(f"{out}/lineage")
             .filter("commit_seq = 2").select("bucket").collect()}
 
     # rollback to snapshot 1 drops r2's buckets from log AND data...
     dropped = rollback_to_snapshot(spark, out, 1)
     assert len(dropped) == N_BUCKETS - 3
-    assert committed_buckets(spark, f"{out}/lineage") == \
-        committed_buckets(spark, f"{out}/lineage", as_of=1)
+    assert committed_buckets(spark, out) == \
+        committed_buckets(spark, out, as_of=1)
     # ...and replaying from that snapshot restores a byte-identical table
     redone = run_with_lineage(spark, _result(spark), out,
                               n_buckets=N_BUCKETS, run_id="r3")
@@ -158,10 +158,10 @@ def test_committed_buckets_reads_parked_log_mid_swap(spark, tmp_path):
     done = run_with_lineage(spark, _result(spark), out,
                             n_buckets=N_BUCKETS, run_id="r1")
     os.rename(f"{out}/lineage", f"{out}/.lineage_old")
-    assert committed_buckets(spark, f"{out}/lineage") == set(done)
+    assert committed_buckets(spark, out) == set(done)
     from ocr_service_spark.lineage import _commit_state
 
-    assert _commit_state(spark, f"{out}/lineage") == (set(done), 2)
+    assert _commit_state(spark, out) == (set(done), 2)
 
 
 def test_run_after_crash_mid_swap_restores_the_parked_log(spark, tmp_path):
@@ -199,8 +199,8 @@ def test_pre_commit_seq_lineage_rejected(spark, tmp_path):
         "run_id string",
     ).write.parquet(f"{out}/lineage")
     with pytest.raises(ValueError, match="commit_seq"):
-        committed_buckets(spark, f"{out}/lineage")
+        committed_buckets(spark, out)
 
 
 def test_missing_lineage_is_first_run(spark, tmp_path):
-    assert committed_buckets(spark, str(tmp_path / "nope" / "lineage")) == set()
+    assert committed_buckets(spark, str(tmp_path / "nope")) == set()

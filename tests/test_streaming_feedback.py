@@ -224,3 +224,33 @@ def test_batch_cost_is_flat_as_history_grows(spark, tmp_path, monkeypatch):
     assert by_id["feedback_6"] is True, "known-pair rows pre-flip at ingest"
     assert by_id["feedback_1"] is False
     assert spark.read.parquet(f"{state}/corrections").count() == 1
+
+
+def test_unreadable_corrections_table_raises(spark, tmp_path):
+    # a corrections table that holds data but cannot be read must stop
+    # the loop: taking it for "no corrections yet" drops the known-pair
+    # pre-flip and the mining anti-join, re-appending learned pairs
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    in_dir = tmp_path / "drop"
+    state = tmp_path / "state"
+    (state / "corrections").mkdir(parents=True)
+    (state / "corrections" / "part-0.parquet").write_bytes(b"not parquet")
+    _drop(in_dir, [_fb(1, "teh", "the", 0.9), _fb(2, "teh", "the", 0.8)])
+    with pytest.raises(StreamingQueryException):
+        run_feedback_loop(spark, str(in_dir), str(state))
+
+
+def test_corrections_dir_without_data_file_is_first_commit(spark, tmp_path):
+    # a dir holding no data file (here only _SUCCESS and a hidden
+    # checksum) is a table before its first commit: "no table yet"
+    in_dir = tmp_path / "drop"
+    state = tmp_path / "state"
+    (state / "corrections").mkdir(parents=True)
+    (state / "corrections" / "_SUCCESS").write_bytes(b"")
+    (state / "corrections" / ".part-0.parquet.crc").write_bytes(b"x")
+    _drop(in_dir, [_fb(1, "teh", "the", 0.9), _fb(2, "teh", "the", 0.8)])
+    run_feedback_loop(spark, str(in_dir), str(state))
+    corr = spark.read.parquet(f"{state}/corrections")
+    assert {(r.original, r.corrected) for r in corr.collect()} == {("teh", "the")}
