@@ -25,10 +25,7 @@ __all__ = [
     "sql_over",
     "grams",
     "gram_hashes",
-    "shingles",
-    "minhash_expr",
     "minhash_fold",
-    "minhash_row_sigs",
     "stop_ratio",
     "MINHASH_PRIME",
 ]
@@ -120,32 +117,6 @@ def gram_hashes(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(grams(toks, n), token_hash))
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles; documents shorter than n tokens
-    collapse to a single whole-text shingle (of the NORMALIZED text, so
-    'a  b' and 'a b' fingerprint identically)."""
-    toks = tokens(text)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(F.array(norm_ws(text)))
-    )
-
-
-def minhash_expr(shingle_hash_mod: Column, k: int = 8) -> list[Column]:
-    """k minhash aggregation columns over an exploded
-    `shingle_hash_mod` column (already reduced mod MINHASH_PRIME so
-    a*x+b stays inside int64)."""
-    return [
-        F.min(
-            (F.lit(a % MINHASH_PRIME) * shingle_hash_mod + F.lit(b)) % MINHASH_PRIME
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_COEFFS[:k])
-    ]
-
-
 def stop_ratio(text: Column, stopwords: tuple[str, ...]) -> Column:
     """Fraction of tokens that are stopwords (language-ID signal)."""
     toks = tokens(text)
@@ -157,15 +128,14 @@ def stop_ratio(text: Column, stopwords: tuple[str, ...]) -> Column:
 def minhash_fold(hx: Column, k: int = 8) -> Column:
     """K MinHash signatures folded PER ROW over a bound array of
     shingle hashes — array<bigint> of k mins in one pass (F.aggregate +
-    zip_with against a constant (a,b) table). Unlike minhash_expr's
-    explode + groupBy shape this needs NO shuffle and no row blow-up:
-    signature generation over 10^12 docs becomes a pure map stage, and
-    only the (tiny) signatures ever hit an exchange (e.g. the LSH band
-    join). `hx` values need not be pre-reduced mod p and may contain
+    zip_with against a constant (a,b) table). Unlike an explode +
+    groupBy MIN this needs NO shuffle and no row blow-up: signature
+    generation over 10^12 docs becomes a pure map stage, and only the
+    (tiny) signatures ever hit an exchange (e.g. the LSH band join).
+    `hx` values need not be pre-reduced mod p and may contain
     duplicates — (a*(x mod p)+b) mod p == (a*x+b) mod p is applied
-    here, and MIN is duplicate-immune. minhash_expr stays for
-    incremental/streaming aggregation where shingles arrive
-    pre-exploded."""
+    here, and MIN is duplicate-immune. Callers pass `gram_hashes` of a
+    projected token array (see let_col)."""
     p = F.lit(MINHASH_PRIME)
     consts = F.array(*[
         F.struct(F.lit(a % MINHASH_PRIME).alias("a"), F.lit(b).alias("b"))
@@ -178,12 +148,3 @@ def minhash_fold(hx: Column, k: int = 8) -> Column:
             acc, consts,
             lambda m, c: F.least(m, (c["a"] * (x % p) + c["b"]) % p)),
     )
-
-
-def minhash_row_sigs(text: Column, k: int = 8) -> Column:
-    """Compat wrapper: minhash_fold over this text's shingle hashes.
-    Hot-path queries should project `tokens(text)` first and call
-    minhash_fold(gram_hashes(toks)) — inlining text here re-runs the
-    tokenization per shingle (see let_col)."""
-    return minhash_fold(
-        F.transform(shingles(text, 3), token_hash), k)

@@ -119,6 +119,20 @@ def _swap(fs, Path, live: str, new: str, parked: str) -> None:
     fs.delete(Path(parked), True)
 
 
+def _sweep_temporary(spark: SparkSession, table_dir: str) -> None:
+    """Delete `table_dir`/_temporary before a plain append to the table.
+    Hadoop's v1 FileOutputCommitter job commit merges every committed
+    task it finds under _temporary/0 — including the tasks of an
+    earlier job that died before its own job commit — so a restart
+    after a crash mid-write would commit that job's rows a second time.
+    Safe only under the single-writer contract of _swap_lineage: a
+    concurrent writer's in-flight _temporary would be deleted too.
+    Dynamic-overwrite writes stage under a per-job .spark-staging-* dir
+    and need no sweep."""
+    fs, Path = _fs(spark, table_dir)
+    fs.delete(Path(f"{table_dir}/_temporary"), True)
+
+
 def clean_uncommitted(spark: SparkSession, data_dir: str, done: set[int]) -> list[int]:
     """Remove data partitions whose bucket has NO lineage row — the
     leftovers of a crash in the window between the bucket's data commit
@@ -292,6 +306,9 @@ def run_with_lineage(
     """
     data_dir = f"{out_dir}/data"
     _unpark(spark, out_dir)
+    # what a run killed inside either append left behind
+    _sweep_temporary(spark, data_dir)
+    _sweep_temporary(spark, f"{out_dir}/lineage")
     done, commit_seq = _commit_state(spark, out_dir)
     # a crash between a bucket's data commit (below) and its lineage
     # append leaves orphan data — drop it before re-appending

@@ -73,10 +73,20 @@ def cosine_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     joined = emb.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
-    scored = joined.select(
+    return _top_k(joined, "q_vec", k, id_col, vec_col)
+
+
+def _top_k(cand: DataFrame, q_vec: str, k: int, id_col: str,
+           vec_col: str) -> DataFrame:
+    """Each query's k best candidates: cosine of the query vector
+    `q_vec` against the candidate's `vec_col`, ranked per query by the
+    rounded cosine with neighbor_id breaking ties (the ordering every
+    oracle's ROW_NUMBER uses). `cand` holds query_id, `q_vec`,
+    `id_col` and `vec_col`, self-matches already excluded."""
+    scored = cand.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        cosine(F.col("q_vec"), F.col(vec_col)).alias("cos_sim"),
+        cosine(F.col(q_vec), F.col(vec_col)).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -116,59 +126,39 @@ def lsh_topk(
     )
     cand = bucketed.join(F.broadcast(q), on="bucket").filter(
         F.col(id_col) != F.col("query_id"))
-    scored = cand.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine(F.col("q_vec"), F.col(vec_col)).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return _top_k(cand, "q_vec", k, id_col, vec_col)
 
 
-def _centroid_array(cents: DataFrame) -> DataFrame:
-    """Collapse a (cid, centroid) table into ONE row holding
-    array<struct<cid, centroid, cn>> (cn = precomputed norm), sorted by
-    cid. Broadcast-crossJoined against the vector table this turns
-    nearest-centroid assignment into a pure map stage — no per-vector
-    shuffle — which is the shape that matters at 10^12 rows (the old
-    form shuffled the whole vector table through a per-id window)."""
-    return (
-        cents.select("cid", "centroid", norm(F.col("centroid")).alias("cn"))
-        .agg(F.array_sort(
-            F.collect_list(F.struct("cid", "centroid", "cn"))).alias("cents"))
-    )
-
-
-def _assign_nearest(
-    vecs: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    out_col: str = "cid",
-) -> DataFrame:
-    """(id, vec, nearest-centroid cid) via per-row argmax over the
-    broadcast centroid array. Ordering matches the previous window
-    (row_number over cs DESC, cid ASC): array_max picks lexicographic
-    max of (cs, -cid), i.e. highest rounded cosine, ties to lowest cid.
-    The vector norm is hoisted to a projected column — referencing an
+def _nearest(vecs: DataFrame, cents: DataFrame, vec_col: str, n: int) -> DataFrame:
+    """`vecs` plus `near`: the cids of the n centroids nearest to
+    `vec_col`, nearest first — highest cosine rounded to 6 dp, ties to
+    the lowest cid (sort key (-cs, cid) ascending). The (cid, centroid)
+    table collapses into ONE broadcast row holding every centroid with
+    its precomputed norm, so ranking is a per-row map stage with no
+    per-vector shuffle — the shape that matters at 10^12 rows. The
+    vector norm is hoisted to a projected column: referencing an
     expression inside the transform lambda would re-evaluate it per
     centroid (textstats.let_col rationale)."""
-    carr = F.broadcast(_centroid_array(cents))
-    withn = vecs.crossJoin(carr).withColumn("_vn", norm(F.col(vec_col)))
-    best = F.array_max(F.transform(
+    carr = cents.select("cid", "centroid", norm(F.col("centroid")).alias("cn")).agg(
+        F.collect_list(F.struct("cid", "centroid", "cn")).alias("cents"))
+    withn = vecs.crossJoin(F.broadcast(carr)).select(
+        "*", norm(F.col(vec_col)).alias("_vn"))
+    ranked = F.array_sort(F.transform(
         F.col("cents"),
         lambda c: F.struct(
-            F.round(dot(F.col(vec_col), c["centroid"])
-                    / (F.col("_vn") * c["cn"]), 6).alias("cs"),
-            (-c["cid"]).alias("negcid"),
+            (-F.round(dot(F.col(vec_col), c["centroid"])
+                      / (F.col("_vn") * c["cn"]), 6)).alias("ncs"),
             c["cid"].alias("cid"),
         ),
     ))
-    return withn.select(id_col, vec_col, best["cid"].alias(out_col))
+    return withn.select(*vecs.columns, F.slice(ranked, 1, n)["cid"].alias("near"))
+
+
+def _assign_nearest(vecs: DataFrame, cents: DataFrame, id_col: str,
+                    vec_col: str) -> DataFrame:
+    """(id, vec, cid): every vector in its nearest centroid's list."""
+    return _nearest(vecs.select(id_col, vec_col), cents, vec_col, 1).select(
+        id_col, vec_col, F.col("near")[0].alias("cid"))
 
 
 def ivf_centroids(
@@ -231,33 +221,12 @@ def ivf_topk(
     # inverted lists: every vector -> its nearest (refined) centroid,
     # assigned in a pure map stage (no per-vector shuffle)
     inv = _assign_nearest(emb, cents, id_col, vec_col)
-    # query probes: top-n_probe centroids per query, ranked in-row on
-    # the same broadcast array (sort key (-cs, cid) ASC == cs DESC,
-    # cid ASC — the ordering the old per-query window used)
+    # query probes: each query's n_probe nearest centroids, ranked
+    # in-row the same way
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("qv"))
-    qn = q.crossJoin(F.broadcast(_centroid_array(cents))).withColumn(
-        "_qn", norm(F.col("qv")))
-    probe_arr = F.slice(
-        F.array_sort(F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-F.round(dot(F.col("qv"), c["centroid"])
-                          / (F.col("_qn") * c["cn"]), 6)).alias("ncs"),
-                c["cid"].alias("cid"),
-            ),
-        )), 1, n_probe)
-    probes = qn.select(
-        "query_id", "qv",
-        F.explode(probe_arr).alias("p")).select(
-        "query_id", "qv", F.col("p.cid").alias("cid"))
+    probes = _nearest(q, cents, "qv", n_probe).select(
+        "query_id", "qv", F.explode("near").alias("cid"))
     cand = inv.join(F.broadcast(probes), "cid").filter(
         F.col(id_col) != F.col("query_id"))
-    scored = cand.select(
-        "query_id", F.col(id_col).alias("neighbor_id"),
-        cosine(F.col("qv"), F.col(vec_col)).alias("cos_sim"))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rnk", F.row_number().over(wr))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "cos_sim", "rnk"))
+    return _top_k(cand, "qv", k, id_col, vec_col)

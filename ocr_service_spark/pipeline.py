@@ -55,7 +55,7 @@ from ocr_service_spark.operators.validate import (
     valid_candidates_sql,
 )
 
-__all__ = ["extract_documents", "process_documents"]
+__all__ = ["extract_documents", "extract_records", "process_documents"]
 
 
 def extract_documents(docs: DataFrame, separator: str = "\n\n") -> DataFrame:
@@ -66,8 +66,8 @@ def extract_documents(docs: DataFrame, separator: str = "\n\n") -> DataFrame:
 
 
 def process_documents(docs: DataFrame) -> DataFrame:
-    """Full result-record pipeline (P1 final projection)."""
-    names = list(FIELD_EXPRS)
+    """Full result-record pipeline (P1 final projection): keep each
+    url's latest crawl, then extract_records."""
     # Dedup FIRST, on the raw crawl rows: the expensive extraction UDF
     # never runs for rows that lose the keep-latest race, and extraction
     # executes pipelined in the post-shuffle stage. The html payload
@@ -76,8 +76,16 @@ def process_documents(docs: DataFrame) -> DataFrame:
     # Only the columns read below ride through it: an input's plain
     # `text` would be scanned, shuffled and sorted, then dropped. Rows
     # equal on url, warc_ts, doc_id and html break the tie on lang.
-    docs = dedup_latest(docs.select("doc_id", "url", "warc_ts", "html", "lang"),
-                        key="url", order_cols=("warc_ts", "doc_id"))
+    return extract_records(
+        dedup_latest(docs.select("doc_id", "url", "warc_ts", "html", "lang"),
+                     key="url", order_cols=("warc_ts", "doc_id")))
+
+
+def extract_records(docs: DataFrame) -> DataFrame:
+    """The result record of every already-deduplicated crawl row (url,
+    warc_ts, html, lang): the stages after dedup, shared by
+    process_documents and the streaming extraction."""
+    names = list(FIELD_EXPRS)
     # Fused extraction + stage-5 autocorrect (processor.py:253) in ONE
     # Arrow round-trip: the unfused extract→correct pair would ship the
     # extracted text JVM→Python→JVM→Python; the fusion corrects while

@@ -717,27 +717,60 @@ def jaccard_pairs(spark, sf_dir):
 # MinHash / SimHash near-dup tier (training-data pipeline)
 # ---------------------------------------------------------------------------
 
-def _shingle_hash_sql() -> str:
-    """DuckDB twin of textstats.token_hash(...) % MINHASH_PRIME over
-    exploded 3-gram shingles."""
+def _sigs_oracle_ctes() -> str:
+    """CTEs t, sh, sigs, bands — DuckDB twin of _shingle_table →
+    _signatures → _band_keys: exploded 3-gram shingle hashes reduced
+    mod MINHASH_PRIME, SQL MIN per hash function (the same mins the
+    Spark per-row fold computes), and each signature's 4 band keys."""
+    from ocr_service_spark.functions.textstats import MINHASH_COEFFS, MINHASH_PRIME
+
+    mins = ", ".join(
+        f"MIN(({a % MINHASH_PRIME} * x + {b}) % {MINHASH_PRIME}) AS mh{i}"
+        for i, (a, b) in enumerate(MINHASH_COEFFS)
+    )
+    bands = " UNION ALL ".join(
+        f"SELECT doc_id, {bi} AS band, cast(mh{2*bi} as varchar) || '_' || "
+        f"cast(mh{2*bi+1} as varchar) AS key FROM sigs"
+        for bi in range(4)
+    )
     return (
-        f"WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),\n"
+        f"t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),\n"
         "    sh AS (SELECT doc_id,\n"
         "      ('0x' || substr(unnest(list_distinct(list_transform(range(0, len(toks) - 2),\n"
         "        i -> md5(array_to_string(list_slice(toks, i + 1, i + 3), ' '))))), 1, 15))::BIGINT\n"
         "        % 1000000007 AS x\n"
-        "      FROM t WHERE len(toks) >= 3)\n"
+        "      FROM t WHERE len(toks) >= 3),\n"
+        f"    sigs AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),\n"
+        f"    bands AS ({bands})"
     )
 
 
-def _minhash_select() -> str:
-    from ocr_service_spark.functions.textstats import MINHASH_COEFFS, MINHASH_PRIME
+def _shingle_table(docs: DataFrame, *cols: str) -> DataFrame:
+    """(doc_id, *cols, toks, g3): each doc's token array, projected
+    once, and its distinct 3-gram shingle hashes ([] under 3 tokens, so
+    the projection is safe to materialize before any length filter)."""
+    from ocr_service_spark.functions.textstats import gram_hashes, tokens
 
-    terms = ", ".join(
-        f"MIN(({a % MINHASH_PRIME} * x + {b}) % {MINHASH_PRIME}) AS mh{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    )
-    return f"SELECT doc_id, {terms} FROM sh GROUP BY doc_id"
+    return docs.select("doc_id", *cols, tokens(F.col("text")).alias("toks")).select(
+        "*",
+        F.when(F.size("toks") >= 3, gram_hashes(F.col("toks"), 3))
+         .otherwise(F.array().cast("array<bigint>")).alias("g3"))
+
+
+def _signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh7): K=8 MinHash signatures of the docs of a
+    _shingle_table with >= 3 tokens, folded per row (minhash_fold) — a
+    shuffle-free map stage; docs under 3 tokens carry no signature."""
+    from ocr_service_spark.functions.textstats import minhash_fold
+
+    sig = minhash_fold(F.col("g3"))
+    return sh.filter(F.size("toks") >= 3).select(
+        "doc_id", *[sig[i].alias(f"mh{i}") for i in range(8)])
+
+
+def _doc_signatures(spark, sf_dir) -> DataFrame:
+    """The signature table of the `documents` table."""
+    return _signatures(_shingle_table(_t(spark, sf_dir, "documents")))
 
 
 @query("minhash_signatures", oracle=None)
@@ -748,49 +781,23 @@ def minhash_signatures(spark, sf_dir):
     (minhash_fold: one fold over the projected shingle-hash array) —
     the whole query is a shuffle-free map stage; the round-1
     explode+groupBy shape paid an exchange of every (doc, shingle) row
-    for the same result. Oracle unchanged (SQL explode+MIN computes
-    the identical mins)."""
-    from ocr_service_spark.functions.textstats import (
-        gram_hashes,
-        minhash_fold,
-        tokens,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") >= 3)
-    sig = minhash_fold(gram_hashes(F.col("toks"), 3))
-    return d.select("doc_id", *[sig[i].alias(f"mh{i}") for i in range(8)])
+    for the same result. Oracle: SQL explode+MIN computes the
+    identical mins."""
+    return _doc_signatures(spark, sf_dir)
 
 
-ORACLE_SQL["minhash_signatures"] = _shingle_hash_sql() + "    " + _minhash_select()
+ORACLE_SQL["minhash_signatures"] = (
+    f"WITH {_sigs_oracle_ctes()}\n    SELECT * FROM sigs")
 
 
 @query("minhash_lsh_pairs", oracle=None)
 def minhash_lsh_pairs(spark, sf_dir):
     """MinHash + LSH banding: 8 signatures → 4 bands of 2; candidate
     pairs share at least one full band; est_sim = fraction of equal
-    signatures. Signatures are per-row map-only (minhash_row_sigs), so
+    signatures. Signatures are per-row map-only (minhash_fold), so
     the FIRST shuffle in the whole job is the band self-join of tiny
     signature rows; candidate generation never compares doc×doc."""
-    from ocr_service_spark.functions.textstats import (
-        gram_hashes,
-        minhash_fold,
-        tokens,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") >= 3)
-    sig = minhash_fold(gram_hashes(F.col("toks"), 3))
-    # materialized once: three consumers (bands + both rank-join sides)
-    # would otherwise each recompute the full tokenize→shingle→fold
-    # pipeline; at production scale this is the written-once signature
-    # table
-    sigs = d.select(
-        "doc_id", *[sig[i].alias(f"mh{i}") for i in range(8)]
-    ).localCheckpoint(eager=False)
-    return _lsh_candidate_pairs(sigs)
+    return _lsh_candidate_pairs(_doc_signatures(spark, sf_dir))
 
 
 def _band_keys(sigs: DataFrame) -> DataFrame:
@@ -812,9 +819,12 @@ def _band_keys(sigs: DataFrame) -> DataFrame:
 
 def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Band self-join over a (doc_id, mh0..mh7) signature table →
-    (a_id, b_id, n_shared_bands, est_sim). Shared by minhash_lsh_pairs
-    and corpus_build (which derives sigs from its own one-pass shingle
-    projection)."""
+    (a_id, b_id, n_shared_bands, est_sim)."""
+    # materialized once: three consumers (bands + both rank-join sides)
+    # would otherwise each recompute the full tokenize→shingle→fold
+    # pipeline; at production scale this is the written-once signature
+    # table
+    sigs = sigs.localCheckpoint(eager=False)
     bands = _band_keys(sigs)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -836,24 +846,19 @@ def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
 
 
 def _minhash_pairs_oracle() -> str:
+    """CTEs through `pairs`: the DuckDB twin of _lsh_candidate_pairs."""
     eq = " + ".join(f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END" for i in range(8))
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band, cast(mh{2*bi} as varchar) || '_' || cast(mh{2*bi+1} as varchar) AS key FROM sigs"
-        for bi in range(4)
-    )
     return (
-        _shingle_hash_sql()
-        + "    , sigs AS (" + _minhash_select() + "),\n"
-        + f"    bands AS ({bands}),\n"
+        _sigs_oracle_ctes() + ",\n"
         + "    cand AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_shared_bands\n"
         + "      FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id\n"
-        + "      GROUP BY a.doc_id, b.doc_id)\n"
-        + f"    SELECT c.a_id, c.b_id, c.n_shared_bands, ROUND(({eq}) / 8.0, 4) AS est_sim\n"
-        + "    FROM cand c JOIN sigs sa ON c.a_id = sa.doc_id JOIN sigs sb ON c.b_id = sb.doc_id"
+        + "      GROUP BY a.doc_id, b.doc_id),\n"
+        + f"    pairs AS (SELECT c.a_id, c.b_id, c.n_shared_bands, ROUND(({eq}) / 8.0, 4) AS est_sim\n"
+        + "    FROM cand c JOIN sigs sa ON c.a_id = sa.doc_id JOIN sigs sb ON c.b_id = sb.doc_id)"
     )
 
 
-ORACLE_SQL["minhash_lsh_pairs"] = _minhash_pairs_oracle()
+ORACLE_SQL["minhash_lsh_pairs"] = f"WITH {_minhash_pairs_oracle()}\n    SELECT * FROM pairs"
 
 
 _SIMHASH_BITS = 32
@@ -915,6 +920,15 @@ _COS_SQL = (
 )
 
 
+def _top_k(scored: str, k: int, cols: str = "query_id, neighbor_id, cos_sim, rnk") -> str:
+    """The ANN oracles' ranking: each query's k best rows of CTE
+    `scored` by cos_sim, neighbor_id breaking ties."""
+    return f"""SELECT {cols} FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM {scored}
+    ) WHERE rnk <= {k}"""
+
+
 @query(
     "embedding_topk",
     oracle=f"""
@@ -924,10 +938,7 @@ _COS_SQL = (
              {_COS_SQL.format(a="q.qv", b="e.embedding")} AS cos_sim
       FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id
     )
-    SELECT query_id, neighbor_id, cos_sim, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM s
-    ) WHERE rnk <= 5
+    {_top_k("s", 5)}
     """,
 )
 def embedding_topk(spark, sf_dir):
@@ -965,15 +976,6 @@ def _lsh_bucket_sql(v: str) -> str:
             f" i -> {v}[i]::DOUBLE * (list_value({lits}))[i])) > 0 THEN {2 ** j} ELSE 0 END"
         )
     return "(" + " + ".join(bits) + ")"
-
-
-def _top_k(scored: str, k: int, cols: str = "query_id, neighbor_id, cos_sim, rnk") -> str:
-    """The ANN oracles' ranking: each query's k best rows of CTE
-    `scored` by cos_sim, neighbor_id breaking ties."""
-    return f"""SELECT {cols} FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cos_sim DESC, neighbor_id) AS rnk FROM {scored}
-    ) WHERE rnk <= {k}"""
 
 
 def _lsh_ctes(n_queries: int) -> str:
@@ -1235,7 +1237,7 @@ def streaming_feedback(spark, sf_dir):
         (F.col("event_id") % 4 == 0).alias("applied"),
     )
     fb.coalesce(4).write.mode("overwrite").json(in_dir)
-    run_feedback_loop(spark, in_dir, state, min_occurrences=2, min_confidence=0.7)
+    run_feedback_loop(spark, in_dir, state)
     corr = spark.read.parquet(f"{state}/corrections")
     return corr.select("original", "corrected", "confidence")
 
@@ -1407,16 +1409,39 @@ def pdf_extract(spark, sf_dir):
 # C4/RefinedWeb-style corpus hygiene ops)
 # ---------------------------------------------------------------------------
 
+# CTE `chunks(doc_id, i, chunk)`: each document's non-overlapping
+# 16-token chunks in reading order (DuckDB twin of _chunks).
+_CHUNKS_SQL = f"""chunks AS (
+      SELECT doc_id, i,
+             array_to_string(list_slice(toks, 16 * i + 1, 16 * i + 16), ' ') AS chunk
+      FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+           unnest(range(0, CAST(ceil(len(toks) / 16.0) AS BIGINT))) AS u(i)
+    )"""
+
+
+def _chunks(docs: DataFrame) -> DataFrame:
+    """(doc_id, chunks): each document's non-overlapping 16-token
+    chunks, in reading order, as strings."""
+    from ocr_service_spark.functions.textstats import tokens
+
+    # empty docs: nb = 0 would make sequence(0, -1) DESCEND ([0, -1])
+    # and fabricate two bogus chunks — filter them out (the oracle's
+    # range(0, 0) drops them implicitly); toks projected once
+    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
+        F.size("toks") > 0)
+    nb = F.ceil(F.size("toks") / F.lit(16.0)).cast("int")
+    return d.select("doc_id", F.transform(
+        F.sequence(F.lit(0), nb - 1),
+        lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i * 16 + 1, 16)),
+    ).alias("chunks"))
+
+
 @query(
     "chunk_dedup",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), c AS (
-      SELECT doc_id,
-             md5(array_to_string(list_slice(toks, 16 * i + 1, 16 * i + 16), ' ')) AS h
-      FROM t, unnest(range(0, CAST(ceil(len(toks) / 16.0) AS BIGINT))) AS u(i)
-    ), occ AS (
+    WITH {_CHUNKS_SQL},
+    c AS (SELECT doc_id, md5(chunk) AS h FROM chunks),
+    occ AS (
       SELECT h, COUNT(*) AS n_occ FROM c GROUP BY h
     )
     SELECT c.doc_id,
@@ -1440,20 +1465,8 @@ def chunk_dedup(spark, sf_dir):
     Never doc×doc. Skew: a boilerplate chunk shared by millions of
     docs is ONE counter row here (contrast jaccard_pairs, which needs
     the pair expansion and hence the drop_hot_shingles guard)."""
-    from ocr_service_spark.functions.textstats import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    # empty docs: nb = 0 would make sequence(0, -1) DESCEND ([0, -1])
-    # and fabricate two bogus chunks — filter them out (the oracle's
-    # range(0, 0) drops them implicitly); toks projected once
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") > 0)
-    nb = F.ceil(F.size("toks") / F.lit(16.0)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), nb - 1),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("toks"), i * 16 + 1, 16))),
-    )
-    ex = d.select("doc_id", F.explode(chunks).alias("h"))
+    chunks = _chunks(_t(spark, sf_dir, "documents"))
+    ex = chunks.select("doc_id", F.explode(F.transform("chunks", F.md5)).alias("h"))
     occ = ex.groupBy("h").agg(F.count("*").alias("n_occ"))
     dup = F.sum(F.when(F.col("n_occ") > 1, 1).otherwise(0))
     return (
@@ -1540,19 +1553,38 @@ def _mk_stream_tmp(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
+# The split rule of train_split and corpus_build: bucket = salted
+# md5(doc_id) mod 100 → 80/10/10 train/valid/test, and a per-language
+# sampling rate (50% of 'en', 100% of the rest) on the same bucket.
+_SPLIT_BUCKET_SQL = (
+    "('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100")
+_SPLIT_SQL = "CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'valid' ELSE 'test' END"
+_IN_SAMPLE_SQL = "bucket < (CASE WHEN lang = 'en' THEN 50 ELSE 100 END)"
+
+
+def _split_and_sample():
+    """Spark twin of the split rule: (split, in_sample) Columns over
+    the row's doc_id and lang."""
+    bucket = F.pmod(
+        token_hash(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
+        F.lit(100))
+    rate = F.when(F.col("lang") == "en", F.lit(50)).otherwise(F.lit(100))
+    split = (F.when(bucket < 80, F.lit("train"))
+             .when(bucket < 90, F.lit("valid"))
+             .otherwise(F.lit("test")))
+    return split, bucket < rate
+
+
 @query(
     "train_split",
     oracle=f"""
     WITH h AS (
       SELECT doc_id, lang, len({_TOKS_SQL}) AS n_tokens,
-             ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 AS bucket
+             {_SPLIT_BUCKET_SQL} AS bucket
       FROM documents
     )
-    SELECT doc_id, lang, n_tokens,
-           CASE WHEN bucket < 80 THEN 'train'
-                WHEN bucket < 90 THEN 'valid'
-                ELSE 'test' END AS split,
-           bucket < (CASE WHEN lang = 'en' THEN 50 ELSE 100 END) AS in_sample
+    SELECT doc_id, lang, n_tokens, {_SPLIT_SQL} AS split,
+           {_IN_SAMPLE_SQL} AS in_sample
     FROM h
     """,
 )
@@ -1569,18 +1601,13 @@ def train_split(spark, sf_dir):
     from ocr_service_spark.functions.textstats import tokens
 
     docs = _t(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        token_hash(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-        F.lit(100))
-    rate = F.when(F.col("lang") == "en", F.lit(50)).otherwise(F.lit(100))
+    split, in_sample = _split_and_sample()
     return docs.select(
         "doc_id",
         "lang",
         F.size(tokens(F.col("text"))).alias("n_tokens"),
-        F.when(bucket < 80, F.lit("train"))
-         .when(bucket < 90, F.lit("valid"))
-         .otherwise(F.lit("test")).alias("split"),
-        (bucket < rate).alias("in_sample"),
+        split.alias("split"),
+        in_sample.alias("in_sample"),
     )
 
 
@@ -2026,50 +2053,27 @@ def decontaminate(spark, sf_dir):
 _CLUSTER_SIM = 0.5
 
 
-def _dup_clusters_oracle() -> str:
+def _reach_oracle_ctes() -> str:
+    """CTEs through `reach(u, v)`: the transitive closure of the LSH
+    pairs with est_sim >= _CLUSTER_SIM (DuckDB twin of _dup_labels)."""
     return (
-        "WITH RECURSIVE pairs AS (\n" + _minhash_pairs_oracle() + "\n),\n"
+        _minhash_pairs_oracle() + ",\n"
         f"sel AS (SELECT a_id, b_id FROM pairs WHERE est_sim >= {_CLUSTER_SIM}),\n"
         "e AS (SELECT a_id AS u, b_id AS v FROM sel UNION SELECT b_id, a_id FROM sel),\n"
         "reach(u, v) AS (SELECT u, v FROM e\n"
-        "  UNION SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),\n"
-        "lab AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id FROM reach GROUP BY u)\n"
-        "SELECT l.doc_id, l.cluster_id, c.cluster_size\n"
-        "FROM lab l JOIN (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY cluster_id) c\n"
-        "  USING (cluster_id)"
+        "  UNION SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u)"
     )
 
 
-@query("dup_clusters", oracle=None)
-def dup_clusters(spark, sf_dir):
-    """Duplicate-cluster assembly: connected components over the LSH
-    candidate graph (est_sim >= 0.5), Pregel-style min-label
-    propagation. Each sweep is one shuffle on doc_id and converges in
-    O(component diameter) sweeps — near-dup clusters are shallow (a dup
-    of a dup of X is still ~X), so 2-4 sweeps at web scale; the
-    convergence check aggregates to a single driver-side scalar (no
-    data collect). Labels are checkpointed per sweep to keep the plan
-    linear. At 10^12 docs the loop runs on the signature-derived edge
-    list only (tiny vs the corpus); large-star/small-star (Kiveris et
-    al.) is the drop-in upgrade if components ever get deep. Oracle:
-    DuckDB recursive-CTE transitive closure of the same edge set."""
-    labels = _dup_cluster_labels(spark, sf_dir)
-    sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return (
-        labels.join(sizes, "label")
-        .select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"),
-                "cluster_size")
-    )
-
-
-def _dup_cluster_labels(spark, sf_dir) -> DataFrame:
-    """(id, label) component assignment over the LSH candidate graph —
-    the shared core of dup_clusters (which adds sizes) and corpus_build
-    (which only needs the non-canonical members)."""
+def _dup_labels(sigs: DataFrame) -> DataFrame:
+    """(id, label) component assignment over the LSH candidate graph of
+    a signature table — the shared core of dup_clusters (which adds
+    sizes) and corpus_build (which only needs the non-canonical
+    members)."""
     from ocr_service_spark.operators.dedup import connected_components
 
     edges = (
-        minhash_lsh_pairs(spark, sf_dir)
+        _lsh_candidate_pairs(sigs)
         .filter(F.col("est_sim") >= _CLUSTER_SIM)
         .select("a_id", "b_id")
         .localCheckpoint()
@@ -2077,7 +2081,32 @@ def _dup_cluster_labels(spark, sf_dir) -> DataFrame:
     return connected_components(edges, "a_id", "b_id")
 
 
-ORACLE_SQL["dup_clusters"] = _dup_clusters_oracle()
+@query(
+    "dup_clusters",
+    oracle=f"""WITH RECURSIVE {_reach_oracle_ctes()},
+lab AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id FROM reach GROUP BY u)
+SELECT l.doc_id, l.cluster_id, c.cluster_size
+FROM lab l JOIN (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY cluster_id) c
+  USING (cluster_id)""",
+)
+def dup_clusters(spark, sf_dir):
+    """Duplicate-cluster assembly: connected components over the LSH
+    candidate graph (est_sim >= 0.5) by alternating large-star /
+    small-star (operators/dedup.connected_components, Kiveris et al.):
+    O(log^2 n) rounds in the component size, each a fixed number of
+    shuffles over the edge list, with the convergence check a single
+    driver-side scalar (no data collect) and edges checkpointed per
+    round to keep the plan linear. At 10^12 docs the loop runs on the
+    signature-derived edge list only (tiny vs the corpus). Label = the
+    component's min doc id. Oracle: DuckDB recursive-CTE transitive
+    closure of the same edge set."""
+    labels = _dup_labels(_doc_signatures(spark, sf_dir))
+    sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
+    return (
+        labels.join(sizes, "label")
+        .select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"),
+                "cluster_size")
+    )
 
 
 # The documents table has no URL column, so both engines synthesize the
@@ -2225,13 +2254,7 @@ def _corpus_build_oracle() -> str:
     return f"""
 WITH RECURSIVE {_URL_ORACLE_CTES},
 ukeep AS (SELECT doc_id FROM fin WHERE {_URL_KEEP_SQL}),
-pairs AS (
-{_minhash_pairs_oracle()}
-),
-sel AS (SELECT a_id, b_id FROM pairs WHERE est_sim >= {_CLUSTER_SIM}),
-e AS (SELECT a_id AS u, b_id AS v FROM sel UNION SELECT b_id, a_id FROM sel),
-reach(u, v) AS (SELECT u, v FROM e
-  UNION SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
+{_reach_oracle_ctes()},
 noncanon AS (SELECT u AS doc_id FROM reach GROUP BY u
              HAVING LEAST(u, MIN(v)) <> u),
 tt AS (SELECT doc_id, lang, {_TOKS_SQL} AS toks FROM documents),
@@ -2247,17 +2270,14 @@ h AS (SELECT doc_id, lang, len(toks) AS n_tokens,
         CASE WHEN len(toks) > 0 THEN
           ROUND(len(list_filter(toks, w -> regexp_matches(w, '^[A-Za-zА-Яа-яЁё]+$')))
                 / CAST(len(toks) AS DOUBLE), 4) ELSE 0 END AS alpha_ratio,
-        ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 AS bucket
+        {_SPLIT_BUCKET_SQL} AS bucket
       FROM tt)
-SELECT h.doc_id, h.lang, h.n_tokens,
-       CASE WHEN bucket < 80 THEN 'train'
-            WHEN bucket < 90 THEN 'valid'
-            ELSE 'test' END AS split
+SELECT h.doc_id, h.lang, h.n_tokens, {_SPLIT_SQL} AS split
 FROM h
 JOIN ukeep USING (doc_id)
 WHERE h.n_tokens >= 10 AND h.alpha_ratio >= 0.8
   AND h.doc_id % 97 <> 0
-  AND bucket < (CASE WHEN h.lang = 'en' THEN 50 ELSE 100 END)
+  AND {_IN_SAMPLE_SQL}
   AND h.doc_id NOT IN (SELECT doc_id FROM noncanon)
   AND h.doc_id NOT IN (SELECT doc_id FROM contam)
 """
@@ -2288,43 +2308,18 @@ def corpus_build(spark, sf_dir):
     gate, instead of each branch re-scanning and re-tokenizing (at
     production scale this projection is the written-once shingle
     table)."""
-    from ocr_service_spark.functions.textstats import (
-        gram_hashes,
-        minhash_fold,
-        tokens,
-    )
-    from ocr_service_spark.operators.dedup import connected_components
-
     # the shared projection hands the SAME 3-gram hashes to LSH and
     # decontamination — only valid while the decon n equals the
     # (fixed) LSH shingle width
     assert _DECON_N == 3
 
     docs = _t(spark, sf_dir, "documents")
-    proj = (
-        _with_url_gate(docs)
-        .select("doc_id", "lang", "keep", tokens(F.col("text")).alias("toks"))
-        .withColumn(
-            "g3",
-            F.when(F.size("toks") >= 3, gram_hashes(F.col("toks"), 3))
-             .otherwise(F.array().cast("array<bigint>")))
-        .localCheckpoint(eager=False)
-    )
-    sh = proj.filter(F.size("toks") >= 3)
-
-    sig = minhash_fold(F.col("g3"))
-    sigs = sh.select("doc_id", *[sig[i].alias(f"mh{i}") for i in range(8)])
-    edges = (
-        _lsh_candidate_pairs(sigs)
-        .filter(F.col("est_sim") >= _CLUSTER_SIM)
-        .select("a_id", "b_id")
-        .localCheckpoint()
-    )
-    labels = connected_components(edges, "a_id", "b_id")
+    proj = _shingle_table(_with_url_gate(docs), "lang", "keep").localCheckpoint(eager=False)
+    labels = _dup_labels(_signatures(proj))
     noncanon = labels.filter(F.col("id") != F.col("label")).select(
         F.col("id").alias("doc_id"))
 
-    g = sh.select("doc_id", F.explode("g3").alias("g"))
+    g = proj.select("doc_id", F.explode("g3").alias("g"))
     ev = g.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
     contam = (
         g.filter(F.col("doc_id") % 97 != 0)
@@ -2339,20 +2334,13 @@ def corpus_build(spark, sf_dir):
                             lambda w: w.rlike("^[A-Za-zА-Яа-яЁё]+$")))
             / n_words.cast("double"), 4)
     ).otherwise(F.lit(0.0))
-    bucket = F.pmod(
-        token_hash(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-        F.lit(100))
-    rate = F.when(F.col("lang") == "en", F.lit(50)).otherwise(F.lit(100))
+    split, in_sample = _split_and_sample()
     return (
         b.filter((n_words >= 10) & (alpha >= 0.8)
-                 & (F.col("doc_id") % 97 != 0) & (bucket < rate))
+                 & (F.col("doc_id") % 97 != 0) & in_sample)
         .join(F.broadcast(noncanon), "doc_id", "left_anti")
         .join(F.broadcast(contam), "doc_id", "left_anti")
-        .select(
-            "doc_id", "lang", n_words.alias("n_tokens"),
-            F.when(bucket < 80, F.lit("train"))
-             .when(bucket < 90, F.lit("valid"))
-             .otherwise(F.lit("test")).alias("split"))
+        .select("doc_id", "lang", n_words.alias("n_tokens"), split.alias("split"))
     )
 
 
@@ -2443,18 +2431,8 @@ def incremental_dedup(spark, sf_dir):
     index, so the probe adds no shuffle over the corpus; the only
     exchange is the tiny per-batch-doc match count. Docs with <3
     tokens carry no signature and are admitted trivially."""
-    from ocr_service_spark.functions.textstats import (
-        gram_hashes,
-        minhash_fold,
-        tokens,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") >= 3)
-    sig = minhash_fold(gram_hashes(F.col("toks"), 3))
-    sigs = d.select("doc_id", *[sig[i].alias(f"mh{i}") for i in range(8)])
-    bands = _band_keys(sigs)
+    bands = _band_keys(_signatures(_shingle_table(docs)))
     is_batch = F.col("doc_id") % 5 == 4
     batch_bands = bands.filter(is_batch)
     corpus_bands = bands.filter(~is_batch)
@@ -2479,16 +2457,9 @@ def incremental_dedup(spark, sf_dir):
 
 
 def _incremental_dedup_oracle() -> str:
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band, cast(mh{2*bi} as varchar) || '_' || "
-        f"cast(mh{2*bi+1} as varchar) AS key FROM sigs"
-        for bi in range(4)
-    )
     return (
-        _shingle_hash_sql()
-        + "    , sigs AS (" + _minhash_select() + "),\n"
-        + f"    bands AS ({bands}),\n"
-        + f"    hits AS (SELECT b.doc_id, COUNT(DISTINCT c.doc_id) AS n\n"
+        f"WITH {_sigs_oracle_ctes()},\n"
+        + "    hits AS (SELECT b.doc_id, COUNT(DISTINCT c.doc_id) AS n\n"
         + f"      FROM (SELECT * FROM bands WHERE {_BATCH_PRED}) b\n"
         + f"      JOIN (SELECT * FROM bands WHERE NOT ({_BATCH_PRED})) c\n"
         + "       ON b.band = c.band AND b.key = c.key\n"
@@ -2532,9 +2503,10 @@ def compression_quality(spark, sf_dir):
 # inverted-index style term scoring)
 # ---------------------------------------------------------------------------
 
-# Deterministic skewed host synthesis shared by the Spark and DuckDB
-# sides: 30% of docs on one mega host, 15% on a second, the rest spread
-# over <=97 small hosts via a Knuth-hash — the same shape corpus.py
+# Deterministic skewed host synthesis, one SQL text parsed by both
+# engines (host_stats, host_cap and their oracles): 30% of docs on one
+# mega host, 15% on a second, the rest spread over <=97 small hosts
+# via a Knuth-hash — the same shape corpus.py
 # gives its crawl fixture (corpus.py:72-78), so the heavy-hitter
 # verdict is non-degenerate on the driver tables too.
 # (doc_id % 97) is reduced BEFORE the Knuth multiply: (a*k) % 97 ==
@@ -2544,7 +2516,7 @@ def compression_quality(spark, sf_dir):
 _HOST_SQL = (
     "CASE WHEN doc_id % 20 < 6 THEN 'mega.example' "
     "WHEN doc_id % 20 < 9 THEN 'mid.example' "
-    "ELSE 'host' || CAST(((doc_id % 97) * (2654435761 % 97)) % 97 AS VARCHAR) || '.example' END"
+    "ELSE 'host' || CAST(((doc_id % 97) * (2654435761 % 97)) % 97 AS STRING) || '.example' END"
 )
 
 
@@ -2575,14 +2547,7 @@ def host_stats(spark, sf_dir):
     shuffle and its output is host-cardinality sized — the driver never
     sees per-doc rows."""
     docs = _t(spark, sf_dir, "documents")
-    host = (
-        F.when(F.col("doc_id") % 20 < 6, F.lit("mega.example"))
-        .when(F.col("doc_id") % 20 < 9, F.lit("mid.example"))
-        .otherwise(F.concat(
-            F.lit("host"),
-            (((F.col("doc_id") % 97) * (2654435761 % 97)) % 97).cast("string"),
-            F.lit(".example")))
-    )
+    host = F.expr(_HOST_SQL)
     g = (docs.select(host.alias("host"), "n_chars")
          .groupBy("host")
          .agg(F.count("*").alias("n_docs"),
@@ -2664,16 +2629,10 @@ def tfidf_keywords(spark, sf_dir):
 @query(
     "boilerplate_strip",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), c AS (
-      SELECT doc_id, i,
-             array_to_string(list_slice(toks, 16 * i + 1, 16 * i + 16), ' ') AS chunk
-      FROM t, unnest(range(0, CAST(ceil(len(toks) / 16.0) AS BIGINT))) AS u(i)
-    ), r AS (
+    WITH {_CHUNKS_SQL}, r AS (
       SELECT doc_id, i, chunk,
              ROW_NUMBER() OVER (PARTITION BY chunk ORDER BY doc_id, i) AS rn
-      FROM c
+      FROM chunks
     )
     SELECT doc_id,
            COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk END, ' ' ORDER BY i), '')
@@ -2699,17 +2658,8 @@ def boilerplate_strip(spark, sf_dir):
     with n_kept=0 and empty clean_text (the dedup ledger, not a drop)."""
     from pyspark.sql import Window
 
-    from ocr_service_spark.functions.textstats import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") > 0)
-    nb = F.ceil(F.size("toks") / F.lit(16.0)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), nb - 1),
-        lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i * 16 + 1, 16)),
-    )
-    ex = d.select("doc_id", F.posexplode(chunks).alias("i", "chunk"))
+    chunks = _chunks(_t(spark, sf_dir, "documents"))
+    ex = chunks.select("doc_id", F.posexplode("chunks").alias("i", "chunk"))
     rn = F.row_number().over(
         Window.partitionBy("chunk").orderBy("doc_id", "i"))
     r = ex.withColumn("rn", rn)
@@ -2951,14 +2901,7 @@ def host_cap(spark, sf_dir):
 
     K = 8
     docs = _t(spark, sf_dir, "documents")
-    host = (
-        F.when(F.col("doc_id") % 20 < 6, F.lit("mega.example"))
-        .when(F.col("doc_id") % 20 < 9, F.lit("mid.example"))
-        .otherwise(F.concat(
-            F.lit("host"),
-            (((F.col("doc_id") % 97) * (2654435761 % 97)) % 97).cast("string"),
-            F.lit(".example")))
-    )
+    host = F.expr(_HOST_SQL)
     d = docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         host.alias("host"),
@@ -2994,12 +2937,61 @@ _LK_DST_SQL = (
 )
 
 
-def _lk_dst(j: int):
-    """Spark twin of _LK_DST_SQL: portable md5 bucket -> dst host id."""
+# The distinct (src, dst) host edges of documents CTE `d`: each
+# document links from its host doc_id % 97 to the hosts of its links
+# j = 1..3.
+_EDGES_SQL = (f"SELECT DISTINCT doc_id % 97 AS src, {_LK_DST_SQL} AS dst\n"
+              "      FROM d, unnest([1, 2, 3]) AS u(j)")
+
+
+def _lk_dst(j):
+    """Spark twin of _LK_DST_SQL for link-number Column `j`: portable
+    md5 bucket -> dst host id."""
     return F.pmod(
         token_hash(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
-                            F.lit(f":{j}"))),
+                            F.lit(":"), j.cast("string"))),
         F.lit(97))
+
+
+def _link_edges(docs: DataFrame) -> DataFrame:
+    """(doc_id, src, dst): every document's three host links (Spark
+    twin of _EDGES_SQL before its DISTINCT)."""
+    dj = docs.select(F.col("doc_id").cast("bigint").alias("doc_id"),
+                     F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j"))
+    return dj.select("doc_id", (F.col("doc_id") % 97).alias("src"),
+                     _lk_dst(F.col("j")).alias("dst"))
+
+
+def _hosts(edges: DataFrame) -> DataFrame:
+    """(h): the hosts of an edge list, src ∪ dst."""
+    return edges.select(F.col("src").alias("h")).union(
+        edges.select(F.col("dst").alias("h"))).distinct()
+
+
+def _mass(edges: DataFrame, deg: DataFrame, pr: DataFrame,
+          name: str = "mass") -> DataFrame:
+    """(h, `name`): one PageRank sweep's rank mass into each host — the
+    sum over its in-edges of (pr*85) div (100*deg), with `deg`
+    (src, deg) the out-degrees and `pr` (h, pr) the rank vector; a src
+    absent from `pr` sends nothing. Both are host-cardinality sized and
+    ride broadcast joins, so the only exchange is the map-combinable
+    sum on dst."""
+    src_pr = pr.select(F.col("h").alias("src"), "pr")
+    return (
+        edges.join(F.broadcast(deg), "src")
+        .join(F.broadcast(src_pr), "src", "left")
+        .groupBy(F.col("dst").alias("h"))
+        .agg(F.sum(F.expr("(coalesce(pr, 0) * 85) div (deg * 100)"))
+             .cast("bigint").alias(name))
+    )
+
+
+def _mass_sql(edges: str, deg: str, pr: str) -> str:
+    """DuckDB twin of _mass over CTEs `edges` (src, dst), `deg` (src,
+    deg) and `pr` (h, pr): (dst, mass)."""
+    return f"""SELECT e.dst, CAST(SUM((q.pr * 85) // (g.deg * 100)) AS BIGINT) AS mass
+        FROM {edges} e JOIN {deg} g ON e.src = g.src JOIN {pr} q ON q.h = e.src
+        GROUP BY e.dst"""
 
 
 @query(
@@ -3046,7 +3038,7 @@ def link_graph(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     d = docs.select(F.col("doc_id").cast("bigint").alias("doc_id"))
     did = F.col("doc_id").cast("string")
-    dst = {j: _lk_dst(j).cast("string") for j in (1, 2, 3)}
+    dst = {j: _lk_dst(F.lit(j)).cast("string") for j in (1, 2, 3)}
     page = F.concat(
         F.lit('<html><head><script>var s = '
               '\'<a href="https://evil.example/">x</a>\';'
@@ -3082,50 +3074,36 @@ def link_graph(spark, sf_dir):
     )
 
 
-@query(
-    "host_pagerank",
-    oracle=f"""
+_PR_SWEEPS = 3
+
+
+def _pagerank_oracle() -> str:
+    """host_pagerank's unrolled sweeps i1, i2, … from the uniform
+    start p0."""
+    sweeps, prev = [], "p0"
+    for i in range(1, _PR_SWEEPS + 1):
+        sweeps.append(f"""i{i} AS (
+      SELECT p.h, p.base + COALESCE(m.mass, 0) AS pr, p.base
+      FROM {prev} p LEFT JOIN ({_mass_sql("e0", "deg", prev)}) m ON m.dst = p.h
+    )""")
+        prev = f"i{i}"
+    return f"""
     WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents),
-    e0 AS (
-      SELECT DISTINCT doc_id % 97 AS src, {_LK_DST_SQL} AS dst
-      FROM d, unnest([1, 2, 3]) AS u(j)
-    ),
+    e0 AS ({_EDGES_SQL}),
     deg AS (SELECT src, COUNT(*) AS deg FROM e0 GROUP BY src),
-    hosts AS (SELECT DISTINCT src AS h FROM e0
-              UNION SELECT DISTINCT dst FROM e0),
+    hosts AS (SELECT src AS h FROM e0 UNION SELECT dst FROM e0),
     n AS (SELECT COUNT(*) AS nh FROM hosts),
     p0 AS (SELECT h, CAST(1000000000000 // nh AS BIGINT) AS pr,
                   CAST(150000000000 // nh AS BIGINT) AS base
            FROM hosts, n),
-    i1 AS (
-      SELECT p.h, p.base + COALESCE(m.mass, 0) AS pr, p.base
-      FROM p0 p LEFT JOIN (
-        SELECT e.dst,
-               CAST(SUM((q.pr * 85) // (g.deg * 100)) AS BIGINT) AS mass
-        FROM e0 e JOIN deg g ON e.src = g.src JOIN p0 q ON q.h = e.src
-        GROUP BY e.dst) m ON m.dst = p.h
-    ),
-    i2 AS (
-      SELECT p.h, p.base + COALESCE(m.mass, 0) AS pr, p.base
-      FROM i1 p LEFT JOIN (
-        SELECT e.dst,
-               CAST(SUM((q.pr * 85) // (g.deg * 100)) AS BIGINT) AS mass
-        FROM e0 e JOIN deg g ON e.src = g.src JOIN i1 q ON q.h = e.src
-        GROUP BY e.dst) m ON m.dst = p.h
-    ),
-    i3 AS (
-      SELECT p.h, p.base + COALESCE(m.mass, 0) AS pr
-      FROM i2 p LEFT JOIN (
-        SELECT e.dst,
-               CAST(SUM((q.pr * 85) // (g.deg * 100)) AS BIGINT) AS mass
-        FROM e0 e JOIN deg g ON e.src = g.src JOIN i2 q ON q.h = e.src
-        GROUP BY e.dst) m ON m.dst = p.h
-    )
+    {", ".join(sweeps)}
     SELECT 'host' || CAST(h AS VARCHAR) || '.example' AS host,
            CAST(pr AS BIGINT) AS pr_scaled
-    FROM i3
-    """,
-)
+    FROM {prev}
+    """
+
+
+@query("host_pagerank", oracle=_pagerank_oracle())
 def host_pagerank(spark, sf_dir):
     """Host-quality prior via PageRank over the same deterministic
     link graph link_graph extracts — the CC host-rank signal that
@@ -3142,47 +3120,26 @@ def host_pagerank(spark, sf_dir):
     per sweep — irrelevant for a ranking prior, and exactly
     reproducible.)
 
-    Scale shape: the canonical distributed PageRank — edge list keyed
-    by src joins the rank vector (one shuffle per sweep), mass
-    re-aggregates map-combinably on dst, teleport re-attaches via a
-    left join on the host set. Iterations are UNROLLED into one plan:
-    no driver-side loop actions, no collect. At 10^12 edges each
-    sweep is the same two keyed exchanges; the rank vector stays
-    host-cardinality sized."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(F.col("doc_id").cast("bigint").alias("doc_id"))
-    dj = d.select(
-        "doc_id", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j"))
-    dst = F.pmod(
-        token_hash(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
-                            F.lit(":"), F.col("j").cast("string"))),
-        F.lit(97))
-    e = dj.select((F.col("doc_id") % 97).alias("src"),
-                  dst.alias("dst")).distinct()
+    Scale shape: the canonical distributed PageRank — the rank vector
+    and out-degrees are host-cardinality sized and ride broadcast
+    joins into the edge list, mass re-aggregates map-combinably on dst
+    (one shuffle per sweep), teleport re-attaches via a left join on
+    the host set. Iterations are UNROLLED into one plan: no
+    driver-side loop actions, no collect."""
+    e = _link_edges(_t(spark, sf_dir, "documents")).select("src", "dst").distinct()
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    hosts = e.select(F.col("src").alias("h")).union(
-        e.select(F.col("dst").alias("h"))).distinct()
+    hosts = _hosts(e)
     nh = hosts.agg(F.count("*").alias("nh"))
     base = hosts.crossJoin(F.broadcast(nh)).select(
         "h",
         F.expr("1000000000000 div nh").cast("bigint").alias("pr0"),
         F.expr("150000000000 div nh").cast("bigint").alias("base"),
     )
-    ed = e.join(deg, "src")
     pr = base.select("h", F.col("pr0").alias("pr"))
-    for _ in range(3):
-        mass = (
-            ed.join(pr.select(F.col("h").alias("src"), "pr"), "src")
-            .select("dst",
-                    F.expr("(pr * 85) div (deg * 100)")
-                     .cast("bigint").alias("t"))
-            .groupBy("dst")
-            .agg(F.sum("t").cast("bigint").alias("mass"))
-        )
+    for _ in range(_PR_SWEEPS):
         pr = (
-            base.join(mass, base.h == mass.dst, "left")
-            .select(F.col("h"),
-                    (F.col("base") + F.coalesce(F.col("mass"), F.lit(0)))
+            base.join(_mass(e, deg, pr), "h", "left")
+            .select("h", (F.col("base") + F.coalesce(F.col("mass"), F.lit(0)))
                     .cast("bigint").alias("pr"))
         )
     return pr.select(
@@ -3196,14 +3153,8 @@ def host_pagerank(spark, sf_dir):
     "incremental_pagerank",
     oracle=f"""
     WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents),
-    ec AS (
-      SELECT DISTINCT doc_id % 97 AS src, {_LK_DST_SQL} AS dst
-      FROM d, unnest([1, 2, 3]) AS u(j) WHERE doc_id % 5 <> 4
-    ),
-    eb AS (
-      SELECT DISTINCT doc_id % 97 AS src, {_LK_DST_SQL} AS dst
-      FROM d, unnest([1, 2, 3]) AS u(j) WHERE doc_id % 5 = 4
-    ),
+    ec AS ({_EDGES_SQL} WHERE doc_id % 5 <> 4),
+    eb AS ({_EDGES_SQL} WHERE doc_id % 5 = 4),
     em AS (SELECT src, dst FROM ec UNION SELECT src, dst FROM eb),
     hc AS (SELECT src AS h FROM ec UNION SELECT dst FROM ec),
     hm AS (SELECT src AS h FROM em UNION SELECT dst FROM em),
@@ -3215,10 +3166,7 @@ def host_pagerank(spark, sf_dir):
     p1 AS (
       SELECT h.h, CAST(150000000000 // (SELECT n FROM nc) AS BIGINT)
              + COALESCE(m.mass, 0) AS pr
-      FROM hc h LEFT JOIN (
-        SELECT e.dst, CAST(SUM((q.pr * 85) // (g.deg * 100)) AS BIGINT) AS mass
-        FROM ec e JOIN degc g ON e.src = g.src JOIN p0 q ON q.h = e.src
-        GROUP BY e.dst) m ON m.dst = h.h
+      FROM hc h LEFT JOIN ({_mass_sql("ec", "degc", "p0")}) m ON m.dst = h.h
     ),
     p1m AS (SELECT hm.h, COALESCE(p1.pr, 0) AS pr
             FROM hm LEFT JOIN p1 ON p1.h = hm.h)
@@ -3226,10 +3174,7 @@ def host_pagerank(spark, sf_dir):
            CAST(CAST(150000000000 // (SELECT n FROM nm) AS BIGINT)
                 + COALESCE(m.mass, 0) AS BIGINT) AS pr_scaled,
            hm.h NOT IN (SELECT h FROM hc) AS is_new
-    FROM hm LEFT JOIN (
-      SELECT e.dst, CAST(SUM((q.pr * 85) // (g.deg * 100)) AS BIGINT) AS mass
-      FROM em e JOIN degm g ON e.src = g.src JOIN p1m q ON q.h = e.src
-      GROUP BY e.dst) m ON m.dst = hm.h
+    FROM hm LEFT JOIN ({_mass_sql("em", "degm", "p1m")}) m ON m.dst = hm.h
     """,
 )
 def incremental_pagerank(spark, sf_dir):
@@ -3257,16 +3202,7 @@ def incremental_pagerank(spark, sf_dir):
     delta aggs. New hosts enter with zero prior rank and the teleport
     base re-normalizes to the merged host count, matching the direct
     sweep exactly."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(F.col("doc_id").cast("bigint").alias("doc_id"))
-    dj = d.select(
-        "doc_id", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j"))
-    dst = F.pmod(
-        token_hash(F.concat(F.lit("lk:"), F.col("doc_id").cast("string"),
-                            F.lit(":"), F.col("j").cast("string"))),
-        F.lit(97))
-    edges = dj.select("doc_id", (F.col("doc_id") % 97).alias("src"),
-                      dst.alias("dst"))
+    edges = _link_edges(_t(spark, sf_dir, "documents"))
     is_batch = F.col("doc_id") % 5 == 4
     # --- persisted artifacts (the last full run's state) ---
     # localCheckpoint stands in for reading the persisted tables: in
@@ -3278,34 +3214,20 @@ def incremental_pagerank(spark, sf_dir):
     ec = edges.filter(~is_batch).select("src", "dst").distinct() \
         .localCheckpoint()
     degc = ec.groupBy("src").agg(F.count("*").alias("deg"))
-    hc = ec.select(F.col("src").alias("h")).union(
-        ec.select(F.col("dst").alias("h"))).distinct()
+    hc = _hosts(ec)
     nhc = hc.agg(F.count("*").alias("n"))
     p0 = hc.crossJoin(F.broadcast(nhc)).select(
         "h", F.expr("1000000000000 div n").cast("bigint").alias("pr"))
-    mass0 = (
-        ec.join(F.broadcast(degc), "src")
-        .join(F.broadcast(p0.select(F.col("h").alias("src"), "pr")), "src")
-        .select("dst", F.expr("(pr * 85) div (deg * 100)")
-                        .cast("bigint").alias("t"))
-        .groupBy("dst").agg(F.sum("t").cast("bigint").alias("mass"))
-    )
     p1 = (
         hc.crossJoin(F.broadcast(nhc))
-        .join(F.broadcast(mass0), F.col("h") == F.col("dst"), "left")
+        .join(F.broadcast(_mass(ec, degc, p0)), "h", "left")
         .select("h", (F.expr("150000000000 div n")
                       + F.coalesce(F.col("mass"), F.lit(0)))
                 .cast("bigint").alias("pr"))
     ).localCheckpoint()
     # the last committed sweep's per-dst mass table, computed FROM p1
     # (persisted alongside p1 so the next sweep starts as a delta)
-    m1 = (
-        ec.join(F.broadcast(degc), "src")
-        .join(F.broadcast(p1.select(F.col("h").alias("src"), "pr")), "src")
-        .select("dst", F.expr("(pr * 85) div (deg * 100)")
-                        .cast("bigint").alias("t"))
-        .groupBy("dst").agg(F.sum("t").cast("bigint").alias("mass"))
-    )
+    m1 = _mass(ec, degc, p1)
     # --- incremental layer (batch-proportional) ---
     eb = edges.filter(is_batch).select("src", "dst").distinct() \
         .localCheckpoint()
@@ -3317,34 +3239,20 @@ def incremental_pagerank(spark, sf_dir):
     em_t = ec_t.union(ebn)
     degc_t = ec_t.groupBy("src").agg(F.count("*").alias("deg"))
     degm_t = em_t.groupBy("src").agg(F.count("*").alias("deg"))
-    p1_t = p1.join(F.broadcast(bsrc.withColumnRenamed("src", "h")), "h",
-                   "semi").select(F.col("h").alias("src"), "pr")
-    old_t = (
-        ec_t.join(F.broadcast(degc_t), "src")
-        .join(F.broadcast(p1_t), "src")
-        .select("dst", F.expr("(pr * 85) div (deg * 100)")
-                        .cast("bigint").alias("t"))
-        .groupBy("dst").agg(F.sum("t").cast("bigint").alias("old"))
-    )
-    new_t = (
-        em_t.join(F.broadcast(degm_t), "src")
-        .join(F.broadcast(p1_t), "src", "left")
-        .select("dst",
-                F.expr("(coalesce(pr, 0) * 85) div (deg * 100)")
-                 .cast("bigint").alias("t"))
-        .groupBy("dst").agg(F.sum("t").cast("bigint").alias("new"))
-    )
-    hb = eb.select(F.col("src").alias("h")).union(
-        eb.select(F.col("dst").alias("h"))).distinct()
-    new_hosts = hb.join(F.broadcast(hc), "h", "left_anti")
+    p1_t = p1.join(F.broadcast(bsrc.withColumnRenamed("src", "h")), "h", "semi")
+    # the touched srcs' old contributions, and their new ones under the
+    # merged out-degrees (a batch-new src has no prior rank: it sends 0)
+    old_t = _mass(ec_t, degc_t, p1_t, "old")
+    new_t = _mass(em_t, degm_t, p1_t, "new")
+    new_hosts = _hosts(eb).join(F.broadcast(hc), "h", "left_anti")
     hm = hc.select("h", F.lit(False).alias("is_new")).union(
         new_hosts.select("h", F.lit(True).alias("is_new")))
     nhm = hm.agg(F.count("*").alias("n"))
     return (
         hm.crossJoin(F.broadcast(nhm))
-        .join(F.broadcast(m1.withColumnRenamed("dst", "h")), "h", "left")
-        .join(F.broadcast(old_t.withColumnRenamed("dst", "h")), "h", "left")
-        .join(F.broadcast(new_t.withColumnRenamed("dst", "h")), "h", "left")
+        .join(F.broadcast(m1), "h", "left")
+        .join(F.broadcast(old_t), "h", "left")
+        .join(F.broadcast(new_t), "h", "left")
         .select(
             F.concat(F.lit("host"), F.col("h").cast("string"),
                      F.lit(".example")).alias("host"),

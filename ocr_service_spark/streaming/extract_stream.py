@@ -1,12 +1,12 @@
 """Streaming extraction: the flagship pipeline as a Structured Stream.
 
 A crawl drop-directory (or Kafka topic / Iceberg incremental scan on a
-real cluster) streams document rows through the SAME extraction +
-correction + validation stages as the batch pipeline — the operators
-are stream-agnostic column transforms, so this module only wires
-sources and sinks:
+real cluster) streams document rows through the SAME extraction,
+correction, validation and quality stages as the batch pipeline
+(`pipeline.extract_records`, stateless column transforms), so this
+module only wires the dedup, sources and sinks:
 
-    read_document_stream(dir) → extract/correct/validate → sink
+    read_document_stream(dir) → watermarked url dedup → extract_records → sink
 
 Late/duplicate crawls are handled with watermark + dropDuplicates on
 url (state-store backed, keyed by url, expired by the watermark). Unlike
@@ -19,39 +19,35 @@ the watermark expires that url's state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ocr_service_spark.corpus import CORPUS_SCHEMA
-from ocr_service_spark.operators.extract import (
-    flatten_extraction,
-    make_extract_correct_udf,
-)
+from ocr_service_spark.pipeline import extract_records
 
 __all__ = ["read_document_stream", "streaming_extract", "run_to_parquet"]
 
+# How long a url's dedup state outlives the newest warc_ts seen, and
+# how many drop-directory files one micro-batch reads.
+DEDUP_WATERMARK = "1 hour"
+MAX_FILES_PER_TRIGGER = 64
 
-def read_document_stream(spark: SparkSession, in_dir: str,
-                         max_files_per_trigger: int = 64) -> DataFrame:
+
+def read_document_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     """Parquet drop-directory of documents(doc_id, url, warc_ts, html,
-    text, lang) as a stream; each micro-batch reads at most
-    `max_files_per_trigger` files."""
+    text, lang) as a stream."""
     return (
         spark.readStream.schema(CORPUS_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
         .parquet(in_dir)
     )
 
 
-def streaming_extract(docs: DataFrame, dedup_watermark: str = "1 hour") -> DataFrame:
-    """Stream-side extraction: watermarked per-url dedup (first-arriving
-    crawl wins, see module docstring), then the same fused Arrow
-    extraction + correction UDF as the batch pipeline."""
-    deduped = docs.withWatermark("warc_ts", dedup_watermark).dropDuplicates(["url"])
-    x = deduped.withColumn("x", make_extract_correct_udf()(F.col("html")))
-    return flatten_extraction(x.filter(F.col("x.error").isNull())).select(
-        "doc_id", "url", "warc_ts", "lang", "kind", "extracted_text",
-        "corrected_text", "corrections_applied", "spans",
-    )
+def streaming_extract(docs: DataFrame) -> DataFrame:
+    """Stream-side pipeline: watermarked per-url dedup (first-arriving
+    crawl wins, see module docstring), then the batch pipeline's
+    extract_records — the same 17 result columns as process_documents."""
+    return extract_records(
+        docs.withWatermark("warc_ts", DEDUP_WATERMARK).dropDuplicates(["url"]))
 
 
 def run_to_parquet(spark: SparkSession, in_dir: str, out_dir: str,

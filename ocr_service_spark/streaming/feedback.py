@@ -58,12 +58,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ocr_service_spark.lineage import _fs, _visible
+from ocr_service_spark.lineage import _fs, _sweep_temporary, _visible
 
 __all__ = [
     "FEEDBACK_SCHEMA",
     "read_feedback_stream",
-    "mine_candidates",
     "mine_from_stats",
     "run_feedback_loop",
     "feedback_rate",
@@ -88,45 +87,20 @@ def read_feedback_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     return spark.readStream.schema(FEEDBACK_SCHEMA).json(in_dir)
 
 
-def mine_candidates(
-    feedback: DataFrame,
-    corrections: DataFrame | None,
-    min_occurrences: int = 2,
-    min_confidence: float = 0.7,
-) -> DataFrame:
-    """A2 + anti-join: unapplied pairs over thresholds, minus pairs the
-    dictionary already knows. Columns: original, corrected,
-    occurrences, avg_confidence."""
-    cand = (
-        feedback.filter((F.col("type") == "correction") & ~F.col("applied"))
-        .groupBy("original", "corrected")
-        .agg(
-            F.count("*").alias("occurrences"),
-            F.round(F.avg("confidence"), 4).alias("avg_confidence"),
-        )
-        .filter(
-            (F.col("occurrences") >= min_occurrences)
-            & (F.col("avg_confidence") >= min_confidence)
-        )
-    )
-    if corrections is not None:
-        cand = cand.join(
-            F.broadcast(corrections.select("original")), "original", "left_anti")
-    return cand
+# A2 auto-learning thresholds (reference active_learning.py:31-32): a
+# pair is learned once seen at least this often at this mean confidence.
+MIN_OCCURRENCES = 2
+MIN_CONFIDENCE = 0.7
 
 
-def mine_from_stats(
-    stats: DataFrame,
-    corrections: DataFrame | None,
-    min_occurrences: int = 2,
-    min_confidence: float = 0.7,
-) -> DataFrame:
-    """The incremental twin of `mine_candidates`: re-aggregate the
-    per-batch (original, corrected, occurrences, conf_sum) deltas —
-    zeroed rows (already-flipped pairs) drop out — then threshold and
-    anti-join exactly like the batch form. conf_sum is DECIMAL, so the
-    delta-wise sum equals the all-history sum bit for bit regardless of
-    batch boundaries or partial-agg order."""
+def mine_from_stats(stats: DataFrame, corrections: DataFrame | None) -> DataFrame:
+    """A2 + anti-join over the running pair_stats aggregate: re-aggregate
+    the per-batch (original, corrected, occurrences, conf_sum) deltas —
+    zeroed rows (already-flipped pairs) drop out — keep the pairs over
+    the thresholds, minus pairs the dictionary already knows. conf_sum
+    is DECIMAL, so the delta-wise sum equals the all-history sum bit
+    for bit regardless of batch boundaries or partial-agg order.
+    Columns: original, corrected, occurrences, avg_confidence."""
     agg = (
         stats.filter(F.col("occurrences") > 0)
         .groupBy("original", "corrected")
@@ -141,8 +115,8 @@ def mine_from_stats(
             F.col("conf_sum").cast("double") / F.col("occurrences"), 4
         ).alias("avg_confidence"),
     ).filter(
-        (F.col("occurrences") >= min_occurrences)
-        & (F.col("avg_confidence") >= min_confidence)
+        (F.col("occurrences") >= MIN_OCCURRENCES)
+        & (F.col("avg_confidence") >= MIN_CONFIDENCE)
     )
     if corrections is not None:
         cand = cand.join(
@@ -185,13 +159,24 @@ def _stats_delta(batch: DataFrame, known: DataFrame | None) -> DataFrame:
     )
 
 
-def run_feedback_loop(
-    spark: SparkSession,
-    in_dir: str,
-    state_dir: str,
-    min_occurrences: int = 2,
-    min_confidence: float = 0.7,
-) -> None:
+def _known_pairs(corrections: DataFrame) -> DataFrame:
+    """The dictionary's distinct (original, corrected) pairs, flagged
+    `_known`, for broadcast joins against feedback rows."""
+    return F.broadcast(corrections.select("original", "corrected").distinct()
+                       .withColumn("_known", F.lit(True)))
+
+
+def _flag_applied(rows: DataFrame, known: DataFrame) -> DataFrame:
+    """`rows` with `applied` set where the pair is in `known`."""
+    return (
+        rows.join(known, ["original", "corrected"], "left")
+        .withColumn("applied",
+                    F.col("applied") | F.coalesce(F.col("_known"), F.lit(False)))
+        .drop("_known")
+    )
+
+
+def run_feedback_loop(spark: SparkSession, in_dir: str, state_dir: str) -> None:
     """One availableNow pass of the loop: drain the drop directory,
     append to the feedback table, auto-update corrections, mark mined
     rows applied. Restart-safe via the streaming checkpoint; per-batch
@@ -211,22 +196,14 @@ def run_feedback_loop(
         sp = batch.sparkSession
         batch.persist()
         current = _read_or_none(sp, corrections_tbl)
-        known = (F.broadcast(current.select("original", "corrected").distinct())
-                 if current is not None else None)
+        known = _known_pairs(current) if current is not None else None
 
         # T1 ingest, replay-idempotent: overwrite exactly THIS batch's
         # partition; rows of already-learned pairs land pre-flipped so
         # they can never need a later historical rewrite
         ing = batch.withColumn("batch_id", F.lit(int(batch_id)))
         if known is not None:
-            kflag = known.withColumn("_known", F.lit(True))
-            ing = (
-                ing.join(kflag, ["original", "corrected"], "left")
-                .withColumn(
-                    "applied",
-                    F.col("applied") | F.coalesce(F.col("_known"), F.lit(False)))
-                .drop("_known")
-            )
+            ing = _flag_applied(ing, known)
         _dyn_overwrite(ing, feedback_tbl)
 
         # pair_stats delta for THIS batch only (own partition, so a
@@ -240,7 +217,7 @@ def run_feedback_loop(
         if stats is None:
             batch.unpersist()
             return
-        cand = mine_from_stats(stats, current, min_occurrences, min_confidence)
+        cand = mine_from_stats(stats, current)
         new_corr = cand.select(
             "original", "corrected",
             F.lit("auto_learned").alias("method"),
@@ -250,6 +227,7 @@ def run_feedback_loop(
         if new_rows:
             # anti-join above already excluded known pairs, so a replay
             # whose append committed pre-crash re-appends nothing
+            _sweep_temporary(sp, corrections_tbl)
             sp.createDataFrame(new_rows, new_corr.schema).write.mode(
                 "append").parquet(corrections_tbl)
 
@@ -261,9 +239,7 @@ def run_feedback_loop(
         # between re-flips idempotently next batch.
         corr_now = _read_or_none(sp, corrections_tbl)
         if corr_now is not None:
-            pairs_now = F.broadcast(
-                corr_now.select("original", "corrected").distinct()
-                .withColumn("_known", F.lit(True)))
+            pairs_now = _known_pairs(corr_now)
             stale = (
                 sp.read.parquet(stats_tbl)
                 .filter(F.col("occurrences") > 0)
@@ -275,14 +251,7 @@ def run_feedback_loop(
                 # so the dynamic overwrite may target the same path
                 sub = sp.read.parquet(feedback_tbl).filter(
                     F.col("batch_id").isin(affected))
-                upd = (
-                    sub.join(pairs_now, ["original", "corrected"], "left")
-                    .withColumn(
-                        "applied",
-                        F.col("applied")
-                        | F.coalesce(F.col("_known"), F.lit(False)))
-                    .drop("_known")
-                ).localCheckpoint(eager=True)
+                upd = _flag_applied(sub, pairs_now).localCheckpoint(eager=True)
                 _dyn_overwrite(upd, feedback_tbl)
 
                 ssub = sp.read.parquet(stats_tbl).filter(

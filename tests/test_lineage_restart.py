@@ -9,6 +9,7 @@ from ocr_service_spark.lineage import (
     clean_uncommitted,
     committed_buckets,
     run_with_lineage,
+    snapshots,
     verify_lineage,
     with_bucket,
 )
@@ -204,3 +205,57 @@ def test_pre_commit_seq_lineage_rejected(spark, tmp_path):
 
 def test_missing_lineage_is_first_run(spark, tmp_path):
     assert committed_buckets(spark, str(tmp_path / "nope")) == set()
+
+
+
+def _urls(spark, n=40):
+    return spark.createDataFrame(
+        [(f"https://h{i % 7}.example/p/{i}", f"text {i}") for i in range(n)],
+        "url string, extracted_text string")
+
+
+def _stale_committed_task(df, table_dir, staged, partition_by=()):
+    """Leave `df` as one committed task of a job that died before its
+    job commit: table_dir/_temporary/0/task_…/[partition dirs/]part-….
+    That is the layout a run killed inside its append leaves behind."""
+    import shutil
+
+    df.coalesce(1).write.partitionBy(*partition_by).parquet(str(staged))
+    task = table_dir / "_temporary" / "0" / "task_202601010000_0001_m_000000"
+    shutil.copytree(staged, task, ignore=shutil.ignore_patterns("_*", ".*"))
+
+
+def test_stale_data_task_is_not_committed_twice(spark, tmp_path):
+    # the restart's data append must not merge the dead job's committed
+    # bucket-1 task beside the rows it writes itself
+    out = tmp_path / "out"
+    stale = with_bucket(_urls(spark), 4).filter("bucket = 1")
+    assert stale.count() > 0
+    _stale_committed_task(stale, out / "data", tmp_path / "staged", ["bucket"])
+    assert run_with_lineage(spark, _urls(spark), str(out), n_buckets=4) == [0, 1, 2, 3]
+    data = spark.read.parquet(f"{out}/data")
+    assert data.count() == 40
+    assert data.select("url").distinct().count() == 40
+    assert all(r.ok for r in verify_lineage(spark, str(out)).collect())
+
+
+def test_stale_lineage_task_is_not_committed(spark, tmp_path):
+    # run r1 commits buckets 0-1; a run killed inside its lineage append
+    # left rows for buckets 2-3 as a committed task under lineage/. The
+    # restart commits bucket 2 only, and its log must read as a clean
+    # run's: bucket 3 uncommitted, no snapshot of the dead run.
+    clean, out = tmp_path / "clean", tmp_path / "out"
+    for d in (clean, out):
+        run_with_lineage(spark, _urls(spark), str(d), n_buckets=4,
+                         max_buckets_this_run=2, run_id="r1")
+    dead = (spark.read.parquet(f"{clean}/lineage")
+            .withColumn("bucket", F.col("bucket") + 2)
+            .withColumn("commit_seq", F.lit(2))
+            .withColumn("run_id", F.lit("dead")))
+    _stale_committed_task(dead, out / "lineage", tmp_path / "staged")
+    for d in (clean, out):
+        assert run_with_lineage(spark, _urls(spark), str(d), n_buckets=4,
+                                max_buckets_this_run=1, run_id="r2") == [2]
+    assert committed_buckets(spark, str(out)) == committed_buckets(spark, str(clean))
+    snap = [tuple(r) for r in snapshots(spark, str(out)).collect()]
+    assert snap == [tuple(r) for r in snapshots(spark, str(clean)).collect()]

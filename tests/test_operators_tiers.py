@@ -5,11 +5,12 @@ plumbing, the dedup skew bound."""
 import pyspark.sql.functions as F
 
 from ocr_service_spark.functions.textstats import (
+    MINHASH_COEFFS,
     MINHASH_PRIME,
-    minhash_expr,
-    shingles,
+    gram_hashes,
+    grams,
+    minhash_fold,
     stop_ratio,
-    token_hash,
     tokens,
 )
 from ocr_service_spark.operators.dedup import (
@@ -32,23 +33,36 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_shingles_and_short_doc_fallback(spark):
-    out = _docs(spark).select("doc_id", shingles(F.col("text"), 3).alias("sh")).collect()
-    by_id = {r.doc_id: r.sh for r in out}
-    assert by_id[0][0] == "the quick brown"
-    assert by_id[4] == ["tiny"], "short docs collapse to whole-text shingle"
-    assert by_id[0] == by_id[3]
+def _md5_60(s):
+    """Python twin of textstats.token_hash."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _toks(spark):
+    # gram callers project the token array once and keep docs of >= 3
+    # tokens (the short doc 4 carries no gram)
+    return _docs(spark).select(
+        "doc_id", tokens(F.col("text")).alias("toks")).filter(F.size("toks") >= 3)
+
+
+def test_grams_and_gram_hashes(spark):
+    out = _toks(spark).select(
+        "doc_id", grams(F.col("toks"), 3).alias("g"),
+        gram_hashes(F.col("toks"), 3).alias("gh")).collect()
+    by_id = {r.doc_id: r for r in out}
+    assert 4 not in by_id
+    assert by_id[0].g[0] == "the quick brown" and len(by_id[0].g) == 7
+    assert sorted(by_id[0].gh) == sorted({_md5_60(g) for g in by_id[0].g})
+    assert by_id[0].gh == by_id[3].gh
 
 
 def test_minhash_identical_docs_same_signature(spark):
-    df = _docs(spark).select(
-        "doc_id", F.explode(shingles(F.col("text"), 3)).alias("g"))
-    sigs = (
-        df.select("doc_id", (token_hash(F.col("g")) % MINHASH_PRIME).alias("x"))
-        .groupBy("doc_id")
-        .agg(*minhash_expr(F.col("x")))
+    sigs = _toks(spark).select(
+        "doc_id", minhash_fold(gram_hashes(F.col("toks"), 3)).alias("sig")
     ).collect()
-    by_id = {r.doc_id: tuple(r)[1:] for r in sigs}
+    by_id = {r.doc_id: tuple(r.sig) for r in sigs}
     assert by_id[0] == by_id[3], "identical docs → identical signatures"
     # near-dups (one word differs) share most minhashes; disjoint docs none
     share_01 = sum(a == b for a, b in zip(by_id[0], by_id[1]))
@@ -216,24 +230,18 @@ def test_ivf_handles_sparse_nonzero_ids(spark):
     assert len(got) == 1 and got[0].neighbor_id == rows[6][0]
 
 
-def test_minhash_row_sigs_equals_agg_form(spark):
-    """Per-row fold and explode+groupBy MUST produce identical
-    signatures — they share the hash family and shingle set."""
-    from ocr_service_spark.functions.textstats import minhash_row_sigs
-
-    docs = _docs(spark).filter(F.size(F.split("text", " ")) >= 3)
-    row_form = {
-        r.doc_id: tuple(r.sig)
-        for r in docs.select("doc_id",
-                             minhash_row_sigs(F.col("text")).alias("sig")).collect()
-    }
-    agg_form = {}
-    sh = docs.select("doc_id", F.explode(shingles(F.col("text"), 3)).alias("g"))
-    x = (token_hash(F.col("g")) % MINHASH_PRIME).alias("x")
-    for r in sh.select("doc_id", x).groupBy("doc_id").agg(
-            *minhash_expr(F.col("x"))).collect():
-        agg_form[r.doc_id] = tuple(r)[1:]
-    assert row_form == agg_form
+def test_minhash_fold_equals_python_reference(spark):
+    """The per-row fold is min over the doc's distinct shingle hashes x
+    of (a*x + b) mod p for each (a, b) of the shared hash family."""
+    p = MINHASH_PRIME
+    rows = _toks(spark).select(
+        "doc_id", grams(F.col("toks"), 3).alias("g"),
+        minhash_fold(gram_hashes(F.col("toks"), 3)).alias("sig")).collect()
+    assert len(rows) == 4
+    for r in rows:
+        xs = {_md5_60(g) for g in r.g}
+        assert r.sig == [min((a % p * (x % p) + b) % p for x in xs)
+                         for a, b in MINHASH_COEFFS]
 
 
 def test_compression_ratio_matches_direct_zlib(spark):

@@ -41,7 +41,7 @@ def test_dedup_latest_has_no_window_or_global_sort(spark):
 
 
 def test_minhash_signatures_is_pure_map(spark):
-    # per-row fold (minhash_row_sigs): signature generation must never
+    # per-row fold (minhash_fold): signature generation must never
     # shuffle — the r1 explode+groupBy shape paid an exchange of every
     # (doc, shingle) row
     plan = _plan(spark, "minhash_signatures")

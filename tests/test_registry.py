@@ -45,7 +45,21 @@ def test_every_query_has_an_oracle_except_rows_only():
     assert set(ORACLE_SQL) == set(QUERIES) - rows_only
 
 
-@pytest.mark.parametrize("name", ["recrawl_dedup", "batch_summary"])
+# the reference operators re-expressed over extraction output, and the
+# near-dup, similarity, corpus and link-graph tiers whose Spark side and
+# oracle share one helper per job
+ORACLE_CHECKED = [
+    "recrawl_dedup", "batch_summary", "streaming_feedback",
+    "minhash_signatures", "minhash_lsh_pairs", "dup_clusters",
+    "corpus_build", "incremental_dedup", "train_split",
+    "embedding_topk", "embedding_lsh_ann", "embedding_ivf_ann",
+    "embedding_ann_recall", "chunk_dedup", "boilerplate_strip",
+    "host_stats", "host_cap", "link_graph", "host_pagerank",
+    "incremental_pagerank",
+]
+
+
+@pytest.mark.parametrize("name", ORACLE_CHECKED)
 def test_reexpressed_query_equals_its_oracle(spark, name):
     cc = _check_correctness()
     ok, msg = cc.compare(spark, cc.duckdb_views(SF), SF, name,

@@ -1,5 +1,5 @@
-"""Streaming extraction: drop-dir → watermarked url dedup → fused Arrow
-extraction + correction → parquet sink, incremental across drains,
+"""Streaming extraction: drop-dir → watermarked url dedup → the batch
+pipeline's record stages → parquet sink, incremental across drains,
 byte-identical to the batch kernel oracle."""
 
 import pyspark.sql.functions as F
@@ -7,13 +7,23 @@ import pyspark.sql.functions as F
 from ocr_service_spark.corpus import corpus_df, gen_docs
 from ocr_service_spark.kernel.correct import correct_document
 from ocr_service_spark.operators.correct import DEFAULT_CORRECTIONS
+from ocr_service_spark.pipeline import process_documents
 from ocr_service_spark.streaming.extract_stream import run_to_parquet, streaming_extract
+
+
+def _key(url, warc_ts):
+    return url, int(warc_ts.timestamp())
 
 
 def test_streaming_extract_plans_one_fused_arrow_node(spark):
     plan = streaming_extract(corpus_df(spark, 20, partitions=2)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_stream_emits_the_batch_record(spark):
+    docs = corpus_df(spark, 20, partitions=2)
+    assert streaming_extract(docs).schema == process_documents(docs).schema
 
 
 def test_streaming_extract_matches_kernel(spark, tmp_path):
@@ -27,18 +37,19 @@ def test_streaming_extract_matches_kernel(spark, tmp_path):
     n1 = out.count()
     assert n1 > 0
 
-    got = {r.doc_id: r for r in out.collect()}
-    expected = {d.doc_id: d.expected_text for d in gen_docs(60)
+    # doc_id stays behind with the input: a crawl is (url, warc_ts)
+    got = {_key(r.url, r.warc_ts): r for r in out.collect()}
+    expected = {_key(d.url, d.warc_ts): d.expected_text for d in gen_docs(60)
                 if d.expected_text is not None}
     # per-url dedup keeps ONE crawl per url; every surviving row with a
     # golden expectation must be byte-identical, and so must its
     # correction (truncated-html docs extract best-effort and carry no
     # golden)
     checked = 0
-    for doc_id, r in got.items():
-        if doc_id in expected:
-            assert r.extracted_text == expected[doc_id]
-            fixed, cs = correct_document(expected[doc_id], DEFAULT_CORRECTIONS)
+    for key, r in got.items():
+        if key in expected:
+            assert r.extracted_text == expected[key]
+            fixed, cs = correct_document(expected[key], DEFAULT_CORRECTIONS)
             assert r.corrected_text == fixed
             assert [c.asDict() for c in r.corrections_applied] == [
                 {k: c[k] for k in ("original", "corrected", "confidence", "method")}
@@ -56,4 +67,5 @@ def test_streaming_extract_matches_kernel(spark, tmp_path):
     run_to_parquet(spark, in_dir, out_dir, ck)
     out2 = spark.read.parquet(out_dir)
     assert out2.count() > n1
-    assert out2.filter(F.col("doc_id") >= 60).count() > 0
+    delta = {_key(d.url, d.warc_ts) for d in gen_docs(90)[60:]}
+    assert any(_key(r.url, r.warc_ts) in delta for r in out2.collect())

@@ -6,8 +6,9 @@ import json
 
 from ocr_service_spark.streaming.feedback import (
     FEEDBACK_SCHEMA,
+    _stats_delta,
     feedback_rate,
-    mine_candidates,
+    mine_from_stats,
     run_feedback_loop,
 )
 
@@ -120,7 +121,8 @@ def test_mine_candidates_thresholds(spark):
     fb = spark.createDataFrame(
         rows, "original string, corrected string, confidence double, "
               "applied boolean, type string")
-    got = {(r.original, r.corrected) for r in mine_candidates(fb, None).collect()}
+    mined = mine_from_stats(_stats_delta(fb, None), None)
+    got = {(r.original, r.corrected) for r in mined.collect()}
     assert got == {("a", "b")}
 
 
@@ -250,6 +252,32 @@ def test_corrections_dir_without_data_file_is_first_commit(spark, tmp_path):
     (state / "corrections").mkdir(parents=True)
     (state / "corrections" / "_SUCCESS").write_bytes(b"")
     (state / "corrections" / ".part-0.parquet.crc").write_bytes(b"x")
+    _drop(in_dir, [_fb(1, "teh", "the", 0.9), _fb(2, "teh", "the", 0.8)])
+    run_feedback_loop(spark, str(in_dir), str(state))
+    corr = spark.read.parquet(f"{state}/corrections")
+    assert {(r.original, r.corrected) for r in corr.collect()} == {("teh", "the")}
+
+
+def _stale_committed_task(df, table_dir, staged):
+    """Leave `df` as one committed task of a job that died before its
+    job commit: table_dir/_temporary/0/task_…/part-…."""
+    import shutil
+
+    df.coalesce(1).write.parquet(str(staged))
+    task = table_dir / "_temporary" / "0" / "task_202601010000_0001_m_000000"
+    shutil.copytree(staged, task, ignore=shutil.ignore_patterns("_*", ".*"))
+
+
+def test_stale_corrections_task_adds_no_phantom_pair(spark, tmp_path):
+    # a run killed inside its corrections append leaves committed tasks
+    # under corrections/_temporary; the next append's job commit must
+    # not merge them in
+    in_dir = tmp_path / "drop"
+    state = tmp_path / "state"
+    ghost = spark.createDataFrame(
+        [("ghost", "phantom", "auto_learned", 0.9)],
+        "original string, corrected string, method string, confidence double")
+    _stale_committed_task(ghost, state / "corrections", tmp_path / "staged")
     _drop(in_dir, [_fb(1, "teh", "the", 0.9), _fb(2, "teh", "the", 0.8)])
     run_feedback_loop(spark, str(in_dir), str(state))
     corr = spark.read.parquet(f"{state}/corrections")
