@@ -5,7 +5,8 @@ All pure `pyspark.sql.functions` expressions (whole-stage codegen, no
 Python on the hot path). Fingerprints use md5 hex strings so any SQL
 engine (the DuckDB oracle included) reproduces them bit-for-bit;
 numeric hashes derive from the first 15 md5 hex chars (60 bits, always
-< 2^63, portable via hex→int casts).
+< 2^63, portable via hex→int casts). Builders past `tokens` take a
+token array projected once per row (see let_col).
 
 Reference analogs: word counting F9 (core/ocr_engine.py:281), text
 length F10, Cyrillic detection F5 (core/correctors.py:177-199); the
@@ -117,9 +118,9 @@ def gram_hashes(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(grams(toks, n), token_hash))
 
 
-def stop_ratio(text: Column, stopwords: tuple[str, ...]) -> Column:
-    """Fraction of tokens that are stopwords (language-ID signal)."""
-    toks = tokens(text)
+def stop_ratio(toks: Column, stopwords: tuple[str, ...]) -> Column:
+    """Fraction of a BOUND token array's tokens that are stopwords
+    (language-ID signal), rounded to 4 places; 0 for []."""
     stops = F.array(*[F.lit(w) for w in stopwords])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
     return F.round(hits / F.greatest(F.size(toks), F.lit(1)), 4)

@@ -82,6 +82,14 @@ def _visible(status) -> bool:
     return not status.getPath().getName().startswith(("_", "."))
 
 
+def _has_data(fs, path) -> bool:
+    """Whether the tree at Hadoop Path `path` holds a file Spark reads
+    (not under a hidden dir such as an unfinished write's _temporary)."""
+    return fs.exists(path) and any(
+        _visible(st) and (st.isFile() or _has_data(fs, st.getPath()))
+        for st in fs.listStatus(path))
+
+
 def _buckets(fs, Path, data_dir: str) -> dict:
     """{bucket: [FileStatus of its data files]} under `data_dir`, {} if
     the dir does not exist yet."""
@@ -150,12 +158,14 @@ def clean_uncommitted(spark: SparkSession, data_dir: str, done: set[int]) -> lis
 
 def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Read the commit log, or None ONLY when it genuinely does not
-    exist (first run). A transient read failure must RAISE, never pass
+    exist: no log dir holds a data file (a first run, or one killed
+    inside its first lineage append, whose swept _temporary leaves
+    `lineage/` empty). A transient read failure must RAISE, never pass
     for "no lineage": committed_buckets()=∅ would send
     clean_uncommitted after every committed data bucket, and
     a next commit_seq of 1 would mint duplicate commit_seq values that
     silently corrupt time-travel/rollback (ADVICE r4). If the primary
-    dir is missing but `.lineage_old` exists, a concurrent (or crashed)
+    dir holds no data but `.lineage_old` does, a concurrent (or crashed)
     _swap_lineage is mid-swap — read the parked copy rather than
     treating a fully-committed table as empty. Lineage dirs written
     before the commit_seq column existed are rejected loudly (their
@@ -163,7 +173,7 @@ def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     filter)."""
     fs, Path = _fs(spark, out_dir)
     read_dir = next((d for d in (f"{out_dir}/lineage", f"{out_dir}/.lineage_old")
-                     if fs.exists(Path(d))), None)
+                     if _has_data(fs, Path(d))), None)
     if read_dir is None:
         return None  # first run
     df = spark.read.parquet(read_dir)  # any failure here propagates

@@ -24,9 +24,9 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ocr_service_spark.functions.textstats import token_hash
+from ocr_service_spark.functions.textstats import token_hash, tokens
 from ocr_service_spark.operators.dedup import dedup_latest
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -47,6 +47,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _with_tokens(docs: DataFrame, *cols) -> DataFrame:
+    """(doc_id, *cols, toks): each document's token array, projected
+    once — an expression over `toks` then reads a column instead of
+    re-running the normalization regex (textstats.let_col). A consumer
+    that only explodes the tokens calls explode(tokens(text)) instead
+    (see _shingles)."""
+    return docs.select("doc_id", *cols, tokens(F.col("text")).alias("toks"))
+
+
 # DuckDB twins of textstats.norm_ws / textstats.tokens — every
 # token-tier oracle routes through these so the SQL side tokenizes
 # realistic text (multi-space runs, tabs/newlines, empty docs) exactly
@@ -58,6 +67,36 @@ _NRM_SQL = ("trim(regexp_replace(text, "
             "'[ \\x09\\x0A\\x0B\\x0C\\x0D]+', ' ', 'g'))")
 _TOKS_SQL = (f"CASE WHEN {_NRM_SQL} = '' THEN [] "
              f"ELSE string_split({_NRM_SQL}, ' ') END")
+
+
+def _hash_sql(expr: str) -> str:
+    """DuckDB twin of textstats.token_hash: the first 15 md5 hex chars
+    of the string `expr` as a BIGINT."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
+
+
+# The url of a documents row, as entry_pipeline.htmlified_documents
+# renders it.
+_URL_SQL = ("'https://host' || CAST(doc_id % 97 AS VARCHAR) "
+            "|| '.example/doc/' || CAST(doc_id AS VARCHAR)")
+
+# CTE t: the documents table plus each row's token array `toks`
+# (DuckDB twin of _with_tokens).
+_T_SQL = f"t AS (SELECT *, {_TOKS_SQL} AS toks FROM documents)"
+
+# The 3-gram strings of `toks` in order (twin of textstats.grams).
+_GRAMS3_SQL = ("list_transform(range(0, len(toks) - 2),\n"
+               "        i -> array_to_string(list_slice(toks, i + 1, i + 3), ' '))")
+
+# CTEs t and g3 (doc_id, g): DuckDB twin of _shingles — one row per
+# distinct 3-gram hash of each document of >= 3 tokens, distinct after
+# hashing as in textstats.gram_hashes.
+_G3_CTES = (
+    f"{_T_SQL},\n"
+    f"    g3 AS (SELECT doc_id, unnest(list_distinct(list_transform({_GRAMS3_SQL},\n"
+    f"      x -> {_hash_sql('x')}))) AS g\n"
+    "      FROM t WHERE len(toks) >= 3)"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -75,8 +114,7 @@ _RECRAWL_DAYS = "CASE WHEN doc_id % 10 = 0 THEN 0 ELSE (doc_id + 2 * crawl) % 3 
     "recrawl_dedup",
     oracle=f"""
     WITH c AS (
-      SELECT 'https://host' || CAST(doc_id % 97 AS VARCHAR)
-               || '.example/doc/' || CAST(doc_id AS VARCHAR) AS url,
+      SELECT {_URL_SQL} AS url,
              doc_id * 3 + crawl AS crawl_id, crawl,
              TIMESTAMP '2025-01-01' + INTERVAL ({_RECRAWL_DAYS}) DAY AS warc_ts
       FROM documents, range(3) r(crawl)
@@ -148,30 +186,21 @@ def correction_join(spark, sf_dir):
     is a broadcast nested-loop against the tiny corrections dim with a
     cheap length-delta prefilter before levenshtein — the rewrite of the
     reference's O(tokens x corrections) python scan."""
-    from ocr_service_spark.functions.textstats import tokens
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     corr = spark.createDataFrame(_CORRECTIONS, "original string, corrected string")
     toks = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
-    exact = (
-        toks.join(F.broadcast(corr), toks.tok == corr.original)
-        .groupBy("original", "corrected")
-        .agg(F.count("*").alias("n"))
-        .select(F.lit("exact_match").alias("method"), "original", "corrected", "n")
-    )
+    def tally(method, matches):
+        return (matches.groupBy("original", "corrected").agg(F.count("*").alias("n"))
+                .select(F.lit(method).alias("method"), "original", "corrected", "n"))
+
     dtoks = toks.distinct()
-    sim = (
-        dtoks.join(
-            F.broadcast(corr),
-            (F.abs(F.length(dtoks.tok) - F.length(corr.original)) <= 2)
-            & F.levenshtein(dtoks.tok, corr.original).between(1, 2),
-        )
-        .groupBy("original", "corrected")
-        .agg(F.count("*").alias("n"))
-        .select(F.lit("similarity").alias("method"), "original", "corrected", "n")
-    )
-    return exact.unionByName(sim)
+    exact = toks.join(F.broadcast(corr), toks.tok == corr.original)
+    sim = dtoks.join(
+        F.broadcast(corr),
+        (F.abs(F.length(dtoks.tok) - F.length(corr.original)) <= 2)
+        & F.levenshtein(dtoks.tok, corr.original).between(1, 2))
+    return tally("exact_match", exact).unionByName(tally("similarity", sim))
 
 
 # ---------------------------------------------------------------------------
@@ -268,7 +297,7 @@ def extract_roundtrip(spark, sf_dir):
 
 @query(
     "area_reextract",
-    oracle=r"""
+    oracle=rf"""
     WITH p AS (
       SELECT doc_id, text, string_split(text, ' ') AS words,
              len(string_split(text, ' ')) AS nw,
@@ -293,8 +322,7 @@ def extract_roundtrip(spark, sf_dir):
              THEN cprev || ' ' || ctail ELSE ctail END AS last_chunk
       FROM c
     )
-    SELECT 'https://host' || CAST(doc_id % 97 AS VARCHAR)
-             || '.example/doc/' || CAST(doc_id AS VARCHAR) AS url,
+    SELECT {_URL_SQL} AS url,
       CASE WHEN n_eff >= 2 THEN 2 ELSE 1 END AS n_areas,
       CASE WHEN n_eff >= 2
         THEN '[Область 1]: ' || first_chunk || chr(10) || chr(10)
@@ -459,8 +487,6 @@ def text_quality_q(spark, sf_dir):
     reprs (found at sf0.1: 0.89675 → Spark 0.8967, DuckDB 0.8968).
     The pipeline operator (operators/quality.overall_quality) keeps the
     plain float mix — nothing downstream compares it cross-engine."""
-    from ocr_service_spark.functions.textstats import tokens
-
     docs = _t(spark, sf_dir, "documents")
     n = F.length(F.col("text"))
     letters = F.length(F.regexp_replace(F.col("text"), r"[^\p{L}]", ""))
@@ -489,37 +515,60 @@ def text_quality_q(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _EN_STOPS = ("the", "a")
+_GOPHER_STOPS = ("the", "a", "and", "of", "to")
+_ALPHA_WORD = "^[A-Za-zА-Яа-яЁё]+$"
+
+
+# Word-shape rules over a bound token array, rounded to 4 places. They
+# divide by the token count, so each caller guards its own empty
+# document (NULL in token_stats and gopher_rules, 0 in corpus_build).
+# The stopword rule is textstats.stop_ratio.
+def _mean_token_len(toks: Column) -> Column:
+    n_chars = F.aggregate(F.transform(toks, F.length), F.lit(0), lambda a, x: a + x)
+    return F.round(n_chars / F.size(toks).cast("double"), 4)
+
+
+def _alpha_ratio(toks: Column) -> Column:
+    n_alpha = F.size(F.filter(toks, lambda w: w.rlike(_ALPHA_WORD)))
+    return F.round(n_alpha / F.size(toks).cast("double"), 4)
+
+
+# DuckDB twins over a list column `toks`.
+_MEAN_TOKEN_LEN_SQL = ("ROUND(list_sum(list_transform(toks, w -> length(w)))"
+                       " / CAST(len(toks) AS DOUBLE), 4)")
+_ALPHA_RATIO_SQL = (f"ROUND(len(list_filter(toks, w -> regexp_matches(w, '{_ALPHA_WORD}')))"
+                    " / CAST(len(toks) AS DOUBLE), 4)")
+
+
+def _stop_ratio_sql(stops: tuple[str, ...]) -> str:
+    words = ", ".join(f"'{w}'" for w in stops)
+    return f"ROUND(len(list_filter(toks, w -> w IN ({words}))) / greatest(len(toks), 1), 4)"
 
 
 @query(
     "lang_profile",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, lang, text, {_TOKS_SQL} AS toks FROM documents
-    )
+    WITH {_T_SQL}
     SELECT doc_id, lang,
            len(toks) AS n_tokens,
-           ROUND(len(list_filter(toks, t -> t IN ('the', 'a')))
-                 / greatest(len(toks), 1), 4) AS stop_ratio,
+           {_stop_ratio_sql(_EN_STOPS)} AS stop_ratio,
            regexp_matches(text, '[Ѐ-ӿ]') AS has_cyrillic,
-           CASE WHEN ROUND(len(list_filter(toks, t -> t IN ('the', 'a')))
-                     / greatest(len(toks), 1), 4) >= 0.05
-                THEN 'en' ELSE 'other' END AS guess_lang
-    FROM d
+           CASE WHEN stop_ratio >= 0.05 THEN 'en' ELSE 'other' END AS guess_lang
+    FROM t
     """,
 )
 def lang_profile(spark, sf_dir):
     """Stopword-ratio language ID + Cyrillic detection (F5,
     core/correctors.py:177-199) — the n-gram-heuristic lang-ID of the
     training-data tier as pure exprs."""
-    from ocr_service_spark.functions.textstats import stop_ratio, tokens
+    from ocr_service_spark.functions.textstats import stop_ratio
 
-    docs = _t(spark, sf_dir, "documents")
-    sr = stop_ratio(F.col("text"), _EN_STOPS)
-    return docs.select(
+    d = _with_tokens(_t(spark, sf_dir, "documents"), "lang", "text")
+    sr = stop_ratio(F.col("toks"), _EN_STOPS)
+    return d.select(
         "doc_id",
         "lang",
-        F.size(tokens(F.col("text"))).alias("n_tokens"),
+        F.size("toks").alias("n_tokens"),
         sr.alias("stop_ratio"),
         F.col("text").rlike("[Ѐ-ӿ]").alias("has_cyrillic"),
         F.when(sr >= 0.05, F.lit("en")).otherwise(F.lit("other")).alias("guess_lang"),
@@ -529,19 +578,14 @@ def lang_profile(spark, sf_dir):
 @query(
     "token_stats",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents
-    )
+    WITH {_T_SQL}
     SELECT doc_id,
            len(toks) AS n_tokens,
            len(list_distinct(toks)) AS n_distinct,
-           CASE WHEN len(toks) > 0
-                THEN ROUND(list_sum(list_transform(toks, t -> length(t)))
-                           / len(toks), 4)
-                ELSE NULL END AS avg_token_len,
+           CASE WHEN len(toks) > 0 THEN {_MEAN_TOKEN_LEN_SQL} END AS avg_token_len,
            len(regexp_extract_all(text,
                '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\x09\\x0A\\x0B\\x0C\\x0D]')) AS bpe_ish_tokens
-    FROM d
+    FROM t
     """,
 )
 def token_stats(spark, sf_dir):
@@ -550,20 +594,13 @@ def token_stats(spark, sf_dir):
     core/ocr_engine.py:281). Empty/whitespace-only docs report
     n_tokens = 0 and a NULL avg_token_len (never a divide-by-zero —
     ANSI mode would throw)."""
-    from ocr_service_spark.functions.textstats import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    return docs.select(
+    d = _with_tokens(_t(spark, sf_dir, "documents"), "text")
+    toks = F.col("toks")
+    return d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
-        F.when(
-            F.size(toks) > 0,
-            F.round(
-                F.aggregate(F.transform(toks, F.length), F.lit(0),
-                            lambda a, x: a + x) / F.size(toks), 4),
-        ).alias("avg_token_len"),
+        F.when(F.size(toks) > 0, _mean_token_len(toks)).alias("avg_token_len"),
         F.size(
             # \s spelled out: Java's class includes \x0B, RE2's doesn't
             F.regexp_extract_all(
@@ -577,15 +614,10 @@ def token_stats(spark, sf_dir):
 @query(
     "doc_fingerprint",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, text, {_NRM_SQL} AS nrm, {_TOKS_SQL} AS toks
-      FROM documents
-    ), s AS (
+    WITH {_T_SQL}, s AS (
       SELECT doc_id, text,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(0, len(toks) - 2),
-                       i -> array_to_string(list_slice(toks, i + 1, i + 3), ' ')))
-                  ELSE [nrm] END AS sh
+             CASE WHEN len(toks) >= 3 THEN list_distinct({_GRAMS3_SQL})
+                  ELSE [{_NRM_SQL}] END AS sh
       FROM t
     )
     SELECT doc_id,
@@ -602,14 +634,10 @@ def doc_fingerprint(spark, sf_dir):
     — the rolling-fingerprint of the training-data tier). All hex
     strings: portable across engines bit-for-bit. Token array projected
     once (textstats.let_col rationale)."""
-    from ocr_service_spark.functions.textstats import grams, norm_ws, tokens
+    from ocr_service_spark.functions.textstats import grams, norm_ws
 
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", "text",
-        norm_ws(F.col("text")).alias("nrm"),
-        tokens(F.col("text")).alias("toks"),
-    )
+    d = _with_tokens(_t(spark, sf_dir, "documents"),
+                     "text", norm_ws(F.col("text")).alias("nrm"))
     sh = F.array_distinct(
         F.when(F.size("toks") >= 3, grams(F.col("toks"), 3))
         .otherwise(F.array(F.col("nrm"))))
@@ -641,16 +669,11 @@ def exact_dedup_q(spark, sf_dir):
 @query(
     "jaccard_pairs",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), sh0 AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(range(0, len(toks) - 2),
-             i -> ('0x' || substr(md5(array_to_string(list_slice(toks, i + 1, i + 3), ' ')), 1, 15))::BIGINT))) AS g
-      FROM t WHERE len(toks) >= 3
-    ), hot AS (
-      SELECT g FROM sh0 GROUP BY g HAVING COUNT(*) > 100
+    WITH {_G3_CTES},
+    hot AS (
+      SELECT g FROM g3 GROUP BY g HAVING COUNT(*) > 100
     ), sh AS (
-      SELECT * FROM sh0 WHERE g NOT IN (SELECT g FROM hot)
+      SELECT * FROM g3 WHERE g NOT IN (SELECT g FROM hot)
     ), sizes AS (
       SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
     ), pairs AS (
@@ -678,17 +701,9 @@ def jaccard_pairs(spark, sf_dir):
     60-bit integer hashes (not 32-char md5 hex strings — r3): the
     self-join shuffles ~4x fewer key bytes for identical pair counts,
     and the oracle uses the same hash so even a collision is mirrored."""
-    from ocr_service_spark.functions.textstats import gram_hashes, tokens
     from ocr_service_spark.operators.dedup import drop_hot_shingles
 
-    docs = _t(spark, sf_dir, "documents")
-    # token array projected ONCE before the shingle transform — inlining
-    # tokens() re-runs the normalization regex per gram (textstats.let_col)
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") >= 3)
-    sh = d.select(
-        "doc_id", F.explode(gram_hashes(F.col("toks"), 3)).alias("g"))
-    sh = drop_hot_shingles(sh, "g", max_df=100)
+    sh = drop_hot_shingles(_shingles(_t(spark, sf_dir, "documents")), "g", max_df=100)
     # Materialize the surviving shingle table ONCE: it feeds three
     # consumers (per-doc sizes + both self-join sides) and would
     # otherwise recompute the tokenize→shingle→hash explode each time.
@@ -718,14 +733,14 @@ def jaccard_pairs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def _sigs_oracle_ctes() -> str:
-    """CTEs t, sh, sigs, bands — DuckDB twin of _shingle_table →
+    """CTEs t, g3, sigs, bands — DuckDB twin of _shingle_table →
     _signatures → _band_keys: exploded 3-gram shingle hashes reduced
     mod MINHASH_PRIME, SQL MIN per hash function (the same mins the
     Spark per-row fold computes), and each signature's 4 band keys."""
     from ocr_service_spark.functions.textstats import MINHASH_COEFFS, MINHASH_PRIME
 
     mins = ", ".join(
-        f"MIN(({a % MINHASH_PRIME} * x + {b}) % {MINHASH_PRIME}) AS mh{i}"
+        f"MIN(({a % MINHASH_PRIME} * (g % {MINHASH_PRIME}) + {b}) % {MINHASH_PRIME}) AS mh{i}"
         for i, (a, b) in enumerate(MINHASH_COEFFS)
     )
     bands = " UNION ALL ".join(
@@ -734,27 +749,34 @@ def _sigs_oracle_ctes() -> str:
         for bi in range(4)
     )
     return (
-        f"t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),\n"
-        "    sh AS (SELECT doc_id,\n"
-        "      ('0x' || substr(unnest(list_distinct(list_transform(range(0, len(toks) - 2),\n"
-        "        i -> md5(array_to_string(list_slice(toks, i + 1, i + 3), ' '))))), 1, 15))::BIGINT\n"
-        "        % 1000000007 AS x\n"
-        "      FROM t WHERE len(toks) >= 3),\n"
-        f"    sigs AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),\n"
+        f"{_G3_CTES},\n"
+        f"    sigs AS (SELECT doc_id, {mins} FROM g3 GROUP BY doc_id),\n"
         f"    bands AS ({bands})"
     )
 
 
+def _g3(toks: Column) -> Column:
+    """A bound token array's distinct 3-gram shingle hashes ([] under 3
+    tokens, so a projection of it is safe before any length filter)."""
+    from ocr_service_spark.functions.textstats import gram_hashes
+
+    return (F.when(F.size(toks) >= 3, gram_hashes(toks, 3))
+            .otherwise(F.array().cast("array<bigint>")))
+
+
 def _shingle_table(docs: DataFrame, *cols: str) -> DataFrame:
     """(doc_id, *cols, toks, g3): each doc's token array, projected
-    once, and its distinct 3-gram shingle hashes ([] under 3 tokens, so
-    the projection is safe to materialize before any length filter)."""
-    from ocr_service_spark.functions.textstats import gram_hashes, tokens
+    once, and its _g3 shingle hashes."""
+    return _with_tokens(docs, *cols).select("*", _g3(F.col("toks")).alias("g3"))
 
-    return docs.select("doc_id", *cols, tokens(F.col("text")).alias("toks")).select(
-        "*",
-        F.when(F.size("toks") >= 3, gram_hashes(F.col("toks"), 3))
-         .otherwise(F.array().cast("array<bigint>")).alias("g3"))
+
+def _shingles(docs: DataFrame, *cols: str) -> DataFrame:
+    """(doc_id, *cols, g): one row per _g3 shingle hash of each doc.
+    The explode reads the expression, not a projected g3 column: for
+    an exploded array column Catalyst infers a size(g3) > 0 filter and
+    pushes it below the projection, hashing every gram twice."""
+    return _with_tokens(docs, *cols).select(
+        "doc_id", *cols, F.explode(_g3(F.col("toks"))).alias("g"))
 
 
 def _signatures(sh: DataFrame) -> DataFrame:
@@ -870,10 +892,7 @@ def simhash(spark, sf_dir):
     multiplicity), one conditional ±1 sum per bit, reassemble the
     fingerprint. Single shuffle on doc_id with 32 map-side-combinable
     sums — the standard near-dup fingerprint at corpus scale."""
-    from ocr_service_spark.functions.textstats import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = _t(spark, sf_dir, "documents").select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     h = toks.select("doc_id", token_hash(F.col("tok")).alias("h"))
     sums = h.groupBy("doc_id").agg(*[
@@ -899,7 +918,7 @@ def _simhash_oracle() -> str:
     )
     return (
         "WITH h AS (SELECT doc_id,\n"
-        f"      ('0x' || substr(md5(unnest({_TOKS_SQL})), 1, 15))::BIGINT AS h\n"
+        f"      {_hash_sql(f'unnest({_TOKS_SQL})')} AS h\n"
         "    FROM documents),\n"
         f"    s AS (SELECT doc_id, {sums} FROM h GROUP BY doc_id)\n"
         f"    SELECT doc_id, CAST({fp} AS BIGINT) AS simhash32 FROM s"
@@ -1059,10 +1078,8 @@ def multimodal_meta(spark, sf_dir):
 
 @query(
     "lineage_restart",
-    oracle="""
-    SELECT ('0x' || substr(md5('https://host' || CAST(doc_id % 97 AS VARCHAR)
-               || '.example/doc/' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-             % 8 AS bucket,
+    oracle=f"""
+    SELECT {_hash_sql(_URL_SQL)} % 8 AS bucket,
            COUNT(*) AS n_rows,
            TRUE AS ok
     FROM documents
@@ -1108,7 +1125,7 @@ def lineage_restart(spark, sf_dir):
 
 @query(
     "lineage_timetravel",
-    oracle="""
+    oracle=f"""
     SELECT b AS bucket,
            CASE WHEN b < 4 THEN COUNT(*) END AS n_rows_asof1,
            COUNT(*) AS n_rows_final,
@@ -1116,9 +1133,7 @@ def lineage_restart(spark, sf_dir):
            TRUE AS replay_ok,
            TRUE AS expired_rollback_raises
     FROM (
-      SELECT ('0x' || substr(md5('https://host' || CAST(doc_id % 97 AS VARCHAR)
-                 || '.example/doc/' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-               % 8 AS b
+      SELECT {_hash_sql(_URL_SQL)} % 8 AS b
       FROM documents
     )
     GROUP BY b
@@ -1409,26 +1424,23 @@ def pdf_extract(spark, sf_dir):
 # C4/RefinedWeb-style corpus hygiene ops)
 # ---------------------------------------------------------------------------
 
-# CTE `chunks(doc_id, i, chunk)`: each document's non-overlapping
-# 16-token chunks in reading order (DuckDB twin of _chunks).
-_CHUNKS_SQL = f"""chunks AS (
+# CTEs t and `chunks(doc_id, i, chunk)`: each document's
+# non-overlapping 16-token chunks in reading order (DuckDB twin of
+# _chunks).
+_CHUNKS_SQL = f"""{_T_SQL}, chunks AS (
       SELECT doc_id, i,
              array_to_string(list_slice(toks, 16 * i + 1, 16 * i + 16), ' ') AS chunk
-      FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
-           unnest(range(0, CAST(ceil(len(toks) / 16.0) AS BIGINT))) AS u(i)
+      FROM t, unnest(range(0, CAST(ceil(len(toks) / 16.0) AS BIGINT))) AS u(i)
     )"""
 
 
 def _chunks(docs: DataFrame) -> DataFrame:
     """(doc_id, chunks): each document's non-overlapping 16-token
     chunks, in reading order, as strings."""
-    from ocr_service_spark.functions.textstats import tokens
-
     # empty docs: nb = 0 would make sequence(0, -1) DESCEND ([0, -1])
     # and fabricate two bogus chunks — filter them out (the oracle's
-    # range(0, 0) drops them implicitly); toks projected once
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") > 0)
+    # range(0, 0) drops them implicitly)
+    d = _with_tokens(docs).filter(F.size("toks") > 0)
     nb = F.ceil(F.size("toks") / F.lit(16.0)).cast("int")
     return d.select("doc_id", F.transform(
         F.sequence(F.lit(0), nb - 1),
@@ -1556,8 +1568,7 @@ def _mk_stream_tmp(prefix: str) -> str:
 # The split rule of train_split and corpus_build: bucket = salted
 # md5(doc_id) mod 100 → 80/10/10 train/valid/test, and a per-language
 # sampling rate (50% of 'en', 100% of the rest) on the same bucket.
-_SPLIT_BUCKET_SQL = (
-    "('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100")
+_SPLIT_BUCKET_SQL = _hash_sql("'split:' || CAST(doc_id AS VARCHAR)") + " % 100"
 _SPLIT_SQL = "CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'valid' ELSE 'test' END"
 _IN_SAMPLE_SQL = "bucket < (CASE WHEN lang = 'en' THEN 50 ELSE 100 END)"
 
@@ -1598,8 +1609,6 @@ def train_split(spark, sf_dir):
     idempotency and can't be oracle-checked. Pure map, no shuffle;
     the hash is the portable 60-bit md5 prefix used across the repo
     (textstats.token_hash, as lineage.bucket_expr)."""
-    from ocr_service_spark.functions.textstats import tokens
-
     docs = _t(spark, sf_dir, "documents")
     split, in_sample = _split_and_sample()
     return docs.select(
@@ -1613,9 +1622,8 @@ def train_split(spark, sf_dir):
 
 @query(
     "warc_extract",
-    oracle="""
-    SELECT 'https://host' || CAST(doc_id % 97 AS VARCHAR)
-             || '.example/doc/' || CAST(doc_id AS VARCHAR) AS url,
+    oracle=f"""
+    SELECT {_URL_SQL} AS url,
            text AS extracted_text,
            len(string_split(text, ' ')) AS n_tokens
     FROM documents
@@ -1833,17 +1841,25 @@ def embedding_ann_recall(spark, sf_dir):
 ORACLE_SQL["embedding_ann_recall"] = _ann_recall_oracle()
 
 
+def _term_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, tf): each document's token multiset, one row per
+    distinct token — a map-side combinable count."""
+    return (docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+            .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
+
+
+# CTEs t and tf(doc_id, term, tf): the DuckDB twin of _term_counts.
+_TF_SQL = (f"{_T_SQL},\n    tf AS (SELECT doc_id, term, COUNT(*) AS tf\n"
+           "      FROM t, unnest(toks) AS u(term) GROUP BY doc_id, term)")
+
+
 @query(
     "token_entropy",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, unnest({_TOKS_SQL}) AS tok FROM documents
-    ), c AS (
-      SELECT doc_id, tok, COUNT(*) AS n FROM t GROUP BY doc_id, tok
-    )
-    SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_tokens,
+    WITH {_TF_SQL}
+    SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
            COUNT(*) AS n_distinct
-    FROM c GROUP BY doc_id
+    FROM tf GROUP BY doc_id
     """,
 )
 def token_entropy(spark, sf_dir):
@@ -1856,13 +1872,8 @@ def token_entropy(spark, sf_dir):
     while its input distribution is fully gated. Scale shape: explode
     → (doc, token) count (map-side combinable) → per-doc agg; one
     shuffle on doc_id."""
-    from ocr_service_spark.functions.textstats import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    c = (docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
-         .groupBy("doc_id", "tok").agg(F.count("*").alias("n")))
-    return c.groupBy("doc_id").agg(
-        F.sum("n").alias("n_tokens"),
+    return _term_counts(_t(spark, sf_dir, "documents")).groupBy("doc_id").agg(
+        F.sum("tf").alias("n_tokens"),
         F.count("*").alias("n_distinct"),
     )
 
@@ -1870,20 +1881,13 @@ def token_entropy(spark, sf_dir):
 @query(
     "gopher_rules",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks, text FROM documents
-    ), m AS (
+    WITH {_T_SQL}, m AS (
       SELECT doc_id,
              len(toks) AS n_words,
-             CASE WHEN len(toks) > 0 THEN
-               ROUND(list_sum(list_transform(toks, w -> length(w)))
-                     / CAST(len(toks) AS DOUBLE), 4) END AS mean_word_len,
-             CASE WHEN len(toks) > 0 THEN
-               ROUND(len(list_filter(toks, w -> regexp_matches(w, '^[A-Za-zА-Яа-яЁё]+$')))
-                     / CAST(len(toks) AS DOUBLE), 4) END AS alpha_word_ratio,
-             CASE WHEN len(toks) > 0 THEN
-               ROUND(len(list_filter(toks, w -> w IN ('the', 'a', 'and', 'of', 'to')))
-                     / CAST(len(toks) AS DOUBLE), 4) END AS stop_hit_ratio
+             CASE WHEN len(toks) > 0 THEN {_MEAN_TOKEN_LEN_SQL} END AS mean_word_len,
+             CASE WHEN len(toks) > 0 THEN {_ALPHA_RATIO_SQL} END AS alpha_word_ratio,
+             CASE WHEN len(toks) > 0 THEN {_stop_ratio_sql(_GOPHER_STOPS)} END
+               AS stop_hit_ratio
       FROM t
     )
     SELECT doc_id, n_words, mean_word_len, alpha_word_ratio, stop_hit_ratio,
@@ -1901,24 +1905,19 @@ def gopher_rules(spark, sf_dir):
     map, rounded on both sides before any comparison. Empty docs get
     NULL ratios (guarded — ANSI division by zero throws) and
     passes_gopher = false (coalesced on both sides)."""
-    from ocr_service_spark.functions.textstats import tokens
+    from ocr_service_spark.functions.textstats import stop_ratio
 
-    docs = _t(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
+    d = _with_tokens(_t(spark, sf_dir, "documents"))
+    toks = F.col("toks")
     n_words = F.size(toks)
-    fl = lambda c: F.when(n_words > 0,
-                          F.round(c / n_words.cast("double"), 4))
-    mean_wl = fl(F.aggregate(F.transform(toks, F.length),
-                             F.lit(0), lambda a, v: a + v))
-    alpha_ratio = fl(F.size(F.filter(toks, lambda w: w.rlike("^[A-Za-zА-Яа-яЁё]+$"))))
-    stops = F.array(*[F.lit(w) for w in ("the", "a", "and", "of", "to")])
-    stop_ratio_ = fl(F.size(F.filter(toks, lambda w: F.array_contains(stops, w))))
-    return docs.select(
+    mean_wl = F.when(n_words > 0, _mean_token_len(toks))
+    alpha_ratio = F.when(n_words > 0, _alpha_ratio(toks))
+    return d.select(
         "doc_id",
         n_words.alias("n_words"),
         mean_wl.alias("mean_word_len"),
         alpha_ratio.alias("alpha_word_ratio"),
-        stop_ratio_.alias("stop_hit_ratio"),
+        F.when(n_words > 0, stop_ratio(toks, _GOPHER_STOPS)).alias("stop_hit_ratio"),
         F.coalesce(
             n_words.between(50, 100_000)
             & mean_wl.between(3, 10)
@@ -1931,9 +1930,7 @@ def gopher_rules(spark, sf_dir):
 @query(
     "ngram_repetition",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), b AS (
+    WITH {_T_SQL}, b AS (
       SELECT doc_id,
              toks[i] || ' ' || toks[i + 1] AS bigram
       FROM t, unnest(range(1, len(toks))) AS u(i)
@@ -1959,13 +1956,13 @@ def ngram_repetition(spark, sf_dir):
     shuffled every bigram string of every document (12 s at sf0.1);
     this computes the identical numbers in-row (the oracle still uses
     the relational GROUP BY form — same math, independent plan)."""
-    from ocr_service_spark.functions.textstats import grams, let_col, tokens
+    from ocr_service_spark.functions.textstats import grams, let_col
 
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") >= 2)
+    d = _with_tokens(_t(spark, sf_dir, "documents")).filter(F.size("toks") >= 2)
 
     def run_length_max(sorted_bg):
+        # `best` is the longest run before the current one; the finish
+        # folds in the last run
         return F.aggregate(
             sorted_bg,
             F.struct(
@@ -1977,12 +1974,9 @@ def ngram_repetition(spark, sf_dir):
                 x.alias("prev"),
                 F.when(x == acc["prev"], acc["run"] + 1)
                 .otherwise(F.lit(1).cast("bigint")).alias("run"),
-                F.greatest(
-                    acc["best"],
-                    F.when(x == acc["prev"], acc["run"] + 1)
-                    .otherwise(F.lit(1).cast("bigint"))).alias("best"),
+                F.greatest(acc["best"], acc["run"]).alias("best"),
             ),
-            lambda acc: acc["best"],
+            lambda acc: F.greatest(acc["best"], acc["run"]),
         )
 
     # bind the bigram array once per row; n_bigrams + the fold read it
@@ -2006,45 +2000,42 @@ def ngram_repetition(spark, sf_dir):
 # Corpus-construction tier: decontamination, dup clusters, URL gate
 # ---------------------------------------------------------------------------
 
-_DECON_N = 3  # test-scale n-gram; production decontamination uses 8-13
+def _eval_hits(g: DataFrame) -> DataFrame:
+    """The (doc_id, g) shingle rows (_shingles) of training docs whose
+    3-gram g the eval split (doc_id % 97 == 0, standing in for a
+    benchmark suite) also holds. The eval shingle set is tiny by
+    construction (benchmarks are MBs against a 100-TB corpus), so it is
+    broadcast and the probe is a map-side hash join on each doc's
+    (already distinct) shingle hashes."""
+    ev = g.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
+    return g.filter(F.col("doc_id") % 97 != 0).join(F.broadcast(ev), "g")
+
+
+# CTEs ev, hits over g3: the DuckDB twin of _eval_hits.
+_EVAL_HITS_SQL = (
+    "ev AS (SELECT DISTINCT g FROM g3 WHERE doc_id % 97 = 0),\n"
+    "    hits AS (SELECT g3.doc_id, g FROM g3 JOIN ev USING (g)\n"
+    "      WHERE g3.doc_id % 97 <> 0)"
+)
 
 
 @query(
     "decontaminate",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
-    g AS (SELECT doc_id,
-            unnest(list_distinct(list_transform(range(0, len(toks) - {_DECON_N - 1}),
-              i -> ('0x' || substr(md5(array_to_string(list_slice(toks, i + 1, i + {_DECON_N}), ' ')), 1, 15))::BIGINT)))
-            AS g
-          FROM t WHERE len(toks) >= {_DECON_N}),
-    ev AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0)
-    SELECT g.doc_id, COUNT(*) AS n_hits
-    FROM g JOIN ev USING (g)
-    WHERE g.doc_id % 97 <> 0
-    GROUP BY g.doc_id
+    WITH {_G3_CTES},
+    {_EVAL_HITS_SQL}
+    SELECT doc_id, COUNT(*) AS n_hits FROM hits GROUP BY doc_id
     """,
 )
 def decontaminate(spark, sf_dir):
-    """Benchmark decontamination: flag training docs sharing any n-gram
-    with the eval split (doc_id % 97 == 0 stands in for a benchmark
-    suite). The eval n-gram set is tiny by construction (benchmarks are
-    MBs against a 100-TB corpus), so it is broadcast and the probe is a
-    map-side hash join on each doc's (already distinct) shingle hashes;
-    the only shuffle is the final combinable per-doc count. n=3 keeps
-    the small-SF gate dense (171 contaminated docs at sf0.01);
-    production decontamination raises n to 8-13 — same plan, different
-    constant."""
-    from ocr_service_spark.functions.textstats import gram_hashes, tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
-        F.size("toks") >= _DECON_N)
-    g = d.select("doc_id", F.explode(gram_hashes(F.col("toks"), _DECON_N)).alias("g"))
-    ev = g.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
+    """Benchmark decontamination: flag training docs sharing any 3-gram
+    with the eval split (_eval_hits); the only shuffle is the final
+    combinable per-doc count. n=3, the shingle width, keeps the
+    small-SF gate dense (171 contaminated docs at sf0.01); production
+    decontamination uses 8-13-grams — the same plan over a wider
+    shingle table."""
     return (
-        g.filter(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(ev), "g")
+        _eval_hits(_shingles(_t(spark, sf_dir, "documents")))
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hits"))
     )
@@ -2257,21 +2248,11 @@ ukeep AS (SELECT doc_id FROM fin WHERE {_URL_KEEP_SQL}),
 {_reach_oracle_ctes()},
 noncanon AS (SELECT u AS doc_id FROM reach GROUP BY u
              HAVING LEAST(u, MIN(v)) <> u),
-tt AS (SELECT doc_id, lang, {_TOKS_SQL} AS toks FROM documents),
-dg AS (SELECT doc_id,
-        unnest(list_distinct(list_transform(range(0, len(toks) - {_DECON_N - 1}),
-          i -> ('0x' || substr(md5(array_to_string(list_slice(toks, i + 1, i + {_DECON_N}), ' ')), 1, 15))::BIGINT)))
-        AS g
-      FROM tt WHERE len(toks) >= {_DECON_N}),
-dev AS (SELECT DISTINCT g FROM dg WHERE doc_id % 97 = 0),
-contam AS (SELECT DISTINCT dg.doc_id FROM dg JOIN dev USING (g)
-           WHERE dg.doc_id % 97 <> 0),
+{_EVAL_HITS_SQL},
 h AS (SELECT doc_id, lang, len(toks) AS n_tokens,
-        CASE WHEN len(toks) > 0 THEN
-          ROUND(len(list_filter(toks, w -> regexp_matches(w, '^[A-Za-zА-Яа-яЁё]+$')))
-                / CAST(len(toks) AS DOUBLE), 4) ELSE 0 END AS alpha_ratio,
+        CASE WHEN len(toks) > 0 THEN {_ALPHA_RATIO_SQL} ELSE 0 END AS alpha_ratio,
         {_SPLIT_BUCKET_SQL} AS bucket
-      FROM tt)
+      FROM t)
 SELECT h.doc_id, h.lang, h.n_tokens, {_SPLIT_SQL} AS split
 FROM h
 JOIN ukeep USING (doc_id)
@@ -2279,7 +2260,7 @@ WHERE h.n_tokens >= 10 AND h.alpha_ratio >= 0.8
   AND h.doc_id % 97 <> 0
   AND {_IN_SAMPLE_SQL}
   AND h.doc_id NOT IN (SELECT doc_id FROM noncanon)
-  AND h.doc_id NOT IN (SELECT doc_id FROM contam)
+  AND h.doc_id NOT IN (SELECT doc_id FROM hits)
 """
 
 
@@ -2308,32 +2289,20 @@ def corpus_build(spark, sf_dir):
     gate, instead of each branch re-scanning and re-tokenizing (at
     production scale this projection is the written-once shingle
     table)."""
-    # the shared projection hands the SAME 3-gram hashes to LSH and
-    # decontamination — only valid while the decon n equals the
-    # (fixed) LSH shingle width
-    assert _DECON_N == 3
-
     docs = _t(spark, sf_dir, "documents")
     proj = _shingle_table(_with_url_gate(docs), "lang", "keep").localCheckpoint(eager=False)
     labels = _dup_labels(_signatures(proj))
     noncanon = labels.filter(F.col("id") != F.col("label")).select(
         F.col("id").alias("doc_id"))
 
+    # exploding the projected g3 is safe here: the size(g3) > 0 filter
+    # Catalyst infers (see _shingles) stops at the checkpoint
     g = proj.select("doc_id", F.explode("g3").alias("g"))
-    ev = g.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
-    contam = (
-        g.filter(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(ev), "g").select("doc_id").distinct())
+    contam = _eval_hits(g).select("doc_id").distinct()
 
     b = proj.filter(F.col("keep")).select("doc_id", "lang", "toks")
     n_words = F.size(F.col("toks"))
-    alpha = F.when(
-        n_words > 0,
-        F.round(
-            F.size(F.filter(F.col("toks"),
-                            lambda w: w.rlike("^[A-Za-zА-Яа-яЁё]+$")))
-            / n_words.cast("double"), 4)
-    ).otherwise(F.lit(0.0))
+    alpha = F.when(n_words > 0, _alpha_ratio(F.col("toks"))).otherwise(F.lit(0.0))
     split, in_sample = _split_and_sample()
     return (
         b.filter((n_words >= 10) & (alpha >= 0.8)
@@ -2360,11 +2329,8 @@ _KMV_NUM = float((_KMV_K - 1) * (1 << 60))
 @query(
     "kmv_distinct",
     oracle=f"""
-    WITH t AS (SELECT source, {_TOKS_SQL} AS toks FROM documents),
-    d AS (SELECT DISTINCT source,
-            ('0x' || substr(unnest(list_transform(range(0, len(toks) - 2),
-              i -> md5(array_to_string(list_slice(toks, i + 1, i + 3), ' ')))), 1, 15))::BIGINT AS h
-          FROM t WHERE len(toks) >= 3),
+    WITH {_G3_CTES},
+    d AS (SELECT DISTINCT t.source, g3.g AS h FROM g3 JOIN t USING (doc_id)),
     r AS (SELECT source, h,
             row_number() OVER (PARTITION BY source ORDER BY h) AS rn
           FROM d),
@@ -2391,23 +2357,17 @@ def kmv_distinct(spark, sf_dir):
     k-th order statistic of the distinct hash set via a window, one
     shuffle. For ungated production use Spark's native
     approx_count_distinct (HLL) is the drop-in."""
-    from ocr_service_spark.functions.textstats import gram_hashes, tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    d = (docs.select("source", tokens(F.col("text")).alias("toks"))
-         .filter(F.size("toks") >= 3)
-         .select("source", F.explode(gram_hashes(F.col("toks"), 3)).alias("h"))
-         .distinct())
+    d = _shingles(_t(spark, sf_dir, "documents"), "source").select("source", "g").distinct()
     from pyspark.sql import Window
-    w = Window.partitionBy("source").orderBy("h")
+    w = Window.partitionBy("source").orderBy("g")
     kth = (d.withColumn("rn", F.row_number().over(w))
            .filter(F.col("rn") == _KMV_K)
-           .select("source", "h"))
+           .select("source", "g"))
     ex = d.groupBy("source").agg(F.count("*").alias("exact_distinct"))
     return (
         kth.join(ex, "source")
         .select("source",
-                F.round(F.lit(_KMV_NUM) / F.col("h"), 4).alias("est_distinct"),
+                F.round(F.lit(_KMV_NUM) / F.col("g"), 4).alias("est_distinct"),
                 "exact_distinct")
     )
 
@@ -2567,11 +2527,7 @@ def host_stats(spark, sf_dir):
 @query(
     "tfidf_keywords",
     oracle=f"""
-    WITH tt AS (
-      SELECT doc_id, unnest(toks) AS term
-      FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents)
-    ),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tt GROUP BY 1, 2),
+    WITH {_TF_SQL},
     wdf AS (SELECT doc_id, term, tf,
                    COUNT(*) OVER (PARTITION BY term) AS df
             FROM tf),
@@ -2598,14 +2554,10 @@ def tfidf_keywords(spark, sf_dir):
     terms (host_stats-style detection) or swap in a precomputed
     vocabulary-df broadcast dictionary; the per-doc rank shuffle is
     uniform."""
-    from ocr_service_spark.functions.textstats import tokens
-
-    docs = _t(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
-    tt = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    tf = tt.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    wdf = tf.withColumn(
+    docs = _t(spark, sf_dir, "documents")
+    wdf = _term_counts(docs).withColumn(
         "df", F.count("*").over(Window.partitionBy("term")))
     n = docs.agg(F.count("*").alias("n_docs"))
     r = wdf.withColumn(
@@ -2676,16 +2628,10 @@ def boilerplate_strip(spark, sf_dir):
 @query(
     "unigram_logprob",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), tt AS (
-      SELECT doc_id, unnest(toks) AS term FROM t WHERE len(toks) > 0
-    ), tf AS (
-      SELECT doc_id, term, COUNT(*) AS tf FROM tt GROUP BY 1, 2
-    ), vocab AS (
-      SELECT term, COUNT(*) AS n_term FROM tt GROUP BY term
+    WITH {_TF_SQL}, vocab AS (
+      SELECT term, SUM(tf) AS n_term FROM tf GROUP BY term
     ), tot AS (
-      SELECT COUNT(*) AS n_total FROM tt
+      SELECT SUM(n_term) AS n_total FROM vocab
     )
     SELECT tf.doc_id,
            CAST(SUM(tf.tf) AS BIGINT) AS n_tokens,
@@ -2706,24 +2652,20 @@ def unigram_logprob(spark, sf_dir):
     rounded at 4dp (a 1-ulp libm ln split moves the 9th decimal, far
     below either rounding).
 
-    Scale shape: one (doc,term) agg, a term-keyed count (the unigram
-    'model' — at 10^12 docs a precomputed dictionary broadcast), a
-    broadcast 1-row total, then a per-doc agg. No per-row Python."""
-    from ocr_service_spark.functions.textstats import tokens
+    Scale shape: one (doc,term) agg; each term's corpus count (the
+    unigram 'model' — at 10^12 docs a precomputed dictionary broadcast)
+    rides a sum window over it, one term-keyed shuffle and no join, as
+    tfidf_keywords' df; a broadcast 1-row total; then a per-doc agg. No
+    per-row Python."""
+    from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
-    tt = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    tf = tt.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    vocab = tt.groupBy("term").agg(F.count("*").alias("n_term"))
-    # total token count derived from the vocab agg (n_vocab rows), not
-    # a third full tokenize+explode pass over the corpus
-    tot = vocab.agg(F.sum("n_term").cast("bigint").alias("n_total"))
+    tf = _term_counts(_t(spark, sf_dir, "documents"))
+    tot = tf.agg(F.sum("tf").cast("bigint").alias("n_total"))
     contrib = (F.col("tf")
                * F.log(F.col("n_term") / F.col("n_total").cast("double"))
                ).cast("decimal(18,9)")
     return (
-        tf.join(vocab, "term")
+        tf.withColumn("n_term", F.sum("tf").over(Window.partitionBy("term")))
         .crossJoin(F.broadcast(tot))
         .groupBy("doc_id")
         .agg(
@@ -2736,12 +2678,11 @@ def unigram_logprob(spark, sf_dir):
 
 @query(
     "sequence_pack",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
-        CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 15))
-             AS BIGINT) % 8 AS shard,
-        len(string_split(text, ' ')) AS n_tokens
+        {_hash_sql("'shard:' || CAST(doc_id AS VARCHAR)")} % 8 AS shard,
+        len({_TOKS_SQL}) AS n_tokens
       FROM documents
     )
     SELECT doc_id, shard, n_tokens,
@@ -2775,7 +2716,7 @@ def sequence_pack(spark, sf_dir):
         F.lit(8))
     d = docs.select(
         "doc_id", shard.alias("shard"),
-        F.size(F.split("text", " ")).alias("n_tokens"))
+        F.size(tokens(F.col("text"))).alias("n_tokens"))
     w = (Window.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     start = F.sum("n_tokens").over(w) - F.col("n_tokens")
@@ -2788,13 +2729,12 @@ def sequence_pack(spark, sf_dir):
 
 @query(
     "source_mix",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id, source,
         CAST(regexp_replace(source, '[^0-9]', '', 'g') AS INT) AS src_num,
-        len(string_split(text, ' ')) AS n_tokens,
-        CAST(('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 15))
-             AS BIGINT) % 1000000 AS bucket
+        len({_TOKS_SQL}) AS n_tokens,
+        {_hash_sql("'mix:' || CAST(doc_id AS VARCHAR)")} % 1000000 AS bucket
       FROM documents
     ), s AS (
       SELECT source, SUM(n_tokens) AS src_tokens,
@@ -2830,7 +2770,7 @@ def source_mix(spark, sf_dir):
     src_num = F.regexp_replace("source", "[^0-9]", "").cast("int")
     dm = docs.select(
         "doc_id", "source", src_num.alias("src_num"),
-        F.size(F.split("text", " ")).alias("n_tokens"))
+        F.size(tokens(F.col("text"))).alias("n_tokens"))
     wts = (dm.groupBy("source")
            .agg(F.sum("n_tokens").alias("src_tokens"),
                 (F.min("src_num") % 4 + 1).cast("bigint").alias("w")))
@@ -2931,10 +2871,8 @@ def host_cap(spark, sf_dir):
 # extraction via kernel/links.py, host-level PageRank prior)
 # ---------------------------------------------------------------------------
 
-_LK_DST_SQL = (
-    "CAST(('0x' || substr(md5('lk:' || CAST(doc_id AS VARCHAR) || ':' || "
-    "CAST(j AS VARCHAR)), 1, 15)) AS BIGINT) % 97"
-)
+_LK_DST_SQL = _hash_sql(
+    "'lk:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)") + " % 97"
 
 
 # The distinct (src, dst) host edges of documents CTE `d`: each

@@ -58,7 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ocr_service_spark.lineage import _fs, _sweep_temporary, _visible
+from ocr_service_spark.lineage import _fs, _has_data, _sweep_temporary
 
 __all__ = [
     "FEEDBACK_SCHEMA",
@@ -135,14 +135,6 @@ def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     and re-append every learned pair (as lineage._read_lineage)."""
     fs, Path = _fs(spark, path)
     return spark.read.parquet(path) if _has_data(fs, Path(path)) else None
-
-
-def _has_data(fs, path) -> bool:
-    """Whether the tree at Hadoop Path `path` holds a file Spark reads
-    (not under a hidden dir such as an unfinished write's _temporary)."""
-    return fs.exists(path) and any(
-        _visible(st) and (st.isFile() or _has_data(fs, st.getPath()))
-        for st in fs.listStatus(path))
 
 
 def _stats_delta(batch: DataFrame, known: DataFrame | None) -> DataFrame:

@@ -259,3 +259,22 @@ def test_stale_lineage_task_is_not_committed(spark, tmp_path):
     assert committed_buckets(spark, str(out)) == committed_buckets(spark, str(clean))
     snap = [tuple(r) for r in snapshots(spark, str(out)).collect()]
     assert snap == [tuple(r) for r in snapshots(spark, str(clean)).collect()]
+
+
+def test_restart_after_first_lineage_append_died(spark, tmp_path):
+    # the first run committed all its data, then died inside its lineage
+    # append: lineage/ holds only that job's _temporary. The restart
+    # sweeps it, must read "no log yet" off the empty dir and commit
+    # every bucket afresh.
+    import shutil
+
+    out = tmp_path / "out"
+    run_with_lineage(spark, _urls(spark), str(out), n_buckets=4, run_id="r1")
+    attempt = out / "lineage" / "_temporary" / "0" / "_temporary" / "attempt_x"
+    shutil.move(out / "lineage", tmp_path / "log")
+    shutil.copytree(tmp_path / "log", attempt, ignore=shutil.ignore_patterns("_*", ".*"))
+    assert run_with_lineage(spark, _urls(spark), str(out), n_buckets=4,
+                            run_id="r2") == [0, 1, 2, 3]
+    assert spark.read.parquet(f"{out}/data").count() == 40
+    checks = verify_lineage(spark, str(out)).collect()
+    assert len(checks) == 4 and all(r.ok for r in checks)

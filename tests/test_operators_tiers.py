@@ -91,7 +91,8 @@ def test_drop_hot_shingles_bounds_fanout(spark):
 
 
 def test_stop_ratio(spark):
-    r = _docs(spark).select("doc_id", stop_ratio(F.col("text"), ("the",)).alias("s")).collect()
+    r = _docs(spark).select(
+        "doc_id", stop_ratio(tokens(F.col("text")), ("the",)).alias("s")).collect()
     by_id = {x.doc_id: x.s for x in r}
     assert by_id[0] == round(2 / 9, 4)
     assert by_id[2] == 0.0

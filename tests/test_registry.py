@@ -45,9 +45,10 @@ def test_every_query_has_an_oracle_except_rows_only():
     assert set(ORACLE_SQL) == set(QUERIES) - rows_only
 
 
-# the reference operators re-expressed over extraction output, and the
+# the reference operators re-expressed over extraction output, the
 # near-dup, similarity, corpus and link-graph tiers whose Spark side and
-# oracle share one helper per job
+# oracle share one helper per job, and the extraction-path queries whose
+# oracles build the documents' url
 ORACLE_CHECKED = [
     "recrawl_dedup", "batch_summary", "streaming_feedback",
     "minhash_signatures", "minhash_lsh_pairs", "dup_clusters",
@@ -55,7 +56,8 @@ ORACLE_CHECKED = [
     "embedding_topk", "embedding_lsh_ann", "embedding_ivf_ann",
     "embedding_ann_recall", "chunk_dedup", "boilerplate_strip",
     "host_stats", "host_cap", "link_graph", "host_pagerank",
-    "incremental_pagerank",
+    "incremental_pagerank", "area_reextract", "warc_extract",
+    "lineage_restart", "lineage_timetravel",
 ]
 
 

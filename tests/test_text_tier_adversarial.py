@@ -89,6 +89,16 @@ TOKEN_TIER = [
     "gopher_rules",
     "ngram_repetition",
     "pii_scrub",
+    "decontaminate",
+    "kmv_distinct",
+    "tfidf_keywords",
+    "unigram_logprob",
+    "boilerplate_strip",
+    "dup_clusters",
+    "corpus_build",
+    "incremental_dedup",
+    "sequence_pack",
+    "source_mix",
 ]
 
 
@@ -147,6 +157,11 @@ def test_pinned_token_semantics(spark, adv_sf):
     assert rows[6].n_tokens == 5          # \n \r\n \x0b \x0c all separate
     assert rows[8].n_tokens == 8          # NBSP/thin-space do NOT separate
     assert rows[18].n_tokens == 4
+
+    # sequence_pack counts tokens with the same rule
+    sp = {r.doc_id: r for r in QUERIES["sequence_pack"](spark, adv_sf).collect()}
+    assert sp[0].n_tokens == 0
+    assert sp[18].n_tokens == 4
 
     gr = {r.doc_id: r for r in QUERIES["gopher_rules"](spark, adv_sf).collect()}
     assert gr[0].mean_word_len is None and gr[0].passes_gopher is False

@@ -41,6 +41,9 @@ SHOW = [
     "link_graph",
     "host_pagerank",
     "incremental_pagerank",
+    "token_entropy",
+    "kmv_distinct",
+    "gopher_rules",
 ]
 
 
