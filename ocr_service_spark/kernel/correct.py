@@ -5,26 +5,19 @@ inside Arrow UDF batches.
 - contextual_digit_fix: digits 0/8 that leaked into Cyrillic words →
   о/О, в/В with case chosen from the token's own casing
   (reference core/correctors.py:201-267, confidence 0.95).
-- letters_to_digits: look-alike letters inside numeric tokens → digits
-  (reference models/spell_corrector.py:192-229).
-- similarity_ratio: difflib SequenceMatcher ratio on lowercased inputs
-  (reference core/correctors.py:79-90).
-- levenshtein: bounded edit distance (reference core/correctors.py:92-119);
-  the Spark path uses the built-in F.levenshtein — this one is for the
-  oracle and for prefilter parity tests.
+- apply_corrections_map: dictionary token replacement
+  (reference core/correctors.py:270-291).
+- correct_document: the two in one tokenization pass — the hot path;
+  the other two are the reference it is tested against.
 """
 
 from __future__ import annotations
 
 import re
-from difflib import SequenceMatcher
 
 __all__ = [
     "TOKEN_RE",
     "contextual_digit_fix",
-    "letters_to_digits",
-    "similarity_ratio",
-    "levenshtein",
     "apply_corrections_map",
     "correct_document",
 ]
@@ -34,14 +27,6 @@ __all__ = [
 TOKEN_RE = re.compile(r"\b[А-Яа-яЁё0-9]+\b")
 _CYR_RE = re.compile(r"[Ѐ-ӿ]")
 _LOWER_CYR_RE = re.compile(r"[а-яё]")
-
-# numeric-token grammar of the letter→digit fixer
-# (models/spell_corrector.py:199)
-NUMERIC_TOKEN_RE = re.compile(r"\b[ОIЗБВSGZlo0-9]+\b")
-_L2D = str.maketrans(
-    {"О": "0", "I": "1", "З": "3", "Б": "6", "В": "8",
-     "S": "5", "G": "6", "Z": "2", "l": "1", "o": "0"}
-)
 
 
 def contextual_digit_fix(text: str) -> tuple[str, list[dict]]:
@@ -82,57 +67,6 @@ def contextual_digit_fix(text: str) -> tuple[str, list[dict]]:
         last = m.end()
     out.append(text[last:])
     return "".join(out), corrections
-
-
-def letters_to_digits(text: str) -> tuple[str, list[dict]]:
-    """In tokens made only of digits + look-alike letters, map letters
-    to digits (reference models/spell_corrector.py:192-229)."""
-    corrections: list[dict] = []
-    out: list[str] = []
-    last = 0
-    for m in NUMERIC_TOKEN_RE.finditer(text):
-        tok = m.group(0)
-        # must contain at least one digit already and one letter to fix
-        if not any(c.isdigit() for c in tok):
-            continue
-        fixed = tok.translate(_L2D)
-        if fixed == tok:
-            continue
-        corrections.append(
-            {
-                "original": tok,
-                "corrected": fixed,
-                "confidence": 0.9,
-                "method": "letters_to_digits",
-            }
-        )
-        out.append(text[last:m.start()])
-        out.append(fixed)
-        last = m.end()
-    out.append(text[last:])
-    return "".join(out), corrections
-
-
-def similarity_ratio(a: str, b: str) -> float:
-    """difflib ratio, lowercased (reference core/correctors.py:79-90)."""
-    return SequenceMatcher(None, a.lower(), b.lower()).ratio()
-
-
-def levenshtein(a: str, b: str) -> int:
-    """Two-row DP (reference core/correctors.py:92-119)."""
-    if a == b:
-        return 0
-    if not a:
-        return len(b)
-    if not b:
-        return len(a)
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
 
 
 def correct_document(text: str, corrections: dict[str, str]) -> tuple[str, list[dict]]:

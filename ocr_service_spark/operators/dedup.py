@@ -21,8 +21,8 @@
    (tests/test_bucketed_dedup.py).
 
 2. Exact + near-duplicate *content* dedup (training-data tier):
-   `exact_text_dedup`, plus MinHash/SimHash/Jaccard live in
-   operators/textstats.py and are exposed as queries.
+   `exact_text_dedup`; the MinHash/SimHash/Jaccard helpers live in
+   functions/textstats.py and run as queries.
 """
 
 from __future__ import annotations

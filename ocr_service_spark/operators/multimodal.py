@@ -3,10 +3,9 @@
 Images/audio/video ride as opaque `binary` columns with typed metadata
 structs. The Spark-side plumbing — schema, Arrow batch shape, iterator
 UDF signature, partitioning — is real and tested; the actual codec
-work is stubbed (this container ships no image/audio libraries):
-`decode_stub` derives deterministic fake metadata from the raw bytes,
-and `decode_real` raises NotImplementedError where PIL/ffmpeg would be
-called on a real cluster.
+work is stubbed (the package depends on no image/audio library):
+`decode_stub` derives deterministic fake metadata from the raw bytes
+where PIL/ffmpeg would decode on a real cluster.
 
 Reference analog: the binary image path of `load_image`
 (core/ocr_engine.py:84-119) and quality metrics over decoded pixels
@@ -38,9 +37,8 @@ MEDIA_META_TYPE = T.StructType(
 
 def decode_stub(payload: bytes) -> dict:
     """Deterministic fake decode: metadata is a pure function of the
-    bytes, so tests and the SQL oracle can reproduce it. Real decode
-    (PIL.Image.open / av.open) is NotImplementedError in this
-    container — see decode_real."""
+    bytes, so tests and the SQL oracle can reproduce it. A real
+    decode would call PIL.Image.open / av.open here."""
     import hashlib
 
     if payload is None or len(payload) == 0:
@@ -54,13 +52,6 @@ def decode_stub(payload: bytes) -> dict:
         "n_frames": len(payload) % 7 + 1,
         "codec": "fake/deterministic",
     }
-
-
-def decode_real(payload: bytes) -> dict:  # pragma: no cover
-    raise NotImplementedError(
-        "real media decode needs PIL/av — not available in this container; "
-        "swap decode_stub for this on a cluster with codec libraries"
-    )
 
 
 def with_media_meta(df: DataFrame, payload_col: str, out_col: str = "media_meta") -> DataFrame:

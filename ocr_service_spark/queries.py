@@ -56,6 +56,15 @@ def _with_tokens(docs: DataFrame, *cols) -> DataFrame:
     return docs.select("doc_id", *cols, tokens(F.col("text")).alias("toks"))
 
 
+def _rows_where(cond: Column, val: Column) -> Column:
+    """A generator of `val` on the rows where `cond` holds and of no
+    row elsewhere: the row guard over a projected token array. Catalyst
+    pushes a filter on `toks` below the projection, which then
+    tokenizes every row twice; a generator over an expression stays
+    above it (and infers no filter, see _shingles)."""
+    return F.explode(F.when(cond, F.array(val)))
+
+
 # DuckDB twins of textstats.norm_ws / textstats.tokens — every
 # token-tier oracle routes through these so the SQL side tokenizes
 # realistic text (multi-space runs, tabs/newlines, empty docs) exactly
@@ -785,9 +794,9 @@ def _signatures(sh: DataFrame) -> DataFrame:
     shuffle-free map stage; docs under 3 tokens carry no signature."""
     from ocr_service_spark.functions.textstats import minhash_fold
 
-    sig = minhash_fold(F.col("g3"))
-    return sh.filter(F.size("toks") >= 3).select(
-        "doc_id", *[sig[i].alias(f"mh{i}") for i in range(8)])
+    sig = _rows_where(F.size("toks") >= 3, minhash_fold(F.col("g3")))
+    return sh.select("doc_id", sig.alias("sig")).select(
+        "doc_id", *[F.col("sig")[i].alias(f"mh{i}") for i in range(8)])
 
 
 def _doc_signatures(spark, sf_dir) -> DataFrame:
@@ -1438,14 +1447,14 @@ def _chunks(docs: DataFrame) -> DataFrame:
     """(doc_id, chunks): each document's non-overlapping 16-token
     chunks, in reading order, as strings."""
     # empty docs: nb = 0 would make sequence(0, -1) DESCEND ([0, -1])
-    # and fabricate two bogus chunks — filter them out (the oracle's
+    # and fabricate two bogus chunks — drop them (the oracle's
     # range(0, 0) drops them implicitly)
-    d = _with_tokens(docs).filter(F.size("toks") > 0)
     nb = F.ceil(F.size("toks") / F.lit(16.0)).cast("int")
-    return d.select("doc_id", F.transform(
+    chunks = F.transform(
         F.sequence(F.lit(0), nb - 1),
-        lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i * 16 + 1, 16)),
-    ).alias("chunks"))
+        lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i * 16 + 1, 16)))
+    return _with_tokens(docs).select(
+        "doc_id", _rows_where(F.size("toks") > 0, chunks).alias("chunks"))
 
 
 @query(
@@ -1958,7 +1967,7 @@ def ngram_repetition(spark, sf_dir):
     the relational GROUP BY form — same math, independent plan)."""
     from ocr_service_spark.functions.textstats import grams, let_col
 
-    d = _with_tokens(_t(spark, sf_dir, "documents")).filter(F.size("toks") >= 2)
+    d = _with_tokens(_t(spark, sf_dir, "documents"))
 
     def run_length_max(sorted_bg):
         # `best` is the longest run before the current one; the finish
@@ -1987,7 +1996,8 @@ def ngram_repetition(spark, sf_dir):
             run_length_max(F.array_sort(bg)).alias("top_bigram_n"),
         ),
     )
-    return d.select("doc_id", stats.alias("s")).select(
+    return d.select(
+        "doc_id", _rows_where(F.size("toks") >= 2, stats).alias("s")).select(
         "doc_id",
         F.col("s.n_bigrams").alias("n_bigrams"),
         F.col("s.top_bigram_n").alias("top_bigram_n"),

@@ -47,10 +47,6 @@ flip flags):
   a replayed delta that resurrects a learned pair's counts is caught
   by the same join and re-zeroed. No step ever scans or rewrites the
   full feedback table; there is no tmp-dir dance (ADVICE r2).
-
-Event-time tier: `feedback_rate` shows watermark + tumbling-window
-counts with late-data drop — the reference accepts feedback with no
-time semantics at all (feedback_collector.py:72-112).
 """
 
 from __future__ import annotations
@@ -65,7 +61,6 @@ __all__ = [
     "read_feedback_stream",
     "mine_from_stats",
     "run_feedback_loop",
-    "feedback_rate",
 ]
 
 FEEDBACK_SCHEMA = T.StructType(
@@ -273,14 +268,3 @@ def run_feedback_loop(spark: SparkSession, in_dir: str, state_dir: str) -> None:
     )
     q.awaitTermination()
 
-
-def feedback_rate(stream: DataFrame, window: str = "10 minutes",
-                  watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window feedback counts (late rows beyond
-    the watermark are dropped) — attach to `read_feedback_stream`."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "type", "n")
-    )

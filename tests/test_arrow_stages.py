@@ -6,18 +6,18 @@ place that pins a stage nondeterministic."""
 from __future__ import annotations
 
 import re
-import subprocess
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
 
 def _package_lines():
-    tracked = subprocess.run(
-        ["git", "ls-files", "--cached", "--others", "--exclude-standard", "ocr_service_spark/*.py"],
-        cwd=REPO, capture_output=True, text=True, check=True).stdout.split()
-    assert tracked
-    for path in tracked:
+    # a walk, not `git ls-files`: a copy without .git checks the same files
+    paths = [p.relative_to(REPO) for p in (REPO / "ocr_service_spark").rglob("*.py")]
+    paths = [p for p in paths
+             if not any(d.startswith(".") or d == "__pycache__" for d in p.parts)]
+    assert paths
+    for path in sorted(paths):
         for i, line in enumerate((REPO / path).read_text().splitlines(), 1):
             yield f"{path}:{i}", line
 

@@ -6,9 +6,6 @@ import pyspark.sql.functions as F
 from ocr_service_spark.kernel.correct import (
     apply_corrections_map,
     contextual_digit_fix,
-    letters_to_digits,
-    levenshtein,
-    similarity_ratio,
 )
 from ocr_service_spark.kernel.htmlgen import htmlify_roundtrip
 from ocr_service_spark.operators.areas import (
@@ -17,7 +14,6 @@ from ocr_service_spark.operators.areas import (
     with_area_extraction,
 )
 from ocr_service_spark.operators.correct import with_corrections
-from ocr_service_spark.operators.extract import with_extraction
 
 
 def test_contextual_digit_fix_kernel():
@@ -31,18 +27,6 @@ def test_contextual_digit_fix_kernel():
     assert methods == {"contextual_russian_word"}
     up, _ = contextual_digit_fix("ПЛ0ЩАДЬ")
     assert up == "ПЛОЩАДЬ", "all-caps token gets uppercase О"
-
-
-def test_letters_to_digits_kernel():
-    fixed, corrs = letters_to_digits("ИНН 77О4123Z56 ok")
-    assert "7704123256" in fixed
-    assert corrs[0]["method"] == "letters_to_digits"
-
-
-def test_similarity_and_levenshtein_parity():
-    assert similarity_ratio("Маркуталь", "мариуполь") > 0.5
-    assert levenshtein("kitten", "sitting") == 3
-    assert levenshtein("", "abc") == 3
 
 
 def test_apply_corrections_map_single_pass():

@@ -161,6 +161,28 @@ def test_incremental_pagerank_persisted_side_never_shuffle_joined(spark):
     assert "EvalPython" not in plan
 
 
+def test_token_tier_tokenizes_each_scanned_row_once(spark):
+    # a filter on a projected token array (size(toks) >= k) is pushed
+    # below the projection and re-runs the normalize-and-split regex
+    # there; the row guards ride inside a generator instead
+    # (queries._rows_where), so each scan of the text feeds one
+    # tokenizing Project and nothing else. chunk_dedup's self-join and
+    # incremental_dedup's batch/corpus sides scan the text twice;
+    # minhash_lsh_pairs and dup_clusters read minhash_signatures' plan
+    # through a localCheckpoint of the signature table
+    from ocr_service_spark.functions.textstats import WS_CLASS
+
+    tok = re.compile(r"CASE WHEN \(trim\(regexp_replace\(text#\d+, "
+                     + re.escape(WS_CLASS))
+    for name in ("minhash_signatures", "chunk_dedup", "boilerplate_strip",
+                 "ngram_repetition", "incremental_dedup"):
+        plan = _plan(spark, name)
+        n_scans = len(re.findall(r"FileScan parquet \[[^\]]*\btext#", plan))
+        holders = [line for line in plan.splitlines() if tok.search(line)]
+        assert len(holders) == n_scans >= 1, (name, holders)
+        assert all(" Project [" in line for line in holders), (name, holders)
+
+
 def test_process_documents_scans_each_pattern_once(spark):
     # critical_fields and important_data read one projected _cands
     # struct: every field and surname pattern is one

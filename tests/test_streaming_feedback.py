@@ -5,9 +5,7 @@ write-back, checkpointed re-run is a no-op."""
 import json
 
 from ocr_service_spark.streaming.feedback import (
-    FEEDBACK_SCHEMA,
     _stats_delta,
-    feedback_rate,
     mine_from_stats,
     run_feedback_loop,
 )
@@ -125,25 +123,6 @@ def test_mine_candidates_thresholds(spark):
     got = {(r.original, r.corrected) for r in mined.collect()}
     assert got == {("a", "b")}
 
-
-def test_feedback_rate_windowing(spark, tmp_path):
-    in_dir = tmp_path / "drop"
-    _drop(in_dir, [_fb(i, "x", "y", 0.5) for i in range(1, 25)])
-    stream = spark.readStream.schema(FEEDBACK_SCHEMA).json(str(in_dir))
-    q = (
-        feedback_rate(stream, window="10 minutes")
-        .writeStream.format("memory")
-        .queryName("rates")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM rates").collect()
-    # 24 events at minutes 1..24 → tumbling windows 00:00 / 00:10 / 00:20
-    assert sum(r.n for r in rows) == 24
-    assert len(rows) == 3
 
 
 def _tree_state(root):

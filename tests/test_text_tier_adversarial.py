@@ -69,6 +69,10 @@ ADVERSARIAL_DOCS = [
     (18, "a  b   c    d", "en"),
     # whitespace-variant twin of 13: MUST normalize to identical tokens
     (19, _LONG.replace(" ", "  ", 40).replace("quality", "quality\t"), "en"),
+    # the one non-empty eval-split doc (doc_id % 97 == 0): shares six
+    # 3-grams with 13 and its twin 19, so decontaminate has rows to match
+    (97, "an eval item asks why training data quality matters for large "
+         "models", "en"),
 ]
 
 # every oracle-gated query that tokenizes the documents table
@@ -185,3 +189,8 @@ def test_pinned_token_semantics(spark, adv_sf):
     assert cd[14].n_dup_chunks >= 3
     assert cd[15].n_dup_chunks >= 1
     assert 0 not in cd and 1 not in cd    # empty docs have no chunks
+
+    # decontamination flags the training docs sharing doc 97's 3-grams
+    dc = {r.doc_id: r.n_hits
+          for r in QUERIES["decontaminate"](spark, adv_sf).collect()}
+    assert dc == {13: 6, 19: 6}
