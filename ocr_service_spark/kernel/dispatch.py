@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from ocr_service_spark.kernel.extract_html import DEFAULT_SEPARATOR, extract_html
+from ocr_service_spark.kernel.extract_html import extract_html
 from ocr_service_spark.kernel.extract_pdf import extract_pdf, is_pdf
 
 __all__ = ["ExtractResult", "extract_document"]
@@ -29,7 +29,7 @@ class ExtractResult:
     error: str | None
 
 
-def extract_document(raw: bytes | None, separator: str = DEFAULT_SEPARATOR) -> ExtractResult:
+def extract_document(raw: bytes | None) -> ExtractResult:
     if raw is None or len(raw) == 0:
         return ExtractResult(None, [], "html", 0, 0, None, "empty payload")
     try:
@@ -44,7 +44,7 @@ def extract_document(raw: bytes | None, separator: str = DEFAULT_SEPARATOR) -> E
                 charset=None,
                 error=None,
             )
-        r = extract_html(raw, separator=separator)
+        r = extract_html(raw)
         return ExtractResult(
             text=r.text,
             spans=r.spans,

@@ -533,8 +533,8 @@ def classify_nodes(nodes: list[Node]) -> list[bool]:
     return keep
 
 
-def extract_html(raw: bytes, separator: str = DEFAULT_SEPARATOR) -> HtmlExtraction:
-    """Full kernel: bytes → (extracted_text, spans, node array).
+def extract_html(raw: bytes) -> HtmlExtraction:
+    """Full kernel: bytes → (kept nodes' texts joined, spans, nodes).
 
     Span offsets index into the returned text; ``node_idx`` points into
     the full node array (not just the kept ones), so downstream targeted
@@ -545,19 +545,18 @@ def extract_html(raw: bytes, separator: str = DEFAULT_SEPARATOR) -> HtmlExtracti
     parts: list[str] = []
     spans: list[tuple[int, int, int, float]] = []
     pos = 0
-    sep_len = len(separator)
     for nd, k in zip(nodes, keep):
         if not k:
             continue
         if parts:
-            pos += sep_len
+            pos += len(DEFAULT_SEPARATOR)
         start = pos
         end = start + nd.n_chars
         spans.append((start, end, nd.idx, node_confidence(nd)))
         parts.append(nd.text)
         pos = end
     return HtmlExtraction(
-        text=separator.join(parts),
+        text=DEFAULT_SEPARATOR.join(parts),
         spans=spans,
         nodes=nodes,
         n_content=len(parts),

@@ -1,12 +1,11 @@
 """Deterministic HTML templating.
 
-Two users:
-- corpus.py renders rich Common-Crawl-style pages (nav/header/footer
-  boilerplate, link farms, article body) for the synthetic corpus;
-- the `q_extract_roundtrip` query htmlifies the driver's
-  `documents.text` column so the extraction UDF can be checked against
-  a plain-SQL DuckDB oracle (extracted text == whitespace-normalized
-  original).
+One page template, `render_page`: rich Common-Crawl-style pages
+(nav/header/footer boilerplate, link farms, article body). corpus.py
+renders the synthetic corpus with it, and `htmlify_roundtrip` wraps the
+driver's `documents.text` column in it so the extraction UDF can be
+checked against a plain-SQL DuckDB oracle (extracted text with its
+paragraph breaks read as spaces == whitespace-normalized original).
 
 Everything is a pure function of (text, doc_id) — no randomness beyond
 `random.Random` seeded from doc_id, no wall clock.
@@ -40,43 +39,13 @@ _NAV_LINKS = ["Home", "World", "Politics", "Business", "Tech", "Science",
 
 
 def htmlify_roundtrip(text: str, doc_id: int) -> bytes:
-    """Wrap a flat text in a full boilerplated page such that
-    extract_html(page, separator=' ').text == normalized(text).
-
-    doc_id varies the boilerplate (nav size, sidebar, footer), proving
-    the classifier rejects it structurally rather than by accident."""
+    """Wrap a flat text in a full boilerplated page whose extracted
+    text, with each paragraph break read as one space, is the
+    whitespace-normalized text. doc_id seeds the boilerplate (nav
+    links, breadcrumbs, sidebar, footer), proving the classifier
+    rejects it structurally rather than by accident."""
     rng = random.Random(0x5EED ^ (doc_id * 2654435761 % (1 << 32)))
-    paras = chunk_text(text)
-    nav = "".join(
-        f'<li><a href="/s/{i}">{w}</a></li>'
-        for i, w in enumerate(rng.sample(_NAV_LINKS, 6 + rng.randrange(5)))
-    )
-    crumbs = " ".join(
-        f'<a href="/c/{i}">{rng.choice(_NAV_LINKS)}</a>' for i in range(4)
-    )
-    body = "\n".join(f"<p>{_html.escape(p)}</p>" for p in paras)
-    sidebar = "".join(
-        f'<li><a href="/rel/{i}">Related story {i} you may like</a></li>'
-        for i in range(rng.randrange(3, 8))
-    )
-    footer = " | ".join(
-        f'<a href="/f/{i}">{rng.choice(_NAV_LINKS)}</a>' for i in range(5)
-    )
-    page = f"""<!DOCTYPE html>
-<html><head><meta charset="utf-8"><title>doc {doc_id}</title>
-<style>body {{ margin: 0; }} .x > a:hover {{ color: red }}</style>
-<script>var t = {doc_id}; if (t < 0) {{ console.log("<p>no</p>"); }}</script>
-</head><body>
-<nav><ul>{nav}</ul></nav>
-<header><h1>Syndicated page {doc_id}</h1><div class="meta">staff — wire desk</div></header>
-<div class="breadcrumbs">{crumbs}</div>
-<article>
-{body}
-</article>
-<aside><h3>More</h3><ul>{sidebar}</ul></aside>
-<footer><div>{footer}</div><div>&copy; example syndicate</div></footer>
-</body></html>"""
-    return page.encode("utf-8")
+    return render_page(f"doc {doc_id}", chunk_text(text), rng)
 
 
 def render_page(

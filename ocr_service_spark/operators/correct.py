@@ -1,7 +1,8 @@
-"""Autocorrection stage (reference lifecycle stage 5,
-core/processor.py:253 → correctors.py:201-293).
-
-One iterator Arrow UDF (operators/pystage.batch_map) applies, per document:
+"""Autocorrection (reference lifecycle stage 5,
+core/processor.py:253 → correctors.py:201-293): the seeded dictionary,
+the result types and the per-text row that the fused extraction UDF
+(operators/extract.make_extract_correct_udf) appends to each
+extraction. Per document:
   1. contextual digit→letter fix (0→о/О, 8→в/В inside mixed
      Cyrillic/digit tokens, kernel/correct.contextual_digit_fix —
      reference core/correctors.py:201-267);
@@ -9,26 +10,23 @@ One iterator Arrow UDF (operators/pystage.batch_map) applies, per document:
      (kernel/correct.apply_corrections_map — replaces the reference's
      per-correction whole-string rescan, correctors.py:270-291).
 
-and emits (corrected_text, corrections array) — the corrections array
-is the T3 auto-feedback stream (core/processor.py:379-392): explode it
-and append to the feedback table; no callback plumbing needed.
+The corrections array is the T3 auto-feedback stream
+(core/processor.py:379-392): explode it and append to the feedback
+table; no callback plumbing needed.
 
-The corrections dictionary is a driver-side dict broadcast into the
-UDF closure — the Spark analog of the reference's in-memory
-corrections_db (correctors.py:30-58). The seeded defaults below are
-the reference's own (correctors.py:42-49). For big dictionaries use
-the broadcast-join path instead (queries.correction_join, J1/J2).
+The seeded dictionary is the reference's own (correctors.py:42-49),
+the Spark analog of its in-memory corrections_db (correctors.py:30-58),
+shipped in the UDF closure. For big dictionaries use the
+broadcast-join path instead (queries.correction_join, J1/J2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ocr_service_spark.kernel.correct import correct_document
-from ocr_service_spark.operators.pystage import batch_map
 
-__all__ = ["DEFAULT_CORRECTIONS", "CORRECT_RESULT_TYPE", "correct_row", "with_corrections"]
+__all__ = ["DEFAULT_CORRECTIONS", "CORRECT_RESULT_TYPE", "correct_row"]
 
 # reference core/correctors.py:42-49 seeded defaults
 DEFAULT_CORRECTIONS = {
@@ -63,16 +61,3 @@ def correct_row(text: str | None, cmap: dict[str, str]) -> tuple[str | None, lis
     list."""
     return (None, []) if text is None else correct_document(text, cmap)
 
-
-def with_corrections(
-    df: DataFrame,
-    text_col: str = "extracted_text",
-    out_col: str = "correction",
-    corrections: dict[str, str] | None = None,
-) -> DataFrame:
-    """df + struct(corrected_text, corrections). Null text passes
-    through as null with an empty corrections array."""
-    cmap = dict(DEFAULT_CORRECTIONS if corrections is None else corrections)
-    udf = batch_map(lambda: lambda texts: [correct_row(t, cmap) for t in texts],
-                    CORRECT_RESULT_TYPE)
-    return df.withColumn(out_col, udf(F.col(text_col)))

@@ -1,18 +1,19 @@
 """Extraction UDF stage — the M1 centerpiece (SURVEY.md §2.9).
 
-A single iterator-style Arrow UDF (operators/pystage.batch_map; plan
-shows ArrowEvalPython, never BatchEvalPython) wraps the pure kernel
-`extract_document` and, given a correction map, runs `correct_document`
-on each extracted text in the same batch. Iterator form so per-batch
-setup (regex compile, imports) happens once per partition, mirroring
-the reference's compile-once validators (core/validators.py:78-83).
+The package's one Python stage that extracts or corrects text: an
+iterator Arrow UDF (operators/pystage.batch_map; plan shows
+ArrowEvalPython) that wraps the pure kernel `extract_document` and runs
+`correct_document` under the seeded dictionary on each extracted text
+in the same batch. Per-batch setup (regex compile, imports) happens
+once per partition, like the reference's compile-once validators
+(core/validators.py:78-83).
 
-The UDF replaces the reference's whole OCR stack: image preprocess
+The UDF replaces the reference's whole OCR stack, image preprocess
 (core/ocr_engine.py:51-82) → Vision OCR (178-293) → per-page loop
-(137-176) → temp-file round-trips (312-325). Bytes stay in Arrow
-buffers end-to-end; each batch's result is one pyarrow StructArray
-built straight from the kernel's Python values, and per-page
-results stay inside the row's array until the caller explodes them.
+(137-176) → temp-file round-trips (312-325), plus its autocorrection
+(core/processor.py:253). Bytes stay in Arrow buffers end-to-end; each
+batch's result is one pyarrow StructArray built straight from the
+kernels' Python values.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ SPAN_TYPE = T.ArrayType(
     )
 )
 
+# one extraction (text … error) followed by its autocorrection
 EXTRACT_RESULT_TYPE = T.StructType(
     [
         T.StructField("text", T.StringType()),
@@ -47,6 +49,7 @@ EXTRACT_RESULT_TYPE = T.StructType(
         T.StructField("n_content", T.IntegerType()),
         T.StructField("charset", T.StringType()),
         T.StructField("error", T.StringType()),
+        *CORRECT_RESULT_TYPE.fields,
     ]
 )
 
@@ -54,29 +57,15 @@ EXTRACT_RESULT_TYPE = T.StructType(
 _FLAT_NAMES = {"text": "extracted_text", "corrections": "corrections_applied"}
 
 
-def make_extract_udf(separator: str = "\n\n",
-                     corrections: dict[str, str] | None = None):
-    """Build the extraction UDF.
+def make_extract_correct_udf():
+    """The package's one extraction stage: each payload's extraction
+    plus its autocorrection under DEFAULT_CORRECTIONS, one
+    EXTRACT_RESULT_TYPE row, in one Arrow round-trip.
 
-    separator='\\n\\n' is the production default; the round-trip
-    correctness query uses ' ' so a plain-SQL oracle can reproduce the
-    expected output (see __spark_entry__.py).
-
-    With a `corrections` map the result also carries `corrected_text`
-    and `corrections` (CORRECT_RESULT_TYPE): the fused extraction +
-    autocorrection kernel, one Arrow round-trip for the whole Python
-    hot path. The unfused pair (extract UDF → filter → correct UDF)
-    ships the extracted text back to the JVM only to ship it straight
-    into the next Python worker; the fusion corrects each batch's texts
-    while they are still Python objects (error rows pass through with
-    corrected_text=None), so the plan carries exactly ONE
-    ArrowEvalPython node.
-    """
-    fields = EXTRACT_RESULT_TYPE.fields
-    if corrections is not None:
-        fields = fields + CORRECT_RESULT_TYPE.fields
-        corrections = dict(corrections)
-
+    Correcting each batch's texts while they are still Python objects
+    saves the JVM round-trip a separate correction UDF would cost, so
+    the plan carries exactly ONE ArrowEvalPython node. Error rows pass
+    through with corrected_text=None."""
     def factory():
         # import inside the UDF: runs on executors after --py-files ship
         from ocr_service_spark.kernel.dispatch import extract_document
@@ -84,37 +73,24 @@ def make_extract_udf(separator: str = "\n\n",
         def run(payloads: list) -> list[tuple]:
             rows = []
             for raw in payloads:
-                r = extract_document(raw, separator=separator)
-                row = (r.text, r.spans, r.kind, r.n_nodes, r.n_content, r.charset, r.error)
-                rows.append(row if corrections is None
-                            else row + correct_row(r.text, corrections))
+                r = extract_document(raw)
+                rows.append((r.text, r.spans, r.kind, r.n_nodes, r.n_content, r.charset,
+                             r.error) + correct_row(r.text, DEFAULT_CORRECTIONS))
             return rows
 
         return run
 
-    return batch_map(factory, T.StructType(fields))
+    return batch_map(factory, EXTRACT_RESULT_TYPE)
 
 
-def make_extract_correct_udf():
-    """The fused extraction + default-corrections UDF."""
-    return make_extract_udf(corrections=DEFAULT_CORRECTIONS)
-
-
-def with_extraction(df, html_col: str = "html", out_col: str = "extraction",
-                    separator: str = "\n\n"):
-    """df + one struct column with the extraction result. Single
-    projection — Catalyst keeps it in the same stage as the scan, so
-    the whole extract path is scan→ArrowEvalPython→project with no
-    shuffle."""
-    udf = make_extract_udf(separator=separator)
-    return df.withColumn(out_col, udf(F.col(html_col)))
-
-
-def flatten_extraction(df: DataFrame, col: str = "x") -> DataFrame:
-    """The document key columns plus every field of the extraction
-    struct `col` as its own column (text → extracted_text,
-    corrections → corrections_applied)."""
-    return df.selectExpr(
+def extract_documents(docs: DataFrame) -> DataFrame:
+    """Scan → the extraction stage → the document key columns plus every
+    result field as its own column (text → extracted_text, corrections
+    → corrections_applied). Keeps error rows (error != null) so callers
+    can union/report them — the analog of the reference's error result
+    rows (processor.py:431-438)."""
+    x = docs.select("*", make_extract_correct_udf()(F.col("html")).alias("x"))
+    return x.selectExpr(
         "doc_id", "url", "warc_ts", "lang",
-        *(f"{col}.{f} AS {_FLAT_NAMES.get(f, f)}" for f in df.schema[col].dataType.names),
+        *(f"x.{f} AS {_FLAT_NAMES.get(f, f)}" for f in EXTRACT_RESULT_TYPE.names),
     )

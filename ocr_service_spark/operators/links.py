@@ -1,7 +1,5 @@
-"""Link-extraction operator: one Arrow-batched pass over payload
-bytes producing an array<struct<href,text>> column (the edge-list
-feedstock for link-graph queries). Same plumbing as
-operators/extract.py: one operators/pystage.batch_map stage."""
+"""Link-extraction operator: one operators/pystage.batch_map pass over
+payload bytes producing the edge-list feedstock of link-graph queries."""
 
 from __future__ import annotations
 
@@ -25,18 +23,14 @@ LINKS_TYPE = ArrayType(
 )
 
 
-def make_links_udf():
+def with_link_extraction(df):
+    """df + `links`, the array<struct<href,text>> of each `html`
+    payload; single projection so the whole pass stays scan ->
+    ArrowEvalPython -> project."""
     def factory():
         # import inside the UDF: runs on executors after --py-files ship
         from ocr_service_spark.kernel.links import extract_links
 
         return lambda payloads: [extract_links(raw) for raw in payloads]
 
-    return batch_map(factory, LINKS_TYPE)
-
-
-def with_link_extraction(df, html_col: str = "html",
-                         out_col: str = "links"):
-    """df + one array<struct<href,text>> column; single projection so
-    the whole pass stays scan -> ArrowEvalPython -> project."""
-    return df.withColumn(out_col, make_links_udf()(F.col(html_col)))
+    return df.withColumn("links", batch_map(factory, LINKS_TYPE)(F.col("html")))

@@ -35,11 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ocr_service_spark.operators.dedup import dedup_latest
-from ocr_service_spark.operators.extract import (
-    flatten_extraction,
-    make_extract_correct_udf,
-    with_extraction,
-)
+from ocr_service_spark.operators.extract import extract_documents
 from ocr_service_spark.operators.quality import (
     needs_review_sql,
     overall_quality_sql,
@@ -56,13 +52,6 @@ from ocr_service_spark.operators.validate import (
 )
 
 __all__ = ["extract_documents", "extract_records", "process_documents"]
-
-
-def extract_documents(docs: DataFrame, separator: str = "\n\n") -> DataFrame:
-    """Scan → extraction UDF → flat result columns. Keeps error rows
-    (error != null) so callers can union/report them — the analog of
-    the reference's error result rows (processor.py:431-438)."""
-    return flatten_extraction(with_extraction(docs, "html", "x", separator=separator))
 
 
 def process_documents(docs: DataFrame) -> DataFrame:
@@ -91,8 +80,7 @@ def extract_records(docs: DataFrame) -> DataFrame:
     # extracted text JVM→Python→JVM→Python; the fusion corrects while
     # the text is still a hot Python object. Validation then runs on the
     # CORRECTED text (processor.py:279-282 validates post-correction).
-    x = docs.select("*", make_extract_correct_udf()(F.col("html")).alias("x"))
-    ok = flatten_extraction(x.filter("x.error IS NULL"))
+    ok = extract_documents(docs).filter("error IS NULL")
 
     # One projection per dependency level. Every field and surname
     # pattern scans the text once, and every validity filter runs once:

@@ -89,6 +89,14 @@ def _hash_sql(expr: str) -> str:
 _URL_SQL = ("'https://host' || CAST(doc_id % 97 AS VARCHAR) "
             "|| '.example/doc/' || CAST(doc_id AS VARCHAR)")
 
+
+def _spaced(text: Column) -> Column:
+    """An extracted text with each paragraph break read as one space.
+    The kernel joins the kept nodes with '\\n\\n' and no node holds a
+    '\\n', so this is the original of a whitespace-normalized text."""
+    return F.regexp_replace(text, "\n\n", " ")
+
+
 # CTE t: the documents table plus each row's token array `toks`
 # (DuckDB twin of _with_tokens).
 _T_SQL = f"t AS (SELECT *, {_TOKS_SQL} AS toks FROM documents)"
@@ -253,7 +261,9 @@ def batch_summary(spark, sf_dir):
         "doc_id", "url", "warc_ts", "lang",
         f"CASE WHEN {_FAILED_FETCH} THEN X'' ELSE html END AS html")
     golden = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = extract_documents(pages, separator=" ").join(golden, "doc_id")
+    out = (extract_documents(pages)
+           .withColumn("extracted_text", _spaced(F.col("extracted_text")))
+           .join(golden, "doc_id"))
     ok = F.col("error").isNull()
     acc = F.count_if(F.col("extracted_text") == F.col("text")) / F.count("*")
     return (
@@ -293,15 +303,11 @@ def extract_roundtrip(spark, sf_dir):
     Plan shape: scan → mapInArrow(render) → ArrowEvalPython(extract)
     → project; zero shuffles."""
     from ocr_service_spark.entry_pipeline import htmlified_documents
-    from ocr_service_spark.operators.extract import with_extraction
+    from ocr_service_spark.pipeline import extract_documents
 
-    docs = htmlified_documents(spark, sf_dir)
-    out = with_extraction(docs, "html", "x", separator=" ")
+    out = extract_documents(htmlified_documents(spark, sf_dir))
     return out.select(
-        "doc_id",
-        F.col("x.text").alias("extracted_text"),
-        F.col("x.kind").alias("kind"),
-    )
+        "doc_id", _spaced(F.col("extracted_text")).alias("extracted_text"), "kind")
 
 
 @query(
@@ -359,13 +365,13 @@ def area_reextract(spark, sf_dir):
         spliced_text,
         with_area_extraction,
     )
-    from ocr_service_spark.operators.extract import with_extraction
+    from ocr_service_spark.operators.extract import make_extract_correct_udf
 
     docs = htmlified_documents(spark, sf_dir)
-    ext = with_extraction(docs, "html", "x", separator=" ")
+    ext = docs.select("url", "html", make_extract_correct_udf()(F.col("html")).alias("x"))
     base = ext.select(
         "url", "html",
-        F.col("x.text").alias("main_text"),
+        _spaced(F.col("x.text")).alias("main_text"),
         F.col("x.spans").alias("spans"))
     first = F.get("spans", 0)["node_idx"]
     last = F.get("spans", F.size("spans") - 1)["node_idx"]
@@ -1281,26 +1287,25 @@ def streaming_feedback(spark, sf_dir):
 )
 def correction_kernel(spark, sf_dir):
     """F1 contextual digit→letter fix + J1 dictionary map, run through
-    the REAL Arrow correction UDF (operators/correct.py wrapping
-    kernel/correct.py — reference core/correctors.py:201-293): both
-    engines construct the same corrupted Russian sentence; the oracle
-    states the corrected text the kernel must produce (г0род→город
-    0→о, д8ор→двор 8→в, Маркуталь→Мариуполь via the seeded dict,
-    correctors.py:42-49)."""
-    from ocr_service_spark.operators.correct import with_corrections
+    the production Arrow stage (operators/extract.make_extract_correct_udf
+    wrapping kernel/correct.py — reference core/correctors.py:201-293):
+    both engines construct the same corrupted Russian sentence, here
+    as a one-paragraph page; the oracle states the corrected text the
+    kernel must produce (г0род→город 0→о, д8ор→двор 8→в,
+    Маркуталь→Мариуполь via the seeded dict, correctors.py:42-49)."""
+    from ocr_service_spark.operators.extract import make_extract_correct_udf
 
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.lit("справка г0род д8ор Маркуталь номер "),
-            F.col("doc_id").cast("string"),
-        ).alias("raw_text"),
-    )
-    out = with_corrections(docs, "raw_text", "c")
+    page = F.encode(F.concat(
+        F.lit("<html><body><p>справка г0род д8ор Маркуталь номер "),
+        F.col("doc_id").cast("string"),
+        F.lit("</p></body></html>"),
+    ), "utf-8")
+    out = _t(spark, sf_dir, "documents").select(
+        "doc_id", make_extract_correct_udf()(page).alias("x"))
     return out.select(
         "doc_id",
-        F.col("c.corrected_text").alias("corrected_text"),
-        F.size("c.corrections").alias("n_corrections"),
+        F.col("x.corrected_text").alias("corrected_text"),
+        F.size("x.corrections").alias("n_corrections"),
     )
 
 
@@ -1480,18 +1485,20 @@ def chunk_dedup(spark, sf_dir):
     a chunk is duplicated when its hash occurs more than once in the
     corpus; each doc reports its duplicated-chunk ratio.
 
-    Scale shape: explode → map-side-combinable COUNT per chunk hash →
-    equi-join back on the same key (no second shuffle of the heavy
-    side under AQE since partitioning is reusable) → per-doc agg.
-    Never doc×doc. Skew: a boilerplate chunk shared by millions of
-    docs is ONE counter row here (contrast jaccard_pairs, which needs
-    the pair expansion and hence the drop_hot_shingles guard)."""
+    Scale shape: explode → COUNT(*) OVER (PARTITION BY chunk hash), so
+    the text is scanned and tokenized once (a join back to a grouped
+    count of the same rows scanned it twice) → per-doc agg. Never
+    doc×doc (contrast jaccard_pairs, which needs the pair expansion
+    and hence the drop_hot_shingles guard). Skew: a boilerplate chunk
+    shared by millions of docs is one window partition, buffered with
+    spill by the window operator."""
+    from pyspark.sql import Window
+
     chunks = _chunks(_t(spark, sf_dir, "documents"))
     ex = chunks.select("doc_id", F.explode(F.transform("chunks", F.md5)).alias("h"))
-    occ = ex.groupBy("h").agg(F.count("*").alias("n_occ"))
     dup = F.sum(F.when(F.col("n_occ") > 1, 1).otherwise(0))
     return (
-        ex.join(occ, "h")
+        ex.withColumn("n_occ", F.count("*").over(Window.partitionBy("h")))
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_chunks"),
@@ -1654,7 +1661,7 @@ def warc_extract(spark, sf_dir):
     import pyarrow as pa
 
     from ocr_service_spark.entry_pipeline import htmlified_documents
-    from ocr_service_spark.operators.extract import with_extraction
+    from ocr_service_spark.operators.extract import make_extract_correct_udf
     from ocr_service_spark.operators.pystage import arrow_schema
     from ocr_service_spark.sources.warc import read_warc, write_warc_bytes
 
@@ -1694,12 +1701,10 @@ def warc_extract(spark, sf_dir):
     docs.repartition(8).mapInArrow(pack, manifest_ddl).count()
 
     pages = read_warc(spark, base)
-    out = with_extraction(pages, "html", "x", separator=" ")
+    out = pages.select("url", make_extract_correct_udf()(F.col("html")).alias("x")).select(
+        "url", _spaced(F.col("x.text")).alias("extracted_text"))
     return out.select(
-        "url",
-        F.col("x.text").alias("extracted_text"),
-        F.size(F.split(F.col("x.text"), " ")).alias("n_tokens"),
-    )
+        "url", "extracted_text", F.size(F.split("extracted_text", " ")).alias("n_tokens"))
 
 
 def _ivf_ctes(n_clusters: int, n_probe: int, n_queries: int) -> str:
@@ -3005,7 +3010,7 @@ def link_graph(spark, sf_dir):
                  F.lit(".example")).alias("src_host"),
         F.encode(page, "utf-8").alias("html"),
     )
-    lk = with_link_extraction(rendered, "html", "links")
+    lk = with_link_extraction(rendered)
     e = lk.select(
         "src_host", F.explode("links").alias("l"),
     ).select(

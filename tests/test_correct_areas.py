@@ -13,7 +13,6 @@ from ocr_service_spark.operators.areas import (
     spliced_text,
     with_area_extraction,
 )
-from ocr_service_spark.operators.correct import with_corrections
 
 
 def test_contextual_digit_fix_kernel():
@@ -35,18 +34,6 @@ def test_apply_corrections_map_single_pass():
     assert fixed.count("Мариуполь") == 2
     assert len(applied) == 2
     assert applied[0]["confidence"] == 1.0
-
-
-def test_with_corrections_stage(spark):
-    df = spark.createDataFrame(
-        [(1, "г0род Маркуталь"), (2, "clean text"), (3, None)],
-        "id long, extracted_text string")
-    out = {r.id: r for r in with_corrections(df).select(
-        "id", "correction.corrected_text", "correction.corrections").collect()}
-    assert out[1].corrected_text == "город Мариуполь"
-    assert len(out[1].corrections) == 2
-    assert out[2].corrected_text == "clean text" and out[2].corrections == []
-    assert out[3].corrected_text is None
 
 
 def test_area_extraction_kernel_and_udf(spark):

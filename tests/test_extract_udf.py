@@ -1,14 +1,12 @@
-"""The Arrow extraction/correction UDFs build their result arrays
-straight from the kernel's values: on rows that take every branch of
-that array construction they equal the pure kernels field for field."""
-
-import pytest
+"""The fused Arrow extraction + correction UDF builds its result array
+straight from the kernels' values: on rows that take every branch of
+that array construction it equals the pure kernels field for field."""
 
 from ocr_service_spark.corpus import gen_doc
 from ocr_service_spark.kernel.correct import correct_document
 from ocr_service_spark.kernel.dispatch import extract_document
-from ocr_service_spark.operators.correct import DEFAULT_CORRECTIONS, with_corrections
-from ocr_service_spark.operators.extract import make_extract_udf, with_extraction
+from ocr_service_spark.operators.correct import DEFAULT_CORRECTIONS
+from ocr_service_spark.operators.extract import make_extract_correct_udf
 
 RU_BOTH_METHODS = (
     "<html><body><article><p>В г0роде Маркуталь открылся новый д8ор "
@@ -35,8 +33,8 @@ def _corrected(text):
                             for c in cs]}
 
 
-def _extracted(raw, separator):
-    r = extract_document(raw, separator=separator)
+def _extracted(raw):
+    r = extract_document(raw)
     return {"text": r.text,
             "spans": [dict(zip(("start", "end", "node_idx", "confidence"), s)) for s in r.spans],
             "kind": r.kind, "n_nodes": r.n_nodes, "n_content": r.n_content,
@@ -52,26 +50,12 @@ def test_edge_rows_cover_each_branch():
     assert methods == {"contextual_russian_word", "exact_match"}
 
 
-@pytest.mark.parametrize("variant", ["extract", "extract_space", "fused", "with_corrections"])
-def test_arrow_udf_matches_kernel_on_edge_rows(spark, variant):
+def test_arrow_udf_matches_kernel_on_edge_rows(spark):
     names = list(EDGE_ROWS)
-    if variant == "with_corrections":
-        df = spark.createDataFrame(
-            [(n, extract_document(EDGE_ROWS[n]).text) for n in names],
-            "name string, extracted_text string")
-        got = with_corrections(df, out_col="r")
-        expected = {n: _corrected(extract_document(EDGE_ROWS[n]).text) for n in names}
-    else:
-        df = spark.createDataFrame([(n, EDGE_ROWS[n]) for n in names],
-                                   "name string, html binary")
-        sep = " " if variant == "extract_space" else "\n\n"
-        if variant == "fused":
-            got = df.withColumn("r", make_extract_udf(corrections=DEFAULT_CORRECTIONS)(df.html))
-        else:
-            got = with_extraction(df, out_col="r", separator=sep)
-        expected = {n: _extracted(EDGE_ROWS[n], sep) for n in names}
-        if variant == "fused":
-            for n in names:
-                expected[n] |= _corrected(expected[n]["text"])
+    df = spark.createDataFrame([(n, EDGE_ROWS[n]) for n in names], "name string, html binary")
+    got = df.withColumn("r", make_extract_correct_udf()(df.html))
+    expected = {n: _extracted(EDGE_ROWS[n]) for n in names}
+    for n in names:
+        expected[n] |= _corrected(expected[n]["text"])
     rows = {r.name: r.r.asDict(recursive=True) for r in got.select("name", "r").collect()}
     assert rows == expected

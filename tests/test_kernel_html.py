@@ -1,11 +1,13 @@
 """Unit tests for the HTML extraction kernel (the pytest oracle)."""
 
+from ocr_service_spark.corpus import gen_docs
 from ocr_service_spark.kernel.extract_html import (
     classify_nodes,
     extract_html,
     parse_nodes,
     sniff_charset,
 )
+from ocr_service_spark.kernel.extract_pdf import is_pdf
 from ocr_service_spark.kernel.htmlgen import htmlify_roundtrip
 
 
@@ -86,5 +88,19 @@ def test_script_style_dropped():
 def test_htmlify_roundtrip_exact():
     text = "alpha beta gamma " * 20 + "tail words"
     page = htmlify_roundtrip(text, 7)
-    r = extract_html(page, separator=" ")
-    assert r.text == " ".join(text.split())
+    assert extract_html(page).text.replace("\n\n", " ") == " ".join(text.split())
+
+
+def test_paragraph_breaks_are_the_only_newlines():
+    # no node text holds a "\n", so the only "\n\n" in an extracted
+    # HTML text are the breaks between kept nodes, and a query may read
+    # each one as a space (queries._spaced)
+    docs = gen_docs(300)
+    pages = [d.html for d in docs if not is_pdf(d.html)]
+    pages += [htmlify_roundtrip(d.expected_text, d.doc_id) for d in docs if d.expected_text]
+    for raw in pages:
+        nodes, _ = parse_nodes(raw)
+        assert not any("\n" in nd.text for nd in nodes)
+        kept = [nd.text for nd, k in zip(nodes, classify_nodes(nodes)) if k]
+        text = extract_html(raw).text
+        assert (text.split("\n\n") if text else []) == kept

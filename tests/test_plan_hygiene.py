@@ -31,6 +31,14 @@ def test_chunk_dedup_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_chunk_dedup_scans_the_text_once(spark):
+    # chunk occurrences are a window count over the exploded hashes; a
+    # join back to a grouped count of the same rows scanned and
+    # tokenized the text twice
+    plan = _plan(spark, "chunk_dedup")
+    assert plan.count("FileScan parquet") == 1, plan
+
+
 def test_dedup_latest_has_no_window_or_global_sort(spark):
     # one max-of-struct aggregation: a Window or top-k sort here would mean
     # the operator regressed to the rank-per-key shape that single-sorts
@@ -166,8 +174,8 @@ def test_token_tier_tokenizes_each_scanned_row_once(spark):
     # below the projection and re-runs the normalize-and-split regex
     # there; the row guards ride inside a generator instead
     # (queries._rows_where), so each scan of the text feeds one
-    # tokenizing Project and nothing else. chunk_dedup's self-join and
-    # incremental_dedup's batch/corpus sides scan the text twice;
+    # tokenizing Project and nothing else. incremental_dedup's
+    # batch/corpus sides scan the text twice;
     # minhash_lsh_pairs and dup_clusters read minhash_signatures' plan
     # through a localCheckpoint of the signature table
     from ocr_service_spark.functions.textstats import WS_CLASS

@@ -47,8 +47,9 @@ def test_every_query_has_an_oracle_except_rows_only():
 
 # the reference operators re-expressed over extraction output, the
 # near-dup, similarity, corpus and link-graph tiers whose Spark side and
-# oracle share one helper per job, and the extraction-path queries whose
-# oracles build the documents' url
+# oracle share one helper per job, and the extraction-path queries that
+# gate the one extract+correct stage (their oracles build the documents'
+# url, the round-tripped text and the corrected sentence)
 ORACLE_CHECKED = [
     "recrawl_dedup", "batch_summary", "streaming_feedback",
     "minhash_signatures", "minhash_lsh_pairs", "dup_clusters",
@@ -57,7 +58,8 @@ ORACLE_CHECKED = [
     "embedding_ann_recall", "chunk_dedup", "boilerplate_strip",
     "host_stats", "host_cap", "link_graph", "host_pagerank",
     "incremental_pagerank", "area_reextract", "warc_extract",
-    "lineage_restart", "lineage_timetravel",
+    "lineage_restart", "lineage_timetravel", "extract_roundtrip",
+    "correction_kernel", "pdf_extract",
 ]
 
 
