@@ -3,9 +3,9 @@
 One page template, `render_page`: rich Common-Crawl-style pages
 (nav/header/footer boilerplate, link farms, article body). corpus.py
 renders the synthetic corpus with it, and `htmlify_roundtrip` wraps the
-driver's `documents.text` column in it so the extraction UDF can be
-checked against a plain-SQL DuckDB oracle (extracted text with its
-paragraph breaks read as spaces == whitespace-normalized original).
+`documents.text` column in it so the extraction UDF can be checked
+against a plain-SQL DuckDB oracle (extracted text with its paragraph
+breaks read as spaces == whitespace-normalized original).
 
 Everything is a pure function of (text, doc_id) — no randomness beyond
 `random.Random` seeded from doc_id, no wall clock.
